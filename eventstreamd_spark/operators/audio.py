@@ -83,6 +83,7 @@ from eventstreamd_spark.operators.perceptual import (
     banded_pairs,
     sql_banded_pairs_tail,
 )
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 # Keys audio scenes disjointly from image scenes (image space starts at
@@ -221,17 +222,9 @@ def audio_fingerprints(media: DataFrame) -> DataFrame:
     )
 
 
-# the audio family's ONE decode pass (round 12, joining the
-# image/video/mixed families): session-cached by
-# multimodal.cached_media — computed every invocation, never persisted
-# across runs; serves audio_fingerprints and audio_near_dup
-AUDIO_SIG_CACHE_KIND = "scene_audio_sig_s1"
-
-
 def audio_near_dup(
     media: DataFrame,
     hamming_max: int = HAMMING_MAX,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """Banded audio near-dup pairs — the WAV mirror of
     ``media_near_dup``: same banding, same pigeonhole recall
@@ -244,13 +237,10 @@ def audio_near_dup(
     different-pitch clip — the false positive an envelope-only
     fingerprint cannot see — separates on the z-word (planted
     pytest in tests/test_audio.py).
-    Decode-once: signatures are localCheckpoint'ed before the banded
-    self-join (see ``perceptual.media_near_dup``); ``sig`` passes a
-    precomputed signature relation (the registry's session-cached
-    one-decode-pass table) and the decode is skipped entirely."""
-    if sig is None:
-        sig = audio_fingerprints(media).localCheckpoint()
-    return banded_pairs(sig, hamming_max)
+    Decode-once: signatures are the session's shared relation, a
+    materialized leaf before the banded self-join (see
+    ``perceptual.media_near_dup``)."""
+    return banded_pairs(shared(audio_fingerprints, media), hamming_max)
 
 
 # ---------------------------------------------------------------------------

@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from eventstreamd_spark.functions.text import sql_tokens, tokens
+from eventstreamd_spark.plans.memo import shared
 
 N_MERGES = 8
 
@@ -115,33 +116,17 @@ def _apply_merge(syms: F.Column, a: str, b: str) -> F.Column:
     )
 
 
-def bpe_merge_table(
-    docs: DataFrame,
-    n_merges: int = N_MERGES,
-    induction: DataFrame | None = None,
-) -> DataFrame:
+def bpe_merge_table(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     """Learn the first ``n_merges`` BPE merges over the corpus
     vocabulary; returns (merge_rank, lhs, rhs, pair_count).
 
-    ``induction`` (round 12): a precomputed ``bpe_induction_relation``
-    — the merge-table half is projected out of it instead of re-running
-    the driver-sequenced rounds (TRAIN runs once per session; both BPE
-    queries read the artifact)."""
-    if induction is not None:
-        return induction.filter(F.col("merge_rank").isNotNull()).select(
-            "merge_rank", "lhs", "rhs", "pair_count"
-        )
-    spark = docs.sparkSession
-    merges, _ = _induce(docs, n_merges)
-    return spark.createDataFrame(
-        merges, "merge_rank int, lhs string, rhs string, pair_count bigint"
+    The merge-table half of the session's shared
+    ``bpe_induction_relation`` (plans/memo.py): TRAIN runs once per
+    session and both BPE queries read the artifact."""
+    induction = shared(bpe_induction_relation, docs, n_merges=n_merges)
+    return induction.filter(F.col("merge_rank").isNotNull()).select(
+        "merge_rank", "lhs", "rhs", "pair_count"
     )
-
-
-# session-cache kind for the induction artifact (multimodal.py::
-# session_cached_relation): one TRAIN pass per process, shared by the
-# merge-table and encode queries within the session, never persisted
-INDUCTION_CACHE_KIND = "bpe_induction8_s1"
 
 
 def bpe_induction_relation(
@@ -149,10 +134,9 @@ def bpe_induction_relation(
 ) -> DataFrame:
     """The induction's TWO outputs — the merge table and the final
     vocabulary — packed into ONE relation so a single training run can
-    be session-cached for both consumers: merge rows carry NULL
-    ``term``, vocabulary rows carry NULL ``merge_rank``.  Each consumer
-    filters its half back out (``bpe_merge_table`` /
-    ``bpe_encode_stats`` with ``induction=``)."""
+    be shared by both consumers: merge rows carry NULL ``term``,
+    vocabulary rows carry NULL ``merge_rank``.  Each consumer filters
+    its half back out (``bpe_merge_table`` / ``bpe_encode_stats``)."""
     spark = docs.sparkSession
     merges, vocab = _induce(docs, n_merges)
     mt = spark.createDataFrame(
@@ -270,11 +254,7 @@ def _sql_rounds(table: str, n_merges: int, full_vocab: bool) -> list[str]:
     return parts
 
 
-def bpe_encode_stats(
-    docs: DataFrame,
-    n_merges: int = N_MERGES,
-    induction: DataFrame | None = None,
-) -> DataFrame:
+def bpe_encode_stats(docs: DataFrame, n_merges: int = N_MERGES) -> DataFrame:
     """Apply the learned merge table: per-document BPE token counts —
     the ENCODE half of the tokenizer (the induction above is TRAIN).
 
@@ -289,16 +269,14 @@ def bpe_encode_stats(
     Output (all BIGINT, exact oracle): n_word_tokens, n_chars_tokens
     (pre-BPE symbol count), n_bpe_tokens (post-merge symbol count).
     """
-    # ``induction``: the session-cached artifact (see
-    # bpe_induction_relation) — ENCODE reads the trained vocabulary
-    # half instead of re-running the n_merges driver-sequenced rounds
+    # ENCODE reads the trained vocabulary half of the shared artifact
+    # instead of re-running the n_merges driver-sequenced rounds
     # (8 vocab-pair shuffles + 8 best-pair collects) a second time
-    if induction is not None:
-        vocab = induction.filter(F.col("term").isNotNull()).select(
-            "term", "cnt", "syms"
-        )
-    else:
-        _, vocab = _induce(docs, n_merges)
+    vocab = (
+        shared(bpe_induction_relation, docs, n_merges=n_merges)
+        .filter(F.col("term").isNotNull())
+        .select("term", "cnt", "syms")
+    )
     enc = vocab.select(
         "term",
         F.length("term").cast("bigint").alias("n_chars_t"),

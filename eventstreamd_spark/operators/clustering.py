@@ -47,18 +47,13 @@ from eventstreamd_spark.functions.vectors import (
     sql_cosine_guarded,
     to_double,
 )
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 N_CELLS = 16
 N_ITERS = 2
 DIM = 64  # driver testdata embedding width (oracle twin hardcodes it;
 # the Spark side reads the true width per row via posexplode)
-
-# session-cache kind for the fitted centroid frame (multimodal.py::
-# session_cached_relation): assignments and prototypes run the SAME
-# deterministic Lloyd fit, so one fit per process serves both queries
-# within the session — never persisted across runs
-CENTS_CACHE_KIND = "kmeans_cents16x2_s1"
 
 
 def _assign(embeddings: DataFrame, cents: DataFrame) -> DataFrame:
@@ -154,16 +149,10 @@ def _recompute(assigned: DataFrame) -> list[tuple[int, list[float]]]:
 def fit_centroids(
     embeddings: DataFrame, n_cells: int = N_CELLS, n_iters: int = N_ITERS
 ) -> DataFrame:
-    """Public face of the Lloyd fit — the (cell_id, cvec) frame the
-    registry session-caches so both kmeans queries share one fit."""
-    return _fit(embeddings, n_cells, n_iters)
-
-
-def _fit(
-    embeddings: DataFrame, n_cells: int, n_iters: int
-) -> DataFrame:
-    """The Lloyd rounds; returns the final centroid frame
-    (cell_id, cvec) as driver-literal rows (lineage-free)."""
+    """The Lloyd rounds; returns the final centroid frame (cell_id,
+    cvec) as driver-literal rows (lineage-free).  Both kmeans
+    operators share it per session (plans/memo.py), so one
+    driver-coordinated fit serves both."""
     spark = embeddings.sparkSession
     cents = embeddings.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell_id"),
@@ -181,7 +170,6 @@ def kmeans_assignments(
     embeddings: DataFrame,
     n_cells: int = N_CELLS,
     n_iters: int = N_ITERS,
-    cents: DataFrame | None = None,
 ) -> DataFrame:
     """Final (vec_id, cell_id) assignment after ``n_iters`` Lloyd
     rounds from the deterministic ivf seeding (first ``n_cells``
@@ -190,13 +178,8 @@ def kmeans_assignments(
     Cells that lose every member simply drop out of the next round's
     centroid set (standard Lloyd; both engines mirror the behavior
     because the groupBy produces no row for them).
-
-    ``cents``: a precomputed ``fit_centroids`` frame (the fit is
-    deterministic, so passing it skips the Lloyd rounds without
-    changing the assignment).
     """
-    if cents is None:
-        cents = _fit(embeddings, n_cells, n_iters)
+    cents = shared(fit_centroids, embeddings, n_cells=n_cells, n_iters=n_iters)
     return _assign(embeddings, cents).select("vec_id", "cell_id")
 
 
@@ -205,7 +188,6 @@ def kmeans_prototypes(
     n_cells: int = N_CELLS,
     n_iters: int = N_ITERS,
     k_per_cell: int = 5,
-    cents: DataFrame | None = None,
 ) -> DataFrame:
     """Prototype selection: the ``k_per_cell`` vectors closest to their
     refined centroid, per cell — prototype-based data pruning
@@ -218,8 +200,7 @@ def kmeans_prototypes(
     selection is a per-cell top-k window (bounded partitions — cell
     sized, never corpus sized).
     """
-    if cents is None:
-        cents = _fit(embeddings, n_cells, n_iters)
+    cents = shared(fit_centroids, embeddings, n_cells=n_cells, n_iters=n_iters)
     assigned = _assign(embeddings, cents)
     scored = assigned.join(F.broadcast(cents), "cell_id").withColumn(
         "ccos",

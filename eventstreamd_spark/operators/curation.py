@@ -21,37 +21,27 @@ from pyspark.sql import DataFrame, functions as F
 from eventstreamd_spark.functions.text import lang_id, sql_lang_id, sql_tokens, tokens
 from eventstreamd_spark.operators.dedup import dedup_clusters, sql_dedup_clusters
 from eventstreamd_spark.operators.textops import quality_ok_col, sql_quality_ok
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 
-def curation_decisions(
-    docs: DataFrame,
-    sh: DataFrame | None = None,
-    clusters: DataFrame | None = None,
-) -> DataFrame:
+def curation_decisions(docs: DataFrame) -> DataFrame:
     """(doc_id, quality_ok, detected_lang, is_canonical, keep).
 
     One narrow projection computes both text features (quality flag and
     language) — tokenization is shared by codegen CSE; the only wide
     operation is the join against the cluster assignment, on an 8-byte
     key.  At 100 TB: features scale linearly with no shuffle; the join
-    shuffles (doc_id, 3 small columns), never the text.
-
-    ``sh`` optionally supplies the precomputed (doc_id, shingles)
-    relation for the dedup closure (must equal
-    ``with_hashed_shingles(docs, 3)``).
+    shuffles (doc_id, 3 small columns), never the text.  The cluster
+    assignment is the session's shared one (plans/memo.py): every
+    closure consumer reads one connected-components pass.
     """
     feats = fan_out(docs).select(
         "doc_id",
         quality_ok_col(F.col("text")).cast("int").alias("quality_ok"),
         lang_id(tokens(F.col("text"))).alias("detected_lang"),
     )
-    # ``clusters`` optionally supplies the precomputed cluster
-    # assignment (must equal ``dedup_clusters(docs)``) — the registry
-    # serves every closure consumer from ONE session-cached CC pass
-    if clusters is None:
-        clusters = dedup_clusters(docs, sh=sh)
-    joined = feats.join(clusters, "doc_id")
+    joined = feats.join(shared(dedup_clusters, docs), "doc_id")
     canonical = F.col("cluster_id") == F.col("doc_id")
     keep = (
         (F.col("quality_ok") == 1)
@@ -83,11 +73,7 @@ JOIN ({clusters}) c ON c.doc_id = f.doc_id
 """
 
 
-def corpus_build_manifest(
-    docs: DataFrame,
-    sh: DataFrame | None = None,
-    clusters: DataFrame | None = None,
-) -> DataFrame:
+def corpus_build_manifest(docs: DataFrame) -> DataFrame:
     """The whole corpus-construction pipeline as ONE composed plan:
     curation verdicts (quality + language + canonical-dedup) gate the
     corpus, survivors get token counts and deterministic token-budget
@@ -118,15 +104,13 @@ def corpus_build_manifest(
         lang_id(tokens(F.col("text"))).alias("detected_lang"),
         F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
     )
-    if clusters is None:
-        clusters = dedup_clusters(docs, sh=sh)
     keep = (
         F.col("quality_ok")
         & (F.col("cluster_id") == F.col("doc_id"))
         & (F.col("detected_lang") != "und")
     )
     kept = (
-        feats.join(clusters, "doc_id")
+        feats.join(shared(dedup_clusters, docs), "doc_id")
         .filter(keep)
         .select("doc_id", "n_tokens")
     )

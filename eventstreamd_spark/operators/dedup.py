@@ -41,7 +41,7 @@ from typing import Iterator
 
 import numpy as _np
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from eventstreamd_spark.functions.text import (
@@ -56,6 +56,7 @@ from eventstreamd_spark.functions.text import (
     sql_word_shingles,
     tokens,
 )
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 # MinHash parameters: K universal-hash permutations h_i(x) = (a*x+b) % P,
@@ -180,20 +181,17 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.6,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index join.
 
     docs -> distinct shingles -> explode (inverted index) -> self-join
     on shingle -> |A ∩ B| per pair -> join doc sizes -> jaccard filter.
     Outputs (doc_a < doc_b, jaccard).  Integer counts divide in double:
-    engine-exact.  ``sh`` passes a precomputed (doc_id, shingles)
-    relation (the registry's session-cached one-tokenize-pass table —
-    round 12, the signature-relation idiom applied to the shingle
-    tiers) and the per-token hash kernel is skipped.
+    engine-exact.  The (doc_id, shingles) relation is the session's
+    shared one (plans/memo.py): the per-token hash kernel runs once
+    per corpus and n, whichever shingle tier asks first.
     """
-    if sh is None:
-        sh = with_hashed_shingles(docs, n)
+    sh = shared(with_hashed_shingles, docs, n=n)
     # one pass: the inverted index carries each doc's shingle count, so
     # pair sizes ride the shuffle instead of two extra size-join
     # branches (each of which would recompute the shingling).  The
@@ -264,7 +262,6 @@ def ngram_jaccard_pairs_df_cutoff(
     n: int = 3,
     threshold: float = 0.6,
     max_df: int = MAX_SHINGLE_DF,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """n-gram Jaccard near-dup pairs with a document-frequency cutoff
     on the inverted index — the form of tier 2 you actually run at
@@ -280,8 +277,7 @@ def ngram_jaccard_pairs_df_cutoff(
     a conservative lower bound (a true near-dup loses at most its
     boilerplate shingles from the numerator).
     """
-    if sh is None:
-        sh = with_hashed_shingles(docs, n)
+    sh = shared(with_hashed_shingles, docs, n=n)
     # explode_outer, not explode — see ngram_jaccard_pairs: an inner
     # explode lets InferFiltersFromGenerate inline the shingling into
     # the scan filter (measured 12x on this tier).
@@ -363,7 +359,6 @@ def ngram_jaccard_pairs_df_frac_cutoff(
     n: int = 3,
     threshold: float = 0.6,
     max_df_frac: float = MAX_SHINGLE_DF_FRAC,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """DF-cutoff dedup tier with the cutoff as a FRACTION of corpus
     size instead of an absolute count.
@@ -380,8 +375,7 @@ def ngram_jaccard_pairs_df_frac_cutoff(
     standard scalar-broadcast shape) — the df window still rides the
     shingle-keyed exchange the pair join needs anyway.
     """
-    if sh is None:
-        sh = with_hashed_shingles(docs, n)
+    sh = shared(with_hashed_shingles, docs, n=n)
     n_docs = docs.agg(F.count("*").alias("_n_docs"))
     inv = sh.select(
         "doc_id",
@@ -463,8 +457,6 @@ def minhash_keep_corpus(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.6,
-    sh: DataFrame | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """The dedup output users actually consume: the kept corpus after
     MinHash-LSH near-dup removal.
@@ -479,12 +471,8 @@ def minhash_keep_corpus(
     of the input.  Use dedup_clusters when cluster-exact retention
     (exactly one doc per transitive cluster) is required.
     """
-    # ``pairs`` optionally supplies the precomputed near-dup pair
-    # relation (must equal ``minhash_lsh_dedup(docs, n, threshold)``) —
-    # the registry serves all nine pair-tier consumers from ONE
-    # session-cached pass (round 13, the shared-relation idiom)
-    if pairs is None:
-        pairs = minhash_lsh_dedup(docs, n=n, threshold=threshold, sh=sh)
+    # the session's one pair pass serves every pair-tier consumer
+    pairs = shared(minhash_lsh_dedup, docs, n=n, threshold=threshold)
     drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     return docs.join(drop, "doc_id", "left_anti").select(
         "doc_id", "source", "n_chars"
@@ -693,9 +681,7 @@ def minhash_signature(hashed_shingles: F.Column) -> list[F.Column]:
     return sig
 
 
-def minhash_lsh_candidates(
-    docs: DataFrame, n: int = 3, sh: DataFrame | None = None
-) -> DataFrame:
+def minhash_lsh_candidates(docs: DataFrame, n: int = 3) -> DataFrame:
     """LSH banding: candidate pairs = docs colliding on >= 1 band.
 
     The signature is computed in one narrow pass; banding explodes to B
@@ -707,9 +693,9 @@ def minhash_lsh_candidates(
     won't inline a non-cheap expression referenced 16 times, so each
     shingle is poly-hashed exactly once.
     """
-    hashed = (
-        sh if sh is not None else with_hashed_shingles(docs, n)
-    ).withColumnRenamed("shingles", "hs")
+    hashed = shared(with_hashed_shingles, docs, n=n).withColumnRenamed(
+        "shingles", "hs"
+    )
     sig = hashed.select("doc_id", *minhash_signature(F.col("hs")))
     bands = sig.select(
         "doc_id",
@@ -753,15 +739,13 @@ def minhash_lsh_dedup(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.6,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dup: banded candidates -> exact-jaccard
     verify (precision = exact; recall bounded by the banding curve).
     Verification intersects hashed-shingle sets — long compares, and
     the same arrays the candidate tier derives its signatures from."""
-    cands = minhash_lsh_candidates(docs, n, sh=sh)
-    if sh is None:
-        sh = with_hashed_shingles(docs, n)
+    cands = minhash_lsh_candidates(docs, n)
+    sh = shared(with_hashed_shingles, docs, n=n)
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b"))
     joined = cands.join(a, "doc_a").join(b, "doc_b")
@@ -953,8 +937,6 @@ def dedup_clusters(
     n: int = 3,
     threshold: float = 0.6,
     max_iters: int = 16,
-    sh: DataFrame | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Canonical cluster assignment: (doc_id, cluster_id) for every doc,
     cluster_id = min doc_id of its near-dup connected component
@@ -968,16 +950,10 @@ def dedup_clusters(
     length); singletons are restored with one left join against the
     full doc list.
     """
-    # ``pairs`` optionally supplies the precomputed pair relation
-    # (contract as in minhash_keep_corpus)
-    if pairs is None:
-        pairs = minhash_lsh_dedup(docs, n, threshold, sh=sh)
-    # no edge checkpoint (round 13): the single-scan window-form star
-    # passes read the symmetrized edges exactly ONCE in the initial
-    # round (the old join-form stars read them up to 4x, which forced
-    # an eager localCheckpoint here — one extra driver-synchronized
-    # job per call; the MinHash pipeline now runs once either way,
-    # inside the convergence probe's job)
+    pairs = shared(minhash_lsh_dedup, docs, n=n, threshold=threshold)
+    # no edge checkpoint: ``pairs`` is already a materialized leaf and
+    # the single-scan window-form star passes read the symmetrized
+    # edges exactly ONCE in the initial round
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
@@ -1217,19 +1193,16 @@ def simhash_pair_band_stack(sig: DataFrame) -> DataFrame:
 def simhash_pairs(
     docs: DataFrame,
     hamming_max: int = HAMMING_MAX,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: banded candidate generation + hamming
     verify.  4 bands x 16 bits; hamming <= 3 guarantees a band
     collision, so recall is exact for the distance bound.
-    Signatures are localCheckpoint'ed before the self-join — Spark
-    re-runs a mapInPandas subplan once per reference (SCALE.md §19),
-    and the kernel is the tier's dominant cost.  ``sig`` passes a
-    precomputed (doc_id, sig_hi, sig_lo) relation (the registry's
-    session-cached one-tokenize-pass table — the prebuilt signature
-    table a real corpus carries) and the kernel is skipped."""
-    if sig is None:
-        sig = simhash_signatures(docs).localCheckpoint()
+    Signatures are the session's shared relation (plans/memo.py), a
+    materialized leaf before the self-join — Spark re-runs a
+    mapInPandas subplan once per reference (SCALE.md §19), and the
+    kernel is the tier's dominant cost; every SimHash tier and the
+    admission faces read the one tokenize+hash pass."""
+    sig = shared(simhash_signatures, docs)
     return _simhash_stacked_pairs(simhash_band_stack(sig), hamming_max)
 
 
@@ -1240,7 +1213,6 @@ def simhash_pairs_prod(
     docs: DataFrame,
     hamming_max: int = HAMMING_MAX,
     max_bucket: int = SIMHASH_MAX_BUCKET,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """The GUARDED production twin of simhash_pairs (the
     media_near_dup_prod idiom brought to text): band rows in buckets
@@ -1254,13 +1226,10 @@ def simhash_pairs_prod(
     the guard join broadcasts."""
     from eventstreamd_spark.operators.perceptual import _drop_hot_buckets
 
-    # checkpoint BEFORE stacking: the guard references the stacked
+    # materialized BEFORE stacking: the guard references the stacked
     # relation twice (gate sizes + join side) and the self-join twice
-    # more — un-checkpointed, the signature kernel would run 4x
-    # (a precomputed ``sig`` is session-cached, which serves every
-    # reference from one materialization the same way)
-    if sig is None:
-        sig = simhash_signatures(docs).localCheckpoint()
+    # more — un-materialized, the signature kernel would run 4x
+    sig = shared(simhash_signatures, docs)
     stacked = simhash_band_stack(sig)
     return _simhash_stacked_pairs(
         _drop_hot_buckets(stacked, max_bucket), hamming_max
@@ -1270,7 +1239,6 @@ def simhash_pairs_prod(
 def simhash_pairs_wide(
     docs: DataFrame,
     hamming_max: int = HAMMING_MAX_WIDE,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pair tier over 32-bit PAIR-band buckets — the
     candidate tier for corpora where 16-bit buckets' ~n^2/2^16 random
@@ -1284,8 +1252,7 @@ def simhash_pairs_wide(
     when the dirty bits happen to cluster), and callers wanting the
     guaranteed <= 3 at moderate n keep ``simhash_pairs`` — the
     standard LSH r-vs-recall dial, stated in the open."""
-    if sig is None:
-        sig = simhash_signatures(docs).localCheckpoint()
+    sig = shared(simhash_signatures, docs)
     return _simhash_stacked_pairs(
         simhash_pair_band_stack(sig), hamming_max
     )
@@ -1579,7 +1546,6 @@ def ngram_containment_pairs(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.9,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric near-dup pairs by CONTAINMENT: |A ∩ B| / min(|A|,|B|).
 
@@ -1590,8 +1556,7 @@ def ngram_containment_pairs(
     scoring expression differs, so every scale property (fixed-width
     keys, ReusedExchange legs, DF-cutoff composability) carries over.
     """
-    if sh is None:
-        sh = with_hashed_shingles(docs, n)
+    sh = shared(with_hashed_shingles, docs, n=n)
     inv = sh.select(
         "doc_id",
         F.size("shingles").alias("n_sh"),
@@ -2109,7 +2074,6 @@ def jaccard_threshold_sweep(
     docs: DataFrame,
     n: int = 3,
     edges: tuple = SWEEP_EDGES,
-    sh: DataFrame | None = None,
 ) -> DataFrame:
     """Dedup tuning report: how many candidate pairs survive at each
     Jaccard threshold — the sweep you run BEFORE fixing the production
@@ -2122,7 +2086,7 @@ def jaccard_threshold_sweep(
     threshold.  Cumulative counts (pairs with jaccard >= edge) come
     from a reverse running sum over the |edges|-row histogram.
     """
-    pairs = ngram_jaccard_pairs(docs, n, threshold=min(edges), sh=sh)
+    pairs = ngram_jaccard_pairs(docs, n, threshold=min(edges))
     # built ascending so the HIGHEST matching edge sits outermost in
     # the when-chain (last wrap wins) — first-match-wins like the SQL
     # CASE written descending
@@ -2180,8 +2144,6 @@ def split_leakage_check(
     n: int = 3,
     threshold: float = 0.6,
     salt: str = "s2",
-    sh: DataFrame | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-split leakage audit: near-dup pairs that STRADDLE a
     train/val/test boundary — the failure decontamination screens for
@@ -2206,8 +2168,7 @@ def split_leakage_check(
     """
     from eventstreamd_spark.operators.sampling import dataset_split
 
-    if pairs is None:
-        pairs = minhash_lsh_dedup(docs, n, threshold, sh=sh)
+    pairs = shared(minhash_lsh_dedup, docs, n=n, threshold=threshold)
     splits = dataset_split(docs, "doc_id", weights, salt=salt).select(
         "doc_id", "split"
     )
@@ -2281,8 +2242,6 @@ def lsh_recall_report(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.6,
-    sh: DataFrame | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-similarity-bucket recall of the MinHash-LSH tier against the
     exact inverted-index ground truth — the eval a dedup pipeline runs
@@ -2301,9 +2260,8 @@ def lsh_recall_report(
     arithmetic (one IEEE multiply + floor of an integer-ratio double)
     is bit-identical across engines.
     """
-    exact = ngram_jaccard_pairs(docs, n, threshold, sh=sh)
-    if pairs is None:
-        pairs = minhash_lsh_dedup(docs, n, threshold, sh=sh)
+    exact = ngram_jaccard_pairs(docs, n, threshold)
+    pairs = shared(minhash_lsh_dedup, docs, n=n, threshold=threshold)
     caught = pairs.select("doc_a", "doc_b", F.lit(1).alias("hit"))
     labeled = exact.join(caught, ["doc_a", "doc_b"], "left")
     bucket = F.floor(F.col("jaccard") * 10).cast("bigint")
@@ -2452,20 +2410,6 @@ FROM base b JOIN modal m ON m.entity_id = b.entity_id
 TEXT_SIG_KINDS = (("s", "s_hi", "s_lo"),)
 
 
-# the text family's ONE tokenize+hash pass (round 12, the media-family
-# idiom): dedup_simhash/_wide/_prod and the admission faces' CORPUS
-# side all read this session-cached relation (computed every
-# invocation, never persisted across runs).  The _sN suffix names the
-# kernel OUTPUT version in the session view key.
-TEXT_SIG_CACHE_KIND = "text_simhash_sig_s1"
-
-# the shingle tiers' ONE tokenize+hash pass (round 12): the n=3
-# hashed-shingle relation over the planted corpus, session-cached the
-# same way — the MinHash tier alone evaluates it up to 3x per query
-# (candidates + both verify legs), and nine registered queries build
-# on the identical relation.
-SHINGLE_CACHE_KIND = "text_shingles3_s1"
-
 
 def simhash_admission_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, s_hi, s_lo): the shingle-SimHash signature in the
@@ -2480,20 +2424,20 @@ def simhash_admission_signatures(docs: DataFrame) -> DataFrame:
 
 
 def text_admission_decisions(
-    corpus: DataFrame,
-    batch: DataFrame,
+    docs: DataFrame,
+    in_corpus: Column,
     hamming_max: int = HAMMING_MAX,
     max_iters: int = 16,
     wide: bool = False,
-    corpus_sig: DataFrame | None = None,
-    batch_sig: DataFrame | None = None,
 ) -> DataFrame:
     """Batch-verifiable incremental text admission: dedup the CORPUS
-    first (its kept canonicals' SimHash signatures form the banded
-    index), then admit the BATCH against that index — the text twin of
-    ``perceptual.media_admission_decisions``, running the SAME
-    decision kernel (``admission_decisions_from_sig``) the streaming
-    writer runs, so batch and stream verdicts agree by construction.
+    (the rows of ``docs`` where the doc_id predicate ``in_corpus``
+    holds) first — its kept canonicals' SimHash signatures form the
+    banded index — then admit the BATCH (every other row) against that
+    index: the text twin of ``perceptual.media_admission_decisions``,
+    running the SAME decision kernel (``admission_decisions_from_sig``)
+    the streaming writer runs, so batch and stream verdicts agree by
+    construction.
     At 100 TB this is the nightly text-ingest shape: the corpus index
     is a prebuilt 2-BIGINT/doc signature table and only the new batch
     is tokenized.  ``wide`` opts both the corpus dedup and the
@@ -2510,18 +2454,18 @@ def text_admission_decisions(
         admission_decisions_from_sig,
     )
 
-    # ``corpus_sig``/``batch_sig`` pass prebuilt signature tables
-    # (the registry serves both splits of the family's session-cached
-    # one-tokenize-pass relation — signatures are per-doc and
-    # deterministic, so the filtered cached relation equals running
-    # the kernel on the split).  With neither given, each split pays
-    # its own kernel, localCheckpoint'ed so the banded self-joins
-    # cannot re-run it per reference.
-    if corpus_sig is None:
-        corpus_sig = simhash_admission_signatures(corpus).localCheckpoint()
+    # both splits filter the session's ONE signature relation over
+    # ``docs`` (shared with the SimHash pair tiers): signatures are
+    # per-doc and deterministic, so filtering equals running the
+    # kernel per split, and the banded self-joins read a materialized
+    # leaf instead of re-running the kernel per reference
+    sig = shared(simhash_signatures, docs).select(
+        "doc_id", F.col("sig_hi").alias("s_hi"), F.col("sig_lo").alias("s_lo")
+    )
+    corpus_sig = sig.filter(in_corpus)
     index_sig = corpus_sig.join(
         _sig_clusters(
-            corpus.select("doc_id"),
+            docs.filter(in_corpus).select("doc_id"),
             corpus_sig,
             hamming_max,
             max_iters,
@@ -2532,10 +2476,8 @@ def text_admission_decisions(
         .select("doc_id"),
         "doc_id",
     )
-    if batch_sig is None:
-        batch_sig = simhash_admission_signatures(batch).localCheckpoint()
     return admission_decisions_from_sig(
-        batch_sig,
+        sig.filter(~in_corpus),
         index_sig,
         hamming_max,
         max_iters,

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from eventstreamd_spark.operators import dedup as dedup_op
+from eventstreamd_spark.plans.memo import shared
 
 PR_SCALE = 10**9  # fixed-point rank scale
 _BASE = 3 * PR_SCALE // 20  # (1 - 0.85) * scale, exact
@@ -98,44 +99,27 @@ def pagerank_canonical(
     n: int = 3,
     threshold: float = 0.6,
     iters: int = 5,
-    sh: DataFrame | None = None,
-    pairs: DataFrame | None = None,
-    clusters: DataFrame | None = None,
 ) -> DataFrame:
     """Canonical-copy selection for every doc in the near-dup graph:
     (doc_id, cluster_id, pr, is_canonical), is_canonical marking the
     highest-PageRank member of each connected component (doc_id breaks
     exact rank ties).
 
-    One MinHash+LSH pair computation feeds BOTH the components and the
-    PageRank (the edge list is checkpointed once and reused), so this
+    The session's shared MinHash pair relation and cluster assignment
+    (plans/memo.py) feed the PageRank and the components, so this
     costs one extra Pregel loop over dedup_clusters, not a second
-    shingling of the corpus.
+    shingling or fixed point.  For every graph node its cluster_id IS
+    its component min (singletons never appear in ``pr``, and the join
+    below is inner on node).
     """
-    # ``pairs``/``clusters`` optionally supply the session-shared pair
-    # and cluster relations (round 13; contracts: pairs ==
-    # minhash_lsh_dedup(docs, n, threshold), clusters ==
-    # dedup_clusters(docs, n, threshold)).  A supplied cluster relation
-    # replaces the CC fixed point outright: for every graph node its
-    # cluster_id IS its component min (singletons never appear in
-    # ``pr``, and the join below is inner on node), so the rows are
-    # identical by construction — pinned by pytest.
-    if pairs is None:
-        pairs = dedup_op.minhash_lsh_dedup(docs, n, threshold, sh=sh)
-    # lazy (round 13): CC's convergence probe is the first job to
-    # execute and it materializes the edge blocks; pagerank's sym pass
-    # reads them afterwards — same compute-once guarantee, one fewer
-    # driver-synchronized job
-    edges = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).localCheckpoint(eager=False)
-    if clusters is None:
-        comp = dedup_op.connected_components(edges, max_iters=16)
-    else:
-        comp = clusters.select(
-            F.col("doc_id").alias("node"),
-            F.col("cluster_id").alias("component"),
-        )
+    # no edge checkpoint: the pairs are a materialized leaf, and
+    # pagerank's eager symmetrized-edge checkpoint is their only reader
+    edges = shared(
+        dedup_op.minhash_lsh_dedup, docs, n=n, threshold=threshold
+    ).select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    comp = shared(dedup_op.dedup_clusters, docs, n=n, threshold=threshold).select(
+        F.col("doc_id").alias("node"), F.col("cluster_id").alias("component")
+    )
     pr = pagerank(edges, iters)
     joined = comp.join(pr, "node").select(
         F.col("node").alias("doc_id"),
@@ -204,8 +188,6 @@ def triangle_stats(
     docs: DataFrame,
     n: int = 3,
     threshold: float = 0.6,
-    sh: DataFrame | None = None,
-    pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Triangle census of the near-dup graph: node/edge counts, exact
     triangle count, wedge (open 2-path) count, and the global
@@ -232,11 +214,8 @@ def triangle_stats(
     degree); the single coefficient divide runs once in double (3T
     and W exact) — bit-identical across engines.
     """
-    if pairs is None:
-        pairs = dedup_op.minhash_lsh_dedup(docs, n, threshold, sh=sh)
-    edges = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).localCheckpoint()
+    pairs = shared(dedup_op.minhash_lsh_dedup, docs, n=n, threshold=threshold)
+    edges = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
     sym = edges.select(F.col("a").alias("v")).union(
         edges.select(F.col("b").alias("v"))
     )

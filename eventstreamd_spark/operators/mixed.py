@@ -65,6 +65,7 @@ from eventstreamd_spark.operators.perceptual import (
     banded_pairs,
     sql_banded_pairs_tail,
 )
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 # modality by COHORT (doc_id // 4), so twin structure stays intact
@@ -133,33 +134,21 @@ def mixed_media_fingerprints(media: DataFrame) -> DataFrame:
     )
 
 
-# the mixed family's ONE decode pass (round-12, the video-family
-# decode-once idiom): session-cached by multimodal.cached_media —
-# computed every invocation, never persisted across runs.  The _sN
-# suffix names the dispatch kernel's OUTPUT version in the view key.
-MIXED_SIG_CACHE_KIND = "scene_mixed_sig_s1"
-
-
 def scene_mixed_signatures(docs: DataFrame) -> DataFrame:
     """Full-corpus decode pass for the mixed family: dispatch-kernel
-    fingerprints over the mixed PNG/JPEG/WAV/MP4 corpus — spec twin of
-    the session-cached relation behind ``MIXED_SIG_CACHE_KIND``."""
+    fingerprints over the mixed PNG/JPEG/WAV/MP4 corpus."""
     return mixed_media_fingerprints(documents_as_mixed_media(docs))
 
 
 def mixed_media_near_dup(
     media: DataFrame,
     hamming_max: int = HAMMING_MAX,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs over the mixed corpus: one banded tier serves
-    all three modalities (decode-once checkpoint before the
-    self-join, as everywhere).  ``sig``: pass a precomputed signature
-    relation (the registry's write-once fixture) and the decode is
-    skipped entirely."""
-    if sig is None:
-        sig = mixed_media_fingerprints(media).localCheckpoint()
-    return banded_pairs(sig, hamming_max)
+    all three modalities (decode-once: the session's shared signature
+    relation is a materialized leaf before the self-join, as
+    everywhere)."""
+    return banded_pairs(shared(mixed_media_fingerprints, media), hamming_max)
 
 
 # ---------------------------------------------------------------------------

@@ -87,46 +87,6 @@ def _media_builders() -> dict:
     }
 
 
-def _sig_builders() -> dict:
-    """sig kind -> (blob fixture kind, fingerprint fn).
-
-    DERIVED signature relations are deliberately NOT on the disk-
-    fixture path above: the blobs are synthetic INPUTS (a stand-in for
-    the object store a real pipeline reads), but the per-frame decode
-    + hash is exactly the work the registered queries claim to
-    measure, and persisting its output across bench invocations would
-    time a parquet read where the engine bills a decode.  Instead the
-    relation is computed from the blob fixture once per SparkSession
-    (``cached_media`` registers it in the session's own cache manager
-    via a cached temp view), so every bench/oracle invocation pays one
-    real decode per family and every tier in the family reads the
-    signature table — the guide-§8 "fingerprints once, decisions from
-    the small table" shape, without cross-run persistence."""
-    from eventstreamd_spark.operators import audio as audio_op
-    from eventstreamd_spark.operators import mixed as mixed_op
-    from eventstreamd_spark.operators import perceptual as perc_op
-    from eventstreamd_spark.operators import video as video_op
-
-    return {
-        video_op.VIDEO_SIG_CACHE_KIND: (
-            "scene_video_vflip",
-            video_op.video_fingerprints_grid,
-        ),
-        perc_op.IMAGE_SIG_CACHE_KIND: (
-            "scene_image",
-            perc_op.perceptual_hashes,
-        ),
-        mixed_op.MIXED_SIG_CACHE_KIND: (
-            "scene_mixed",
-            mixed_op.mixed_media_fingerprints,
-        ),
-        audio_op.AUDIO_SIG_CACHE_KIND: (
-            "scene_audio",
-            audio_op.audio_fingerprints,
-        ),
-    }
-
-
 def _source_fingerprint(sf_dir: str) -> str:
     """Cheap content fingerprint of the documents table: (name, size,
     mtime_ns) over its parquet file(s), no Spark job.  Folding this
@@ -151,8 +111,8 @@ def _source_fingerprint(sf_dir: str) -> str:
 
 
 def _fixture_tag(sf_dir: str) -> str:
-    """(basename, path-hash, content-fingerprint) tag shared by the
-    disk fixture paths and the session view names."""
+    """(basename, path-hash, content-fingerprint) tag of the disk
+    fixture paths."""
     import hashlib
     import os
 
@@ -163,27 +123,6 @@ def _fixture_tag(sf_dir: str) -> str:
         + "-"
         + _source_fingerprint(sf_dir)
     )
-
-
-def session_cached_relation(spark, sf_dir: str, kind: str, build) -> DataFrame:
-    """A DERIVED relation (signatures, fingerprints) computed fresh per
-    SparkSession and shared within it — never persisted across runs.
-
-    The cached temp view makes Spark's own CacheManager the memo:
-    ``spark.table(view)`` resolves to the registered plan, whose
-    InMemoryRelation is materialized by the FIRST query that executes
-    it (both legs of a banded self-join share the one materialization)
-    and reused by every later query in the same session.  Nothing
-    touches ``.scratch``; a new process recomputes from the inputs.
-    ``build`` is called once per (session, sf_dir fingerprint, kind) to
-    produce the relation's plan."""
-    view = f"__session_sig_{kind}_{_fixture_tag(sf_dir)}".replace(
-        "-", "_"
-    ).replace(".", "_")
-    if not spark.catalog.tableExists(view):
-        build().createOrReplaceTempView(view)
-        spark.catalog.cacheTable(view)
-    return spark.table(view)
 
 
 def cached_media(spark, sf_dir: str, kind: str) -> DataFrame:
@@ -197,11 +136,11 @@ def cached_media(spark, sf_dir: str, kind: str) -> DataFrame:
     read-only fs, path limits — and reading blindly would serve a
     missing or partial fixture).
 
-    ``*_SIG_CACHE_KIND`` kinds are different: they are DERIVED
-    relations (decode + fingerprint over a blob fixture), so they are
-    computed fresh per SparkSession and shared within it via a cached
-    temp view — never written to disk (see ``_sig_builders``)."""
-    import hashlib
+    Only the blobs live here: they are synthetic INPUTS (a stand-in
+    for the object store a real pipeline reads).  Signatures DERIVED
+    from them (decode + fingerprint) are the work the registered
+    queries measure, so they are never persisted across runs; the
+    operators share them within a session through ``plans.memo``."""
     import os
     import shutil
 
@@ -209,15 +148,6 @@ def cached_media(spark, sf_dir: str, kind: str) -> DataFrame:
 
     repo = os.path.dirname(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))))
-    sig = _sig_builders()
-    if kind in sig:
-        blob_kind, fingerprint = sig[kind]
-        return session_cached_relation(
-            spark,
-            sf_dir,
-            kind,
-            lambda: fingerprint(cached_media(spark, sf_dir, blob_kind)),
-        )
     tag = _fixture_tag(sf_dir)
     cache = os.path.join(
         repo, ".scratch", "media_fixture", _MEDIA_FIXTURE_VERSION, tag,
@@ -236,7 +166,10 @@ def cached_media(spark, sf_dir: str, kind: str) -> DataFrame:
             shutil.rmtree(tmp, ignore_errors=True)
             if not os.path.exists(success):  # NOT the benign race
                 raise
-    return spark.read.parquet(cache)
+    # every blob adapter writes MEDIA_SCHEMA; stating it skips the
+    # schema-inference job a plain read runs on every call (~0.1 s,
+    # paid by each face that builds its input to key the session memo)
+    return spark.read.schema(MEDIA_SCHEMA).parquet(cache)
 
 
 def _media_type_by_doc_id() -> F.Column:

@@ -65,8 +65,9 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 GRID = 8
@@ -198,20 +199,9 @@ def documents_as_scene_media(docs: DataFrame) -> DataFrame:
     )
 
 
-# the image family's ONE decode pass (round-12, the video-family
-# decode-once idiom): the registry materializes this signature
-# relation ONCE PER SESSION (multimodal.cached_media: a cached temp
-# view over the blob fixture — computed every invocation, never
-# persisted across runs) and serves media_perceptual_hashes + every
-# near-dup tier + the admission corpus side from it.  The _sN suffix
-# names the kernel OUTPUT version in the session view key.
-IMAGE_SIG_CACHE_KIND = "scene_image_sig_s1"
-
-
 def scene_image_signatures(docs: DataFrame) -> DataFrame:
     """Full-corpus decode pass for the image family: perceptual
-    (aHash, dHash) signatures over the scene-image corpus — spec twin
-    of the session-cached relation behind ``IMAGE_SIG_CACHE_KIND``."""
+    (aHash, dHash) signatures over the scene-image corpus."""
     return perceptual_hashes(documents_as_scene_media(docs))
 
 
@@ -585,7 +575,6 @@ def banded_matches_against(
 def media_near_dup(
     media: DataFrame,
     hamming_max: int = HAMMING_MAX,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """Banded perceptual near-dup pairs (simhash_pairs idiom): 4 bands
     x 16 bits per hash; a pair within Hamming 3 of either hash is
@@ -606,18 +595,15 @@ def media_near_dup(
     you band).  The Spark side and the DuckDB oracle share the exact
     banding, so parity holds at any ``hamming_max``.
 
-    Decode-once: the signature relation is localCheckpoint'ed before
-    the banded SELF-join — without it both join legs re-run the Arrow
-    decode kernel through lineage, doubling the dominant per-blob cost
-    (measured 2x in-bench on all three media tiers; at 100 TB the
-    decode IS the bill, so paying it twice is a plan bug, not noise).
-    ``sig`` (round-12): pass a precomputed signature relation — e.g.
-    the write-once fixture the registry serves the family from — and
-    the decode is skipped entirely (the signature-table-first shape;
-    a parquet-backed relation needs no checkpoint).
+    Decode-once: the signature relation is the session's shared one
+    (plans/memo.py), a materialized leaf before the banded SELF-join —
+    without it both join legs re-run the Arrow decode kernel through
+    lineage, doubling the dominant per-blob cost (measured 2x in-bench
+    on all three media tiers; at 100 TB the decode IS the bill, so
+    paying it twice is a plan bug, not noise) — and every image tier
+    in the session reads the same one decode pass.
     """
-    sig = perceptual_hashes(media).localCheckpoint() if sig is None else sig
-    return banded_pairs(sig, hamming_max)
+    return banded_pairs(shared(perceptual_hashes, media), hamming_max)
 
 
 # Production guard width: a bucket carrying more members than this is
@@ -633,22 +619,21 @@ def media_near_dup_prod(
     media: DataFrame,
     hamming_max: int = HAMMING_MAX,
     max_bucket: int = PROD_MAX_BUCKET,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """The GUARDED production twin of ``media_near_dup`` (round-10,
     VERDICT ask #4 — the sketch-tier prod-twin idiom): identical
     banding and verify, with the hot-bucket guard ON, mirrored by the
     oracle.  The unguarded ``media_near_dup`` stays registered as the
     exact-recall evaluation sibling; a production ingest should run
-    this one.  ``sig`` as on ``media_near_dup``."""
-    sig = perceptual_hashes(media).localCheckpoint() if sig is None else sig
-    return banded_pairs(sig, hamming_max, max_bucket=max_bucket)
+    this one.  Signatures as on ``media_near_dup``."""
+    return banded_pairs(
+        shared(perceptual_hashes, media), hamming_max, max_bucket=max_bucket
+    )
 
 
 def media_near_dup_wide(
     media: DataFrame,
     hamming_max: int = HAMMING_MAX,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """The WIDE-BUCKET sibling of ``media_near_dup`` for corpora
     where 16-bit buckets' random collisions are the bill
@@ -658,17 +643,15 @@ def media_near_dup_wide(
     and ``hamming_max`` surface only probabilistically — the standard
     LSH r-vs-recall dial, stated in the open: 16-bit tier for
     guaranteed-recall evaluation and moderate n, 32-bit tier when n
-    makes the candidate term dominate.  ``sig`` as on
+    makes the candidate term dominate.  Signatures as on
     ``media_near_dup``."""
-    sig = perceptual_hashes(media).localCheckpoint() if sig is None else sig
-    return banded_pairs_wide(sig, hamming_max)
+    return banded_pairs_wide(shared(perceptual_hashes, media), hamming_max)
 
 
 def media_near_dup_clusters(
     media: DataFrame,
     hamming_max: int = HAMMING_MAX,
     max_iters: int = 16,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """Canonical keep/drop decision for media: (doc_id, cluster_id,
     keep) where cluster_id = min doc_id of the perceptual near-dup
@@ -678,12 +661,13 @@ def media_near_dup_clusters(
     ``dedup.dedup_clusters`` over the perceptual pair tier.
 
     Same composition: the banded pair tier feeds the alternating
-    large-star/small-star fixed point (O(log n) rounds), signatures
-    AND edges localCheckpoint'ed so neither the pair self-join nor the
-    rounds re-run the hash kernel through lineage; singletons restored
-    by one left join.  ``sig`` as on ``media_near_dup``."""
-    sig = perceptual_hashes(media).localCheckpoint() if sig is None else sig
-    return _sig_clusters(media.select("doc_id"), sig, hamming_max, max_iters)
+    large-star/small-star fixed point (O(log n) rounds) over the
+    session's shared signature relation (a materialized leaf, so
+    neither the pair self-join nor the rounds re-run the hash kernel
+    through lineage); singletons restored by one left join against
+    the signature relation, which carries one row per blob."""
+    sig = shared(perceptual_hashes, media)
+    return _sig_clusters(sig.select("doc_id"), sig, hamming_max, max_iters)
 
 
 def _sig_clusters(
@@ -822,45 +806,39 @@ ADMIT_CORPUS_MOD8 = (0, 1, 3, 7)
 
 
 def media_admission_decisions(
-    corpus: DataFrame,
-    batch: DataFrame,
+    media: DataFrame,
+    in_corpus: Column,
     hamming_max: int = HAMMING_MAX,
     max_iters: int = 16,
     wide: bool = False,
-    corpus_sig: DataFrame | None = None,
-    batch_sig: DataFrame | None = None,
 ) -> DataFrame:
-    """Batch-verifiable incremental admission: dedup the CORPUS first
-    (its kept canonicals' signatures form the banded perceptual
-    index), then admit the BATCH against that index — the relation the
-    streaming tier materializes per micro-batch, as one DataFrame a
-    SQL oracle can state.  At 100 TB this is the nightly-ingest shape:
+    """Batch-verifiable incremental admission: dedup the CORPUS (the
+    rows of ``media`` where the doc_id predicate ``in_corpus`` holds)
+    first — its kept canonicals' signatures form the banded perceptual
+    index — then admit the BATCH (every other row) against that index:
+    the relation the streaming tier materializes per micro-batch, as
+    one DataFrame a SQL oracle can state.  At 100 TB this is the nightly-ingest shape:
     the corpus index is a prebuilt signature table (5 BIGINTs/doc) and
     only the new batch is decoded.  ``wide`` opts both the corpus
     dedup and the admission join into the 32-bit pair-band layout
     (the 10^9-doc tier; recall bound drops to the pair-band
     pigeonhole guarantee, the dial ``banded_pairs_wide`` states).
-    ``corpus_sig``/``batch_sig`` (round-12) pass prebuilt signature
-    relations — the registry serves BOTH splits of the family's
-    session-cached one-decode-pass relation (signatures are per-doc
-    and deterministic, so filtering the cached relation equals
-    decoding the split), and no decode runs beyond the session's one.
-    With neither given, each split pays its own kernel."""
-    if corpus_sig is None:
-        corpus_sig = perceptual_hashes(corpus).localCheckpoint()
+    Both splits filter the session's ONE decode pass over ``media``
+    (signatures are per-doc and deterministic, so filtering equals
+    decoding the split), shared with every image near-dup tier."""
+    sig = shared(perceptual_hashes, media)
+    corpus_sig = sig.filter(in_corpus)
     index_sig = corpus_sig.join(
         _sig_clusters(
-            corpus.select("doc_id"), corpus_sig, hamming_max, max_iters,
+            corpus_sig.select("doc_id"), corpus_sig, hamming_max, max_iters,
             wide=wide,
         )
         .filter(F.col("keep"))
         .select("doc_id"),
         "doc_id",
     )
-    if batch_sig is None:
-        batch_sig = perceptual_hashes(batch).localCheckpoint()
     return admission_decisions_from_sig(
-        batch_sig,
+        sig.filter(~in_corpus),
         index_sig,
         hamming_max,
         max_iters,
@@ -873,7 +851,6 @@ def media_split_leakage(
     weights: dict[str, float],
     salt: str = "m1",
     hamming_max: int = HAMMING_MAX,
-    sig: DataFrame | None = None,
 ) -> DataFrame:
     """Cross-split leakage audit for MEDIA: perceptual near-dup pairs
     that straddle a train/val/test boundary — the media mirror of
@@ -890,11 +867,7 @@ def media_split_leakage(
     than materializing it."""
     from eventstreamd_spark.operators.sampling import dataset_split
 
-    # ``sig`` as on media_near_dup — the registry serves the family's
-    # one-decode-pass session relation (round 13: this was the ONE
-    # media face still decoding inline per invocation, caught by the
-    # final bench's fresh-JVM escalation control)
-    pairs = media_near_dup(media, hamming_max, sig=sig)
+    pairs = media_near_dup(media, hamming_max)
     splits = dataset_split(
         media.select("doc_id"), "doc_id", weights, salt=salt
     ).select("doc_id", "split")

@@ -28,7 +28,7 @@ The hyperplane signs are derived from deterministic integer arithmetic
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W, functions as F
+from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
 from eventstreamd_spark.functions.vectors import (
     cosine,
@@ -37,7 +37,7 @@ from eventstreamd_spark.functions.vectors import (
     sql_cosine_guarded,
     to_double,
 )
-from eventstreamd_spark.plans.memo import memo_checkpoint
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 N_PLANES = 16
@@ -100,7 +100,7 @@ def brute_force_topk(
     ordering via (cosine desc, vec_id).
 
     The ranked top-``TOPK_MEMO_KMAX`` base relation (|Q| x kmax rows) is
-    ``memo_checkpoint``ed and every ``k <= kmax`` call is a rank filter
+    ``shared`` (plans/memo.py) and every ``k <= kmax`` call is a rank filter
     over it: the eval suite (similarity_topk k=10, the recall reports
     k=5, ndcg k=10) audits against ONE exact corpus scan per session
     instead of one per face — the in-session analog of persisting the
@@ -110,27 +110,46 @@ def brute_force_topk(
     row-for-row identical to ranking with k directly.
     """
     kmax = max(k, TOPK_MEMO_KMAX)
-    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+    base = shared(
+        _brute_force_ranked, embeddings, query_ids=_ids(query_ids), kmax=kmax
+    )
+    return base.filter(F.col("rank") <= k) if k < kmax else base
+
+
+def _ids(query_ids) -> tuple:
+    """Query ids in one canonical form, so equal id sets share a memo
+    key whatever sequence type the caller passed."""
+    return tuple(int(i) for i in query_ids)
+
+
+def _ranked(scored: DataFrame, order: Column, kmax: int) -> DataFrame:
+    """(query_id, neighbor_id, rank) for the top ``kmax`` rows per query
+    of a scored candidate frame, ties broken by vec_id."""
+    w = W.partitionBy("query_id").orderBy(order, F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= kmax)
+        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
+    )
+
+
+def _brute_force_ranked(
+    embeddings: DataFrame, query_ids: tuple, kmax: int
+) -> DataFrame:
+    q = embeddings.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     scored = (
         fan_out(embeddings).join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .withColumn("cos", cosine(F.col("qvec"), F.col("embedding")))
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    base = memo_checkpoint(
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kmax)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
-    return base.filter(F.col("rank") <= k) if k < kmax else base
+    return _ranked(scored, F.desc("cos"), kmax)
 
 
 def bucketed_corpus(embeddings: DataFrame, dim: int = 64) -> DataFrame:
-    # fan_out before the 16-hyperplane projection (CPU-heavy narrow map).
     # The bucketed relation IS the LSH index: at 100 TB it is bucketed
     # once per rebuild (one narrow map + one shuffle) and every query
-    # probes it — memo_checkpoint is the in-session rehearsal, so the
+    # probes it — the shared relation is the in-session rehearsal, so the
     # 16-plane fold runs once per session instead of once per join leg
     # per invocation (the fold, not the banded join, is this tier's
     # measured bill — see lsh_bucket's docstring).
@@ -139,10 +158,13 @@ def bucketed_corpus(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     # exact cosine.  7.5 MB at the sf1 blow-up (20k vectors,
     # tools/MEMO_FOOTPRINT_SF1.json), MEMORY_AND_DISK, non-reliable
     # under executor loss; first call materializes at construction time.
-    return memo_checkpoint(
-        fan_out(embeddings).withColumn(
-            "bucket", lsh_bucket(F.col("embedding"), dim)
-        )
+    return shared(_bucketed, embeddings, dim=dim)
+
+
+def _bucketed(embeddings: DataFrame, dim: int) -> DataFrame:
+    # fan_out before the 16-hyperplane projection (CPU-heavy narrow map)
+    return fan_out(embeddings).withColumn(
+        "bucket", lsh_bucket(F.col("embedding"), dim)
     )
 
 
@@ -419,7 +441,7 @@ def ivf_cells(
     The assignment relation IS the IVF index ("this operator IS the
     partition layout", ivf_topk) — at 100 TB it is written partitioned
     by cell_id once per rebuild and every retrieval face reads it.  The
-    in-session rehearsal of that is ``memo_checkpoint``: four
+    in-session rehearsal of that is the shared relation: four
     independent faces consume the identical assignment (ivf_topk's
     ranked-base build, semantic_dedup_pairs, cell_label_purity,
     knn_label_noise_ivf via the label join-back), and without the memo
@@ -433,7 +455,22 @@ def ivf_cells(
     linear in the corpus, MEMORY_AND_DISK so growth spills rather
     than OOMs; blocks are non-reliable under executor loss.  First
     call materializes at plan-construction time.
+
+    Only the canonical keep=() assignment is shared: a keep variant
+    would pin a SECOND full-corpus relation in executor storage for
+    the session.  Production callers all use keep=() + the label
+    join-back idiom (cell_label_purity/knn_label_noise_ivf); keep
+    survives for the equivalence tests that pin that idiom
+    row-identical.
     """
+    if keep:
+        return _ivf_assignment(embeddings, n_cells, keep).localCheckpoint()
+    return shared(_ivf_assignment, embeddings, n_cells=n_cells)
+
+
+def _ivf_assignment(
+    embeddings: DataFrame, n_cells: int, keep: tuple = ()
+) -> DataFrame:
     from eventstreamd_spark.functions.vectors import dot, norm
 
     cents = embeddings.filter(F.col("vec_id") < n_cells).select(
@@ -470,19 +507,12 @@ def ivf_cells(
             )
         ).alias("b")
     )
-    out = best.select(
+    return best.select(
         "vec_id",
         F.col("b.embedding").alias("embedding"),
         F.col("b.cell_id").alias("cell_id"),
         *[F.col(f"b.{c}").alias(c) for c in keep],
     )
-    # Only the canonical keep=() assignment is memoized: a keep-variant
-    # call has a distinct semanticHash, so memoizing it would pin a
-    # SECOND full-corpus checkpoint in executor storage for the session.
-    # Production callers all use keep=() + the label join-back idiom
-    # (cell_label_purity/knn_label_noise_ivf); keep survives for the
-    # equivalence tests that pin that idiom row-identical.
-    return memo_checkpoint(out) if not keep else out.localCheckpoint()
 
 
 def ivf_topk(
@@ -501,17 +531,36 @@ def ivf_topk(
     layout.
 
     Like ``brute_force_topk``, the ranked top-``TOPK_MEMO_KMAX`` base is
-    ``memo_checkpoint``ed per (query set, session): similarity_ivf_ann
+    shared per (query set, session): similarity_ivf_ann
     (k=5), ann_recall's approx leg (k=5) and ndcg_eval's (k=10) probe
     the SAME cells — one assignment pass serves all three faces, and
     rank-filtering the kmax base is row-for-row identical to ranking
     with k directly (row_number over the full candidate set)."""
     kmax = max(k, TOPK_MEMO_KMAX)
-    cells = ivf_cells(embeddings, n_cells)
+    base = shared(
+        _ivf_ranked,
+        ivf_cells(embeddings, n_cells),
+        embeddings,
+        query_ids=_ids(query_ids),
+        kmax=kmax,
+        n_cells=n_cells,
+        n_probe=n_probe,
+    )
+    return base.filter(F.col("rank") <= k) if k < kmax else base
+
+
+def _ivf_ranked(
+    cells: DataFrame,
+    embeddings: DataFrame,
+    query_ids: tuple,
+    kmax: int,
+    n_cells: int,
+    n_probe: int,
+) -> DataFrame:
     cents = embeddings.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("cvec")
     )
-    q = embeddings.filter(F.col("vec_id").isin(query_ids)).select(
+    q = embeddings.filter(F.col("vec_id").isin(list(query_ids))).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
     qscored = q.join(F.broadcast(cents)).withColumn(
@@ -530,13 +579,7 @@ def ivf_topk(
         F.col("vec_id") != F.col("query_id")
     )
     scored = cand.withColumn("cos", cosine(F.col("qvec"), F.col("embedding")))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    base = memo_checkpoint(
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kmax)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
-    return base.filter(F.col("rank") <= k) if k < kmax else base
+    return _ranked(scored, F.desc("cos"), kmax)
 
 
 def sql_ivf_topk(
@@ -837,32 +880,41 @@ def pq_topk(
     vectors sharing all 8 codes) break on vec_id.
 
     The code table (vec_id + 8 small ints — the 64x-compressed corpus)
-    is ``memo_checkpoint``ed: ``pq_ann`` and ``ann_recall_pq`` run over
+    is shared (plans/memo.py): ``pq_ann`` and ``ann_recall_pq`` run over
     the SAME codes, and re-encoding the corpus per query is exactly the
     work a persisted PQ index exists to avoid.  Likewise the per-query
     LUT (|Q| x PQ_K rows): without materialization each of the 8
     broadcast legs below re-executes the LUT subtree (8 redundant scans
-    of the embeddings source just to rebuild an 80-row frame).
+    of the embeddings source just to rebuild an 80-row frame).  The
+    ranked top-kmax base is shared like brute_force_topk/ivf_topk:
+    pq_ann and ann_recall_pq score the same codes against the same
+    queries — one ADC pass per session serves every k <= kmax face.
     """
-    codes = memo_checkpoint(pq_codes(embeddings))
+    kmax = max(k, TOPK_MEMO_KMAX)
+    codes = shared(pq_codes, embeddings)
+    lut = shared(_pq_lut, embeddings, query_ids=_ids(query_ids))
+    base = shared(_pq_ranked, codes, lut, kmax=kmax)
+    return base.filter(F.col("rank") <= k) if k < kmax else base
+
+
+def _pq_lut(embeddings: DataFrame, query_ids: tuple) -> DataFrame:
+    """ONE wide per-(query, centroid) LUT row carrying all 8 subspace
+    distances (|Q| x 16 rows); ``_pq_ranked`` takes 8 cheap
+    column-slices of it for the per-subspace joins — same shape as the
+    SQL twin, and far fewer driver-side plan nodes than an 8-part
+    union."""
     cents = embeddings.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("k"), F.col("embedding").alias("cvec")
     )
-    q = embeddings.filter(F.col("vec_id").isin([int(i) for i in query_ids]))
-    # ONE wide per-(query, centroid) LUT row carrying all 8 subspace
-    # distances (|Q| x 16 rows), then 8 cheap column-slices of it for
-    # the per-subspace joins — same shape as the SQL twin, and far
-    # fewer driver-side plan nodes than an 8-part union.
-    lut = memo_checkpoint(
-        q.join(F.broadcast(cents)).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("k"),
-            *[
-                _sub_l2("embedding", "cvec", m).alias(f"d{m}")
-                for m in range(PQ_M)
-            ],
-        )
+    q = embeddings.filter(F.col("vec_id").isin(list(query_ids)))
+    return q.join(F.broadcast(cents)).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("k"),
+        *[_sub_l2("embedding", "cvec", m).alias(f"d{m}") for m in range(PQ_M)],
     )
+
+
+def _pq_ranked(codes: DataFrame, lut: DataFrame, kmax: int) -> DataFrame:
     scored = codes
     for m in range(PQ_M):
         lut_m = lut.select("query_id", F.col("k").alias(f"c{m}"), f"d{m}")
@@ -875,19 +927,7 @@ def pq_topk(
     scored = scored.filter(F.col("vec_id") != F.col("query_id")).withColumn(
         "approx_dist", total
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.asc("approx_dist"), F.asc("vec_id")
-    )
-    # Ranked top-kmax base memoized like brute_force_topk/ivf_topk:
-    # pq_ann and ann_recall_pq score the same codes against the same
-    # queries — one ADC pass per session serves every k <= kmax face.
-    kmax = max(k, TOPK_MEMO_KMAX)
-    base = memo_checkpoint(
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kmax)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "rank")
-    )
-    return base.filter(F.col("rank") <= k) if k < kmax else base
+    return _ranked(scored, F.asc("approx_dist"), kmax)
 
 
 def sql_pq_topk(
@@ -1018,7 +1058,7 @@ def ann_recall_report(
     the exact side is the |Q|-bounded brute-force scan, so the report
     costs one corpus pass more than the ANN query it audits — and only
     for the FIRST tier audited: the exact ranking (|Q| x k rows) is
-    ``memo_checkpoint``ed, so auditing the IVF and PQ rungs
+    shared (plans/memo.py), so auditing the IVF and PQ rungs
     back-to-back pays the brute-force corpus scan once, not per rung
     (the in-session analog of persisting the eval ranking an index
     rebuild reuses across its recall dashboards).
@@ -1446,7 +1486,7 @@ def ndcg_eval(
     rank-weighting family as RRF (hybrid_search) — consistent eval
     semantics across the retrieval stack.
 
-    Plan: the |Q|-bounded exact ranking is memo_checkpoint'ed (shared
+    Plan: the |Q|-bounded exact ranking is a shared relation (shared
     with the recall reports when run in-session); the approx leg is
     the audited ANN query itself; everything downstream is joins and
     aggregates on |Q| x k rows.
@@ -1580,28 +1620,13 @@ def mmr_topk(
     pair table is ``localCheckpoint``ed so round t does not replay the
     corpus scan t times.
     """
-    qvec = embeddings.filter(F.col("vec_id") == query_vec_id).select(
-        F.col("embedding").alias("qv")
+    cand = shared(
+        _mmr_candidates,
+        embeddings,
+        query_vec_id=query_vec_id,
+        candidates=candidates,
     )
-    cand = memo_checkpoint(
-        fan_out(embeddings)
-        .filter(F.col("vec_id") != query_vec_id)
-        .crossJoin(F.broadcast(qvec))
-        .select(
-            "vec_id",
-            "embedding",
-            cosine_guarded(F.col("embedding"), F.col("qv")).alias("rel"),
-        )
-        .orderBy(F.desc("rel"), F.asc("vec_id"))
-        .limit(candidates)
-    )
-    a = cand.select(F.col("vec_id").alias("i"), F.col("embedding").alias("vi"))
-    b = cand.select(F.col("vec_id").alias("j"), F.col("embedding").alias("vj"))
-    pair = memo_checkpoint(
-        a.join(F.broadcast(b), F.col("i") != F.col("j")).select(
-            "i", "j", cosine_guarded(F.col("vi"), F.col("vj")).alias("sim")
-        )
-    )
+    pair = shared(_mmr_pairs, cand)
     base = cand.select("vec_id", "rel")
     picks = []
     sel = None
@@ -1648,6 +1673,34 @@ def mmr_topk(
     for p in picks[1:]:
         out = out.union(p)
     return out
+
+
+def _mmr_candidates(
+    embeddings: DataFrame, query_vec_id: int, candidates: int
+) -> DataFrame:
+    qvec = embeddings.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qv")
+    )
+    return (
+        fan_out(embeddings)
+        .filter(F.col("vec_id") != query_vec_id)
+        .crossJoin(F.broadcast(qvec))
+        .select(
+            "vec_id",
+            "embedding",
+            cosine_guarded(F.col("embedding"), F.col("qv")).alias("rel"),
+        )
+        .orderBy(F.desc("rel"), F.asc("vec_id"))
+        .limit(candidates)
+    )
+
+
+def _mmr_pairs(cand: DataFrame) -> DataFrame:
+    a = cand.select(F.col("vec_id").alias("i"), F.col("embedding").alias("vi"))
+    b = cand.select(F.col("vec_id").alias("j"), F.col("embedding").alias("vj"))
+    return a.join(F.broadcast(b), F.col("i") != F.col("j")).select(
+        "i", "j", cosine_guarded(F.col("vi"), F.col("vj")).alias("sim")
+    )
 
 
 def sql_mmr_topk(

@@ -45,6 +45,8 @@ from collections.abc import Iterator
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from eventstreamd_spark.plans.memo import shared
+
 # --- shared 60-bit hash idiom (see digest.py) -------------------------------
 
 _B60 = 1152921504606846976  # 2^60; hashes are uniform in [0, 2^60)
@@ -1554,15 +1556,13 @@ def logbucket_quantiles(
     O(buckets) — the tiny-window exemption."""
     from pyspark.sql import Window as W
 
-    from eventstreamd_spark.plans.memo import memo_checkpoint
-
     # the register table feeds THREE consumers (cumulative walk, total,
     # final envelope join) whose column pruning makes each subtree
     # distinct — without materialization Spark re-scans and re-
     # aggregates the corpus per consumer (6 scans measured, zero
     # ReusedExchange).  The registers are KB (the memo contract's
-    # intended case): checkpoint once, one corpus scan total.
-    regs = memo_checkpoint(logbucket_registers(lineitem, weight=weight))
+    # intended case): materialize once, one corpus scan total.
+    regs = shared(logbucket_registers, lineitem, weight=weight)
     wcum = W.orderBy("bucket").rowsBetween(W.unboundedPreceding, 0)
     cum = regs.select("bucket", "c").withColumn(
         "cum", F.sum("c").over(wcum)
@@ -1653,13 +1653,9 @@ def logbucket_quantiles_by_group(
     rollup (the grouped-HLL argument applied to quantiles)."""
     from pyspark.sql import Window as W
 
-    from eventstreamd_spark.plans.memo import memo_checkpoint
-
-    # same three-consumer shape as logbucket_quantiles: checkpoint the
-    # KB register table so the corpus is scanned once, not per consumer
-    regs = memo_checkpoint(
-        logbucket_registers(lineitem, group_col=group_col, value=value)
-    )
+    # same three-consumer shape as logbucket_quantiles: share the KB
+    # register table so the corpus is scanned once, not per consumer
+    regs = shared(logbucket_registers, lineitem, group_col=group_col, value=value)
     wcum = (
         W.partitionBy(group_col)
         .orderBy("bucket")

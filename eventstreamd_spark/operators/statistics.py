@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from eventstreamd_spark.plans.memo import shared
+
 D4 = "decimal(28,4)"
 D8 = "decimal(38,8)"
 
@@ -1241,20 +1243,18 @@ def _catalog_exact_rel(lineitem: DataFrame) -> DataFrame:
     """The ONE-ROW exact statistics aggregate the catalog family
     shares (round 13, the signature-relation idiom applied to the
     stats tier): per column the non-null count and the exact NDV, plus
-    the row count — one Expand-rewritten scan, ``memo_checkpoint``'ed
-    (1 row, well inside the memo's small-output contract) so the
-    session pays the multi-column COUNT DISTINCT scan once instead of
-    once per catalog face (``column_stats_catalog`` unpivots it;
-    ``column_stats_catalog_hll`` reads its ndv_exact eval column and
-    null/non-null counts from it)."""
-    from eventstreamd_spark.plans.memo import memo_checkpoint
-
+    the row count — one Expand-rewritten scan, read through ``shared``
+    (1 row; plans/memo.py) so the session pays the multi-column COUNT
+    DISTINCT scan once instead of once per catalog face
+    (``column_stats_catalog`` unpivots it; ``column_stats_catalog_hll``
+    reads its ndv_exact eval column and null/non-null counts from
+    it)."""
     aggs = []
     for c in _CATALOG_COLS:
         aggs.append(F.count(F.col(c)).alias(f"__nn_{c}"))
         aggs.append(F.count_distinct(F.col(c)).alias(f"__nd_{c}"))
     aggs.append(F.count(F.lit(1)).alias("__n"))
-    return memo_checkpoint(lineitem.agg(*aggs))
+    return lineitem.agg(*aggs)
 
 
 def column_stats_catalog(lineitem: DataFrame) -> DataFrame:
@@ -1272,7 +1272,7 @@ def column_stats_catalog(lineitem: DataFrame) -> DataFrame:
     session-shared ``_catalog_exact_rel`` (one Expand scan serves this
     face and ``column_stats_catalog_hll``'s eval column).
     """
-    one = _catalog_exact_rel(lineitem)
+    one = shared(_catalog_exact_rel, lineitem)
     stack_args = ", ".join(
         f"'{c}', __nn_{c}, __n - __nn_{c}, __nd_{c}" for c in _CATALOG_COLS
     )
@@ -2653,9 +2653,9 @@ def _catalog_cells_rel(lineitem: DataFrame) -> DataFrame:
     """The SHARED register-cell relation of the HLL catalog tier
     (round 13): (column_name, bucket, m_rho, cnt) with null values
     riding bucket -1 — one narrow explode+md5 scan whose map-side
-    combine caps every task's shuffle at n_cols x (m+1) rows,
-    ``memo_checkpoint``'ed (n_cols x (m+1) rows, well inside the
-    memo's small-output contract) so ``column_stats_catalog_hll`` and
+    combine caps every task's shuffle at n_cols x (m+1) rows, read
+    through ``shared`` (n_cols x (m+1) rows; plans/memo.py) so
+    ``column_stats_catalog_hll`` and
     ``column_stats_catalog_hll_prod`` pay the unpivot+hash scan once
     per session instead of once per face (and the eval face no longer
     runs a SECOND scan for its null/non-null counts — they fall out of
@@ -2663,7 +2663,6 @@ def _catalog_cells_rel(lineitem: DataFrame) -> DataFrame:
     from eventstreamd_spark.digest import _canon
     from eventstreamd_spark.functions.text import h60
     from eventstreamd_spark.operators.sketches import _REM_BITS
-    from eventstreamd_spark.plans.memo import memo_checkpoint
     from eventstreamd_spark.session import fan_out
 
     structs = F.array(
@@ -2699,7 +2698,7 @@ def _catalog_cells_rel(lineitem: DataFrame) -> DataFrame:
     bucket = F.when(F.col("h").isNull(), F.lit(-1).cast("bigint")).otherwise(
         F.expr(f"shiftright(h, {_REM_BITS})")
     )
-    return memo_checkpoint(
+    return (
         hs.select("column_name", bucket.alias("bucket"), rho.alias("rho"))
         .groupBy("column_name", "bucket")
         .agg(
@@ -2738,7 +2737,7 @@ def column_stats_catalog_hll(lineitem: DataFrame) -> DataFrame:
         _hll_est_columns,
     )
 
-    cells = _catalog_cells_rel(lineitem)
+    cells = shared(_catalog_cells_rel, lineitem)
     live = F.col("bucket") >= 0
     per_col = cells.groupBy("column_name").agg(
         F.sum(F.when(live, F.col("cnt")).otherwise(0))
@@ -2765,7 +2764,7 @@ def column_stats_catalog_hll(lineitem: DataFrame) -> DataFrame:
     est = _hll_est_columns(
         s_total, (F.lit(_HLL_M) - F.col("n_present")).cast("int")
     )
-    one = _catalog_exact_rel(lineitem)
+    one = shared(_catalog_exact_rel, lineitem)
     exact = one.select(
         F.explode(
             F.array(
@@ -2879,7 +2878,7 @@ def column_stats_catalog_hll_prod(lineitem: DataFrame) -> DataFrame:
         _hll_est_columns,
     )
 
-    cells = _catalog_cells_rel(lineitem)
+    cells = shared(_catalog_cells_rel, lineitem)
     live = F.col("bucket") >= 0
     agg = cells.groupBy("column_name").agg(
         F.sum(F.when(live, F.col("cnt")).otherwise(0))

@@ -97,6 +97,7 @@ from eventstreamd_spark.operators.perceptual import (
 from eventstreamd_spark.operators.perceptual import (
     _sql_scene_hashes as _sql_scene,
 )
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
 # Keys video scenes disjointly (image: 0+, audio: 0x50000000+) — same
@@ -397,11 +398,9 @@ def video_near_dup_grid(
     base tier catches (resized cross-codec twin, rate-doubled twin)
     while separating the vertical-flip twin whose per-frame totals
     AND column sums match the canonical exactly (base-tier Hamming 0);
-    decode-once localCheckpoint as in ``video_near_dup``."""
+    decode-once shared signature relation as in ``video_near_dup``."""
     return banded_pairs(
-        video_fingerprints_grid(media).localCheckpoint(),
-        hamming_max,
-        kinds=GRID_KINDS,
+        shared(video_fingerprints_grid, media), hamming_max, kinds=GRID_KINDS
     )
 
 
@@ -416,23 +415,14 @@ def video_near_dup_grid(
 # a filter+project away.  At 100 TB this is the only sane shape: the
 # per-frame decode is the family's dominant cost and a real pipeline
 # computes signatures once and serves every tier from the signature
-# table — the registry materializes this relation ONCE PER SESSION
-# through ``multimodal.cached_media`` under kind
-# ``VIDEO_SIG_CACHE_KIND`` (a cached temp view over the blob fixture:
-# the decode runs exactly once per bench/oracle invocation and is
-# never persisted across runs — round-12 rule, see
-# multimodal._sig_builders).
-
-# the _sN suffix names the kernel OUTPUT version in the session view
-# key; blob-synth changes keep using _MEDIA_FIXTURE_VERSION
-VIDEO_SIG_CACHE_KIND = "scene_video_grid_sig_s1"
+# table — the registry asks for ``shared(video_fingerprints_grid,
+# <vflip blob fixture>)`` in all three faces, so the decode runs once
+# per session (plans/memo.py) and is never persisted across runs.
 
 
 def scene_video_grid_signatures(docs: DataFrame) -> DataFrame:
     """Full-corpus decode pass for the video family: 6-word grid
-    signatures over the vflip-planted scene corpus.  Spec twin of the
-    session-cached relation ``cached_media`` serves under
-    ``VIDEO_SIG_CACHE_KIND`` (same rows by construction)."""
+    signatures over the vflip-planted scene corpus."""
     return video_fingerprints_grid(documents_as_scene_video_vflip(docs))
 
 
@@ -463,11 +453,12 @@ def video_near_dup(
     FRAME-RATE-DOUBLED twin at Hamming 0 (envelope AND spatial words
     are both resolution- and rate-free), and the re-encode-noise twin
     within the verify threshold; recall semantics as documented on
-    ``perceptual.media_near_dup``.  Decode-once: signatures are
-    localCheckpoint'ed before the banded self-join — the per-frame
-    decode is by far the dominant cost here (F frames per blob), so
-    the lineage re-run would double an already-heavy kernel."""
-    return banded_pairs(video_fingerprints(media).localCheckpoint(), hamming_max)
+    ``perceptual.media_near_dup``.  Decode-once: signatures are the
+    session's shared relation (plans/memo.py), a materialized leaf
+    before the banded self-join — the per-frame decode is by far the
+    dominant cost here (F frames per blob), so the lineage re-run
+    would double an already-heavy kernel."""
+    return banded_pairs(shared(video_fingerprints, media), hamming_max)
 
 
 # ---------------------------------------------------------------------------

@@ -1,97 +1,98 @@
-"""Session-scoped plan memoization: ``memo_checkpoint``.
+"""Session-scoped relation memo: ``shared(fn, *frames, **params)``.
 
-Several registered queries share an expensive SMALL-OUTPUT subtree —
-the canonical case is the ANN recall reports: ``ann_recall`` (IVF tier)
-and ``ann_recall_pq`` (PQ tier) both audit against the SAME exact
-brute-force ranking, and ``ann_recall_pq`` additionally re-derives the
-PQ code table that ``pq_ann`` already computed.  Spark has no
-cross-action common-subtree reuse: every action re-executes its whole
-plan, so an eval suite that runs the ladder rungs back-to-back pays the
-exact-ranking corpus scan once per rung.
+Spark has no cross-action common-subtree reuse: every action re-runs
+its whole plan.  Several registered queries compose the same expensive
+intermediate — the hashed-shingle relation and the MinHash pair tier
+under nine dedup faces, one signature decode under every media tier,
+the exact ANN ranking under the recall reports — so the engine keeps
+ONE session catalog of such relations.  An operator asks for the
+producer it needs over its own inputs and parameters::
 
-``memo_checkpoint(df)`` is the in-session analog of persisting an index
-table (see ``write_ivf_index`` for the durable tier): the first caller
-``localCheckpoint``s the frame (materializing it to executor-local
-blocks, truncating lineage); later callers with a SEMANTICALLY
-IDENTICAL plan get the already-materialized frame back.  Keying:
+    sh = shared(with_hashed_shingles, docs, n=n)
+    pairs = shared(minhash_lsh_dedup, docs, n=n, threshold=threshold)
 
-- ``DataFrame.semanticHash()`` — a hash of the canonicalized analyzed
-  plan, so the same operator composition over the same source paths
-  hits regardless of which query built it.
-- the SparkContext ``applicationId`` — a restarted session invalidates
-  every entry (checkpoint blocks die with their context).
+The key is ``(applicationId, fn's module and qualname, bound
+parameters with defaults applied, semanticHash of each frame)``.  It is
+built from the producer and its INPUT plans, never from the output
+plan: ``dedup_clusters`` runs its connected-components convergence
+jobs while its plan is built, and that plan hashes differently on
+every build, so an output-keyed memo would never hit and would pay the
+fixed point per call.  Here ``fn`` runs only on a miss.  A relation
+built with other parameters has another key, so a consumer cannot be
+handed a relation of the wrong tier.  Producers must be module-level
+functions: every input they depend on is a frame or a parameter.
 
-Use it for frames that are small relative to the corpus (top-k
-rankings, code tables, broadcast-sized LUTs): checkpoint blocks live in
-executor storage memory until the session ends.  At 100 TB the same
-decision becomes "persist the index to parquet once per rebuild" —
-this memo is the single-session rehearsal of that pattern.
+Storage policy: one, eager ``localCheckpoint`` on the miss.  The
+relation enters every consumer's plan as an ``ExistingRDD`` leaf with
+size statistics the planner can use (lazy checkpoints measured 1.3-1.5x
+slower because the planner lost them).  Blocks are MEMORY_AND_DISK, so
+growth spills rather than OOMs, and NON-reliable: an executor loss
+kills them and the job (the at-scale answer is a persisted index, see
+``write_ivf_index``).  Building a plan pays the producer's jobs even
+if the plan is never executed.
 
-THREE entries are deliberately corpus-PROPORTIONAL — the IVF cell
-assignment (``similarity.ivf_cells``), the LSH bucket table
-(``similarity.bucketed_corpus``), and, through the sibling
-``multimodal.session_cached_relation`` mechanism, the hashed-shingle
-relation (``queries_registry._doc_shingles``).  Each one IS an index a
-100 TB deployment writes to parquet once per corpus rebuild and every
-retrieval/dedup face reads (``write_ivf_index`` is the durable tier of
-the same relation); memoizing them in-session is the rehearsal of that
-read path, accepted with open eyes:
+Footprints (``tools/MEMO_FOOTPRINT_SF1.json``, sf1 blow-up of 60k docs
+and 20k vectors): hashed shingles 27.0 MB (1.37x the raw text column;
+measured when they were a cached view, not yet re-measured as a
+checkpoint), IVF cells 7.6 MB, LSH buckets 7.5 MB, all linear in the
+corpus; every other entry (pairs, clusters, signatures, rankings,
+registers) is small.  The whole resident set at sf0.1 was 7.4 MB, and
+a resident vs cleared A/B showed no eviction pressure on unrelated
+queries (``tools/CACHE_PRESSURE_AB.json``).
 
-- Measured footprint at the sf1 blow-up (50k docs / 20k vectors;
-  ``tools/MEMO_FOOTPRINT_SF1.json``): shingles 27.0 MB (1.37x the raw
-  text column), IVF cells 7.6 MB, LSH buckets 7.5 MB — linear in the
-  corpus, and the full resident set across ALL session caches at
-  sf0.1 is 7.4 MB (``tools/CACHE_PRESSURE_AB.json``, where a
-  controlled resident-vs-cleared A/B also ruled out eviction pressure
-  on unrelated queries, median ratio 1.04).
-- Both storage levels spill (CACHE TABLE and localCheckpoint default
-  MEMORY_AND_DISK), so growth degrades to disk reads, not OOM.
-- ``localCheckpoint`` blocks are NON-RELIABLE: an executor loss kills
-  them and the job (acceptable in local mode / single-session bench;
-  the at-scale answer is the persisted parquet index, not a bigger
-  cache).
-- ``memo_checkpoint`` is EAGER: the first call materializes the frame
-  at plan-construction time, so building a plan without executing it
-  still pays the scan (callers that need construction-time laziness
-  must opt out).
+Streaming rule: nothing reachable from a ``foreachBatch`` writer may
+call ``shared``.  Every micro-batch is a new plan, so the daemon's memo
+would grow without bound.  Memoize at batch-operator call sites; the
+kernels the stream calls directly (``perceptual_hashes``,
+``simhash_admission_signatures``, ``admission_decisions_from_sig``)
+stay memo-free.
 
-Staleness contract: entries assume source data is immutable for the
-life of the session (true for the driver's read-only parquet inputs).
-``memo_clear()`` resets, for tests that rewrite their temp inputs.
+Staleness contract: the key covers input PATHS, not file contents, so
+inputs are assumed immutable for the life of the session (true for the
+read-only parquet inputs).  Code that rewrites an input in place must
+call ``memo_clear()``; a restarted application invalidates everything.
 """
 
 from __future__ import annotations
 
-from typing import Dict, Tuple
+import inspect
+from typing import Callable, Dict, Tuple
 
 from pyspark.sql import DataFrame
 
-_MEMO: Dict[Tuple[str, int], DataFrame] = {}
+_MEMO: Dict[Tuple, DataFrame] = {}
 
-# Observability for tests: how many calls were served from the memo.
+# Observability: how many calls were served from the memo.
 HITS = 0
 
 
-def memo_checkpoint(df: DataFrame) -> DataFrame:
-    """Return a ``localCheckpoint`` of ``df``, reusing a prior
-    checkpoint when a semantically identical plan was already
-    materialized in this Spark application."""
+def shared(fn: Callable[..., DataFrame], *frames: DataFrame, **params) -> DataFrame:
+    """``fn(*frames, **params)`` materialized once per Spark application;
+    later calls with the same producer, parameters and semantically
+    identical input frames get the same materialized relation."""
     global HITS
-    try:
-        key = (df.sparkSession.sparkContext.applicationId, df.semanticHash())
-    except Exception:
-        # No context / analysis failure: fall back to a plain eager
-        # checkpoint so callers never see a behavior difference.
-        return df.localCheckpoint()
+    if "<locals>" in fn.__qualname__:
+        raise ValueError(
+            f"shared() needs a module-level producer, got {fn.__qualname__}"
+        )
+    bound = inspect.signature(fn).bind(*frames, **params)
+    bound.apply_defaults()
+    args = list(bound.arguments.items())[len(frames):]
+    key = (
+        frames[0].sparkSession.sparkContext.applicationId,
+        fn.__module__,
+        fn.__qualname__,
+        repr(sorted(args)),
+        tuple(f.semanticHash() for f in frames),
+    )
     hit = _MEMO.get(key)
     if hit is not None:
         HITS += 1
         return hit
-    ck = df.localCheckpoint()
-    _MEMO[key] = ck
-    return ck
+    out = _MEMO[key] = fn(*frames, **params).localCheckpoint()
+    return out
 
 
 def memo_clear() -> None:
-    """Drop all memo entries (tests that mutate their inputs)."""
+    """Drop all memo entries (tests that rewrite their inputs)."""
     _MEMO.clear()

@@ -50,6 +50,7 @@ from eventstreamd_spark.operators.filters import (
     oracle_filters_sql,
     parse_filter,
 )
+from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -552,7 +553,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard near-dup pairs (inverted-index join)."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.ngram_jaccard_pairs(docs, sh=_doc_shingles(spark, sf_dir))
+    return dedup_op.ngram_jaccard_pairs(docs)
 
 
 @register(
@@ -561,34 +562,12 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup: banded signatures -> candidates -> exact
-    verify.  Portable hashing makes even the sketch oracle-checkable."""
-    return _doc_pairs(spark, sf_dir)
-
-
-def _text_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The text family's ONE tokenize+hash pass (round 12, the
-    media-family idiom): shingle-SimHash signatures over the planted
-    corpus as a SESSION-cached relation — computed from the parquet
-    inputs every invocation, shared within the session, never
-    persisted.  dedup_simhash/_wide/_prod band over it directly (a
-    near-dup tier over a corpus-resident table, guide-§8 shape), and
-    the admission faces take their CORPUS (prebuilt index) side from
-    it; admission BATCHES still pay their own kernel — they model
-    fresh data."""
-    from eventstreamd_spark.operators.multimodal import (
-        session_cached_relation,
-    )
-
-    return session_cached_relation(
-        spark,
-        sf_dir,
-        dedup_op.TEXT_SIG_CACHE_KIND,
-        lambda: dedup_op.simhash_signatures(
-            dedup_op.with_planted_near_dups(
-                load_table(spark, sf_dir, "documents")
-            )
-        ),
-    )
+    verify.  Portable hashing makes even the sketch oracle-checkable.
+    The pair relation is the session's shared one: nine registered
+    faces (keep-corpus, closure, curation, manifest, pagerank,
+    triangles, split leakage, recall report) read the same pass."""
+    docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
+    return shared(dedup_op.minhash_lsh_dedup, docs)
 
 
 @register(
@@ -602,129 +581,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried an n^2/2^8 random-collision term per band (SCALE.md §21's
     bucket-width-tracks-log2(n) rule, applied to the text tier)."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.simhash_pairs(docs, sig=_text_sigs(spark, sf_dir))
-
-
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shingle tiers' ONE tokenize+hash pass (round 12, the
-    signature-relation idiom): the n=3 hashed-shingle relation over
-    the planted corpus as a SESSION-cached relation — computed from
-    the parquet inputs every invocation, shared within the session,
-    never persisted.  The n-gram Jaccard/containment tiers, the
-    MinHash tiers (which alone evaluate the kernel up to 3x per
-    query), the threshold sweep and the recall report all read it
-    instead of re-hashing the corpus per query.
-
-    Deliberately corpus-proportional (plans/memo.py contract note):
-    this relation is the shingle INDEX a 100 TB deployment writes to
-    parquet once per corpus rebuild (the ``write_ivf_index`` pattern)
-    and every dedup face reads; the session cache is the one-session
-    rehearsal of that read path.  Measured 27.0 MB at the sf1 blow-up
-    (60k docs, 3.1M hashed shingles — 1.37x the raw text column;
-    tools/MEMO_FOOTPRINT_SF1.json), linear in the corpus; the cached
-    view's MEMORY_AND_DISK level spills rather than OOMs, and a
-    controlled resident-vs-cleared A/B (tools/CACHE_PRESSURE_AB.json)
-    showed no eviction pressure on unrelated queries."""
-    from eventstreamd_spark.operators.multimodal import (
-        session_cached_relation,
-    )
-
-    return session_cached_relation(
-        spark,
-        sf_dir,
-        dedup_op.SHINGLE_CACHE_KIND,
-        lambda: dedup_op.with_hashed_shingles(
-            dedup_op.with_planted_near_dups(
-                load_table(spark, sf_dir, "documents")
-            ),
-            3,
-        ),
-    )
-
-
-def _doc_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The MinHash-LSH near-dup PAIR relation (doc_a, doc_b, jaccard)
-    at the canonical (n=3, threshold=0.6) over the planted corpus, as
-    a session-cached relation (round 13).  NINE registered faces
-    compose this identical relation — the pair tier itself
-    (dedup_minhash_lsh), the keep-corpus anti-join, the transitive
-    closure (dedup_clusters + both curation faces via
-    ``_doc_clusters``), the iterative tier (pagerank_canonical,
-    triangle_stats), the leakage audit (split_leakage) and the recall
-    report — and each previously re-ran banded candidates + exact
-    verify per query.  The relation is near-dup pairs only (KB at any
-    SF fraction of corpus), squarely inside the session-cache
-    contract; one candidates+verify pass per session serves all nine.
-    Identity pytests pin each consumer's ``pairs=`` path equal to its
-    raw-docs path."""
-    from eventstreamd_spark.operators.multimodal import (
-        session_cached_relation,
-    )
-
-    return session_cached_relation(
-        spark,
-        sf_dir,
-        "minhash_pairs3_06",
-        lambda: dedup_op.minhash_lsh_dedup(
-            dedup_op.with_planted_near_dups(
-                load_table(spark, sf_dir, "documents")
-            ),
-            sh=_doc_shingles(spark, sf_dir),
-        ),
-    )
-
-
-def _doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The canonical cluster assignment (doc_id, cluster_id) over the
-    planted corpus — ``dedup_clusters`` at (n=3, threshold=0.6) — as a
-    session-cached relation (round 13).  FOUR faces compose this
-    identical closure (dedup_clusters, curation_decisions,
-    corpus_build_manifest, pagerank_canonical's component map) and
-    each previously ran its own star-contraction fixed point per
-    query.  One row per document (tiny at any SF); the CC convergence
-    probes run once per session, inside the first consumer's timed
-    cold pass."""
-    from eventstreamd_spark.operators.multimodal import (
-        session_cached_relation,
-    )
-
-    return session_cached_relation(
-        spark,
-        sf_dir,
-        "dedup_clusters3_06",
-        lambda: dedup_op.dedup_clusters(
-            dedup_op.with_planted_near_dups(
-                load_table(spark, sf_dir, "documents")
-            ),
-            sh=_doc_shingles(spark, sf_dir),
-            pairs=_doc_pairs(spark, sf_dir),
-        ),
-    )
-
-
-def _text_admission_split_sig(
-    spark: SparkSession, sf_dir: str, split: str
-) -> DataFrame:
-    """One admission split of the session-cached text signature
-    relation, in the admission pipeline's (doc_id, s_hi, s_lo) shape:
-    ``corpus`` = even original docs (the prebuilt index side),
-    ``batch`` = odd originals + every plant.  Signatures are per-doc
-    and deterministic, so filtering the cached relation equals running
-    the kernel on the filtered docs — both narrow and wide faces read
-    the family's ONE tokenize+hash pass instead of re-running it per
-    face and per split."""
-    in_corpus = (F.col("doc_id") < dedup_op.PLANT_OFFSET) & (
-        F.col("doc_id") % 2 == 0
-    )
-    return (
-        _text_sigs(spark, sf_dir)
-        .filter(in_corpus if split == "corpus" else ~in_corpus)
-        .select(
-            "doc_id",
-            F.col("sig_hi").alias("s_hi"),
-            F.col("sig_lo").alias("s_lo"),
-        )
-    )
+    return dedup_op.simhash_pairs(docs)
 
 
 @register(
@@ -741,18 +598,13 @@ def text_admission_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources -> near_dup_batch against their kept source, unpaired odd
     docs -> kept)."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    corpus = docs.filter(
-        (F.col("doc_id") < dedup_op.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
-    )
-    batch = docs.filter(
-        (F.col("doc_id") >= dedup_op.PLANT_OFFSET) | (F.col("doc_id") % 2 == 1)
-    )
-    return dedup_op.text_admission_decisions(
-        corpus,
-        batch,
-        corpus_sig=_text_admission_split_sig(spark, sf_dir, "corpus"),
-        batch_sig=_text_admission_split_sig(spark, sf_dir, "batch"),
-    )
+    return dedup_op.text_admission_decisions(docs, _text_admission_corpus())
+
+
+def _text_admission_corpus():
+    """The registered text-admission split: the corpus is the even
+    original docs; the batch is the odd originals plus every plant."""
+    return (F.col("doc_id") < dedup_op.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
 
 
 @register(
@@ -769,18 +621,8 @@ def text_admission_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     the recall notch (pair-band pigeonhole vs 4-band) cancels between
     the engines and the row is hash-exact like the narrow face."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    corpus = docs.filter(
-        (F.col("doc_id") < dedup_op.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
-    )
-    batch = docs.filter(
-        (F.col("doc_id") >= dedup_op.PLANT_OFFSET) | (F.col("doc_id") % 2 == 1)
-    )
     return dedup_op.text_admission_decisions(
-        corpus,
-        batch,
-        wide=True,
-        corpus_sig=_text_admission_split_sig(spark, sf_dir, "corpus"),
-        batch_sig=_text_admission_split_sig(spark, sf_dir, "batch"),
+        docs, _text_admission_corpus(), wide=True
     )
 
 
@@ -794,7 +636,7 @@ def dedup_simhash_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing in one 16-bit bucket stays subquadratic on a production
     ingest; the unguarded sibling keeps the exact-recall row."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.simhash_pairs_prod(docs, sig=_text_sigs(spark, sf_dir))
+    return dedup_op.simhash_pairs_prod(docs)
 
 
 @register(
@@ -807,7 +649,7 @@ def dedup_simhash_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of n^2/2^16, guaranteed recall at combined Hamming <= 2;
     the tier a 10^9-doc text corpus runs."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.simhash_pairs_wide(docs, sig=_text_sigs(spark, sf_dir))
+    return dedup_op.simhash_pairs_wide(docs)
 
 
 _EMB_PLANT = (
@@ -1331,8 +1173,11 @@ def lineitem_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup connected components -> canonical (doc_id, cluster_id);
-    the keep-one-per-cluster decision a training pipeline executes."""
-    return _doc_clusters(spark, sf_dir)
+    the keep-one-per-cluster decision a training pipeline executes.
+    The assignment is the session's shared one, so the CC convergence
+    jobs run once for every closure consumer."""
+    docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
+    return shared(dedup_op.dedup_clusters, docs)
 
 
 from eventstreamd_spark.operators import sampling as sampling_op  # noqa: E402
@@ -1376,9 +1221,7 @@ def curation_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The composed curation pipeline: quality gate + language ID +
     dedup clustering -> one keep/drop verdict per document."""
     return curation_op.curation_decisions(
-        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents")),
-        sh=_doc_shingles(spark, sf_dir),
-        clusters=_doc_clusters(spark, sf_dir),
+        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -2001,9 +1844,7 @@ def dedup_ngram_df_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted index — the hot-shingle pair-blowup guard you run at
     100 TB (drops ~74% of shingle postings at sf0.1)."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.ngram_jaccard_pairs_df_cutoff(
-        docs, sh=_doc_shingles(spark, sf_dir)
-    )
+    return dedup_op.ngram_jaccard_pairs_df_cutoff(docs)
 
 
 @register(
@@ -2017,9 +1858,7 @@ def dedup_ngram_df_frac_cutoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shingle in >2% of docs = boilerplate) — scale-invariant semantics
     vs the absolute-count variant."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.ngram_jaccard_pairs_df_frac_cutoff(
-        docs, sh=_doc_shingles(spark, sf_dir)
-    )
+    return dedup_op.ngram_jaccard_pairs_df_frac_cutoff(docs)
 
 
 @register(
@@ -2064,9 +1903,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     that Jaccard misses); same inverted-index exchange as the Jaccard
     tier, different score."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.ngram_containment_pairs(
-        docs, sh=_doc_shingles(spark, sf_dir)
-    )
+    return dedup_op.ngram_containment_pairs(docs)
 
 
 @register(
@@ -2212,11 +2049,7 @@ def dedup_keep_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kept corpus after MinHash-LSH dedup (pair-local min-id drop
     rule; one LSH pass + broadcast anti-join, no CC iteration)."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.minhash_keep_corpus(
-        docs,
-        sh=_doc_shingles(spark, sf_dir),
-        pairs=_doc_pairs(spark, sf_dir),
-    )
+    return dedup_op.minhash_keep_corpus(docs)
 
 
 @register("bigram_lm_scores", text_op.sql_bigram_lm_scores())
@@ -2238,34 +2071,12 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim_op.semantic_dedup_pairs(_emb_planted(spark, sf_dir))
 
 
-def _bpe_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The BPE training artifact (merge table + final vocabulary in
-    one relation) as a SESSION-cached relation — TRAIN runs once per
-    process; the merge-table and encode queries both project their
-    half out of it (bpe.py::bpe_induction_relation)."""
-    from eventstreamd_spark.operators.multimodal import (
-        session_cached_relation,
-    )
-
-    return session_cached_relation(
-        spark,
-        sf_dir,
-        bpe_op.INDUCTION_CACHE_KIND,
-        lambda: bpe_op.bpe_induction_relation(
-            load_table(spark, sf_dir, "documents")
-        ),
-    )
-
-
 @register("bpe_merges", bpe_op.sql_bpe_merge_table())
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE merge-table induction (Sennrich et al. 2016):
     iterative greedy pair fusion over the word-count vocabulary —
     per-round cost O(vocab), independent of corpus size."""
-    return bpe_op.bpe_merge_table(
-        load_table(spark, sf_dir, "documents"),
-        induction=_bpe_induction(spark, sf_dir),
-    )
+    return bpe_op.bpe_merge_table(load_table(spark, sf_dir, "documents"))
 
 
 @register("quality_ensemble", text_op.sql_quality_ensemble())
@@ -2323,33 +2134,12 @@ def corpus_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 from eventstreamd_spark.operators import clustering as clustering_op  # noqa: E402
 
 
-def _kmeans_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fitted Lloyd centroid frame as a SESSION-cached relation —
-    the fit is deterministic and identical for both kmeans queries, so
-    one driver-coordinated fit per process serves both (the same
-    sharing idiom as the signature/shingle relations; the k x d frame
-    itself is tiny)."""
-    from eventstreamd_spark.operators.multimodal import (
-        session_cached_relation,
-    )
-
-    return session_cached_relation(
-        spark,
-        sf_dir,
-        clustering_op.CENTS_CACHE_KIND,
-        lambda: clustering_op.fit_centroids(
-            load_table(spark, sf_dir, "embeddings")
-        ),
-    )
-
-
 @register("kmeans_assignments", clustering_op.sql_kmeans_assignments())
 def kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd k-means refinement of the IVF cells (MLlib-style
     driver-coordinated centroid rounds; SemDeDup cell sharpening)."""
     return clustering_op.kmeans_assignments(
-        load_table(spark, sf_dir, "embeddings"),
-        cents=_kmeans_cents(spark, sf_dir),
+        load_table(spark, sf_dir, "embeddings")
     )
 
 
@@ -2358,8 +2148,7 @@ def kmeans_prototypes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prototype-based pruning (Sorscher et al. 2022): the k most
     centroid-typical vectors per refined cell."""
     return clustering_op.kmeans_prototypes(
-        load_table(spark, sf_dir, "embeddings"),
-        cents=_kmeans_cents(spark, sf_dir),
+        load_table(spark, sf_dir, "embeddings")
     )
 
 
@@ -2525,8 +2314,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard threshold-sensitivity report: one scoring pass, a
     histogram per cutoff edge plus reverse cumulative pair counts."""
     return dedup_op.jaccard_threshold_sweep(
-        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents")),
-        sh=_doc_shingles(spark, sf_dir),
+        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -2571,8 +2359,6 @@ def split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_op.split_leakage_check(
         dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents")),
         _SPLIT_WEIGHTS,
-        sh=_doc_shingles(spark, sf_dir),
-        pairs=_doc_pairs(spark, sf_dir),
     )
 
 
@@ -2660,10 +2446,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE: apply the learned merge table per distinct term,
     broadcast the (term -> symbol count) map over the corpus — per-doc
     BPE token counts at O(vocab x merges) fold cost."""
-    return bpe_op.bpe_encode_stats(
-        load_table(spark, sf_dir, "documents"),
-        induction=_bpe_induction(spark, sf_dir),
-    )
+    return bpe_op.bpe_encode_stats(load_table(spark, sf_dir, "documents"))
 
 
 @register("token_budget_fill", text_op.sql_token_budget_fill())
@@ -2914,9 +2697,7 @@ def corpus_build_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate the corpus, survivors get token counts + deterministic shard
     assignments — the manifest a training job consumes."""
     return curation_op.corpus_build_manifest(
-        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents")),
-        sh=_doc_shingles(spark, sf_dir),
-        clusters=_doc_clusters(spark, sf_dir),
+        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -3018,11 +2799,7 @@ def lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs when tuning bands/rows (the dedup analog of
     ann_recall)."""
     docs = dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
-    return dedup_op.lsh_recall_report(
-        docs,
-        sh=_doc_shingles(spark, sf_dir),
-        pairs=_doc_pairs(spark, sf_dir),
-    )
+    return dedup_op.lsh_recall_report(docs)
 
 
 @register("cascade_delete_report", merge_op.sql_cascade_delete_report())
@@ -3094,10 +2871,7 @@ def pagerank_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     the highest-rank member of each component is the canonical copy.
     One pair computation feeds both components and ranks."""
     return graph_op.pagerank_canonical(
-        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents")),
-        sh=_doc_shingles(spark, sf_dir),
-        pairs=_doc_pairs(spark, sf_dir),
-        clusters=_doc_clusters(spark, sf_dir),
+        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -3111,9 +2885,7 @@ def triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degree capped at O(sqrt E)) — the cluster-chaining health
     check for the LSH threshold."""
     return graph_op.triangle_stats(
-        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents")),
-        sh=_doc_shingles(spark, sf_dir),
-        pairs=_doc_pairs(spark, sf_dir),
+        dedup_op.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
     )
 
 
@@ -3423,16 +3195,6 @@ def column_stats_catalog_hll_prod(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _image_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The image family's ONE decode pass (round 12, the video-family
-    idiom): perceptual signatures over the scene-image corpus as a
-    SESSION-cached relation (computed from the blob fixture every
-    invocation, never persisted across runs) — the hash relation,
-    every near-dup tier and the admission corpus side all derive from
-    it instead of each re-decoding the corpus."""
-    return mm_op.cached_media(spark, sf_dir, perc_op.IMAGE_SIG_CACHE_KIND)
-
-
 @register("media_perceptual_hashes", perc_op.sql_perceptual_hashes())
 def media_perceptual_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """aHash/dHash (integer average/gradient hash over a downsampled
@@ -3440,9 +3202,11 @@ def media_perceptual_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the REAL decode paths (zlib inflate + unfilter; Huffman +
     dequant + integer IDCT), magic-byte dispatched, vs the oracle's
     closed-form scene arithmetic; a decoder or grid bug flips hash
-    bits.  Served from the family's one-decode-pass signature
-    fixture."""
-    return _image_sigs(spark, sf_dir)
+    bits.  The image family's ONE decode pass: every near-dup tier,
+    the leakage audit and both admission faces read this shared
+    signature relation instead of re-decoding the corpus."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_image")
+    return shared(perc_op.perceptual_hashes, media)
 
 
 @register("media_codec_manifest", perc_op.sql_image_codec_manifest())
@@ -3464,24 +3228,10 @@ def media_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical keep/drop per perceptual cluster: connected components
     (large-star/small-star fixed point) over the Hamming-banded pair
     tier, singletons restored, min-doc_id canonical — 'keep one image
-    per cluster' as one auditable relation.  Derived from the
-    family's shared session-cached signature relation (one decode pass; the signature
-    relation carries one row per doc, so it IS the doc universe the
-    singleton restore needs)."""
-    sig = _image_sigs(spark, sf_dir)
-    return perc_op.media_near_dup_clusters(sig, sig=sig)
-
-
-def _video_grid_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The video family's ONE decode pass (round 12, VERDICT ask #2):
-    6-word grid signatures over the vflip-planted corpus as a
-    SESSION-cached relation (computed from the blob fixture every
-    invocation, never persisted across runs) — fingerprints, near_dup
-    and near_dup_grid all derive from this relation instead of each
-    re-decoding the full MP4 corpus (previously the bench's three most
-    expensive queries, one shared decode).  The signature-table-first
-    shape is the one a real 100 TB video pipeline has."""
-    return mm_op.cached_media(spark, sf_dir, video_op.VIDEO_SIG_CACHE_KIND)
+    per cluster' as one auditable relation, over the family's shared
+    signature relation (one decode pass)."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_image")
+    return perc_op.media_near_dup_clusters(media)
 
 
 @register("video_fingerprints", video_op.sql_video_fingerprints())
@@ -3491,12 +3241,14 @@ def video_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ISO-BMFF sample-table walk, per-frame PNG/JPEG decode, integer
     envelope + half sums) vs the oracle's closed-form scene
     arithmetic; frame-rate and resolution invariant by construction
-    (round-9 video tier; spatial word round-10).  Served from the
-    family's one-decode-pass session-cached signature relation: the grid kernel's
-    base words are the envelope fingerprint by the same arithmetic
-    (projection-equivalence pytest pins it)."""
+    (round-9 video tier; spatial word round-10).  Derived from the
+    video family's ONE decode pass — the shared 6-word grid signature
+    relation over the vflip-planted corpus — whose base words are the
+    envelope fingerprint by the same arithmetic (projection-equivalence
+    pytest pins it)."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_video_vflip")
     return video_op.base_signatures_from_grid(
-        _video_grid_sigs(spark, sf_dir)
+        shared(video_op.video_fingerprints_grid, media)
     )
 
 
@@ -3506,11 +3258,13 @@ def video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     audio_near_dup — catches the planted RESIZED cross-codec twin and
     the FRAME-RATE-DOUBLED twin (both Hamming 0) plus the
     re-encode-noise twin that exact digests miss.  Banded over the
-    family's shared session-cached signature relation (one decode pass for the whole
-    family); cache-backed, so no localCheckpoint is needed before
-    the self-join."""
+    family's shared grid signature relation (one decode pass for the
+    whole family; a materialized leaf before the self-join)."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_video_vflip")
     return perc_op.banded_pairs(
-        video_op.base_signatures_from_grid(_video_grid_sigs(spark, sf_dir)),
+        video_op.base_signatures_from_grid(
+            shared(video_op.video_fingerprints_grid, media)
+        ),
         video_op.HAMMING_MAX,
     )
 
@@ -3523,9 +3277,10 @@ def mixed_media_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNG/JPEG/WAV/MP4 blob column into the shared signature schema —
     the one-table ingest shape a real 100 TB media corpus has; the
     oracle covers all three modalities with one CASE-dispatched scene
-    CTE (round-9 capstone).  Served from the family's one-decode-pass
-    session-cached signature relation."""
-    return mm_op.cached_media(spark, sf_dir, mixed_op.MIXED_SIG_CACHE_KIND)
+    CTE (round-9 capstone).  The family's ONE decode pass, shared with
+    the near-dup tier."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_mixed")
+    return shared(mixed_op.mixed_media_fingerprints, media)
 
 
 @register("mixed_media_near_dup", mixed_op.sql_mixed_media_near_dup())
@@ -3534,9 +3289,9 @@ def mixed_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves images, audio and video at once — every planted twin class
     (cross-codec resize, resample, frame-rate doubling, re-encode
     noise) lands in a single relation.  Banded over the family's
-    shared session-cached signature relation (one decode pass)."""
-    sig = mm_op.cached_media(spark, sf_dir, mixed_op.MIXED_SIG_CACHE_KIND)
-    return mixed_op.mixed_media_near_dup(sig, sig=sig)
+    shared signature relation (one decode pass)."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_mixed")
+    return mixed_op.mixed_media_near_dup(media)
 
 
 @register(
@@ -3552,17 +3307,17 @@ def media_admission_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming foreachBatch kernel shares the SAME decision core
     (operators/perceptual.py::admission_decisions_from_sig), so this
     oracle row also pins the stream tier's verdict semantics.
-    Round-12: BOTH splits are served from the family's session-cached
-    one-decode-pass signature relation (signatures are per-doc, so the
-    filtered relation equals decoding the split) — the decision pass
-    runs entirely over 5-BIGINT signature rows, the guide-§8 shape."""
-    in_corpus = F.col("doc_id") % 8
-    sigs = _image_sigs(spark, sf_dir)
-    corpus_sig = sigs.filter(in_corpus.isin(*perc_op.ADMIT_CORPUS_MOD8))
-    batch_sig = sigs.filter(~in_corpus.isin(*perc_op.ADMIT_CORPUS_MOD8))
-    return perc_op.media_admission_decisions(
-        corpus_sig, batch_sig, corpus_sig=corpus_sig, batch_sig=batch_sig
-    )
+    BOTH splits filter the family's shared one-decode-pass signature
+    relation (signatures are per-doc, so the filtered relation equals
+    decoding the split) — the decision pass runs entirely over
+    5-BIGINT signature rows, the guide-§8 shape."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_image")
+    return perc_op.media_admission_decisions(media, _media_admission_corpus())
+
+
+def _media_admission_corpus():
+    """The registered media-admission split (``ADMIT_CORPUS_MOD8``)."""
+    return (F.col("doc_id") % 8).isin(*perc_op.ADMIT_CORPUS_MOD8)
 
 
 @register(
@@ -3572,15 +3327,11 @@ def media_admission_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The WIDE media-admission face (round 12): the identical split
     and decision kernel with wide=True — candidates from the 28 x
     32-bit pair bands (the 10^9-doc index layout), both splits served
-    from the session-cached signature relation like the narrow face.
-    Oracle replays the exact pair banding, so the row is hash-exact."""
-    in_corpus = F.col("doc_id") % 8
-    sigs = _image_sigs(spark, sf_dir)
-    corpus_sig = sigs.filter(in_corpus.isin(*perc_op.ADMIT_CORPUS_MOD8))
-    batch_sig = sigs.filter(~in_corpus.isin(*perc_op.ADMIT_CORPUS_MOD8))
+    from the shared signature relation like the narrow face.  Oracle
+    replays the exact pair banding, so the row is hash-exact."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_image")
     return perc_op.media_admission_decisions(
-        corpus_sig, batch_sig, wide=True, corpus_sig=corpus_sig,
-        batch_sig=batch_sig
+        media, _media_admission_corpus(), wide=True
     )
 
 
@@ -3594,9 +3345,7 @@ def media_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     md5-keyed exact-digest audit cannot see (the fixture's resized
     duplicates leak across splits by construction)."""
     media = mm_op.cached_media(spark, sf_dir, "scene_image")
-    return perc_op.media_split_leakage(
-        media, _SPLIT_WEIGHTS, sig=_image_sigs(spark, sf_dir)
-    )
+    return perc_op.media_split_leakage(media, _SPLIT_WEIGHTS)
 
 
 @register("audio_fingerprints", audio_op.sql_audio_fingerprints())
@@ -3606,10 +3355,10 @@ def audio_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     WAV of the scene-audio corpus — the REAL decode path (RIFF walk,
     16-bit PCM) vs the oracle's closed-form scene arithmetic;
     sample-rate invariant by construction (round-9 ask #3; spectral
-    word round-10).  Served from the family's one-decode-pass
-    session-cached signature relation (round 12, the video-family
-    idiom)."""
-    return mm_op.cached_media(spark, sf_dir, audio_op.AUDIO_SIG_CACHE_KIND)
+    word round-10).  The family's ONE decode pass, shared with the
+    near-dup tier."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_audio")
+    return shared(audio_op.audio_fingerprints, media)
 
 
 @register("audio_near_dup", audio_op.sql_audio_near_dup())
@@ -3620,12 +3369,9 @@ def audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hamming 0) and the re-encode-noise twin that exact digests miss;
     an equal-envelope different-pitch clip separates on the
     zero-crossing word (planted pytest).  Banded over the family's
-    shared session-cached signature relation (one decode pass)."""
+    shared signature relation (one decode pass)."""
     media = mm_op.cached_media(spark, sf_dir, "scene_audio")
-    return audio_op.audio_near_dup(
-        media,
-        sig=mm_op.cached_media(spark, sf_dir, audio_op.AUDIO_SIG_CACHE_KIND),
-    )
+    return audio_op.audio_near_dup(media)
 
 
 @register("media_near_dup", perc_op.sql_media_near_dup())
@@ -3635,9 +3381,9 @@ def media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches the resized duplicates (member 1: Hamming 0 at a different
     resolution) and re-encode-noise twins (member 2) that exact
     digests (media_dedup) miss by construction.  Banded over the
-    family's shared session-cached signature relation (one decode pass)."""
-    sig = _image_sigs(spark, sf_dir)
-    return perc_op.media_near_dup(sig, sig=sig)
+    family's shared signature relation (one decode pass)."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_image")
+    return perc_op.media_near_dup(media)
 
 
 @register("video_near_dup_grid", video_op.sql_video_near_dup_grid())
@@ -3648,13 +3394,10 @@ def video_near_dup_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame totals AND column sums, base-tier Hamming 0) separates
     on the grid word's top/bottom quadrants while the resized
     cross-codec and rate-doubled twins still pair.  Banded directly
-    over the family's shared session-cached signature relation (one decode pass
+    over the family's shared grid signature relation (one decode pass
     serves fingerprints, near_dup and this tier)."""
-    return perc_op.banded_pairs(
-        _video_grid_sigs(spark, sf_dir),
-        video_op.GRID_HAMMING_MAX,
-        kinds=video_op.GRID_KINDS,
-    )
+    media = mm_op.cached_media(spark, sf_dir, "scene_video_vflip")
+    return video_op.video_near_dup_grid(media)
 
 
 @register("media_near_dup_wide", perc_op.sql_media_near_dup_wide())
@@ -3664,9 +3407,9 @@ def media_near_dup_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     44M random candidates at 500k docs — quadratic at every further
     decade), guaranteed recall at combined Hamming <= 6; the tier a
     10^10-doc corpus runs.  Banded over the shared signature
-    fixture."""
-    sig = _image_sigs(spark, sf_dir)
-    return perc_op.media_near_dup_wide(sig, sig=sig)
+    relation."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_image")
+    return perc_op.media_near_dup_wide(media)
 
 
 @register("media_near_dup_prod", perc_op.sql_media_near_dup_prod())
@@ -3676,9 +3419,9 @@ def media_near_dup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors the guard, so a degenerate thumbnail flood stays
     subquadratic on a production ingest; the unguarded sibling keeps
     the exact-recall evaluation row.  Banded over the shared
-    session-cached signature relation."""
-    sig = _image_sigs(spark, sf_dir)
-    return perc_op.media_near_dup_prod(sig, sig=sig)
+    signature relation."""
+    media = mm_op.cached_media(spark, sf_dir, "scene_image")
+    return perc_op.media_near_dup_prod(media)
 
 
 # ---------------------------------------------------------------------------

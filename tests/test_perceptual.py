@@ -183,14 +183,14 @@ def test_media_admission_decisions_classes(spark, sf_dir) -> None:
 
     docs = load_table(spark, sf_dir, "documents").filter("doc_id < 400")
     media = perc.documents_as_scene_media(docs).select("doc_id", "blob")
-    in_corpus = F.col("doc_id") % 8
-    corpus = media.filter(in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
-    batch = media.filter(~in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
+    in_corpus = (F.col("doc_id") % 8).isin(*perc.ADMIT_CORPUS_MOD8)
     rows = {
         r["doc_id"]: (r["cluster_id"], r["keep"], r["reason"])
-        for r in perc.media_admission_decisions(corpus, batch).collect()
+        for r in perc.media_admission_decisions(media, in_corpus).collect()
     }
-    batch_ids = {r["doc_id"] for r in batch.select("doc_id").collect()}
+    batch_ids = {
+        r["doc_id"] for r in media.filter(~in_corpus).select("doc_id").collect()
+    }
     assert set(rows) == batch_ids  # exactly one decision per batch doc
     for d, (cid, keep, reason) in rows.items():
         m8 = d % 8
@@ -357,52 +357,13 @@ def test_media_admission_wide_matches_narrow(spark, sf_dir) -> None:
     docs = load_table(spark, sf_dir, "documents").filter("doc_id < 400")
     media = perc.documents_as_scene_media(docs).select("doc_id", "blob")
     media = media.localCheckpoint()
-    in_corpus = F.col("doc_id") % 8
-    corpus = media.filter(in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
-    batch = media.filter(~in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
+    in_corpus = (F.col("doc_id") % 8).isin(*perc.ADMIT_CORPUS_MOD8)
     verdicts = {}
     for wide in (False, True):
         verdicts[wide] = {
             (r["doc_id"], r["cluster_id"], r["keep"], r["reason"])
             for r in perc.media_admission_decisions(
-                corpus, batch, wide=wide
+                media, in_corpus, wide=wide
             ).collect()
         }
     assert verdicts[True] == verdicts[False]
-
-
-def test_admission_accepts_precomputed_sigs_identically(spark, sf_dir) -> None:
-    """Round-12 one-decode-pass sharing: admission given precomputed
-    corpus_sig/batch_sig relations (the registry serves both splits of
-    the family's session-cached signature table) returns exactly the
-    decisions it computes from the raw blobs — a pure
-    common-subexpression factoring, narrow and wide."""
-    from pyspark.sql import functions as F
-
-    docs = load_table(spark, sf_dir, "documents").filter("doc_id < 400")
-    media = perc.documents_as_scene_media(docs).select("doc_id", "blob")
-    media = media.localCheckpoint()
-    sigs = perc.perceptual_hashes(media).localCheckpoint()
-    in_corpus = F.col("doc_id") % 8
-    corpus = media.filter(in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
-    batch = media.filter(~in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
-    corpus_sig = sigs.filter(in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
-    batch_sig = sigs.filter(~in_corpus.isin(*perc.ADMIT_CORPUS_MOD8))
-    for wide in (False, True):
-        own = {
-            tuple(r)
-            for r in perc.media_admission_decisions(
-                corpus, batch, wide=wide
-            ).collect()
-        }
-        shared = {
-            tuple(r)
-            for r in perc.media_admission_decisions(
-                corpus_sig,
-                batch_sig,
-                wide=wide,
-                corpus_sig=corpus_sig,
-                batch_sig=batch_sig,
-            ).collect()
-        }
-        assert own == shared, wide

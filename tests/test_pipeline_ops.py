@@ -5,6 +5,7 @@ operator-level semantics that matter independent of the oracle.)"""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from eventstreamd_spark.operators import dedup, multimodal, similarity, textops
@@ -1844,33 +1845,6 @@ def test_source_overlap_null_text_doc(spark) -> None:
     assert got == want and len(got) == 1
 
 
-def test_shingle_tiers_accept_precomputed_sh_identically(spark, sf_dir) -> None:
-    """Round-12 one-tokenize-pass sharing: every shingle tier given a
-    precomputed (doc_id, shingles) relation (``sh=``) returns exactly
-    the rows it computes from the raw docs — the registry's
-    session-cached relation is a pure common-subexpression factoring,
-    not a semantic change."""
-    docs = dedup.with_planted_near_dups(
-        load_table(spark, sf_dir, "documents")
-    ).filter("doc_id % 100000 < 64")
-    sh = dedup.with_hashed_shingles(docs, 3).localCheckpoint()
-    tiers = (
-        dedup.ngram_jaccard_pairs,
-        dedup.ngram_jaccard_pairs_df_cutoff,
-        dedup.ngram_jaccard_pairs_df_frac_cutoff,
-        dedup.ngram_containment_pairs,
-        dedup.minhash_lsh_dedup,
-        dedup.minhash_keep_corpus,
-        dedup.dedup_clusters,
-        dedup.jaccard_threshold_sweep,
-        dedup.lsh_recall_report,
-    )
-    for tier in tiers:
-        own = {tuple(r) for r in tier(docs).collect()}
-        shared = {tuple(r) for r in tier(docs, sh=sh).collect()}
-        assert own == shared, tier.__name__
-
-
 def test_connected_components_string_nodes(spark) -> None:
     """The single-job convergence probe melts src/dst rows with a
     typed NULL — it must resolve that type from the edge schema, so
@@ -1888,117 +1862,216 @@ def test_connected_components_string_nodes(spark) -> None:
     assert comp == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_graph_and_curation_accept_precomputed_sh_identically(
-    spark, sf_dir
-) -> None:
-    """The round-12 shared-shingle extension (graph tier, curation,
-    split leakage): each consumer given the precomputed (doc_id,
-    shingles) relation returns exactly the rows it computes from raw
-    docs — pure common-subexpression factoring, not a semantic
-    change."""
-    from eventstreamd_spark.operators import curation, graph
+def _rows(df) -> set:
+    return {tuple(r) for r in df.collect()}
 
-    docs = dedup.with_planted_near_dups(
-        load_table(spark, sf_dir, "documents")
-    ).filter("doc_id % 100000 < 64")
-    sh = dedup.with_hashed_shingles(docs, 3).localCheckpoint()
-    consumers = (
-        graph.pagerank_canonical,
-        graph.triangle_stats,
-        curation.curation_decisions,
-        curation.corpus_build_manifest,
-        lambda d, sh=None: dedup.split_leakage_check(
-            d, {"train": 0.8, "val": 0.1, "test": 0.1}, sh=sh
-        ),
+
+def _planted(spark, sf_dir):
+    return dedup.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
+
+
+def _scene(kind):
+    return lambda spark, sf_dir: multimodal.cached_media(spark, sf_dir, kind)
+
+
+def _text_corpus():
+    return (F.col("doc_id") < dedup.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
+
+
+def _media_corpus():
+    from eventstreamd_spark.operators import perceptual
+
+    return (F.col("doc_id") % 8).isin(*perceptual.ADMIT_CORPUS_MOD8)
+
+
+def _families():
+    """family -> (producer, input, {registry face: bare operator over
+    that input}).  The bare operator is what the face computes, called
+    directly so it builds every shared relation itself."""
+    from eventstreamd_spark.operators import (
+        audio,
+        bpe,
+        clustering,
+        curation,
+        graph,
+        mixed,
+        perceptual,
+        video,
     )
-    for fn in consumers:
-        own = {tuple(r) for r in fn(docs).collect()}
-        shared = {tuple(r) for r in fn(docs, sh=sh).collect()}
-        assert own == shared, getattr(fn, "__name__", "split_leakage")
 
+    def docs_table(name):
+        return lambda spark, sf_dir: load_table(spark, sf_dir, name)
 
-def test_pair_and_cluster_consumers_accept_precomputed_identically(
-    spark, sf_dir
-) -> None:
-    """Round-13 shared pair/closure relations: every consumer given the
-    precomputed MinHash pair relation (``pairs=``, contract ==
-    minhash_lsh_dedup(docs, 3, 0.6)) and/or the precomputed cluster
-    assignment (``clusters=``, contract == dedup_clusters(docs)) must
-    return exactly the rows it computes from raw docs — the registry's
-    session-cached relations are pure common-subexpression factoring.
-    pagerank_canonical's clusters path additionally swaps the CC fixed
-    point for the cluster relation itself, so this pins the
-    component-min == cluster_id equivalence on real planted data."""
-    from eventstreamd_spark.operators import curation, graph
-
-    docs = dedup.with_planted_near_dups(
-        load_table(spark, sf_dir, "documents")
-    ).filter("doc_id % 100000 < 64")
-    pairs = dedup.minhash_lsh_dedup(docs).localCheckpoint()
-    clusters = dedup.dedup_clusters(docs).localCheckpoint()
-
-    pair_consumers = (
-        dedup.minhash_keep_corpus,
-        dedup.dedup_clusters,
-        dedup.lsh_recall_report,
-        graph.triangle_stats,
-        lambda d, pairs=None: dedup.split_leakage_check(
-            d, {"train": 0.8, "val": 0.1, "test": 0.1}, pairs=pairs
+    split = {"train": 0.8, "val": 0.1, "test": 0.1}
+    return {
+        "shingles": (dedup.with_hashed_shingles, _planted, {
+            "dedup_ngram_jaccard": dedup.ngram_jaccard_pairs,
+            "dedup_ngram_df_cutoff": dedup.ngram_jaccard_pairs_df_cutoff,
+            "dedup_ngram_df_frac_cutoff":
+                dedup.ngram_jaccard_pairs_df_frac_cutoff,
+            "dedup_containment": dedup.ngram_containment_pairs,
+            "dedup_threshold_sweep": dedup.jaccard_threshold_sweep,
+        }),
+        "pairs": (dedup.minhash_lsh_dedup, _planted, {
+            "dedup_minhash_lsh": dedup.minhash_lsh_dedup,
+            "dedup_keep_corpus": dedup.minhash_keep_corpus,
+            "split_leakage": lambda d: dedup.split_leakage_check(d, split),
+            "lsh_recall_report": dedup.lsh_recall_report,
+            "triangle_stats": graph.triangle_stats,
+        }),
+        "clusters": (dedup.dedup_clusters, _planted, {
+            "dedup_clusters": dedup.dedup_clusters,
+            "curation_decisions": curation.curation_decisions,
+            "corpus_build_manifest": curation.corpus_build_manifest,
+            "pagerank_canonical": graph.pagerank_canonical,
+        }),
+        "text_sigs": (dedup.simhash_signatures, _planted, {
+            "dedup_simhash": dedup.simhash_pairs,
+            "dedup_simhash_prod": dedup.simhash_pairs_prod,
+            "dedup_simhash_wide": dedup.simhash_pairs_wide,
+            "text_admission_decisions": lambda d: (
+                dedup.text_admission_decisions(d, _text_corpus())
+            ),
+            "text_admission_wide": lambda d: dedup.text_admission_decisions(
+                d, _text_corpus(), wide=True
+            ),
+        }),
+        "bpe": (bpe.bpe_induction_relation, docs_table("documents"), {
+            "bpe_merges": bpe.bpe_merge_table,
+            "bpe_encode": bpe.bpe_encode_stats,
+        }),
+        "kmeans": (clustering.fit_centroids, docs_table("embeddings"), {
+            "kmeans_assignments": clustering.kmeans_assignments,
+            "kmeans_prototypes": clustering.kmeans_prototypes,
+        }),
+        "image_sigs": (perceptual.perceptual_hashes, _scene("scene_image"), {
+            "media_perceptual_hashes": perceptual.perceptual_hashes,
+            "media_near_dup": perceptual.media_near_dup,
+            "media_near_dup_wide": perceptual.media_near_dup_wide,
+            "media_near_dup_prod": perceptual.media_near_dup_prod,
+            "media_near_dup_clusters": perceptual.media_near_dup_clusters,
+            "media_split_leakage": lambda m: perceptual.media_split_leakage(
+                m, split
+            ),
+            "media_admission_decisions": lambda m: (
+                perceptual.media_admission_decisions(m, _media_corpus())
+            ),
+            "media_admission_wide": lambda m: (
+                perceptual.media_admission_decisions(
+                    m, _media_corpus(), wide=True
+                )
+            ),
+        }),
+        "video_sigs": (
+            video.video_fingerprints_grid,
+            _scene("scene_video_vflip"),
+            {
+                "video_fingerprints": lambda m: video.base_signatures_from_grid(
+                    video.video_fingerprints_grid(m)
+                ),
+                "video_near_dup": lambda m: perceptual.banded_pairs(
+                    video.base_signatures_from_grid(
+                        video.video_fingerprints_grid(m)
+                    ),
+                    video.HAMMING_MAX,
+                ),
+                "video_near_dup_grid": video.video_near_dup_grid,
+            },
         ),
+        "mixed_sigs": (
+            mixed.mixed_media_fingerprints,
+            _scene("scene_mixed"),
+            {
+                "mixed_media_fingerprints": mixed.mixed_media_fingerprints,
+                "mixed_media_near_dup": mixed.mixed_media_near_dup,
+            },
+        ),
+        "audio_sigs": (audio.audio_fingerprints, _scene("scene_audio"), {
+            "audio_fingerprints": audio.audio_fingerprints,
+            "audio_near_dup": audio.audio_near_dup,
+        }),
+    }
+
+
+@pytest.mark.parametrize("family", sorted(_families()))
+def test_warm_face_matches_bare_operator(spark, sf_dir, family) -> None:
+    """One session-relation memo (plans/memo.py): every registry face
+    of a family, run back to back in one warm session, reads the
+    family's shared relation — its producer misses exactly ONCE (no
+    decode, tokenize or fixed point runs twice) — and returns the same
+    rows as its bare operator recomputed after ``memo_clear()``."""
+    from eventstreamd_spark import queries_registry as qr
+    from eventstreamd_spark.plans import memo
+
+    producer, source, faces = _families()[family]
+    ident = (producer.__module__, producer.__qualname__)
+    memo.memo_clear()
+    warm = {name: _rows(qr.QUERIES[name](spark, sf_dir)) for name in faces}
+    misses = [k for k in memo._MEMO if k[1:3] == ident]
+    assert len(misses) == 1, (family, misses)
+    for name, bare in faces.items():
+        memo.memo_clear()
+        assert _rows(bare(source(spark, sf_dir))) == warm[name], name
+    memo.memo_clear()
+
+
+def test_shared_keys_separate_parameter_tiers(spark, sf_dir) -> None:
+    """A relation built with other parameters has another key: the
+    pair tier at two thresholds (every planted pair of the small
+    fixture scores >= 0.87, so 0.95 is the cut that separates rows)
+    and at another shingle width are separate memo entries with
+    different rows, so no consumer can be handed the wrong tier."""
+    from eventstreamd_spark.plans.memo import _MEMO, memo_clear, shared
+
+    memo_clear()
+    docs = _planted(spark, sf_dir)
+    lo = shared(dedup.minhash_lsh_dedup, docs, n=3, threshold=0.6)
+    hi = shared(dedup.minhash_lsh_dedup, docs, n=3, threshold=0.95)
+    n5 = shared(dedup.minhash_lsh_dedup, docs, n=5, threshold=0.6)
+    assert {k[3] for k in _MEMO if k[2] == "minhash_lsh_dedup"} == {
+        "[('n', 3), ('threshold', 0.6)]",
+        "[('n', 3), ('threshold', 0.95)]",
+        "[('n', 5), ('threshold', 0.6)]",
+    }
+    lo_rows, hi_rows = _rows(lo), _rows(hi)
+    assert hi_rows < lo_rows
+    assert all(r[2] >= 0.95 for r in hi_rows)
+    assert _rows(n5) != lo_rows
+    # defaults bind into the key: the canonical call is the same entry
+    assert shared(dedup.minhash_lsh_dedup, docs) is lo
+    memo_clear()
+
+
+def test_non_default_tiers_ignore_canonical_relations(spark, sf_dir) -> None:
+    """The tier-mix hazard the memo key closes: after the canonical
+    (n=3, threshold=0.6) faces have filled the session, the recall
+    report and pagerank at other parameters return exactly the rows
+    they compute from an empty memo."""
+    from eventstreamd_spark import queries_registry as qr
+    from eventstreamd_spark.operators import graph
+    from eventstreamd_spark.plans.memo import memo_clear
+
+    docs = _planted(spark, sf_dir)
+    cases = (
+        lambda: dedup.lsh_recall_report(docs, threshold=0.95),
+        lambda: dedup.lsh_recall_report(docs, n=5),
+        lambda: graph.pagerank_canonical(docs, threshold=0.95),
     )
-    for fn in pair_consumers:
-        own = {tuple(r) for r in fn(docs).collect()}
-        shared = {tuple(r) for r in fn(docs, pairs=pairs).collect()}
-        assert own == shared, getattr(fn, "__name__", "split_leakage")
-
-    for fn in (curation.curation_decisions, curation.corpus_build_manifest):
-        own = {tuple(r) for r in fn(docs).collect()}
-        shared = {tuple(r) for r in fn(docs, clusters=clusters).collect()}
-        assert own == shared, fn.__name__
-
-    own = {tuple(r) for r in graph.pagerank_canonical(docs).collect()}
-    shared = {
-        tuple(r)
-        for r in graph.pagerank_canonical(
-            docs, pairs=pairs, clusters=clusters
-        ).collect()
-    }
-    assert own == shared
+    memo_clear()
+    for name in ("dedup_minhash_lsh", "dedup_clusters", "lsh_recall_report"):
+        qr.QUERIES[name](spark, sf_dir).collect()
+    warm = [_rows(case()) for case in cases]
+    for case, rows in zip(cases, warm):
+        memo_clear()
+        assert _rows(case()) == rows
+    memo_clear()
 
 
-def test_bpe_induction_relation_serves_both_faces_identically(
-    spark, sf_dir
-) -> None:
-    """The session-shared BPE induction artifact: the merge table and
-    the encode stats projected from ``bpe_induction_relation`` equal
-    the ones computed by running the induction rounds directly."""
-    from eventstreamd_spark.operators import bpe as bpe_op
+def test_shared_rejects_closure_producers(spark) -> None:
+    """Producers must be module-level: a closure's captured variables
+    are invisible to the key."""
+    from eventstreamd_spark.plans.memo import shared
 
-    docs = load_table(spark, sf_dir, "documents").filter("doc_id < 64")
-    ind = bpe_op.bpe_induction_relation(docs).localCheckpoint()
-    own_mt = {tuple(r) for r in bpe_op.bpe_merge_table(docs).collect()}
-    shared_mt = {
-        tuple(r) for r in bpe_op.bpe_merge_table(docs, induction=ind).collect()
-    }
-    assert own_mt == shared_mt and len(own_mt) == bpe_op.N_MERGES
-    own_enc = {tuple(r) for r in bpe_op.bpe_encode_stats(docs).collect()}
-    shared_enc = {
-        tuple(r)
-        for r in bpe_op.bpe_encode_stats(docs, induction=ind).collect()
-    }
-    assert own_enc == shared_enc
-
-
-def test_kmeans_precomputed_centroids_identity(spark, sf_dir) -> None:
-    """Both kmeans queries given the precomputed ``fit_centroids``
-    frame return exactly what they compute by fitting internally (the
-    fit is deterministic, so the session-shared frame is a pure
-    factoring)."""
-    from eventstreamd_spark.operators import clustering
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    cents = clustering.fit_centroids(emb).localCheckpoint()
-    for fn in (clustering.kmeans_assignments, clustering.kmeans_prototypes):
-        own = {tuple(r) for r in fn(emb).collect()}
-        shared = {tuple(r) for r in fn(emb, cents=cents).collect()}
-        assert own == shared, fn.__name__
+    df = spark.range(3)
+    with pytest.raises(ValueError):
+        shared(lambda d: d, df)

@@ -483,7 +483,7 @@ def test_media_dedup_prunes_blob_from_exchange(plans) -> None:
 
 def test_recall_tiers_share_one_exact_ranking(spark, sf_dir) -> None:
     # ann_recall (IVF) and ann_recall_pq audit against the SAME exact
-    # brute-force ranking; memo_checkpoint must materialize it once and
+    # brute-force ranking; the session memo must materialize it once and
     # serve the second tier (and repeated eval passes) from the memo.
     from eventstreamd_spark.plans import memo
 
@@ -621,17 +621,68 @@ def test_lsh_bucket_index_memoized(spark, sf_dir) -> None:
     assert memo.HITS == hits + 1
 
 
-def test_memo_checkpoint_plan_is_leaf(spark, sf_dir) -> None:
-    # the memoized exact ranking enters downstream plans as a
-    # materialized leaf (ExistingRDD/LogicalRDD), not a re-expanded
-    # corpus scan: the recall report's plan must contain exactly the
-    # approx tier's parquet scans plus a checkpoint leaf.
-    from eventstreamd_spark.plans import memo
+# Faces that read a session-shared relation (plans/memo.py): the nine
+# MinHash pair-tier consumers, every media-signature face, the SimHash
+# tiers, and the ANN faces over the memoized rankings / index tables.
+_PAIR_TIER_FACES = (
+    "dedup_minhash_lsh", "dedup_keep_corpus", "dedup_clusters",
+    "curation_decisions", "corpus_build_manifest", "pagerank_canonical",
+    "triangle_stats", "split_leakage", "lsh_recall_report",
+)
+_SIGNATURE_FACES = (
+    "media_perceptual_hashes", "media_near_dup", "media_near_dup_wide",
+    "media_near_dup_prod", "media_near_dup_clusters",
+    "media_admission_decisions", "media_admission_wide",
+    "media_split_leakage", "video_fingerprints", "video_near_dup",
+    "video_near_dup_grid", "mixed_media_fingerprints",
+    "mixed_media_near_dup", "audio_fingerprints", "audio_near_dup",
+    "dedup_simhash", "dedup_simhash_prod", "dedup_simhash_wide",
+    "text_admission_decisions", "text_admission_wide",
+)
+_ANN_FACES = (
+    "ann_recall", "ann_recall_pq", "similarity_topk", "similarity_ivf_ann",
+    "similarity_lsh_ann", "pq_ann", "ndcg_eval", "cell_label_purity",
+    "knn_label_noise_ivf", "semantic_dedup", "mmr_diversified_topk",
+)
+# subtree markers: MinHash banding (candidates) and the exact-jaccard
+# verify, and the Arrow decode/hash kernels
+_RECOMPUTE_MARKERS = ("concat_ws", "array_intersect", "MapInPandas")
 
-    memo.memo_clear()
-    df = qr.QUERIES["ann_recall"](spark, sf_dir)
-    plan = explain_string(df, "extended")
-    assert "ExistingRDD" in plan or "LogicalRDD" in plan
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_recompute_markers_detect_unshared_subtrees(spark, sf_dir) -> None:
+    """The markers the leaf gate below looks for do appear in the
+    producers' own plans, so their absence from a face means the face
+    reads the materialized relation instead."""
+    from eventstreamd_spark.operators import dedup, perceptual
+    from eventstreamd_spark.operators.multimodal import cached_media
+    from eventstreamd_spark.session import load_table
+
+    docs = dedup.with_planted_near_dups(load_table(spark, sf_dir, "documents"))
+    media = cached_media(spark, sf_dir, "scene_image")
+    pairs = _optimized(dedup.minhash_lsh_candidates(docs))
+    verify = _optimized(dedup.minhash_lsh_dedup(docs))
+    decode = _optimized(perceptual.perceptual_hashes(media))
+    assert "concat_ws" in pairs
+    assert "array_intersect" in verify
+    assert "MapInPandas" in decode
+
+
+@pytest.mark.parametrize(
+    "name", _PAIR_TIER_FACES + _SIGNATURE_FACES + _ANN_FACES
+)
+def test_shared_relation_plan_is_leaf(spark, sf_dir, name) -> None:
+    # every session-shared relation enters a face's optimized plan as a
+    # materialized leaf (ExistingRDD/LogicalRDD) and never as a second
+    # MinHash candidate/verify or decode subtree, so per-face
+    # recomputation cannot come back silently
+    plan = _optimized(qr.QUERIES[name](spark, sf_dir))
+    assert "LogicalRDD" in plan or "ExistingRDD" in plan
+    for marker in _RECOMPUTE_MARKERS:
+        assert marker not in plan, marker
 
 
 def test_cascade_delete_broadcasts_request_set(plans) -> None:
@@ -802,7 +853,7 @@ def test_analyze_sketch_tier_single_scan(plans) -> None:
         "== Physical Plan =="
     )[-1]
     # round 13: the register cells are the session-shared
-    # _catalog_cells_rel (memo_checkpoint) — the query's own plan reads
+    # _catalog_cells_rel (plans.memo.shared) — the query's own plan reads
     # the checkpointed cells (zero parquet scans), and the ONE scan that
     # builds them lives in the shared relation, still single-scan by
     # construction (asserted value-exact against the eval sibling in

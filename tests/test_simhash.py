@@ -234,17 +234,12 @@ def test_text_admission_wide_face(spark, sf_dir) -> None:
     docs = dd.with_planted_near_dups(
         load_table(spark, sf_dir, "documents").filter("doc_id < 40")
     ).localCheckpoint()
-    corpus = docs.filter(
-        (F.col("doc_id") < dd.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
-    )
-    batch = docs.filter(
-        (F.col("doc_id") >= dd.PLANT_OFFSET) | (F.col("doc_id") % 2 == 1)
-    ).localCheckpoint()
-    n_batch = batch.count()
+    in_corpus = (F.col("doc_id") < dd.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
+    n_batch = docs.filter(~in_corpus).count()
     by_wide = {}
     for wide in (False, True):
         rows = dd.text_admission_decisions(
-            corpus, batch, wide=wide
+            docs, in_corpus, wide=wide
         ).collect()
         assert len(rows) == n_batch
         by_wide[wide] = {r["doc_id"]: (r["keep"], r["reason"]) for r in rows}
@@ -267,47 +262,3 @@ def test_text_admission_wide_face(spark, sf_dir) -> None:
     # can only LOSE rejections relative to narrow, never invent them
     assert wide_idx_rejects <= narrow_idx_rejects
     assert wide_idx_rejects, "wide layout must still catch close twins"
-
-
-def test_tiers_accept_precomputed_sig_identically(spark, sf_dir) -> None:
-    """Round-12 one-tokenize-pass sharing: every banded tier given a
-    precomputed signature relation (``sig=``) returns exactly the rows
-    it computes from the raw docs — the registry's session-cached
-    relation is a pure common-subexpression factoring, not a semantic
-    change."""
-    from eventstreamd_spark.session import load_table
-
-    docs = dd.with_planted_near_dups(
-        load_table(spark, sf_dir, "documents")
-    ).filter("doc_id % 100000 < 64")
-    sig = dd.simhash_signatures(docs).localCheckpoint()
-    for tier in (dd.simhash_pairs, dd.simhash_pairs_wide, dd.simhash_pairs_prod):
-        own = {tuple(r) for r in tier(docs).collect()}
-        shared = {tuple(r) for r in tier(docs, sig=sig).collect()}
-        assert own == shared, tier.__name__
-    corpus = docs.filter(
-        (F.col("doc_id") < dd.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
-    )
-    batch = docs.filter(
-        (F.col("doc_id") >= dd.PLANT_OFFSET) | (F.col("doc_id") % 2 == 1)
-    )
-    corpus_sig = dd.simhash_admission_signatures(corpus).localCheckpoint()
-    batch_sig = dd.simhash_admission_signatures(batch).localCheckpoint()
-    for wide in (False, True):
-        own = {
-            tuple(r)
-            for r in dd.text_admission_decisions(
-                corpus, batch, wide=wide
-            ).collect()
-        }
-        shared = {
-            tuple(r)
-            for r in dd.text_admission_decisions(
-                corpus,
-                batch,
-                wide=wide,
-                corpus_sig=corpus_sig,
-                batch_sig=batch_sig,
-            ).collect()
-        }
-        assert own == shared, wide

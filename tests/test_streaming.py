@@ -1592,6 +1592,7 @@ def test_media_admission_matches_batch_clusters(spark, sf_dir, tmp_path) -> None
     import os
 
     from eventstreamd_spark.operators.perceptual import media_near_dup_clusters
+    from eventstreamd_spark.plans import memo
     from eventstreamd_spark.streaming.pipeline import (
         seed_media_index,
         start_media_admission,
@@ -1617,10 +1618,14 @@ def test_media_admission_matches_batch_clusters(spark, sf_dir, tmp_path) -> None
     # mid-cohort split: cohort 10 = docs 40..43 -> canonical 40 and its
     # JPEG twin 41 land in batch 1; the perturbed twin 42 and the
     # negative control 43 arrive in batch 2
+    # the streaming rule (plans/memo.py): no micro-batch adds a session
+    # memo entry
+    n_memo = len(memo._MEMO)
     media.filter("doc_id < 42").coalesce(1).write.mode("append").parquet(src)
     run_once()
     media.filter("doc_id >= 42").coalesce(1).write.mode("append").parquet(src)
     run_once()
+    assert len(memo._MEMO) == n_memo
 
     got = {
         r["doc_id"]: (r["cluster_id"], r["keep"])
@@ -2021,6 +2026,7 @@ def test_text_admission_stream_matches_batch(spark, sf_dir, tmp_path) -> None:
     import os
 
     from eventstreamd_spark.operators import dedup as dd
+    from eventstreamd_spark.plans import memo
     from eventstreamd_spark.session import load_table
     from eventstreamd_spark.streaming.pipeline import (
         seed_text_index,
@@ -2030,17 +2036,14 @@ def test_text_admission_stream_matches_batch(spark, sf_dir, tmp_path) -> None:
     docs = dd.with_planted_near_dups(
         load_table(spark, sf_dir, "documents").filter("doc_id < 40")
     ).localCheckpoint()
-    corpus = docs.filter(
-        (F.col("doc_id") < dd.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
-    )
-    batch = docs.filter(
-        (F.col("doc_id") >= dd.PLANT_OFFSET) | (F.col("doc_id") % 2 == 1)
-    ).localCheckpoint()
+    in_corpus = (F.col("doc_id") < dd.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
+    corpus = docs.filter(in_corpus)
+    batch = docs.filter(~in_corpus).localCheckpoint()
 
     # batch face: the registered query's decisions
     want = {
         (r["doc_id"], r["cluster_id"], r["keep"], r["reason"])
-        for r in dd.text_admission_decisions(corpus, batch).collect()
+        for r in dd.text_admission_decisions(docs, in_corpus).collect()
     }
 
     # stream face: corpus keeps seed the index; the batch arrives in
@@ -2072,6 +2075,9 @@ def test_text_admission_stream_matches_batch(spark, sf_dir, tmp_path) -> None:
         q = start_text_admission(stream, idx, out, ckpt)
         q.awaitTermination(180)
 
+    # the streaming rule (plans/memo.py): no micro-batch adds a session
+    # memo entry
+    n_memo = len(memo._MEMO)
     batch.filter(f"doc_id < {dd.PLANT_OFFSET}").coalesce(1).write.mode(
         "append"
     ).parquet(src)
@@ -2080,6 +2086,7 @@ def test_text_admission_stream_matches_batch(spark, sf_dir, tmp_path) -> None:
         "append"
     ).parquet(src)
     run_once()
+    assert len(memo._MEMO) == n_memo
 
     got = {
         (r["doc_id"], r["cluster_id"], r["keep"], r["reason"])
@@ -2243,17 +2250,14 @@ def test_text_admission_stream_matches_batch_wide(
     docs = dd.with_planted_near_dups(
         load_table(spark, sf_dir, "documents").filter("doc_id < 40")
     ).localCheckpoint()
-    corpus = docs.filter(
-        (F.col("doc_id") < dd.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
-    )
-    batch = docs.filter(
-        (F.col("doc_id") >= dd.PLANT_OFFSET) | (F.col("doc_id") % 2 == 1)
-    ).localCheckpoint()
+    in_corpus = (F.col("doc_id") < dd.PLANT_OFFSET) & (F.col("doc_id") % 2 == 0)
+    corpus = docs.filter(in_corpus)
+    batch = docs.filter(~in_corpus).localCheckpoint()
 
     want = {
         (r["doc_id"], r["cluster_id"], r["keep"])
         for r in dd.text_admission_decisions(
-            corpus, batch, wide=True
+            docs, in_corpus, wide=True
         ).collect()
     }
 

@@ -266,43 +266,52 @@ def test_base_signatures_from_grid_match_direct_kernel(spark, sf_dir) -> None:
 
 
 def test_sig_relation_is_session_cached_not_persisted(spark, sf_dir) -> None:
-    """Round-12 rule: DERIVED signature relations are computed fresh
-    every invocation (process) and shared only within the session via
-    Spark's own cache manager — never written under .scratch.  Pins
-    (a) the returned relation resolves to a cached temp view, (b) no
-    sig parquet appears on disk, (c) rows equal the spec builder."""
+    """DERIVED signature relations are computed fresh every process and
+    shared only within the session (plans/memo.py) — never written
+    under .scratch.  Pins (a) the three video faces decode ONCE per
+    session: one memo entry for the grid kernel and a hit for every
+    later face, (b) only blob kinds appear on disk, (c) rows equal the
+    spec builder."""
     import glob
     import os
 
+    from eventstreamd_spark import queries_registry as qr
     from eventstreamd_spark.operators import multimodal as mm
+    from eventstreamd_spark.plans import memo
 
-    df = mm.cached_media(spark, sf_dir, vid.VIDEO_SIG_CACHE_KIND)
-    df.write.format("noop").mode("overwrite").save()
-    # (a) the relation is session-cached: some __media_sig temp view
-    # for this kind exists and is cached
-    views = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith(f"__session_sig_{vid.VIDEO_SIG_CACHE_KIND}")
+    memo.memo_clear()
+    hits = memo.HITS
+    faces = ("video_fingerprints", "video_near_dup", "video_near_dup_grid")
+    for name in faces:
+        qr.QUERIES[name](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    # (a) one decode per session, served to every later face
+    producer = vid.video_fingerprints_grid
+    entries = [
+        k for k in memo._MEMO
+        if k[1:3] == (producer.__module__, producer.__qualname__)
     ]
-    assert views and all(spark.catalog.isCached(v) for v in views)
-    # (b) nothing persisted: the sig kind never lands under .scratch
+    assert len(entries) == 1
+    assert memo.HITS - hits == len(faces) - 1
+    # (b) nothing derived persisted: every fixture on disk is a blob kind
     repo = os.path.dirname(os.path.dirname(os.path.abspath(mm.__file__)))
-    hits = glob.glob(
+    on_disk = glob.glob(
         os.path.join(
-            os.path.dirname(repo),
-            ".scratch",
-            "media_fixture",
-            "*",
-            "*",
-            f"{vid.VIDEO_SIG_CACHE_KIND}.parquet",
+            os.path.dirname(repo), ".scratch", "media_fixture", "*", "*",
+            "*.parquet",
         )
     )
-    assert hits == [], hits
+    kinds = {os.path.basename(p)[: -len(".parquet")] for p in on_disk}
+    assert kinds <= set(mm._media_builders()), kinds
     # (c) same rows as the spec builder over the same documents
+    grid = memo.shared(
+        producer, mm.cached_media(spark, sf_dir, "scene_video_vflip")
+    )
     spec = vid.scene_video_grid_signatures(
         load_table(spark, sf_dir, "documents")
     )
-    assert {tuple(r) for r in df.collect()} == {
+    assert {tuple(r) for r in grid.collect()} == {
         tuple(r) for r in spec.collect()
     }
+    memo.memo_clear()

@@ -12,9 +12,9 @@ Design (one controlled variable):
   * every run is a FRESH process that (1) warms the JVM, (2) builds the
     FULL resident cache set by executing one representative query per
     cached family, (3) either KEEPS the caches resident or CLEARS them
-    (spark.catalog.clearCache() + unpersist of every persistent RDD +
-    memo_clear()), then (4) times a TAIL of cache-independent queries
-    (cold + best-of-2, bench methodology).
+    (memo_clear() + unpersist of every persistent RDD), then (4) times
+    a TAIL of cache-independent queries (three passes per query, the
+    first one cold; the best of the three is kept).
   * the tail contains ONLY queries that consume no session cache/memo,
     so mode B never rebuilds what it cleared — the only difference
     between modes is whether the resident set occupies storage memory
@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -45,7 +46,7 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.path.join(REPO, "tools", "CACHE_PRESSURE_AB.json")
 
-# One representative per session-cached family: executing these
+# One representative per session-shared family: executing these
 # materializes every cache the full bench leaves resident (media sigs
 # x4, text sigs, hashed shingles, catalog memo relations, ANN ranked
 # bases + IVF cells + LSH buckets + PQ codes, BPE induction, kmeans
@@ -142,13 +143,14 @@ def storage_snapshot(spark) -> dict:
 
 
 def clear_all_caches(spark) -> None:
+    """The one reset: drop the session memo and free every persistent
+    RDD block (memo relations and operator-local checkpoints)."""
     from eventstreamd_spark.plans.memo import memo_clear
 
-    spark.catalog.clearCache()  # SQL cache (cached temp views)
+    memo_clear()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for jrdd in jmap.values():
         jrdd.unpersist()
-    memo_clear()
 
 
 def run_once(mode: str) -> dict:
@@ -220,16 +222,14 @@ def ab(rounds: int) -> None:
         for q, t in rec["tail"].items():
             cur = best[rec["mode"]].get(q)
             best[rec["mode"]][q] = t if cur is None else min(cur, t)
-    ratios = sorted(
+    ratios = [
         best["cleared"][q] / best["resident"][q]
         for q in TAIL
         if best["resident"].get(q)
-    )
+    ]
     summary = {
         "per_query_best": best,
-        "median_cleared_over_resident": round(
-            ratios[len(ratios) // 2], 4
-        ),
+        "median_cleared_over_resident": round(statistics.median(ratios), 4),
         "tail_total_resident": round(sum(best["resident"].values()), 3),
         "tail_total_cleared": round(sum(best["cleared"].values()), 3),
         "runs": runs,

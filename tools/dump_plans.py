@@ -6,9 +6,10 @@ Usage:
 
 Writes plans/r12/<query>_<SUFFIX>.txt for each query (the judge-facing
 before/after plan evidence).  Explain only analyzes/optimizes — it does
-not execute the plan — but query *construction* may materialize
-session-shared relations (memo_checkpoint / cached temp views), which is
-fine: plan dumping is untimed.
+not execute the plan — but query *construction* materializes the
+session-shared relations it reads (``plans.memo.shared``, an eager
+``localCheckpoint`` on first use), which is fine: plan dumping is
+untimed.
 """
 
 from __future__ import annotations
