@@ -32,7 +32,6 @@ def _node_type(v: Column, path: str) -> Column:
 def validate_envelope(
     raw: DataFrame,
     line_col: str = "value",
-    keep_parsed: bool = False,
     passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """Raw JSON-lines DataFrame -> validated envelope DataFrame.
@@ -42,10 +41,6 @@ def validate_envelope(
     reference check are dropped silently, mirroring the daemon's
     log-and-continue behavior.
 
-    ``keep_parsed=True`` adds ``data_v`` (the payload as a parsed
-    VARIANT) so downstream filter evaluation (``deliveries``) reuses
-    this operator's parse instead of re-parsing the serialized ``data``
-    string — JSON parsing is the hot path's dominant cost.
     ``passthrough`` names input columns to carry into the output
     unchanged (e.g. a spool position for replay ordering).
     """
@@ -75,10 +70,6 @@ def validate_envelope(
         F.try_variant_get(v, "$.id", "string").alias("id"),
         F.rand().alias("__nd"),
     ]
-    if keep_parsed:
-        cols.append(
-            F.try_variant_get(v, "$.data", "variant").alias("data_v")
-        )
     cols.extend(F.col(c) for c in passthrough)
     # The gate is computed in the PROJECT — whole-stage codegen does
     # common-subexpression elimination there, so the line parses ONCE

@@ -21,7 +21,7 @@ reference's routing-table index).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from functools import reduce
+from functools import lru_cache, reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -95,10 +95,33 @@ def deliveries(
 
     Equivalent to the reference's dispatch loop (dispatcher.py:93-95 +
     listener.py:62) but evaluated columnar in one scan.
+    """
+    extracts, masks, any_match, matched, helpers = _fanout_columns(
+        tuple(listeners), subsystem_col
+    )
+    extracted = df.withColumn("__v", F.try_parse_json(F.col(payload_col))).select(
+        "*", *extracts
+    )
+    # filter_once (plans/barriers.py): a plain .filter on the masks is
+    # pushed below BOTH projections by alias substitution, re-deriving
+    # every listener's predicate from raw variant probes inside
+    # FilterExec (no subexpression elimination there) — exactly the
+    # per-(event, listener) re-parse this operator exists to avoid.
+    masked = filter_once(extracted.select("*", *masks), any_match)
+    return masked.withColumn("listener", F.explode(matched)).drop(*helpers)
 
-    ``payload_col`` may be a JSON string column or an already-parsed
-    VARIANT column (e.g. ``validate_envelope(keep_parsed=True)``'s
-    ``data_v``) — a variant input skips the re-parse.
+
+@lru_cache(maxsize=64)
+def _fanout_columns(listeners: tuple[Listener, ...], subsystem_col: str):
+    """The fan-out's column expressions for one listener set: the
+    distinct typed extracts, the per-chunk match masks, their
+    any-match test, the matched-names array and the helper columns
+    to drop.
+
+    Cached because every Column constructor is a py4j round trip
+    (about 1 ms each on a 4-vCPU host), and the daemon's sink plans
+    the same subscriptions every micro-batch.  The columns are
+    unresolved expressions, valid in any plan.
     """
     # shared-work compilation: parse the payload once, extract each
     # DISTINCT (field, kind) the listener population probes once, then
@@ -127,19 +150,21 @@ def deliveries(
     # someone.  (An array-of-structs + HOF-filter formulation measured
     # ~4x slower — per-row struct allocation for every listener.)
     chunks = [listeners[i : i + 63] for i in range(0, len(listeners), 63)]
-    mask_cols = []
-    for c, chunk in enumerate(chunks):
+    mask_names = [f"__mask{c}" for c in range(len(chunks))]
+    masks = []
+    for name, chunk in zip(mask_names, chunks):
         mask = F.lit(0).cast("bigint")
         for i, li in enumerate(chunk):
             mask = mask + F.when(pred(li), F.lit(1 << i).cast("bigint")).otherwise(
                 F.lit(0).cast("bigint")
             )
-        mask_cols.append(mask.alias(f"__mask{c}"))
+        masks.append(mask.alias(name))
+    any_match = reduce(lambda a, b: a | b, [F.col(m) > 0 for m in mask_names])
 
-    def chunk_names(c: int, chunk: list[Listener]) -> F.Column:
+    def chunk_names(mask_name: str, chunk: tuple[Listener, ...]) -> F.Column:
         pows = F.array(*[F.lit(1 << i).cast("bigint") for i in range(len(chunk))])
         names = F.array(*[F.lit(li.name) for li in chunk])
-        m = F.col(f"__mask{c}")
+        m = F.col(mask_name)
         return F.filter(
             F.zip_with(
                 pows, names, lambda p, nm: F.when(m.bitwiseAND(p) > 0, nm)
@@ -147,30 +172,9 @@ def deliveries(
             lambda x: x.isNotNull(),
         )
 
-    is_variant = dict(df.dtypes).get(payload_col) == "variant"
-    parsed = (
-        F.col(payload_col) if is_variant else F.try_parse_json(F.col(payload_col))
-    )
-    extracted = df.withColumn("__v", parsed).select("*", *extracts)
-    # filter_once (plans/barriers.py): a plain .filter on the masks is
-    # pushed below BOTH projections by alias substitution, re-deriving
-    # every listener's predicate from raw variant probes inside
-    # FilterExec (no subexpression elimination there) — exactly the
-    # per-(event, listener) re-parse this operator exists to avoid.
-    masked = filter_once(
-        extracted.select("*", *mask_cols),
-        reduce(
-            lambda a, b: a | b,
-            [F.col(f"__mask{c}") > 0 for c in range(len(chunks))],
-        ),
-    )
-    matched = F.concat(
-        *[chunk_names(c, chunk) for c, chunk in enumerate(chunks)]
-    )
-    return (
-        masked.withColumn("listener", F.explode(matched))
-        .drop("__v", *specs_by_key.keys(), *[f"__mask{c}" for c in range(len(chunks))])
-    )
+    matched = F.concat(*[chunk_names(m, chunk) for m, chunk in zip(mask_names, chunks)])
+    helpers = ["__v", *specs_by_key, *mask_names]
+    return extracts, masks, any_match, matched, helpers
 
 
 def oracle_deliveries_sql(

@@ -37,7 +37,10 @@ from pyspark.sql import Column, DataFrame, functions as F
 def filter_once(df: DataFrame, cond: Column) -> DataFrame:
     """Filter by ``cond``, guaranteeing it is evaluated once per row in
     a projection (CSE'd) rather than re-expanded inside FilterExec."""
-    sel = df.select("*", cond.alias("__ok"), F.rand().alias("__nd"))
+    # a fixed seed: rand's seed is inlined into the generated Java, so an
+    # unseeded barrier makes every rebuilt plan (one per micro-batch in
+    # the daemon's sink) miss the codegen cache and compile afresh
+    sel = df.select("*", cond.alias("__ok"), F.rand(0).alias("__nd"))
     return sel.filter(F.col("__ok") | (F.col("__nd") < F.lit(-1.0))).drop(
         "__ok", "__nd"
     )

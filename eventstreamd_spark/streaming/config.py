@@ -4,7 +4,8 @@ Reference: /root/reference/evtstrd/config.py:31-54 reads a [General]
 section with SocketFile, SocketMode (octal), SocketOwner, SocketGroup,
 SSLCertificateFile, SSLKeyFile, HTTPPort; missing file => defaults
 (config.py:57-61).  Same keys and fallbacks here, plus the engine's own
-knobs (spool/checkpoint work dir, trigger) under [Spark].
+knobs (spool/checkpoint work dir, trigger) under [Spark].  Any other
+key is ignored, as configparser reads it.
 """
 
 from __future__ import annotations
@@ -33,12 +34,6 @@ class Config:
     work_dir: str = "/tmp/eventstreamd_spark"
     trigger_seconds: int = 1
     auth_plugin_file: str = ""
-    # SSE fan-out tier: "driver" = in-process push_batch (the
-    # reference-faithful single-daemon shape, right below ~10^4
-    # frames/batch); "distributed" = executor-side DistributedPusher
-    # through the frame-ingest tier (the 100x-scale path; SCALE.md
-    # documents the cutover).
-    push_mode: str = "driver"
     # CLI-set debug mode (reference config.py:24, cmdargs.py:16,23 —
     # the reference never reads it from the INI either)
     debug: bool = False
@@ -73,12 +68,6 @@ def read_config(filename: str) -> Config:
     config.auth_plugin_file = parser.get(
         "General", "AuthPlugin", fallback=""
     )
-    push_mode = parser.get("Spark", "PushMode", fallback=config.push_mode)
-    if push_mode not in ("driver", "distributed"):
-        raise ValueError(
-            f"[Spark] PushMode must be 'driver' or 'distributed', got {push_mode!r}"
-        )
-    config.push_mode = push_mode
     return config
 
 

@@ -10,6 +10,10 @@ a Structured Streaming query:
     unix socket -> spool files -> jsonlines source -> validate_envelope
       -> foreachBatch(registry.push_batch) -> per-connection SSE queues
 
+``push_batch`` is the one fan-out path: one Spark job per micro-batch
+routes every event to every live subscription (``routing.deliveries``),
+and the rendered frames cross to the driver once, into the queues.
+
 EP1 (ingest) = socket_spool.run_socket_server; EP2 (subscribe) and
 EP3 (/stats) = http_frontend.run_http_server; the Spark query replaces
 the dispatcher's per-event Python loop with vectorized micro-batches.
@@ -57,19 +61,11 @@ async def run_daemon(
     socket_mode: int = 0o600,
     socket_owner: str | None = None,
     socket_group: str | None = None,
-    push_mode: str = "driver",
 ) -> None:
     """Run ingest + Spark pipeline + SSE front-end until ``stop_event``.
 
     ``work_dir`` holds the spool and the streaming checkpoint (the two
     pieces of durable state; on a cluster both live on shared storage).
-
-    ``push_mode`` picks the SSE fan-out tier ([Spark] PushMode in the
-    INI): "driver" collects matched frames through the in-process
-    registry (reference-faithful, right below ~10^4 frames/batch);
-    "distributed" starts the frame-ingest listener tier and routes
-    every frame executor-side through DistributedPusher — the plan per
-    micro-batch never funnels frames through the driver.
     """
     from eventstreamd_spark.streaming.config import PING_INTERVAL
 
@@ -98,40 +94,20 @@ async def run_daemon(
         cert_file=cert_file,
         key_file=key_file,
     )
-    ingest_server = None
-    if push_mode == "distributed":
-        from eventstreamd_spark.streaming.http_frontend import (
-            DistributedPusher,
-            run_frame_ingest,
-        )
-
-        ingest_server = await run_frame_ingest(host, 0, registry)
-        ingest_port = ingest_server.sockets[0].getsockname()[1]
-        sink = DistributedPusher(registry, host, ingest_port).push_batch
-    elif push_mode == "driver":
-        sink = registry.push_batch
-    else:
-        raise ValueError(f"unknown push_mode {push_mode!r}")
     query = pipeline.start_envelope_pipeline(
         spark,
         spool_dir,
-        sink,
+        registry.push_batch,
         checkpoint,
         trigger_seconds=trigger_seconds or 1,
     )
-    logger.info(
-        "daemon up: socket=%s http=%s:%s push=%s",
-        socket_path, host, port, push_mode,
-    )
+    logger.info("daemon up: socket=%s http=%s:%s", socket_path, host, port)
     try:
         await (stop_event or asyncio.Event()).wait()
     finally:
         query.stop()
         socket_server.close()
         http_server.close()
-        if ingest_server is not None:
-            ingest_server.close()
-            await ingest_server.wait_closed()
         await socket_server.wait_closed()
         await http_server.wait_closed()
 
@@ -180,7 +156,6 @@ def main() -> None:  # pragma: no cover - thin CLI shim
             socket_mode=cfg.socket_mode,
             socket_owner=cfg.socket_owner or None,
             socket_group=cfg.socket_group or None,
-            push_mode=cfg.push_mode,
         )
     )
 

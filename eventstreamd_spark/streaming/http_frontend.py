@@ -13,9 +13,15 @@ Faithful endpoints (/root/reference/evtstrd/http_server.py):
   (subsystem, filters, connection-time) — stats.py:28-50's shape.
 
 Frames arrive via ``push_batch`` — the ``foreachBatch`` sink callback
-from streaming/pipeline.py.  Connection lifecycle (disconnect detect,
-write-error teardown, O10) lives here, outside Spark's dataflow, which
-is exactly where the reference keeps it too (listener.py:86-95).
+of streaming/pipeline.py.  Each micro-batch is ONE Spark job: the live
+connections are grouped by (subsystem, filters) and
+``pipeline.listener_frames`` (``routing.deliveries`` + ``sse_frame``)
+matches and renders the batch for every group at once; the driver then
+hands each connection its group's frames.  A connection whose bounded
+queue is full drops frames and counts them (``Connection.dropped``).
+Connection lifecycle (disconnect detect, write-error teardown, O10)
+lives here, outside Spark's dataflow, which is exactly where the
+reference keeps it too (listener.py:86-95).
 
 stdlib asyncio only (the container has no aiohttp); HTTP/1.1 parsing is
 minimal but honest: request line + headers, GET only.
@@ -32,6 +38,8 @@ from dataclasses import dataclass, field
 from urllib.parse import parse_qs, urlsplit
 
 from eventstreamd_spark.operators.filters import parse_filter
+from eventstreamd_spark.operators.routing import Listener
+from eventstreamd_spark.streaming.pipeline import listener_frames
 
 logger = logging.getLogger(__name__)
 
@@ -72,6 +80,8 @@ class Connection:
     # Referer request header, surfaced in /stats when present
     # (reference stats.py:23,41-42)
     referer: str | None = None
+    # frames lost to a full queue (slow consumer); logged on the first
+    dropped: int = 0
 
 
 class ListenerRegistry:
@@ -108,57 +118,46 @@ class ListenerRegistry:
         """foreachBatch sink over *validated envelopes*.
 
         Subscriptions are dynamic (reference EP2), so the listener set
-        is read per micro-batch: for each distinct (subsystem, filters)
-        among live connections, the batch is filtered with the SAME
-        compiled Catalyst predicates the batch layer uses and frames
-        are rendered in Spark — Python only fans finished frames into
-        queues.  New subscribers start receiving at the next
+        is read per micro-batch: the live connections are grouped by
+        (subsystem, filters), each group becomes one ``Listener`` named
+        by its index, and ONE collect of ``listener_frames`` matches
+        and renders the batch for every group — the same ``deliveries``
+        fan-out Last-Event-ID replay runs.  Python only hands finished
+        frames to queues.  New subscribers start receiving at the next
         micro-batch, no query restart.
         """
-        from pyspark.sql import functions as F
-
-        from eventstreamd_spark.functions.sse import sse_frame
-        from eventstreamd_spark.operators.filters import compile_filters, parse_filter
-
-        conns = list(self.connections.items())
-        if not conns:
-            return
         groups: dict[tuple[str, tuple[str, ...]], list[Connection]] = {}
-        for _, conn in conns:
+        for conn in list(self.connections.values()):
             groups.setdefault((conn.subsystem, conn.filters), []).append(conn)
         if not groups:
             return
-        # parse payloads and render frames ONCE for the whole batch;
-        # per-group work is then a predicate over the parsed variant
-        # (otherwise every listener group re-parses every event's JSON)
-        parsed = batch_df.withColumn(
-            "__v", F.try_parse_json(F.col("data"))
-        ).withColumn(
-            "__frame",
-            sse_frame(F.col("event_type"), F.col("data"), F.col("id")),
-        )
-        parsed.persist()
-        try:
-            for (subsystem, filters), members in groups.items():
-                specs = [parse_filter(f) for f in filters]
-                matched = parsed.filter(
-                    (F.col("subsystem") == subsystem)
-                    & compile_filters(specs, F.col("__v"), pre_parsed=True)
-                ).select(F.col("__frame").alias("frame"))
-                frames = [r["frame"] for r in matched.collect()]
+        listeners = [Listener(str(i), *key) for i, key in enumerate(groups)]
+        frames: list[list[str]] = [[] for _ in listeners]
+        for row in listener_frames(batch_df, listeners).collect():
+            frames[int(row["listener"])].append(row["frame"])
+        for members, group_frames in zip(groups.values(), frames):
+            if group_frames:
                 for conn in members:
-                    for frame in frames:
-                        self._enqueue(conn, frame)
-        finally:
-            parsed.unpersist()
+                    self._deliver(conn, group_frames)
 
-    def _enqueue(self, conn: Connection, frame: str) -> None:
+    def _deliver(self, conn: Connection, frames: list[str]) -> None:
+        """Queue ``frames`` on one connection, in order, in one hop
+        through the event loop.  Bounded backpressure (vs the
+        reference's unbounded buffer, http.py:114-118): once the queue
+        is full the rest of the batch is dropped and counted."""
+
         def put() -> None:
-            try:
-                conn.queue.put_nowait(frame)
-            except asyncio.QueueFull:
-                pass  # bounded backpressure: drop for slow consumer (vs
-                # the reference's unbounded buffer, http.py:114-118)
+            for i, frame in enumerate(frames):
+                try:
+                    conn.queue.put_nowait(frame)
+                except asyncio.QueueFull:
+                    if not conn.dropped:
+                        logger.warning(
+                            "slow consumer %s %s: queue full, dropping frames",
+                            conn.subsystem, list(conn.filters),
+                        )
+                    conn.dropped += len(frames) - i
+                    return
 
         if self.loop is not None:
             self.loop.call_soon_threadsafe(put)
@@ -182,20 +181,6 @@ class ListenerRegistry:
             "total-connections": self.total_connections,
             "connections": [one(c) for c in self.connections.values()],
         }
-
-    def dispatch_frame(
-        self, subsystem: str, filters: tuple[str, ...], frame: str
-    ) -> None:
-        """Deliver one rendered frame to every connection subscribed as
-        (subsystem, filters).  Called from the frame-ingest server (on
-        the event loop) or any thread (hops through the loop)."""
-        for conn in list(self.connections.values()):
-            if conn.subsystem == subsystem and conn.filters == filters:
-                self._enqueue(conn, frame)
-
-
-def listener_key(subsystem: str, filters: tuple[str, ...]) -> str:
-    return f"{subsystem}|{','.join(filters)}"
 
 
 def _chunk(data: str) -> bytes:
@@ -387,135 +372,6 @@ async def handle_http(
             writer.close()
         except Exception:
             pass
-
-
-async def run_frame_ingest(
-    host: str, port: int, registry: ListenerRegistry
-) -> asyncio.AbstractServer:
-    """Frame-ingest endpoint for EXECUTOR-SIDE fan-out.
-
-    Accepts newline-delimited JSON ``{"subsystem": .., "filters": [..],
-    "frame": ..}`` from Spark tasks and dispatches to subscribed
-    connection queues.  This is the listener-tier half of the
-    100x-scale push path: at cluster scale one of these runs per
-    listener-tier node (executors write to whichever node owns the
-    subscription, e.g. via consistent hashing on the group key); in
-    local mode it shares the event loop with the SSE server.
-
-    Use ``server.sockets[0].getsockname()[1]`` for the bound port when
-    started with port 0.
-    """
-
-    async def handler(
-        reader: asyncio.StreamReader, writer: asyncio.StreamWriter
-    ) -> None:
-        try:
-            while True:
-                line = await reader.readline()
-                if not line:
-                    break
-                try:
-                    msg = json.loads(line)
-                    registry.dispatch_frame(
-                        msg["subsystem"], tuple(msg["filters"]), msg["frame"]
-                    )
-                except (ValueError, KeyError, TypeError):
-                    logger.warning("frame-ingest: dropping malformed line")
-        finally:
-            try:
-                writer.close()
-            except Exception:
-                pass
-
-    return await asyncio.start_server(handler, host, port)
-
-
-class DistributedPusher:
-    """Executor-side SSE fan-out: the ``foreachBatch`` sink for clusters.
-
-    ``ListenerRegistry.push_batch`` collects matched frames to the
-    driver — faithful to the reference's single-process design and fine
-    at daemon scale, but at 1000 executors every delivered frame would
-    transit one Python driver thread.  This pusher keeps delivery on
-    the executors: per micro-batch it builds ONE tagged union plan
-    (each live (subsystem, filters) group's predicate over the
-    shared parsed/framed projection) and ships it with
-    ``foreachPartition`` — every task opens a socket to the frame-
-    ingest tier and writes its partition's frames directly.  The
-    driver only reads the (tiny) subscription table; frames never
-    leave the executors until the listener tier.
-
-    SCALE.md documents the cutover: in-process ``push_batch`` below
-    ~10^4 frames/batch on one node, DistributedPusher beyond.
-    """
-
-    def __init__(
-        self, registry: ListenerRegistry, ingest_host: str, ingest_port: int
-    ) -> None:
-        self.registry = registry
-        self.ingest_host = ingest_host
-        self.ingest_port = ingest_port
-
-    def push_batch(self, batch_df, epoch_id: int) -> None:
-        from pyspark.sql import functions as F
-
-        from eventstreamd_spark.functions.sse import sse_frame
-        from eventstreamd_spark.operators.filters import (
-            compile_filters,
-            parse_filter,
-        )
-
-        groups = sorted(
-            {
-                (c.subsystem, c.filters)
-                for c in self.registry.connections.values()
-            }
-        )
-        if not groups:
-            return
-        parsed = batch_df.withColumn(
-            "__v", F.try_parse_json(F.col("data"))
-        ).withColumn(
-            "__frame",
-            sse_frame(F.col("event_type"), F.col("data"), F.col("id")),
-        )
-        parts = []
-        for subsystem, filters in groups:
-            specs = [parse_filter(f) for f in filters]
-            tag = json.dumps(
-                {"subsystem": subsystem, "filters": list(filters)}
-            )
-            parts.append(
-                parsed.filter(
-                    (F.col("subsystem") == subsystem)
-                    & compile_filters(specs, F.col("__v"), pre_parsed=True)
-                ).select(
-                    F.lit(tag).alias("tag"), F.col("__frame").alias("frame")
-                )
-            )
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-
-        host, port = self.ingest_host, self.ingest_port
-
-        def send(rows) -> None:  # runs on executors
-            import json as _json
-            import socket
-
-            sock = None
-            try:
-                for row in rows:
-                    if sock is None:  # connect lazily: empty partitions free
-                        sock = socket.create_connection((host, port))
-                    msg = _json.loads(row.tag)
-                    msg["frame"] = row.frame
-                    sock.sendall((_json.dumps(msg) + "\n").encode())
-            finally:
-                if sock is not None:
-                    sock.close()
-
-        union.foreachPartition(send)
 
 
 async def run_http_server(

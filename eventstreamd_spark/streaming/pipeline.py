@@ -2,8 +2,9 @@
 
 EP1/EP2 (SURVEY.md §3) become:
 
-    jsonlines source -> validate_envelope -> per-listener predicate
-      -> SSE frame column -> foreachBatch sink (HTTP push / capture)
+    jsonlines source -> validate_envelope -> foreachBatch sink
+      (ListenerRegistry.push_batch: listener_frames = deliveries +
+      sse_frame over the live subscriptions, one job per micro-batch)
 
 The SAME operator functions as batch mode — ``validate_envelope``,
 ``compile_filters``, ``sse_frame`` are DataFrame->DataFrame/Column
@@ -49,17 +50,20 @@ def read_event_stream(
 
 
 def listener_frames(
-    raw: DataFrame, listeners: list[Listener]
+    env: DataFrame,
+    listeners: list[Listener],
+    passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
-    """raw lines -> validated envelopes -> fan-out -> SSE frames.
+    """Validated envelopes -> one SSE frame per (event, matched listener).
 
-    Output: (listener, subsystem, id, frame).  All narrow — this whole
-    pipeline is one stage per micro-batch, no shuffle.
+    Output: (listener, *passthrough, frame).  The one subscription
+    matcher of the daemon: the live sink (``ListenerRegistry.push_batch``)
+    and Last-Event-ID replay both route through ``deliveries`` here.
+    All narrow — one stage per micro-batch, no shuffle.
     """
-    env = validate_envelope(raw)
     fanned = deliveries(env, listeners, subsystem_col="subsystem", payload_col="data")
     frame = sse_frame(F.col("event_type"), F.col("data"), F.col("id"))
-    return fanned.select("listener", "subsystem", "id", frame.alias("frame"))
+    return fanned.select("listener", *passthrough, frame.alias("frame"))
 
 
 def make_replay_fn(spark: SparkSession, spool_dir: str):
@@ -72,23 +76,15 @@ def make_replay_fn(spark: SparkSession, spool_dir: str):
 
     Returns ``replay(subsystem, filters, last_id) -> list[frame]``:
     events strictly after the LAST validated occurrence of ``last_id``,
-    in spool order, matching the subscription — evaluated with the SAME
-    Spark operators as the live path (validate_envelope +
-    compile_filters + sse_frame), so replayed and live delivery
-    semantics are identical by construction.  Position comes from a
-    Python-side sequential read (a log tail is inherently ordered I/O);
-    all *semantics* stay Spark-side.  Unknown id => full-spool replay,
-    the SSE contract for an expired id.
+    in spool order, matching the subscription — routed through the
+    live sink's ``listener_frames`` with one listener, so replayed and
+    live delivery semantics are identical by construction.  Position
+    comes from a Python-side sequential read (a log tail is inherently
+    ordered I/O); all *semantics* stay Spark-side.  Unknown id =>
+    full-spool replay, the SSE contract for an expired id.
     """
     import os
 
-    from eventstreamd_spark.operators.envelope import (
-        validate_envelope as _validate,
-    )
-    from eventstreamd_spark.operators.filters import (
-        filter_events,
-        parse_filter,
-    )
     from eventstreamd_spark.sources.jsonlines import _list_spool_files
 
     def replay(
@@ -106,19 +102,15 @@ def make_replay_fn(spark: SparkSession, spool_dir: str):
         if not rows:
             return []
         df = spark.createDataFrame(rows, "pos long, value string")
-        env = _validate(df, passthrough=("pos",))
+        env = validate_envelope(df, passthrough=("pos",))
         marker = (
             env.filter(F.col("id") == last_id).agg(F.max("pos")).collect()[0][0]
         )
         after = env.filter(F.col("pos") > marker) if marker is not None else env
-        matched = filter_events(
-            after.filter(F.col("subsystem") == subsystem),
-            [parse_filter(f) for f in filters],
-            payload_col="data",
+        matched = listener_frames(
+            after, [Listener("0", subsystem, filters)], passthrough=("pos",)
         )
-        frame = sse_frame(F.col("event_type"), F.col("data"), F.col("id"))
-        out = matched.select("pos", frame.alias("frame")).orderBy("pos").collect()
-        return [r["frame"] for r in out]
+        return [r["frame"] for r in matched.orderBy("pos").collect()]
 
     return replay
 
@@ -139,8 +131,9 @@ def start_envelope_pipeline(
     trigger_seconds: int | None = None,
 ) -> StreamingQuery:
     """Daemon mode: stream validated envelopes into a sink callback that
-    handles *dynamic* subscriptions (ListenerRegistry.push_batch filters
-    each micro-batch with per-connection compiled predicates)."""
+    handles *dynamic* subscriptions (ListenerRegistry.push_batch routes
+    each micro-batch through ``listener_frames`` over the subscriptions
+    live at that moment)."""
     env = validate_envelope(read_event_stream(spark, spool_dir))
     writer = (
         env.writeStream.outputMode("append")
@@ -149,34 +142,6 @@ def start_envelope_pipeline(
     )
     if trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def start_listener_pipeline(
-    spark: SparkSession,
-    spool_dir: str,
-    listeners: list[Listener],
-    sink: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    trigger_seconds: int | None = None,
-) -> StreamingQuery:
-    """Wire the whole daemon: source -> operators -> foreachBatch sink.
-
-    ``sink(batch_df, epoch_id)`` receives (listener, subsystem, id,
-    frame) rows; the HTTP front-end (streaming/http_frontend.py) pushes
-    frames to live connections from there.  foreachBatch + checkpoint
-    gives at-least-once into the sink callback.
-    """
-    frames = listener_frames(read_event_stream(spark, spool_dir), listeners)
-    writer = (
-        frames.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    else:
-        writer = writer.trigger(availableNow=True)
     return writer.start()
 
 

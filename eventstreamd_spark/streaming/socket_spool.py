@@ -22,23 +22,36 @@ import asyncio
 import json
 import logging
 import os
+import re
 
 logger = logging.getLogger(__name__)
+
+_SPOOL_NAME = re.compile(r"^(\d{12})\.jsonl$")
 
 
 class SpoolWriter:
     """Batches incoming lines into spool files, flushed on a short timer
     or size threshold (amortizes file-per-line overhead; the flush
-    interval bounds added latency)."""
+    interval bounds added latency).
+
+    File names continue the sequence already on disk: a restarted
+    writer never replaces a spooled file, and its files sort after every
+    file the stream has consumed (the source's offset is a file count).
+    """
 
     def __init__(self, spool_dir: str, flush_lines: int = 1000, flush_seconds: float = 0.5):
         self.spool_dir = spool_dir
         self.flush_lines = flush_lines
         self.flush_seconds = flush_seconds
         self._buf: list[str] = []
-        self._seq = 0
         self._lock = asyncio.Lock()
         os.makedirs(spool_dir, exist_ok=True)
+        seqs = [
+            int(m.group(1))
+            for m in map(_SPOOL_NAME.match, os.listdir(spool_dir))
+            if m
+        ]
+        self._seq = max(seqs, default=-1) + 1
 
     async def add(self, line: str) -> None:
         async with self._lock:

@@ -8,8 +8,6 @@ import asyncio
 import datetime
 import json
 
-import pytest
-
 from eventstreamd_spark.streaming.daemon import run_daemon
 from eventstreamd_spark.streaming.http_frontend import AuthError
 
@@ -49,14 +47,9 @@ async def _read_until(reader: asyncio.StreamReader, needle: str, timeout: float 
     return buf
 
 
-import pytest
-
-
-@pytest.mark.parametrize("push_mode", ["driver", "distributed"])
-def test_daemon_end_to_end(spark, tmp_path, push_mode) -> None:
-    """Full contract in BOTH fan-out tiers: [Spark] PushMode = driver
-    (in-process push_batch) and distributed (executor-side
-    DistributedPusher through the frame-ingest tier)."""
+def test_daemon_end_to_end(spark, tmp_path) -> None:
+    """Full contract: auth gate, filtered subscription, socket ingest,
+    SSE delivery through push_batch, and /stats."""
     sock = str(tmp_path / "evtd.sock")
 
     async def auth(path: str, headers: dict[str, str]) -> tuple[datetime.datetime | None, None]:
@@ -75,7 +68,6 @@ def test_daemon_end_to_end(spark, tmp_path, push_mode) -> None:
                 trigger_seconds=1,
                 auth=auth,
                 stop_event=stop,
-                push_mode=push_mode,
             )
         )
         for _ in range(100):  # wait for the socket server to come up
@@ -186,56 +178,6 @@ def test_expiry_logout(spark, tmp_path) -> None:
     asyncio.run(scenario())
 
 
-def test_distributed_push_executor_side(spark) -> None:
-    """The cluster-scale fan-out path: frames travel task -> frame-ingest
-    socket -> connection queues, never through a driver collect()."""
-    from eventstreamd_spark.streaming.http_frontend import (
-        Connection,
-        DistributedPusher,
-        ListenerRegistry,
-        run_frame_ingest,
-    )
-
-    batch = spark.createDataFrame(
-        [
-            ("orders", "add", '{"k": 60}', "e1"),   # matches k>=50
-            ("orders", "add", '{"k": 10}', "e2"),   # filtered out
-            ("other", "add", '{"k": 99}', "e3"),    # wrong subsystem
-        ],
-        "subsystem string, event_type string, data string, id string",
-    )
-
-    async def scenario() -> None:
-        loop = asyncio.get_running_loop()
-        registry = ListenerRegistry(loop=loop)
-        server = await run_frame_ingest("127.0.0.1", 0, registry)
-        port = server.sockets[0].getsockname()[1]
-
-        match = Connection("orders", ("k>=50",), asyncio.Queue())
-        loose = Connection("orders", (), asyncio.Queue())
-        registry.add(match)
-        registry.add(loose)
-
-        pusher = DistributedPusher(registry, "127.0.0.1", port)
-        # the Spark action blocks; keep the loop free to serve ingest
-        await loop.run_in_executor(None, pusher.push_batch, batch, 0)
-
-        frame = await asyncio.wait_for(match.queue.get(), 10)
-        assert "id: e1" in frame and '"k": 60' in frame
-        assert match.queue.empty()  # e2/e3 never delivered to the filtered sub
-
-        got = set()
-        for _ in range(2):  # unfiltered orders sub sees e1 AND e2, not e3
-            got.add(await asyncio.wait_for(loose.queue.get(), 10))
-        assert any("id: e1" in f for f in got) and any("id: e2" in f for f in got)
-        assert not any("id: e3" in f for f in got)
-
-        server.close()
-        await server.wait_closed()
-
-    asyncio.run(scenario())
-
-
 def test_stale_socket_removed_live_socket_refused(tmp_path) -> None:
     """Reference socket_server.py:44-53: a dead socket file is cleaned
     up and bind proceeds; a live one raises ServerAlreadyRunningError.
@@ -311,17 +253,6 @@ def test_config_parsing(tmp_path) -> None:
     cfg2 = read_config(str(ini2))
     assert cfg2.socket_file == Config().socket_file
     assert cfg2.http_port == 8888 and not cfg2.with_ssl
-    assert cfg2.push_mode == "driver"  # default fan-out tier
-    # [Spark] PushMode selects the fan-out tier; junk is rejected
-    ini3 = tmp_path / "push.conf"
-    ini3.write_text("[Spark]\nPushMode = distributed\n")
-    assert read_config(str(ini3)).push_mode == "distributed"
-    ini4 = tmp_path / "bad.conf"
-    ini4.write_text("[Spark]\nPushMode = sideways\n")
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="PushMode"):
-        read_config(str(ini4))
 
 
 def test_last_event_id_replay(spark, tmp_path) -> None:
@@ -457,3 +388,165 @@ def test_auth_plugin_contract(spark, tmp_path) -> None:
         await asyncio.wait_for(daemon, 60)
 
     asyncio.run(scenario())
+
+
+# The daemon benchmark's subscriptions: every filter kind the grammar
+# has — int, quoted string, ISO date, compact date, nested path, a
+# conjunction and the empty filter list.
+SUBSCRIPTIONS = [
+    ("orders", ("k>=30",)),
+    ("users", ()),
+    ("billing", ("meta.level<=2", "day>=2024-01-08")),
+    ("orders", ("name='n3'",)),
+    ("users", ("k<50",)),
+    ("billing", ("name>='n2'",)),
+    ("orders", ("day<20240115",)),
+]
+
+
+def _envelopes(spark, n: int):
+    """A static micro-batch of validated envelopes, spread over
+    partitions (an RDD, not a local relation the planner could fold)."""
+    subsystems = ["orders", "users", "billing"]
+    rows = [
+        (
+            subsystems[i % 3],
+            "add",
+            json.dumps(
+                {
+                    "k": (i * 37) % 100,
+                    "name": f"n{i % 7}",
+                    "day": f"2024-01-{1 + i % 28:02d}"
+                    if i % 2
+                    else f"202401{1 + i % 28:02d}",
+                    "meta": {"level": i % 5},
+                }
+            ),
+            str(i),
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3),
+        "subsystem string, event_type string, data string, id string",
+    )
+
+
+def _drain(queue: asyncio.Queue) -> list[str]:
+    out = []
+    while not queue.empty():
+        out.append(queue.get_nowait())
+    return out
+
+
+def test_push_batch_is_one_job_per_micro_batch(spark) -> None:
+    """push_batch routes a micro-batch for every live subscription in ONE
+    Spark job (one collect of listener_frames), and hands each
+    connection exactly the frames its own per-subscription filter
+    gives, in batch order — including two connections sharing a group."""
+    from pyspark.sql import functions as F
+
+    from eventstreamd_spark.functions.sse import sse_frame
+    from eventstreamd_spark.operators.filters import filter_events, parse_filter
+    from eventstreamd_spark.streaming.http_frontend import (
+        Connection,
+        ListenerRegistry,
+    )
+
+    batch = _envelopes(spark, 400)
+    registry = ListenerRegistry()
+    conns = [Connection(s, f, asyncio.Queue()) for s, f in SUBSCRIPTIONS]
+    conns.append(Connection(*SUBSCRIPTIONS[2], asyncio.Queue()))  # shared group
+    for conn in conns:
+        registry.add(conn)
+
+    sc = spark.sparkContext
+    sc.setJobGroup("push-batch-one-job", "push_batch")
+    try:
+        registry.push_batch(batch, 0)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("push-batch-one-job")) == 1
+
+    frame = sse_frame(F.col("event_type"), F.col("data"), F.col("id"))
+    for conn in conns:
+        expected = [
+            r["frame"]
+            for r in filter_events(
+                batch.filter(F.col("subsystem") == conn.subsystem),
+                [parse_filter(f) for f in conn.filters],
+                payload_col="data",
+            )
+            .select(frame.alias("frame"))
+            .collect()
+        ]
+        assert expected, conn  # every subscription matches something
+        assert _drain(conn.queue) == expected, conn
+        assert conn.dropped == 0
+
+
+def test_slow_consumer_drops_are_counted(spark, caplog) -> None:
+    """A full queue drops the rest of the batch and counts it, with one
+    warning per connection (not a silent loss)."""
+    from eventstreamd_spark.streaming.http_frontend import (
+        Connection,
+        ListenerRegistry,
+    )
+
+    batch = spark.createDataFrame(
+        [("orders", "add", json.dumps({"k": k}), f"e{k}") for k in range(5)],
+        "subsystem string, event_type string, data string, id string",
+    )
+    registry = ListenerRegistry()
+    slow = Connection("orders", (), asyncio.Queue(maxsize=2))
+    registry.add(slow)
+    with caplog.at_level("WARNING"):
+        registry.push_batch(batch, 0)
+        assert slow.dropped == 3
+        registry.push_batch(batch, 1)  # still full: all 5 dropped
+    assert slow.dropped == 3 + 5
+    assert sum("queue full" in r.getMessage() for r in caplog.records) == 1
+    kept = [f.split("id: ")[1].split("\r\n")[0] for f in _drain(slow.queue)]
+    assert kept == ["e0", "e1"]  # the first frames, in batch order
+
+
+def test_spool_restart_keeps_files_and_stream_resumes(spark, tmp_path) -> None:
+    """A restarted SpoolWriter continues the on-disk sequence: it never
+    replaces a spooled file, and a stream restarted from its checkpoint
+    delivers the post-restart events."""
+    import os
+
+    from eventstreamd_spark.streaming import pipeline
+    from eventstreamd_spark.streaming.socket_spool import SpoolWriter
+
+    spool = str(tmp_path / "spool")
+    ckpt = str(tmp_path / "ckpt")
+
+    def spool_lines(ids: list[str]) -> None:
+        async def write() -> None:
+            writer = SpoolWriter(spool)
+            for i in ids:
+                await writer.add(_msg("orders", 1, i))
+            await writer.flush()
+
+        asyncio.run(write())
+
+    def run_stream() -> list[str]:
+        seen: list[str] = []
+        q = pipeline.start_envelope_pipeline(
+            spark, spool, lambda df, _: seen.extend(r["id"] for r in df.collect()), ckpt
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return seen
+
+    spool_lines(["a1", "a2"])
+    before = open(os.path.join(spool, "000000000000.jsonl")).read()
+    assert run_stream() == ["a1", "a2"]
+
+    spool_lines(["b1"])  # the restart
+    assert sorted(os.listdir(spool)) == ["000000000000.jsonl", "000000000001.jsonl"]
+    assert open(os.path.join(spool, "000000000000.jsonl")).read() == before
+    assert run_stream() == ["b1"]

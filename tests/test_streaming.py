@@ -9,7 +9,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from eventstreamd_spark.operators.routing import Listener
 from eventstreamd_spark.sources import jsonlines
 from eventstreamd_spark.streaming import pipeline
 
@@ -36,6 +35,16 @@ def test_jsonlines_batch_reader(spark, tmp_path) -> None:
 
 
 def test_streaming_source_and_listener_pipeline(spark, tmp_path) -> None:
+    """The daemon's stream: jsonlines source -> validate_envelope ->
+    foreachBatch(ListenerRegistry.push_batch) -> per-connection frames."""
+    import asyncio
+    import re
+
+    from eventstreamd_spark.streaming.http_frontend import (
+        Connection,
+        ListenerRegistry,
+    )
+
     spool = str(tmp_path / "spool")
     jsonlines.write_spool_file(
         spool,
@@ -43,25 +52,30 @@ def test_streaming_source_and_listener_pipeline(spark, tmp_path) -> None:
          "garbage line", {"action": "ignore"}],
         0,
     )
-    listeners = [
-        Listener("big-orders", "orders", ("k>=50",)),
-        Listener("all-other", "other"),
-    ]
-    got: list = []
+    registry = ListenerRegistry(loop=None)
+    big_orders = Connection("orders", ("k>=50",), asyncio.Queue())
+    all_other = Connection("other", (), asyncio.Queue())
+    registry.add(big_orders)
+    registry.add(all_other)
 
-    def sink(batch_df, epoch_id):
-        got.extend(batch_df.collect())
-
-    q = pipeline.start_listener_pipeline(
-        spark, spool, listeners, sink, str(tmp_path / "ckpt")
+    q = pipeline.start_envelope_pipeline(
+        spark, spool, registry.push_batch, str(tmp_path / "ckpt")
     )
-    q.awaitTermination(60)
-    by_listener = {}
-    for r in got:
-        by_listener.setdefault(r["listener"], []).append(r)
-    assert [r["id"] for r in by_listener["big-orders"]] == ["e1"]
-    assert [r["id"] for r in by_listener["all-other"]] == ["e3"]
-    frame = by_listener["big-orders"][0]["frame"]
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+    def frames(conn: Connection) -> list[str]:
+        return [conn.queue.get_nowait() for _ in range(conn.queue.qsize())]
+
+    def ids(fs: list[str]) -> list[str]:
+        return [re.search(r"id: (\S+)\r\n", f).group(1) for f in fs]
+
+    big = frames(big_orders)
+    assert ids(big) == ["e1"]
+    assert ids(frames(all_other)) == ["e3"]
+    frame = big[0]
     assert frame.startswith("event: add\r\ndata: ")
     assert "id: e1\r\n" in frame
     assert json.loads(frame.split("data: ")[1].split("\r\n")[0]) == {"k": 60}

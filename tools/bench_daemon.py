@@ -7,7 +7,8 @@ Python loop — parse line, probe dict, compare, re-serialize
 (SURVEY.md §3 EP1, /root/reference/evtstrd/dispatcher.py:93-95 +
 listener.py:56-68).  `python_loop_baseline` below reimplements that
 model from the spec (it is NOT reference code); the Spark path runs the
-same workload through validate_envelope -> deliveries -> sse_frame.
+same workload through validate_envelope -> pipeline.listener_frames
+(deliveries + sse_frame), the plan the daemon's push_batch collects.
 
 Prints one JSON line: events/s for both engines and the ratio.
 Usage: python tools/bench_daemon.py [n_events] [n_listeners]
@@ -105,23 +106,15 @@ def python_loop_baseline(lines: list[str], listeners) -> int:
 
 def spark_path(spark, spool_dir: str, listeners) -> tuple[int, float]:
     """Full pipeline from the spool (the daemon's actual ingest): read
-    -> validate -> fan out -> render frames.  Timed from cold source so
-    both engines pay their own parse."""
-    from pyspark.sql import functions as F
-
-    from eventstreamd_spark.functions.sse import sse_frame
+    -> validate -> fan out -> render frames, through the same
+    ``listener_frames`` plan the daemon's sink runs per micro-batch.
+    Timed from cold source so both engines pay their own parse."""
     from eventstreamd_spark.operators.envelope import validate_envelope
-    from eventstreamd_spark.operators.routing import deliveries
     from eventstreamd_spark.sources import jsonlines
+    from eventstreamd_spark.streaming.pipeline import listener_frames
 
     raw = jsonlines.read_spool(spark, spool_dir)
-    env = validate_envelope(raw, keep_parsed=True)
-    fanned = deliveries(
-        env, listeners, subsystem_col="subsystem", payload_col="data_v"
-    ).drop("data_v")
-    frames = fanned.select(
-        sse_frame(F.col("event_type"), F.col("data"), F.col("id")).alias("frame")
-    )
+    frames = listener_frames(validate_envelope(raw), listeners)
     best = float("inf")
     n = 0
     for _ in range(3):  # best-of-3: exclude codegen/JIT warm-up
