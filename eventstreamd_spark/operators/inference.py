@@ -39,6 +39,7 @@ from decimal import ROUND_HALF_UP, Decimal
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from eventstreamd_spark.durable import atomic_write
 from eventstreamd_spark.functions.text import HASH_MOD
 from eventstreamd_spark.operators.textops import CLF_W_RANGE
 
@@ -128,13 +129,11 @@ def read_progress(out_dir: str) -> dict[int, dict]:
 
 
 def _commit_shard(out_dir: str, shard: int, rows: int) -> None:
-    pdir = _progress_dir(out_dir)
-    os.makedirs(pdir, exist_ok=True)
-    tmp = os.path.join(pdir, f".shard-{shard}.json.tmp")
-    final = os.path.join(pdir, f"shard-{shard}.json")
-    with open(tmp, "w") as fh:
-        json.dump({"shard": shard, "rows": rows}, fh)
-    os.replace(tmp, final)  # atomic: a crash leaves no torn marker
+    # atomic: a crash leaves no torn marker
+    atomic_write(
+        os.path.join(_progress_dir(out_dir), f"shard-{shard}.json"),
+        json.dumps({"shard": shard, "rows": rows}),
+    )
 
 
 def _check_job_identity(
@@ -179,11 +178,7 @@ def _check_job_identity(
                 "out_dir or the original parameters"
             )
         return
-    os.makedirs(pdir, exist_ok=True)
-    tmp = os.path.join(pdir, ".job.json.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(ident, fh)
-    os.replace(tmp, path)
+    atomic_write(path, json.dumps(ident))
 
 
 def resumable_inference(

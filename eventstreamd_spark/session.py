@@ -9,36 +9,8 @@ pandas-exchange paths).
 from __future__ import annotations
 
 import os
-import sys
 
-
-def _ensure_protobuf_shim() -> None:
-    """Make ``google.protobuf`` importable when no real protobuf wheel
-    exists: Spark 4's transformWithStateInPandas state-server client
-    needs it at runtime.  The vendored pure-stdlib shim (_vendor/
-    README.md) is appended via sys.path for this process and via
-    PYTHONPATH so the JVM-forked Python workers — which inherit this
-    process's environment — resolve it too.  A real installation
-    always wins: the shim path is only added when the import fails."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    vendor = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_vendor")
-    if vendor not in sys.path:
-        sys.path.insert(0, vendor)
-    existing = os.environ.get("PYTHONPATH", "")
-    if vendor not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{vendor}{os.pathsep}{existing}" if existing else vendor
-        )
-
-
-_ensure_protobuf_shim()
-
-from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 TABLES = [
     "region",

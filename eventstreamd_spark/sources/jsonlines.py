@@ -6,7 +6,7 @@ util.py:11-21): newline-delimited JSON, one message per line, invalid
 lines skipped with a warning, EOF ends the stream.
 
 Transport mapping: producers append lines to immutable spool files in a
-directory (sources/socket_spool.py provides the actual Unix-socket
+directory (streaming/socket_spool.py provides the actual Unix-socket
 front-end that does this); Spark tails the directory.  This is the
 standard durable-ingest pattern — the socket itself can't be a Spark
 source because a socket read is not replayable, and Structured
@@ -26,7 +26,6 @@ Two readers:
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Iterator
 
@@ -38,19 +37,12 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StringType, StructField, StructType
 
+from eventstreamd_spark.streaming.socket_spool import (  # noqa: F401
+    spool_files,
+    write_spool_file,
+)
+
 SCHEMA = StructType([StructField("value", StringType(), True)])
-
-
-def _list_spool_files(path: str) -> list[str]:
-    try:
-        names = [
-            n
-            for n in os.listdir(path)
-            if n.endswith(".jsonl") and not n.startswith(".")
-        ]
-    except FileNotFoundError:
-        return []
-    return sorted(names)
 
 
 def _read_lines(path: str) -> Iterator[tuple[str]]:
@@ -75,7 +67,7 @@ class JsonLinesBatchReader(DataSourceReader):
     def partitions(self):
         return [
             _FilePartition(os.path.join(self.path, n))
-            for n in _list_spool_files(self.path)
+            for n in spool_files(self.path)
         ] or [_FilePartition("")]
 
     def read(self, partition: _FilePartition):
@@ -112,7 +104,7 @@ class JsonLinesStreamReader(SimpleDataSourceStreamReader):
         return {"n": 0}
 
     def read(self, start: dict):
-        files = _list_spool_files(self.path)
+        files = spool_files(self.path)
         n0 = start.get("n", 0)
         new = files[n0:]
         if self.max_files > 0:
@@ -129,7 +121,7 @@ class JsonLinesStreamReader(SimpleDataSourceStreamReader):
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        files = _list_spool_files(self.path)
+        files = spool_files(self.path)
         for name in files[start.get("n", 0) : end.get("n", 0)]:
             yield from _read_lines(os.path.join(self.path, name))
 
@@ -162,23 +154,9 @@ def read_spool(spark, spool_dir: str):
     the row loop — so bulk replay of a spool runs ~an order of magnitude
     faster than the Python ``DataSourceReader`` above.  The custom
     DataSource stays for the *streaming* reader (offset tracking) and as
-    the pyspark-4 DataSource API demonstration; Hadoop's default path
-    filter already hides the ``.``-prefixed staging files, matching
-    ``_list_spool_files``.
+    the pyspark-4 DataSource API demonstration.  It reads the same
+    ``spool_files`` the stream reader counts.
     """
-    return spark.read.text(os.path.join(spool_dir, "*.jsonl"))
-
-
-def write_spool_file(spool_dir: str, messages: list[dict | str], seq: int) -> str:
-    """Producer-side helper: atomically publish one spool file (stage +
-    rename so the stream reader never sees a partial file)."""
-    os.makedirs(spool_dir, exist_ok=True)
-    name = f"{seq:012d}.jsonl"
-    staged = os.path.join(spool_dir, f".{name}.tmp")
-    final = os.path.join(spool_dir, name)
-    with open(staged, "w", encoding="utf-8") as f:
-        for m in messages:
-            f.write(m if isinstance(m, str) else json.dumps(m))
-            f.write("\n")
-    os.replace(staged, final)
-    return final
+    return spark.read.text(
+        [os.path.join(spool_dir, n) for n in spool_files(spool_dir)]
+    )

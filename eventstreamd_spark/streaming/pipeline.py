@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from eventstreamd_spark.durable import atomic_write
 from eventstreamd_spark.functions.sse import sse_frame
 from eventstreamd_spark.operators.envelope import validate_envelope
 from eventstreamd_spark.operators.routing import Listener, deliveries
@@ -85,14 +86,14 @@ def make_replay_fn(spark: SparkSession, spool_dir: str):
     """
     import os
 
-    from eventstreamd_spark.sources.jsonlines import _list_spool_files
+    from eventstreamd_spark.streaming.socket_spool import spool_files
 
     def replay(
         subsystem: str, filters: tuple[str, ...], last_id: str
     ) -> list[str]:
         rows = []
         pos = 0
-        for name in _list_spool_files(spool_dir):
+        for name in spool_files(spool_dir):
             with open(os.path.join(spool_dir, name), "rb") as f:
                 for raw_line in f:
                     line = raw_line.decode("utf-8", errors="replace").rstrip("\n")
@@ -451,18 +452,6 @@ def start_drift_monitor(
     )
 
 
-def _atomic_json_write(checkpoint_dir: str, state_path: str, obj) -> None:
-    """Atomic-rename JSON persist shared by the monitor family."""
-    import json
-    import os
-
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-    os.replace(tmp, state_path)
-
-
 def start_hll_distinct_monitor(
     stream_events: DataFrame,
     sink: Callable[[dict, float, int], None],
@@ -509,7 +498,7 @@ def start_hll_distinct_monitor(
             ).collect()
         }
         state = sk.hll_merge_registers(state, regs)
-        _atomic_json_write(checkpoint_dir, state_path, state)
+        atomic_write(state_path, json.dumps(state))
         sink(dict(state), sk.hll_estimate_from_registers(state), epoch)
 
     return (
@@ -571,13 +560,14 @@ def start_cms_topk_monitor(
         merged = dict(cells)
         for k, v in batch_cells.items():
             merged[k] = merged.get(k, 0) + v
-        _atomic_json_write(
-            checkpoint_dir,
+        atomic_write(
             state_path,
-            {
-                "last_epoch": epoch,
-                "cells": [[i, c, n] for (i, c), n in merged.items()],
-            },
+            json.dumps(
+                {
+                    "last_epoch": epoch,
+                    "cells": [[i, c, n] for (i, c), n in merged.items()],
+                }
+            ),
         )
         cells, last_epoch = merged, epoch
         sink(dict(cells), epoch)
@@ -658,15 +648,16 @@ def start_quantile_monitor(
         for r in sk.logbucket_registers(batch).collect():
             lb, ub, c = merged.get(r["bucket"], (r["lb"], r["ub"], 0))
             merged[r["bucket"]] = (lb, ub, c + r["c"])
-        _atomic_json_write(
-            checkpoint_dir,
+        atomic_write(
             state_path,
-            {
-                "last_epoch": epoch,
-                "registers": [
-                    [b, lb, ub, c] for b, (lb, ub, c) in merged.items()
-                ],
-            },
+            json.dumps(
+                {
+                    "last_epoch": epoch,
+                    "registers": [
+                        [b, lb, ub, c] for b, (lb, ub, c) in merged.items()
+                    ],
+                }
+            ),
         )
         counts, last_epoch = merged, epoch
         sink(dict(counts), _quantiles(), epoch)
@@ -759,13 +750,14 @@ def start_payload_schema_monitor(
         # exactly-once: the fence below only advances after the
         # atomic rename succeeds.
         sink(novel_keys, novel_types, dict(merged), epoch)
-        _atomic_json_write(
-            checkpoint_dir,
+        atomic_write(
             state_path,
-            {
-                "last_epoch": epoch,
-                "counts": [[k, t, n] for (k, t), n in merged.items()],
-            },
+            json.dumps(
+                {
+                    "last_epoch": epoch,
+                    "counts": [[k, t, n] for (k, t), n in merged.items()],
+                }
+            ),
         )
         counts, last_epoch = merged, epoch
 
@@ -829,7 +821,7 @@ def start_rolling_wau_monitor(
             state[d] = sk.hll_merge_registers(
                 state.get(d, {}), {row["bucket"]: row["m_rho"]}
             )
-        _atomic_json_write(checkpoint_dir, state_path, state)
+        atomic_write(state_path, json.dumps(state))
         days = sorted(state)
         ests: dict[str, float] = {}
         for d in days:

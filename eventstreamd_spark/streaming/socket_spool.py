@@ -6,10 +6,10 @@ connect to a Unix domain socket and write newline-delimited JSON;
 invalid lines are skipped with a warning; EOF ends the connection.
 
 Instead of routing in-process, lines are spooled to immutable files
-(stage+rename) that the ``jsonlines`` DataSource tails — the durable
-hand-off that lets Spark replay offsets (upgrade over the reference's
-at-most-once).  Envelope validation stays in Spark (operators/envelope)
-so the daemon front-end has zero query logic.
+(``durable.atomic_write``) that the ``jsonlines`` DataSource tails —
+the durable hand-off that lets Spark replay offsets (upgrade over the
+reference's at-most-once).  Envelope validation stays in Spark
+(operators/envelope) so the daemon front-end has zero query logic.
 
 stdlib-asyncio only; no Spark imports here — this process runs beside
 the driver, like the reference's single daemon process but with the
@@ -24,9 +24,34 @@ import logging
 import os
 import re
 
+from eventstreamd_spark.durable import atomic_write
+
 logger = logging.getLogger(__name__)
 
-_SPOOL_NAME = re.compile(r"^(\d{12})\.jsonl$")
+_SPOOL_NAME = re.compile(r"^\d{12}\.jsonl$")
+
+
+def spool_files(spool_dir: str) -> list[str]:
+    """The spool's published files in sequence order: ``<12-digit
+    seq>.jsonl``.  The writer resumes after the last one and the stream
+    source's offset counts them, so any other file in the directory is
+    neither read nor shifts either."""
+    try:
+        names = os.listdir(spool_dir)
+    except FileNotFoundError:
+        return []
+    return sorted(n for n in names if _SPOOL_NAME.match(n))
+
+
+def write_spool_file(spool_dir: str, messages: list[dict | str], seq: int) -> str:
+    """Publish one spool file atomically, so the stream reader never
+    sees a partial file; returns its path."""
+    final = os.path.join(spool_dir, f"{seq:012d}.jsonl")
+    atomic_write(
+        final,
+        "".join((m if isinstance(m, str) else json.dumps(m)) + "\n" for m in messages),
+    )
+    return final
 
 
 class SpoolWriter:
@@ -46,34 +71,27 @@ class SpoolWriter:
         self._buf: list[str] = []
         self._lock = asyncio.Lock()
         os.makedirs(spool_dir, exist_ok=True)
-        seqs = [
-            int(m.group(1))
-            for m in map(_SPOOL_NAME.match, os.listdir(spool_dir))
-            if m
-        ]
-        self._seq = max(seqs, default=-1) + 1
+        files = spool_files(spool_dir)
+        self._seq = int(files[-1][:12]) + 1 if files else 0
 
     async def add(self, line: str) -> None:
         async with self._lock:
             self._buf.append(line)
             if len(self._buf) >= self.flush_lines:
-                self._flush_locked()
+                await self._flush_locked()
 
-    def _flush_locked(self) -> None:
+    async def _flush_locked(self) -> None:
         if not self._buf:
             return
-        name = f"{self._seq:012d}.jsonl"
-        staged = os.path.join(self.spool_dir, f".{name}.tmp")
-        final = os.path.join(self.spool_dir, name)
-        with open(staged, "w", encoding="utf-8") as f:
-            f.write("\n".join(self._buf) + "\n")
-        os.replace(staged, final)
+        # the publish fsyncs: run it off the event loop, which also
+        # serves the SSE connections; the held lock keeps _buf still
+        await asyncio.to_thread(write_spool_file, self.spool_dir, self._buf, self._seq)
         self._seq += 1
         self._buf.clear()
 
     async def flush(self) -> None:
         async with self._lock:
-            self._flush_locked()
+            await self._flush_locked()
 
     async def flush_loop(self) -> None:
         while True:

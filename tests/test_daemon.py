@@ -510,43 +510,67 @@ def test_slow_consumer_drops_are_counted(spark, caplog) -> None:
     assert kept == ["e0", "e1"]  # the first frames, in batch order
 
 
+def _spool_lines(spool: str, ids: list[str]) -> None:
+    """One SpoolWriter lifetime: start (resuming the on-disk sequence),
+    spool ``ids``, flush."""
+    from eventstreamd_spark.streaming.socket_spool import SpoolWriter
+
+    async def write() -> None:
+        writer = SpoolWriter(spool)
+        for i in ids:
+            await writer.add(_msg("orders", 1, i))
+        await writer.flush()
+
+    asyncio.run(write())
+
+
+def _run_stream(spark, spool: str, ckpt: str) -> list[str]:
+    """Drain the envelope stream from its checkpoint; the delivered ids."""
+    from eventstreamd_spark.streaming import pipeline
+
+    seen: list[str] = []
+    q = pipeline.start_envelope_pipeline(
+        spark, spool, lambda df, _: seen.extend(r["id"] for r in df.collect()), ckpt
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return seen
+
+
 def test_spool_restart_keeps_files_and_stream_resumes(spark, tmp_path) -> None:
     """A restarted SpoolWriter continues the on-disk sequence: it never
     replaces a spooled file, and a stream restarted from its checkpoint
     delivers the post-restart events."""
     import os
 
-    from eventstreamd_spark.streaming import pipeline
-    from eventstreamd_spark.streaming.socket_spool import SpoolWriter
-
     spool = str(tmp_path / "spool")
     ckpt = str(tmp_path / "ckpt")
 
-    def spool_lines(ids: list[str]) -> None:
-        async def write() -> None:
-            writer = SpoolWriter(spool)
-            for i in ids:
-                await writer.add(_msg("orders", 1, i))
-            await writer.flush()
-
-        asyncio.run(write())
-
-    def run_stream() -> list[str]:
-        seen: list[str] = []
-        q = pipeline.start_envelope_pipeline(
-            spark, spool, lambda df, _: seen.extend(r["id"] for r in df.collect()), ckpt
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return seen
-
-    spool_lines(["a1", "a2"])
+    _spool_lines(spool, ["a1", "a2"])
     before = open(os.path.join(spool, "000000000000.jsonl")).read()
-    assert run_stream() == ["a1", "a2"]
+    assert _run_stream(spark, spool, ckpt) == ["a1", "a2"]
 
-    spool_lines(["b1"])  # the restart
+    _spool_lines(spool, ["b1"])  # the restart
     assert sorted(os.listdir(spool)) == ["000000000000.jsonl", "000000000001.jsonl"]
     assert open(os.path.join(spool, "000000000000.jsonl")).read() == before
-    assert run_stream() == ["b1"]
+    assert _run_stream(spark, spool, ckpt) == ["b1"]
+
+
+def test_stray_jsonl_file_is_not_spooled(spark, tmp_path) -> None:
+    """Writer resume and the stream source share one spool-name rule: a
+    stray ``x.jsonl`` in the spool directory is never delivered and does
+    not shift the source's file-count offset across a restart."""
+    import os
+
+    spool = str(tmp_path / "spool")
+    ckpt = str(tmp_path / "ckpt")
+    os.makedirs(spool)
+    with open(os.path.join(spool, "x.jsonl"), "w") as f:
+        f.write(_msg("orders", 1, "stray") + "\n")
+
+    _spool_lines(spool, ["a1", "a2"])
+    assert _run_stream(spark, spool, ckpt) == ["a1", "a2"]
+    _spool_lines(spool, ["b1"])
+    assert _run_stream(spark, spool, ckpt) == ["b1"]

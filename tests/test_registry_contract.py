@@ -111,3 +111,21 @@ def test_scoreboard_counts_match_registry() -> None:
                 found = True
                 assert int(m.group(1)) == len(qr.QUERIES), (doc, pat)
         assert found, doc
+
+
+def test_import_leaves_process_paths_alone() -> None:
+    """Importing the package changes neither this process's ``sys.path``
+    nor the ``PYTHONPATH`` every Spark Python worker inherits."""
+    import os
+    import subprocess
+    import sys
+
+    probe = (
+        "import os, sys\n"
+        "before = (list(sys.path), os.environ.get('PYTHONPATH'))\n"
+        "import eventstreamd_spark.session\n"
+        "assert (list(sys.path), os.environ.get('PYTHONPATH')) == before\n"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    subprocess.run([sys.executable, "-c", probe], cwd=repo, env=env, check=True)

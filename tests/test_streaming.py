@@ -3,9 +3,8 @@ event-time windows."""
 
 from __future__ import annotations
 
+import datetime
 import json
-
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -412,141 +411,36 @@ def test_bounded_admission_max_files_per_batch(spark, tmp_path) -> None:
     assert len(batches) >= 4
 
 
-def test_transform_with_state_running_counts(spark, tmp_path) -> None:
-    """Spark 4 transformWithState path (skips where the state server's
-    protobuf dependency is absent — applyInPandasWithState in
-    streaming/stateful.py is the always-runnable twin)."""
-    from eventstreamd_spark.streaming import stateful_v2
+def test_subsystem_running_counts_survive_restart(spark, tmp_path) -> None:
+    """The /stats running counter (reference stats.py:28-50) as a plain
+    streaming aggregation in update mode: a query restarted on the same
+    checkpoint carries the per-subsystem counts over."""
+    from eventstreamd_spark.operators.routing import subsystem_counts
 
-    if not stateful_v2.protobuf_available():
-        pytest.skip("google.protobuf unavailable: transformWithState "
-                    "state server cannot run in this container")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
     spool = str(tmp_path / "spool")
+
+    def run() -> dict:
+        got: list = []
+        env = pipeline.validate_envelope(pipeline.read_event_stream(spark, spool))
+        q = (
+            subsystem_counts(env, "subsystem")
+            .writeStream.outputMode("update")
+            .foreachBatch(lambda df, eid: got.extend(
+                (r["subsystem"], r["n_events"]) for r in df.collect()
+            ))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return dict(got)
+
     jsonlines.write_spool_file(
         spool, [msg("a", 1, "x1"), msg("b", 2, "y1"), msg("a", 3, "x2")], 0
     )
-    env = pipeline.validate_envelope(pipeline.read_event_stream(spark, spool))
-    counts = stateful_v2.subsystem_running_counts_v2(env)
-    got: list = []
-    q = (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(lambda df, eid: got.extend(
-            (r["subsystem"], r["n_events"]) for r in df.collect()
-        ))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert dict(got) == {"a": 2, "b": 1}
-
-
-def test_transform_with_state_timers_expiry_and_sessions(
-    spark, tmp_path
-) -> None:
-    """O9 on the Spark 4 API: named state + real TTL timers.  Same
-    assertions as the applyInPandasWithState twins
-    (test_stateful_sessionizer_and_expiry), so the two API generations
-    are pinned equivalent on the same inputs."""
-    import datetime
-    import os
-    import time
-
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from eventstreamd_spark.streaming import stateful_v2
-
-    if not stateful_v2.protobuf_available():
-        pytest.skip("google.protobuf unavailable and vendored shim absent")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-
-    # -- expiry tracker: TTL lapse emits the logout row ---------------
-    sess_src = str(tmp_path / "sessions")
-    os.makedirs(sess_src)
-    sschema = StructType(
-        [StructField("id", StringType()), StructField("ttl_ms", LongType())]
-    )
-    spark.createDataFrame([("s1", 1500)], sschema).coalesce(1).write.parquet(
-        sess_src + "/b0"
-    )
-    q = (
-        stateful_v2.expiry_tracker_v2(
-            spark.readStream.schema(sschema).parquet(sess_src + "/*")
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("expiry_v2_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_exp"))
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql("SELECT * FROM expiry_v2_out").collect()
-            if rows:
-                break
-            time.sleep(1)
-        assert [(r["id"], r["reason"]) for r in rows] == [("s1", "expire")]
-    finally:
-        q.stop()
-
-    # -- sessionizer: gap timer closes the session with exact bounds --
-    src = str(tmp_path / "events_v2")
-    os.makedirs(src)
-    schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-    spark.createDataFrame(
-        [(1, t0), (1, t0 + datetime.timedelta(seconds=10)), (2, t0)], schema
-    ).coalesce(1).write.parquet(src + "/batch0")
-    q2 = (
-        stateful_v2.streaming_sessionizer_v2(
-            spark.readStream.schema(schema).parquet(src + "/*")
-        )
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_v2_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        rows = []
-        while time.time() < deadline:
-            rows = spark.sql(
-                "SELECT * FROM sessions_v2_out ORDER BY user_id"
-            ).collect()
-            if len(rows) >= 2:
-                break
-            time.sleep(1)
-        assert [r["user_id"] for r in rows] == [1, 2]
-        assert rows[0]["n_events"] == 2 and rows[1]["n_events"] == 1
-        assert rows[0]["first_ts"] == t0
-        assert rows[0]["last_ts"] == t0 + datetime.timedelta(seconds=10)
-    finally:
-        q2.stop()
+    assert run() == {"a": 2, "b": 1}
+    jsonlines.write_spool_file(spool, [msg("a", 4, "x3")], 1)
+    assert run() == {"a": 3}  # update mode: only the changed key
 
 
 def test_stream_static_broadcast_enrich(spark, sf_dir, tmp_path) -> None:
@@ -1106,18 +1000,13 @@ def test_stream_rolling_wau_monitor_matches_batch(spark, sf_dir, tmp_path) -> No
         assert sk.hll_merge_registers(regs, regs) == regs
 
 
-def test_event_time_sessionizer_matches_batch_on_late_data(
-    spark, tmp_path
-) -> None:
-    """VERDICT r6 ask #5: the event-time v2 sessionizer must assign a
-    LATE row (within watermark) to the session its TIMESTAMP belongs
-    to, producing exactly the batch ``sessionize`` answer — where the
-    processing-time twin would either have mis-assigned it to a live
-    session window or dropped it after its gap timer fired."""
-    import datetime
+def _event_time_sessions(spark, tmp_path, batches: list) -> tuple[list, list]:
+    """Feed ``batches`` of (user_id, ts) rows, one micro-batch each, to the
+    event-time sessionizer (gap 2 s, watermark 4 s) and to batch
+    ``sessionize`` over the same rows; returns user 1's sessions from
+    each as (user_id, n_events, first_ts, last_ts), ordered by start."""
     import os
 
-    from pyspark.sql import functions as F
     from pyspark.sql.types import (
         LongType,
         StructField,
@@ -1126,42 +1015,23 @@ def test_event_time_sessionizer_matches_batch_on_late_data(
     )
 
     from eventstreamd_spark.operators.windows import sessionize
-    from eventstreamd_spark.streaming import stateful_v2
-
-    if not stateful_v2.protobuf_available():
-        pytest.skip("google.protobuf unavailable and vendored shim absent")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    from eventstreamd_spark.streaming.stateful import (
+        streaming_sessionizer_event_time,
     )
 
-    # 503us sub-ms jitter on every data row: the close threshold and
-    # the interval merge must agree at MICROSECOND granularity (round-8
-    # ADVICE — an ms-aligned fixture cannot catch a ms-floored close)
-    t0 = datetime.datetime(2026, 1, 1, 12, 0, 0, 503)
-    s = lambda k: t0 + datetime.timedelta(seconds=k)  # noqa: E731
     schema = StructType(
         [
             StructField("user_id", LongType()),
             StructField("ts", TimestampType()),
         ]
     )
-    # u1 session 1 = {t0, t0+1, t0+0.5 LATE}, session 2 = {t0+10};
-    # u99 rows only drive the watermark (max ts - 4s)
-    batches = [
-        [(1, s(0)), (1, s(1)), (99, s(3))],
-        [(1, t0 + datetime.timedelta(milliseconds=500)), (99, s(8))],
-        [(1, s(10)), (99, s(30))],
-        [(99, s(60))],
-    ]
     src = str(tmp_path / "events_et")
     os.makedirs(src)
     spark.createDataFrame(batches[0], schema).coalesce(1).write.parquet(
         src + "/b0"
     )
     q = (
-        stateful_v2.streaming_sessionizer_v2_event_time(
+        streaming_sessionizer_event_time(
             spark.readStream.schema(schema).parquet(src + "/*"),
             gap_s=2,
             watermark="4 seconds",
@@ -1200,8 +1070,63 @@ def test_event_time_sessionizer_matches_batch_on_late_data(
         .orderBy("session_start")
         .collect()
     ]
+    return got, want
+
+
+# 503us sub-ms jitter on every row: the close threshold and the interval
+# merge must agree at MICROSECOND granularity, which an ms-aligned
+# fixture cannot check
+_ET_T0 = datetime.datetime(2026, 1, 1, 12, 0, 0, 503)
+
+
+def _s(k: float) -> datetime.datetime:
+    return _ET_T0 + datetime.timedelta(seconds=k)
+
+
+def test_event_time_sessionizer_matches_batch_on_late_data(
+    spark, tmp_path
+) -> None:
+    """The event-time sessionizer must assign a LATE row (within the
+    watermark) to the session its TIMESTAMP belongs to, producing
+    exactly the batch ``sessionize`` answer — where the processing-time
+    sessionizer would either have mis-assigned it to a live session
+    window or dropped it after its gap timer fired."""
+    # u1 session 1 = {t0, t0+1, t0+0.5 LATE}, session 2 = {t0+10};
+    # u99 rows only drive the watermark (max ts - 4s)
+    got, want = _event_time_sessions(
+        spark,
+        tmp_path,
+        [
+            [(1, _s(0)), (1, _s(1)), (99, _s(3))],
+            [(1, _s(0.5)), (99, _s(8))],
+            [(1, _s(10)), (99, _s(30))],
+            [(99, _s(60))],
+        ],
+    )
     assert got == want
     assert got[0][1] == 3  # the late 0.5s row landed in session 1
+
+
+def test_event_time_sessionizer_closes_on_microseconds(spark, tmp_path) -> None:
+    """A session whose gap deadline (last row + 2 s) lies 503us past a
+    whole-ms watermark is still open: the watermark has not passed it.
+    Closing it by comparing milliseconds would split it from the next
+    batch's row at t0+3 s, which batch ``sessionize`` merges into it."""
+    # batch 2 runs under watermark t0+3 s (whole ms; max ts t0+7 s - 4 s)
+    # and calls user 1 with its own row at t0+6 s
+    got, want = _event_time_sessions(
+        spark,
+        tmp_path,
+        [
+            [(1, _s(1)), (99, _s(1))],
+            [(99, _s(7))],
+            [(1, _s(6))],
+            [(1, _s(3))],
+            [(99, _s(60))],
+        ],
+    )
+    assert got == want
+    assert [n for _, n, _, _ in got] == [2, 1]
 
 
 def test_stream_schema_drift_monitor_matches_batch_twin(
