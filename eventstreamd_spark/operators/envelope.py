@@ -282,8 +282,10 @@ def schema_drift_state_merge(events: DataFrame, epoch_mod: int = 2) -> DataFrame
     == 0) and an "incoming batch" epoch, then reproduce exactly what
     the monitor computes when the batch arrives — merged per-(key,
     type) counters, novel-key flags (key absent from state under EVERY
-    type) and novel-type flags (known key, unseen type).  Registering
-    this pins the monitor's replay-fence arithmetic under the driver's
+    type) and novel-type flags (known key, unseen type), both read off
+    the state before and after the fold.  Registering this pins the
+    fold arithmetic the monitor runs through ``pipeline.fold_monitor``
+    (sink before persist, each epoch folded once) under the driver's
     exact oracle, the same adjudication as cms_state_merge; the live
     two-epoch stream is parity-tested against this twin in
     tests/test_streaming.py.

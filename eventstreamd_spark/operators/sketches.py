@@ -473,13 +473,13 @@ def cms_state_merge(
     (streaming/pipeline.py::start_cms_topk_monitor): split the corpus
     into two "epochs" by event_id parity, sketch each epoch
     independently, fold the two cell tables additively — exactly the
-    per-epoch ``merged[k] = merged.get(k, 0) + v`` arithmetic behind
-    the monitor's replay fence — and emit the merged state NEXT TO the
-    one-shot sketch of the union.  ``merge_exact`` pins the property
-    the whole monitor rests on: a cell-wise sum of per-epoch count-min
-    states equals the sketch of the concatenated stream, cell for
-    cell, so replay-fenced epoch folds can never drift from a
-    from-scratch rebuild.
+    per-epoch ``merged[k] = merged.get(k, 0) + v`` fold the monitor
+    runs behind ``pipeline.fold_monitor``'s epoch fence — and emit the
+    merged state NEXT TO the one-shot sketch of the union.
+    ``merge_exact`` pins the property the whole monitor rests on: a
+    cell-wise sum of per-epoch count-min states equals the sketch of
+    the concatenated stream, cell for cell, so replay-fenced epoch
+    folds can never drift from a from-scratch rebuild.
 
     Plan: three sketch aggregates over two pushdown-partitioned scans
     (each at most d x w partial rows per task after map-side combine)
@@ -945,8 +945,9 @@ def day_hll_registers(events: DataFrame) -> DataFrame:
     """(d, bucket, m_rho) per-day HLL register table over user_id — the
     shared mergeable state consumed by both the batch window merge
     (rolling_wau_hll) and the streaming monitor
-    (streaming/pipeline.start_rolling_wau_monitor); one definition so
-    the two faces cannot fork."""
+    (streaming/pipeline.start_rolling_wau_monitor, which holds them
+    flat as (day, bucket) -> rho in ``fold_monitor``'s epoch-fenced
+    state); one definition so the two faces cannot fork."""
     day = F.to_date(F.col("ts"))
     h = _h60(F.col("user_id").cast("string"))
     rem = F.expr(f"h % CAST({1 << _REM_BITS} AS BIGINT)")

@@ -23,6 +23,8 @@ events.py:30-31) upgrades the end-to-end story to effectively-once.
 
 from __future__ import annotations
 
+import json
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -84,8 +86,6 @@ def make_replay_fn(spark: SparkSession, spool_dir: str):
     ordered I/O); all *semantics* stay Spark-side.  Unknown id =>
     full-spool replay, the SSE contract for an expired id.
     """
-    import os
-
     from eventstreamd_spark.streaming.socket_spool import spool_files
 
     def replay(
@@ -452,6 +452,82 @@ def start_drift_monitor(
     )
 
 
+def _from_json(x):
+    return tuple(x) if isinstance(x, list) else x
+
+
+def fold_monitor(
+    stream: DataFrame,
+    checkpoint_dir: str,
+    name: str,
+    fold: Callable[[dict, DataFrame], dict],
+    emit: Callable[[dict, dict, int], None],
+) -> StreamingQuery:
+    """Run a monitor as one epoch-fenced state fold per micro-batch.
+
+    The state is a dict whose keys and values are JSON scalars or
+    tuples of them, persisted beside the streaming checkpoint at
+    ``<checkpoint_dir>/<name>`` as ``{"last_epoch", "state"}`` with the
+    state as ``[[k, v], ...]`` (lists read back as tuples).  Each
+    micro-batch:
+
+    1. an epoch ``<= last_epoch`` is skipped: Spark replays the last
+       uncommitted epoch on restart, and it is already in the state;
+    2. ``merged = fold(state, batch)`` builds a NEW dict (``state`` is
+       never mutated);
+    3. ``emit(state, merged, epoch)`` hands the result to the sink;
+    4. only then are state and epoch published together by one
+       ``atomic_write``, and the in-memory fence advances.
+
+    So the sink is at-least-once (a sink failure fails the batch before
+    anything persists, and the replay re-emits it) and the state is
+    exactly-once (an epoch folds in at most once, whatever the merge)
+    — the transactional-sink use of foreachBatch's replayed epoch id.
+    A state file in any other shape raises ``ValueError`` naming it,
+    rather than restarting the monitor from empty state.
+    """
+    path = os.path.join(checkpoint_dir, name)
+    last_epoch, state = -1, {}
+    if os.path.exists(path):
+        with open(path) as f:
+            saved = json.load(f)
+        if not isinstance(saved, dict) or set(saved) != {"last_epoch", "state"}:
+            raise ValueError(
+                f"{path}: not a monitor state file (want last_epoch and state)"
+            )
+        last_epoch = saved["last_epoch"]
+        state = {_from_json(k): _from_json(v) for k, v in saved["state"]}
+
+    def _per_batch(batch: DataFrame, epoch: int) -> None:
+        nonlocal last_epoch, state
+        if epoch <= last_epoch:
+            return
+        merged = fold(state, batch)
+        emit(state, merged, epoch)
+        atomic_write(
+            path,
+            json.dumps(
+                {"last_epoch": epoch, "state": [[k, v] for k, v in merged.items()]}
+            ),
+        )
+        last_epoch, state = epoch, merged
+
+    return (
+        stream.writeStream.outputMode("append")
+        .foreachBatch(_per_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _add(state: dict, batch: dict) -> dict:
+    merged = dict(state)
+    for k, n in batch.items():
+        merged[k] = merged.get(k, 0) + n
+    return merged
+
+
 def start_hll_distinct_monitor(
     stream_events: DataFrame,
     sink: Callable[[dict, float, int], None],
@@ -466,48 +542,20 @@ def start_hll_distinct_monitor(
     This is the streaming face of operators/sketches.py: cardinality
     state that NEVER grows with the stream (64 integers, vs a
     dropDuplicates watermark state that holds every key in the
-    horizon).  The register merge is associative + commutative, so
-    at-least-once replay of a whole batch is idempotent (max of a max
-    — re-merging the same registers changes nothing), giving
-    effectively-once semantics without dedup bookkeeping.
-
-    The merged registers persist beside the streaming checkpoint
-    (atomic rename per batch): on restart, Spark's checkpoint skips
-    committed batches, so WITHOUT reloading the registers the running
-    count would silently reset to the post-restart slice.  The replay
-    window between a state write and the batch commit is covered by
-    the idempotent merge.
+    horizon).  State persists and is fenced by ``fold_monitor``, so a
+    restart continues the running count instead of resetting to the
+    post-restart slice.
     """
-    import json
-    import os
-
     from eventstreamd_spark.operators import sketches as sk
 
-    state_path = os.path.join(checkpoint_dir, "hll_registers.json")
-    state: dict[int, int] = {}
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            state = {int(k): v for k, v in json.load(f).items()}
+    def fold(state: dict, batch: DataFrame) -> dict:
+        regs = sk.hll_registers(batch, F.col("event_id").cast("string")).collect()
+        return sk.hll_merge_registers(state, {r["bucket"]: r["m_rho"] for r in regs})
 
-    def _per_batch(batch: DataFrame, epoch: int) -> None:
-        nonlocal state
-        regs = {
-            r["bucket"]: r["m_rho"]
-            for r in sk.hll_registers(
-                batch, F.col("event_id").cast("string")
-            ).collect()
-        }
-        state = sk.hll_merge_registers(state, regs)
-        atomic_write(state_path, json.dumps(state))
-        sink(dict(state), sk.hll_estimate_from_registers(state), epoch)
+    def emit(prev: dict, regs: dict, epoch: int) -> None:
+        sink(dict(regs), sk.hll_estimate_from_registers(regs), epoch)
 
-    return (
-        stream_events.writeStream.outputMode("append")
-        .foreachBatch(_per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_monitor(stream_events, checkpoint_dir, "hll_registers.json", fold, emit)
 
 
 def start_cms_topk_monitor(
@@ -519,66 +567,20 @@ def start_cms_topk_monitor(
     batch, build the batch's count-min cells (one tiny groupBy) and
     ADD them into the accumulated sketch; ``sink(cells, epoch)``
     receives the running state (estimate any key via
-    ``sketches.cms_estimate_from_cells``).
-
-    Contrast with the HLL monitor: cell-sum merge is associative but
-    NOT idempotent — an at-least-once replay would double-count — so
-    this monitor demonstrates the other half of the foreachBatch
-    exactly-once contract: the persisted state records the last
-    applied epoch and re-delivered epochs are skipped (the
-    transactional-sink pattern; state file and epoch move together
-    under one atomic rename).
+    ``sketches.cms_estimate_from_cells``).  Cell-sum merge is NOT
+    idempotent; ``fold_monitor``'s epoch fence is what keeps a
+    replayed epoch from double-counting.
     """
-    import json
-    import os
-
     from eventstreamd_spark.operators import sketches as sk
 
-    state_path = os.path.join(checkpoint_dir, "cms_cells.json")
-    cells: dict = {}
-    last_epoch = -1
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            saved = json.load(f)
-        last_epoch = saved["last_epoch"]
-        cells = {
-            (int(i), int(c)): n
-            for i, c, n in saved["cells"]
-        }
+    def fold(state: dict, batch: DataFrame) -> dict:
+        cells = sk.cms_cells(batch, F.col("user_id").cast("string")).collect()
+        return _add(state, {(r["i"], r["col"]): r["cell_count"] for r in cells})
 
-    def _per_batch(batch: DataFrame, epoch: int) -> None:
-        nonlocal cells, last_epoch
-        if epoch <= last_epoch:
-            return  # replayed epoch: already folded into the state
-        batch_cells = {
-            (r["i"], r["col"]): r["cell_count"]
-            for r in sk.cms_cells(batch, F.col("user_id").cast("string")).collect()
-        }
-        # merge into a LOCAL copy and persist BEFORE advancing the
-        # in-memory fence: if the write fails, the retried/replayed
-        # epoch is not fenced out by memory the disk never saw
-        merged = dict(cells)
-        for k, v in batch_cells.items():
-            merged[k] = merged.get(k, 0) + v
-        atomic_write(
-            state_path,
-            json.dumps(
-                {
-                    "last_epoch": epoch,
-                    "cells": [[i, c, n] for (i, c), n in merged.items()],
-                }
-            ),
-        )
-        cells, last_epoch = merged, epoch
+    def emit(prev: dict, cells: dict, epoch: int) -> None:
         sink(dict(cells), epoch)
 
-    return (
-        stream_events.writeStream.outputMode("append")
-        .foreachBatch(_per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_monitor(stream_events, checkpoint_dir, "cms_cells.json", fold, emit)
 
 
 def start_quantile_monitor(
@@ -596,33 +598,25 @@ def start_quantile_monitor(
     — parity asserted exactly in tests/test_streaming.py, so the
     driver's oracle on the twin transitively pins this monitor).
 
-    Count merge is additive (not idempotent), so this rides the
-    count-min monitor's replay fence: state and last-applied epoch
-    move together under one atomic rename, re-delivered epochs are
-    skipped.  State is at most 64 x 2^(QSK_M+1) buckets — independent
+    Count merge is additive, so it relies on ``fold_monitor``'s epoch
+    fence.  State is at most 64 x 2^(QSK_M+1) buckets — independent
     of stream volume — and stays mergeable, so the same state serves
     any later group rollup or cross-shard union.
     """
-    import json
     import math
-    import os
 
     from eventstreamd_spark.operators import sketches as sk
 
-    state_path = os.path.join(checkpoint_dir, "quantile_registers.json")
-    counts: dict = {}
-    last_epoch = -1
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            saved = json.load(f)
-        last_epoch = saved["last_epoch"]
-        counts = {
-            int(b): (lb, ub, c) for b, lb, ub, c in saved["registers"]
-        }
+    def fold(state: dict, batch: DataFrame) -> dict:
+        merged = dict(state)
+        for r in sk.logbucket_registers(batch).collect():
+            lb, ub, c = merged.get(r["bucket"], (r["lb"], r["ub"], 0))
+            merged[r["bucket"]] = (lb, ub, c + r["c"])
+        return merged
 
-    def _quantiles() -> dict:
+    def emit(prev: dict, counts: dict, epoch: int) -> None:
         n = sum(c for _, _, c in counts.values())
-        out: dict = {}
+        quantiles: dict = {}
         for frac in sk.QSK_FRACS:
             rk = math.ceil(frac * n)  # same IEEE product as the twin
             cum = 0
@@ -630,7 +624,7 @@ def start_quantile_monitor(
                 lb, ub, c = counts[b]
                 cum += c
                 if cum >= rk:
-                    out[frac] = {
+                    quantiles[frac] = {
                         "rank": rk,
                         "bucket": b,
                         "lb_cents": lb,
@@ -638,36 +632,10 @@ def start_quantile_monitor(
                         "est_price": lb / 100.0,
                     }
                     break
-        return out
+        sink(dict(counts), quantiles, epoch)
 
-    def _per_batch(batch: DataFrame, epoch: int) -> None:
-        nonlocal counts, last_epoch
-        if epoch <= last_epoch:
-            return  # replayed epoch: already folded into the state
-        merged = dict(counts)
-        for r in sk.logbucket_registers(batch).collect():
-            lb, ub, c = merged.get(r["bucket"], (r["lb"], r["ub"], 0))
-            merged[r["bucket"]] = (lb, ub, c + r["c"])
-        atomic_write(
-            state_path,
-            json.dumps(
-                {
-                    "last_epoch": epoch,
-                    "registers": [
-                        [b, lb, ub, c] for b, (lb, ub, c) in merged.items()
-                    ],
-                }
-            ),
-        )
-        counts, last_epoch = merged, epoch
-        sink(dict(counts), _quantiles(), epoch)
-
-    return (
-        stream_lineitem.writeStream.outputMode("append")
-        .foreachBatch(_per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return fold_monitor(
+        stream_lineitem, checkpoint_dir, "quantile_registers.json", fold, emit
     )
 
 
@@ -689,84 +657,35 @@ def start_payload_schema_monitor(
     silently stops matching, SURVEY.md §1.2).
 
     State is O(|schema|) — keys x types, independent of stream length.
-    Count merge is additive (not idempotent), so this uses the
-    count-min monitor's replay fence: the persisted state carries the
-    last applied epoch, re-delivered epochs are skipped, and state +
-    epoch move together under one atomic rename.  Delivery semantics
-    are split deliberately: ALERTS are at-least-once (sink runs before
-    the persist, so a sink failure fails the batch and the replay
-    re-raises the novelty — a duplicated page beats a lost one),
-    COUNTERS are exactly-once (the fence only advances after the
-    rename succeeds).
+    ``fold_monitor`` calls the sink before it persists, so a failed
+    page is raised again on replay, and folds each epoch's counts once.
     """
-    import json
-    import os
-
     from eventstreamd_spark.operators.envelope import _value_type
 
-    state_path = os.path.join(checkpoint_dir, "payload_schema.json")
-    counts: dict = {}
-    last_epoch = -1
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            saved = json.load(f)
-        last_epoch = saved["last_epoch"]
-        counts = {(k, t): n for k, t, n in saved["counts"]}
-
-    def _per_batch(batch: DataFrame, epoch: int) -> None:
-        nonlocal counts, last_epoch
-        if epoch <= last_epoch:
-            return  # replayed epoch: already folded into the state
+    def fold(state: dict, batch: DataFrame) -> dict:
         kv = batch.select(
             F.explode(
                 F.from_json(F.col(payload_col), "map<string,string>")
             ).alias("key", "val")
         )
-        batch_counts = {
-            (r["key"], r["ty"]): r["n"]
-            for r in kv.select(
-                "key", _value_type(F.col("val")).alias("ty")
-            )
+        counts = (
+            kv.select("key", _value_type(F.col("val")).alias("ty"))
             .groupBy("key", "ty")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
-        }
-        known_keys = {k for k, _ in counts}
-        novel_keys = sorted(
-            {k for k, _ in batch_counts} - known_keys
         )
-        novel_types = sorted(
-            (k, t)
-            for k, t in batch_counts
-            if k in known_keys and (k, t) not in counts
-        )
-        merged = dict(counts)
-        for kt, n in batch_counts.items():
-            merged[kt] = merged.get(kt, 0) + n
-        # ALERT FIRST (at-least-once): a sink failure fails the batch
-        # before the state is folded, so the replay re-detects and
-        # re-delivers the novelty instead of silently swallowing the
-        # one page this monitor exists to raise.  Counters stay
-        # exactly-once: the fence below only advances after the
-        # atomic rename succeeds.
-        sink(novel_keys, novel_types, dict(merged), epoch)
-        atomic_write(
-            state_path,
-            json.dumps(
-                {
-                    "last_epoch": epoch,
-                    "counts": [[k, t, n] for (k, t), n in merged.items()],
-                }
-            ),
-        )
-        counts, last_epoch = merged, epoch
+        return _add(state, {(r["key"], r["ty"]): r["n"] for r in counts})
 
-    return (
-        stream_events.writeStream.outputMode("append")
-        .foreachBatch(_per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    def emit(prev: dict, merged: dict, epoch: int) -> None:
+        known_keys = {k for k, _ in prev}
+        novel_keys = sorted({k for k, _ in merged} - known_keys)
+        novel_types = sorted(
+            kt for kt in merged if kt[0] in known_keys and kt not in prev
+        )
+        sink(novel_keys, novel_types, dict(merged), epoch)
+
+    return fold_monitor(
+        stream_events, checkpoint_dir, "payload_schema.json", fold, emit
     )
 
 
@@ -784,64 +703,41 @@ def start_rolling_wau_monitor(
     running state plus, per day seen so far, the trailing-
     ``window_days`` merged estimate.
 
-    State is |days| x m integers — it grows with CALENDAR TIME, never
-    with stream volume — and every per-day register set stays
-    mergeable, so the same state serves daily/weekly/monthly windows
-    (re-merge, never re-scan).  The day-keyed max-merge is associative,
-    commutative, and idempotent, so at-least-once replay of a whole
-    batch is harmless (same effectively-once argument as
-    start_hll_distinct_monitor), and the estimates are computed with
-    the identical fixed-order arithmetic as the batch twin
-    (sketches.rolling_wau_hll) — parity is asserted exactly, not
+    State is |days| x m integers, held flat as (day, bucket) -> rho —
+    it grows with CALENDAR TIME, never with stream volume — and every
+    per-day register set stays mergeable, so the same state serves
+    daily/weekly/monthly windows (re-merge, never re-scan).  The
+    estimates use the identical fixed-order arithmetic as the batch
+    twin (sketches.rolling_wau_hll) — parity is asserted exactly, not
     approximately, in tests/test_streaming.py.
-
-    State persists beside the streaming checkpoint (atomic rename per
-    batch) and reloads on restart, so committed-batch skipping cannot
-    silently drop pre-restart days.
     """
     import datetime
-    import json
-    import os
 
     from eventstreamd_spark.operators import sketches as sk
 
-    state_path = os.path.join(checkpoint_dir, "wau_registers.json")
-    state: dict[str, dict[int, int]] = {}
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            state = {
-                d: {int(b): r for b, r in regs.items()}
-                for d, regs in json.load(f).items()
-            }
+    def fold(state: dict, batch: DataFrame) -> dict:
+        regs = sk.day_hll_registers(batch).collect()
+        return sk.hll_merge_registers(
+            state, {(r["d"].isoformat(), r["bucket"]): r["m_rho"] for r in regs}
+        )
 
-    def _per_batch(batch: DataFrame, epoch: int) -> None:
-        nonlocal state
-        for row in sk.day_hll_registers(batch).collect():
-            d = row["d"].isoformat()
-            state[d] = sk.hll_merge_registers(
-                state.get(d, {}), {row["bucket"]: row["m_rho"]}
-            )
-        atomic_write(state_path, json.dumps(state))
-        days = sorted(state)
+    def emit(prev: dict, state: dict, epoch: int) -> None:
+        days: dict[str, dict[int, int]] = {}
+        for (d, bucket), rho in state.items():
+            days.setdefault(d, {})[bucket] = rho
+        order = sorted(days)
         ests: dict[str, float] = {}
-        for d in days:
+        for d in order:
             end = datetime.date.fromisoformat(d)
             start = end - datetime.timedelta(days=window_days - 1)
             merged: dict[int, int] = {}
-            for o in days:
-                od = datetime.date.fromisoformat(o)
-                if start <= od <= end:
-                    merged = sk.hll_merge_registers(merged, state[o])
+            for o in order:
+                if start <= datetime.date.fromisoformat(o) <= end:
+                    merged = sk.hll_merge_registers(merged, days[o])
             ests[d] = sk.hll_estimate_from_registers(merged)
-        sink({d: dict(r) for d, r in state.items()}, ests, epoch)
+        sink(days, ests, epoch)
 
-    return (
-        stream_events.writeStream.outputMode("append")
-        .foreachBatch(_per_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_monitor(stream_events, checkpoint_dir, "wau_registers.json", fold, emit)
 
 
 # ---------------------------------------------------------------------------
@@ -1078,8 +974,6 @@ def last_committed_batch(checkpoint: str) -> int:
     checkpoint (``checkpoint/commits/<N>`` files, written by the
     engine AFTER the foreachBatch writer returns), or -1 when none
     committed yet."""
-    import os
-
     commits = os.path.join(checkpoint, "commits")
     if not os.path.isdir(commits):
         return -1
@@ -1120,7 +1014,6 @@ def compact_media_index(
 
     Returns the number of signature rows folded into the seed."""
     import glob as _glob
-    import os
     import shutil
 
     deltas = sorted(
@@ -1195,7 +1088,6 @@ def evict_media_index(
     against the post-eviction window and overwrites both its output
     and its index delta, which is the rolling-window semantics the
     caller asked for."""
-    import os
     import shutil
 
     for entry in os.listdir(index_dir):
@@ -1253,8 +1145,6 @@ def maintain_media_index(
     (numbered deltas dropped), ``seed_evicted`` (bool — the
     ``batch_id=-1`` seed aged out with the window), ``compacted``
     (bool), ``delta_epochs_before/after``."""
-    import os
-
     def _deltas() -> list[int]:
         return sorted(
             int(e.split("=", 1)[1])

@@ -67,18 +67,12 @@ def test_writer_syncs_file_and_directory(writer, synced, tmp_path) -> None:
     _assert_durable(synced, writer(str(tmp_path / "out")))
 
 
-def test_monitor_state_syncs_file_and_directory(spark, synced, tmp_path) -> None:
+def test_monitor_state_syncs_file_and_directory(
+    spark, monitor, synced, tmp_path
+) -> None:
     """The streaming monitors persist their merged state beside the
     checkpoint through the same publish."""
-    from eventstreamd_spark.streaming.pipeline import start_hll_distinct_monitor
-
-    src = str(tmp_path / "src")
-    spark.range(8).withColumnRenamed("id", "event_id").coalesce(1).write.parquet(src)
-    ckpt = str(tmp_path / "ckpt")
-    q = start_hll_distinct_monitor(
-        spark.readStream.schema("event_id long").parquet(src),
-        sink=lambda regs, est, epoch: None,
-        checkpoint_dir=ckpt,
-    )
-    q.awaitTermination(120)
-    _assert_durable(synced, os.path.join(ckpt, "hll_registers.json"))
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    monitor.write_source(spark, src)
+    monitor.run(spark, src, ckpt, lambda *args: None)
+    _assert_durable(synced, os.path.join(ckpt, monitor.state_file))

@@ -6,6 +6,7 @@ from __future__ import annotations
 import datetime
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from eventstreamd_spark.sources import jsonlines
@@ -998,6 +999,75 @@ def test_stream_rolling_wau_monitor_matches_batch(spark, sf_dir, tmp_path) -> No
     # idempotent replay: re-merging any day's registers is a no-op
     for d, regs in final_regs.items():
         assert sk.hll_merge_registers(regs, regs) == regs
+
+
+def test_monitor_sink_failure_redelivers_the_epoch(
+    spark, monitor, tmp_path
+) -> None:
+    """A sink that raises fails the batch before its state persists: the
+    restarted monitor hands the same epoch to the sink again, and the
+    state holds batch A folded exactly once."""
+    from pyspark.errors import StreamingQueryException
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    monitor.write_source(spark, src)
+
+    def down(*args) -> None:
+        raise RuntimeError("sink down")
+
+    with pytest.raises(StreamingQueryException, match="sink down"):
+        monitor.run(spark, src, ckpt, down)
+    calls: list = []
+    monitor.run(spark, src, ckpt, lambda *args: calls.append(args))
+    assert [c[-1] for c in calls] == [0]
+    a = spark.read.schema(monitor.SCHEMA).parquet(src)
+    assert calls[0][monitor.state_arg] == monitor.one_shot(a)
+
+
+def test_monitor_replayed_epoch_is_fenced(spark, monitor, tmp_path) -> None:
+    """With the last batch's commit deleted, Spark replays that epoch on
+    restart: the monitor must skip it (no sink call, state file
+    byte-identical) and the engine rewrites the commit."""
+    import os
+
+    src, ckpt = str(tmp_path / "src"), str(tmp_path / "ckpt")
+    monitor.write_source(spark, src)
+    monitor.run(spark, src, ckpt, lambda *args: None)
+    state = os.path.join(ckpt, monitor.state_file)
+    with open(state, "rb") as f:
+        before = f.read()
+    last = pipeline.last_committed_batch(ckpt)
+    assert last == 0
+    commit = os.path.join(ckpt, "commits", str(last))
+    os.remove(commit)
+    os.remove(os.path.join(ckpt, "commits", f".{last}.crc"))
+
+    calls: list = []
+    monitor.run(spark, src, ckpt, lambda *args: calls.append(args))
+    assert calls == []
+    with open(state, "rb") as f:
+        assert f.read() == before
+    assert os.path.exists(commit)
+
+
+def test_monitor_refuses_state_without_epoch(spark, tmp_path) -> None:
+    """A register dict without ``last_epoch`` (the old HLL state file)
+    raises naming the file instead of restarting from empty state."""
+    import re
+
+    from eventstreamd_spark.streaming.pipeline import start_hll_distinct_monitor
+
+    src, ckpt = tmp_path / "src", tmp_path / "ckpt"
+    src.mkdir()
+    ckpt.mkdir()
+    state = ckpt / "hll_registers.json"
+    state.write_text(json.dumps({"3": 2, "17": 5}))
+    with pytest.raises(ValueError, match=re.escape(str(state))):
+        start_hll_distinct_monitor(
+            spark.readStream.schema("event_id long").parquet(str(src)),
+            sink=lambda regs, est, epoch: None,
+            checkpoint_dir=str(ckpt),
+        )
 
 
 def _event_time_sessions(spark, tmp_path, batches: list) -> tuple[list, list]:
