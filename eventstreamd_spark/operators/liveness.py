@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-PING_INTERVAL_S = 6 * 3600  # batch-twin cadence; the daemon default is 10 s
+PING_INTERVAL_S = 6 * 3600  # batch-twin cadence; the daemon default is 20 s
 EXPIRY_TTL_S = 3600
 
 

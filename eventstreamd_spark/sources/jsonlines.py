@@ -1,5 +1,5 @@
-"""JSON-lines DataSource (batch + streaming) — the Spark-native stand-in
-for the reference's Unix-socket ingest (O1).
+"""JSON-lines spool readers (streaming DataSource + one bulk text read) —
+the Spark-native stand-in for the reference's Unix-socket ingest (O1).
 
 Reference behavior (/root/reference/evtstrd/socket_server.py:82-92 +
 util.py:11-21): newline-delimited JSON, one message per line, invalid
@@ -14,14 +14,15 @@ Streaming's exactly-once story depends on replayable offsets.  Files
 give us offsets (file index) for free, which is *stronger* delivery
 than the reference's at-most-once.
 
-Two readers:
-- ``reader`` (batch): one InputPartition per file -> executors read
-  files in parallel; scales with file count.
-- ``simpleStreamReader``: offset = number of fully-processed files (a
-  file is immutable once it appears; the spool writer guarantees this
-  by staging + rename).  The simple API reads on the driver — fine for
-  the daemon-replacement use case (a socket's throughput), while the
-  partition-parallel batch reader covers bulk replay.
+One reader per access pattern:
+- ``simpleStreamReader`` (the daemon's live source): offset = number
+  of fully-processed files (a file is immutable once it appears; the
+  spool writer guarantees this by staging + rename).  The simple API
+  reads on the driver — fine for the daemon-replacement use case (a
+  socket's throughput).
+- ``read_spool`` (every bulk read, e.g. Last-Event-ID replay): one
+  JVM text scan keyed by ``(file, pos)``, with the stream reader's line
+  rules.
 """
 
 from __future__ import annotations
@@ -29,15 +30,12 @@ from __future__ import annotations
 import os
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StringType, StructField, StructType
 
 from eventstreamd_spark.streaming.socket_spool import (  # noqa: F401
+    SPOOL_GLOB,
     spool_files,
     write_spool_file,
 )
@@ -51,29 +49,6 @@ def _read_lines(path: str) -> Iterator[tuple[str]]:
             line = raw.decode("utf-8", errors="replace").rstrip("\n")
             if line:
                 yield (line,)
-
-
-class _FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
-
-
-class JsonLinesBatchReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("jsonlines source requires a 'path' option")
-
-    def partitions(self):
-        return [
-            _FilePartition(os.path.join(self.path, n))
-            for n in spool_files(self.path)
-        ] or [_FilePartition("")]
-
-    def read(self, partition: _FilePartition):
-        if not partition.path:
-            return iter(())
-        return _read_lines(partition.path)
 
 
 class JsonLinesStreamReader(SimpleDataSourceStreamReader):
@@ -127,7 +102,7 @@ class JsonLinesStreamReader(SimpleDataSourceStreamReader):
 
 
 class JsonLinesDataSource(DataSource):
-    """spark.read/readStream.format("jsonlines").option("path", dir)"""
+    """spark.readStream.format("jsonlines").option("path", dir)"""
 
     @classmethod
     def name(cls) -> str:
@@ -135,9 +110,6 @@ class JsonLinesDataSource(DataSource):
 
     def schema(self):
         return SCHEMA
-
-    def reader(self, schema):
-        return JsonLinesBatchReader(self.options)
 
     def simpleStreamReader(self, schema):
         return JsonLinesStreamReader(self.options)
@@ -147,16 +119,25 @@ def register(spark) -> None:
     spark.dataSource.register(JsonLinesDataSource)
 
 
-def read_spool(spark, spool_dir: str):
-    """Bulk/batch spool read via the native text scan (column ``value``).
+def read_spool(spark, spool_dir: str) -> DataFrame:
+    """The whole spool as ``(file, pos, value)``: one native text scan
+    (JVM, no Python in the row loop) of the files ``spool_files`` lists,
+    picked by the same ``SPOOL_GLOB``.  The spool directory must exist.
 
-    ``spark.read.text`` is the JVM path — splittable files, no Python in
-    the row loop — so bulk replay of a spool runs ~an order of magnitude
-    faster than the Python ``DataSourceReader`` above.  The custom
-    DataSource stays for the *streaming* reader (offset tracking) and as
-    the pyspark-4 DataSource API demonstration.  It reads the same
-    ``spool_files`` the stream reader counts.
+    ``(file, pos)`` orders the spool: ``file`` is the spool file's name
+    (zero-padded sequence, so it sorts in write order) and ``pos`` the
+    line's index within it.  Lines follow ``_read_lines``' rules exactly:
+    split on ``"\\n"`` only, empty lines dropped.  ``wholetext`` is
+    passed to ``text()`` itself: its ``wholetext=False`` default
+    overrides an ``.option("wholetext", ...)``, and the per-line Hadoop
+    reader would also split at ``"\\r"``, which a spooled JSON line may
+    hold as whitespace.  The directory, not a list of its files, is the
+    scan's one root path: past 32 root paths Spark lists them in a
+    separate parallel job.
     """
-    return spark.read.text(
-        [os.path.join(spool_dir, n) for n in spool_files(spool_dir)]
+    files = spark.read.text(spool_dir, wholetext=True, pathGlobFilter=SPOOL_GLOB)
+    lines = files.select(
+        F.col("_metadata.file_name").alias("file"),
+        F.posexplode(F.split("value", "\n")).alias("pos", "value"),
     )
+    return lines.filter(F.col("value") != "")

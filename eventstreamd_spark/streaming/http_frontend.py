@@ -39,11 +39,11 @@ from urllib.parse import parse_qs, urlsplit
 
 from eventstreamd_spark.operators.filters import parse_filter
 from eventstreamd_spark.operators.routing import Listener
+from eventstreamd_spark.streaming.config import PING_INTERVAL
 from eventstreamd_spark.streaming.pipeline import listener_frames
 
 logger = logging.getLogger(__name__)
 
-PING_INTERVAL = 20.0  # reference config.py:11
 CRLF = "\r\n"
 
 # O12 auth gate contract (reference auth.py:11-36, plugins/README.md:12-36):

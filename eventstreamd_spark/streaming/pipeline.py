@@ -81,37 +81,34 @@ def make_replay_fn(spark: SparkSession, spool_dir: str):
     events strictly after the LAST validated occurrence of ``last_id``,
     in spool order, matching the subscription — routed through the
     live sink's ``listener_frames`` with one listener, so replayed and
-    live delivery semantics are identical by construction.  Position
-    comes from a Python-side sequential read (a log tail is inherently
-    ordered I/O); all *semantics* stay Spark-side.  Unknown id =>
-    full-spool replay, the SSE contract for an expired id.
+    live delivery semantics are identical by construction.  Spool order
+    is ``jsonlines.read_spool``'s ``(file, pos)`` key; the marker is its
+    max over the validated rows holding ``last_id``.  The gap is
+    collected and sorted on the driver (it lands there anyway), so no
+    global sort runs.  Unknown id => full-spool replay, the SSE contract
+    for an expired id.
     """
-    from eventstreamd_spark.streaming.socket_spool import spool_files
+    key = F.struct("file", "pos")
 
     def replay(
         subsystem: str, filters: tuple[str, ...], last_id: str
     ) -> list[str]:
-        rows = []
-        pos = 0
-        for name in spool_files(spool_dir):
-            with open(os.path.join(spool_dir, name), "rb") as f:
-                for raw_line in f:
-                    line = raw_line.decode("utf-8", errors="replace").rstrip("\n")
-                    if line:
-                        rows.append((pos, line))
-                        pos += 1
-        if not rows:
-            return []
-        df = spark.createDataFrame(rows, "pos long, value string")
-        env = validate_envelope(df, passthrough=("pos",))
-        marker = (
-            env.filter(F.col("id") == last_id).agg(F.max("pos")).collect()[0][0]
+        env = validate_envelope(
+            jsonlines.read_spool(spark, spool_dir), passthrough=("file", "pos")
         )
-        after = env.filter(F.col("pos") > marker) if marker is not None else env
+        marker = env.filter(F.col("id") == last_id).agg(F.max(key)).first()[0]
+        if marker is not None:
+            env = env.filter(
+                key
+                > F.struct(
+                    F.lit(marker.file).alias("file"), F.lit(marker.pos).alias("pos")
+                )
+            )
         matched = listener_frames(
-            after, [Listener("0", subsystem, filters)], passthrough=("pos",)
+            env, [Listener("0", subsystem, filters)], passthrough=("file", "pos")
         )
-        return [r["frame"] for r in matched.orderBy("pos").collect()]
+        rows = sorted(matched.collect(), key=lambda r: (r["file"], r["pos"]))
+        return [r["frame"] for r in rows]
 
     return replay
 

@@ -19,28 +19,29 @@ compute split out.
 from __future__ import annotations
 
 import asyncio
+import fnmatch
 import json
 import logging
 import os
-import re
 
 from eventstreamd_spark.durable import atomic_write
 
 logger = logging.getLogger(__name__)
 
-_SPOOL_NAME = re.compile(r"^\d{12}\.jsonl$")
+# a glob, so Spark's file scan applies the same rule (pathGlobFilter)
+SPOOL_GLOB = "[0-9]" * 12 + ".jsonl"
 
 
 def spool_files(spool_dir: str) -> list[str]:
     """The spool's published files in sequence order: ``<12-digit
-    seq>.jsonl``.  The writer resumes after the last one and the stream
-    source's offset counts them, so any other file in the directory is
-    neither read nor shifts either."""
+    seq>.jsonl`` (``SPOOL_GLOB``).  The writer resumes after the last one
+    and the stream source's offset counts them, so any other file in the
+    directory is neither read nor shifts either."""
     try:
         names = os.listdir(spool_dir)
     except FileNotFoundError:
         return []
-    return sorted(n for n in names if _SPOOL_NAME.match(n))
+    return sorted(n for n in names if fnmatch.fnmatchcase(n, SPOOL_GLOB))
 
 
 def write_spool_file(spool_dir: str, messages: list[dict | str], seq: int) -> str:

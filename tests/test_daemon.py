@@ -324,6 +324,120 @@ def test_last_event_id_replay(spark, tmp_path) -> None:
     asyncio.run(scenario())
 
 
+_INT_ID = json.dumps(
+    {"action": "notify", "subsystem": "orders", "event": "add", "data": {"k": 99}, "id": 5}
+)
+# three spool files: a non-JSON line; a valid string id "5" before an
+# int-typed id 5; id "r" valid in two files, then once more with a
+# non-object payload (invalid, so not the marker); interior "\r"
+# whitespace inside a valid line (id "c1"); an empty line
+REPLAY_SPOOL = [
+    [
+        _msg("orders", 60, "a1"),
+        "not json",
+        _msg("orders", 65, "5"),
+        _msg("orders", 70, "r"),
+        _msg("orders", 80, "c1").replace(', "subsystem"', ',\r"subsystem"'),
+    ],
+    [
+        _msg("orders", 10, "b1"),
+        _msg("other", 90, "r"),
+        _INT_ID,
+        _msg("orders", 95, "b2"),
+        _msg("orders", 75, "r").replace('{"k": 75}', "[75]"),
+        "",
+    ],
+    [_msg("orders", 55, "c2"), _msg("orders", 51, "d1")],
+]
+
+
+def _model_replay(
+    files: list[list[str]], subsystem: str, min_k: int | None, last_id: str
+) -> list[str]:
+    """Plain-Python replay: validated envelopes in spool order, the gap
+    after the last valid ``last_id`` (all of it if none), matched by
+    subsystem and an optional ``k>=min_k`` filter, rendered as frames."""
+    valid = []
+    for line in (line for lines in files for line in lines):
+        try:
+            m = json.loads(line)
+        except ValueError:
+            continue
+        if (
+            isinstance(m, dict)
+            and m.get("action") == "notify"
+            and all(isinstance(m.get(f), str) for f in ("subsystem", "event", "id"))
+            and isinstance(m.get("data"), dict)
+        ):
+            valid.append(m)
+    marks = [i for i, m in enumerate(valid) if m["id"] == last_id]
+    gap = valid[marks[-1] + 1 :] if marks else valid
+    return [
+        f"event: {m['event']}\r\ndata: {json.dumps(m['data'], separators=(',', ':'))}"
+        f"\r\nid: {m['id']}\r\n\r\n"
+        for m in gap
+        if m["subsystem"] == subsystem and (min_k is None or m["data"]["k"] >= min_k)
+    ]
+
+
+def test_replay_fn_matches_python_model(spark, tmp_path) -> None:
+    """``make_replay_fn`` returns exactly the plain-Python model's frames:
+    the marker is the last VALID occurrence of the id, an unknown id (or
+    one only an invalid envelope carries) replays everything, and an
+    empty spool replays nothing."""
+    from eventstreamd_spark.sources.jsonlines import write_spool_file
+    from eventstreamd_spark.streaming.pipeline import make_replay_fn
+
+    spool = tmp_path / "spool"
+    spool.mkdir()
+    assert make_replay_fn(spark, str(spool))("orders", (), "a1") == []
+    for seq, lines in enumerate(REPLAY_SPOOL):
+        write_spool_file(str(spool), lines, seq)
+    replay = make_replay_fn(spark, str(spool))
+    for subsystem, min_k, last_id in [
+        ("orders", 50, "a1"),  # first id
+        ("orders", 50, "c1"),  # mid id, the "\r" line
+        ("orders", 50, "r"),  # repeated id: after file 1's valid "r"
+        ("orders", 50, "5"),  # string "5", not the later int id 5
+        ("orders", None, "b1"),
+        ("orders", 50, "nope"),  # unknown: full replay
+        ("other", None, "a1"),
+    ]:
+        filters = () if min_k is None else (f"k>={min_k}",)
+        expected = _model_replay(REPLAY_SPOOL, subsystem, min_k, last_id)
+        assert expected, (subsystem, last_id)
+        assert replay(subsystem, filters, last_id) == expected, (subsystem, last_id)
+
+
+def test_replay_fn_scans_the_spool_as_text(spark, tmp_path, monkeypatch) -> None:
+    """The replay plan reads the spool files through Spark's text scan,
+    not lines collected on the driver (``LocalTableScan`` /
+    ``ExistingRDD``)."""
+    from eventstreamd_spark.sources.jsonlines import write_spool_file
+    from eventstreamd_spark.streaming import pipeline
+
+    plans = []
+
+    def capture(*args, **kwargs):
+        df = real(*args, **kwargs)
+        plans.append(df._jdf.queryExecution().sparkPlan())
+        return df
+
+    real = pipeline.listener_frames
+    monkeypatch.setattr(pipeline, "listener_frames", capture)
+    spool = str(tmp_path / "spool")
+    for seq, lines in enumerate(REPLAY_SPOOL):
+        write_spool_file(spool, lines, seq)
+    assert pipeline.make_replay_fn(spark, spool)("orders", (), "r")
+    (plan,) = plans
+    leaves = plan.collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    assert [leaf.getClass().getSimpleName() for leaf in leaves] == [
+        "FileSourceScanExec"
+    ]
+    assert leaves[0].simpleString(100).startswith("FileScan text")
+
+
 def test_auth_plugin_contract(spark, tmp_path) -> None:
     """A file-loaded plugin speaking the reference's check_auth contract
     (plugins/README.md): unauthorized => 401 + WWW-Authenticate header;

@@ -23,15 +23,34 @@ def msg(subsystem: str, k: int, id: str) -> dict:
     }
 
 
-def test_jsonlines_batch_reader(spark, tmp_path) -> None:
+def test_read_spool_lines_match_stream_reader(spark, tmp_path) -> None:
+    """``read_spool`` yields, file by file, the lines the stream reader
+    yields — split on "\\n" only (an interior "\\r" stays), empty lines
+    dropped — keyed by (spool file name, line index); a stray
+    ``x.jsonl`` is not read and an empty spool has no rows."""
+    import os
+
     spool = str(tmp_path / "spool")
-    jsonlines.write_spool_file(spool, [msg("a", 1, "x"), "not json"], 0)
+    os.makedirs(spool)
+    with open(os.path.join(spool, "x.jsonl"), "w") as f:
+        f.write(json.dumps(msg("b", 3, "stray")) + "\n")
+    assert jsonlines.read_spool(spark, spool).count() == 0
+    cr_line = json.dumps(msg("a", 1, "x")).replace(', "subsystem"', ',\r"subsystem"')
+    jsonlines.write_spool_file(spool, [cr_line, "not json", "", "tail\r"], 0)
     jsonlines.write_spool_file(spool, [msg("b", 2, "y")], 1)
-    jsonlines.register(spark)
-    df = spark.read.format("jsonlines").option("path", spool).load()
-    assert df.count() == 3  # raw lines, including the invalid one
-    # partitions: one per file
-    assert df.rdd.getNumPartitions() == 2
+
+    rows = jsonlines.read_spool(spark, spool).collect()
+    reader = jsonlines.JsonLinesStreamReader({"path": spool})
+    names = jsonlines.spool_files(spool)
+    assert sorted({r["file"] for r in rows}) == names  # no x.jsonl
+    by_file = {
+        name: sorted((r["pos"], r["value"]) for r in rows if r["file"] == name)
+        for name in names
+    }
+    for n, name in enumerate(names):
+        streamed = [v for (v,) in reader.readBetweenOffsets({"n": n}, {"n": n + 1})]
+        assert [v for _, v in by_file[name]] == streamed
+    assert by_file[names[0]] == [(0, cr_line), (1, "not json"), (3, "tail\r")]
 
 
 def test_streaming_source_and_listener_pipeline(spark, tmp_path) -> None:
