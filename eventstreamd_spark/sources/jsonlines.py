@@ -11,15 +11,16 @@ front-end that does this); Spark tails the directory.  This is the
 standard durable-ingest pattern — the socket itself can't be a Spark
 source because a socket read is not replayable, and Structured
 Streaming's exactly-once story depends on replayable offsets.  Files
-give us offsets (file index) for free, which is *stronger* delivery
-than the reference's at-most-once.
+give us offsets (the file's sequence number) for free, which is
+*stronger* delivery than the reference's at-most-once.
 
 One reader per access pattern:
-- ``simpleStreamReader`` (the daemon's live source): offset = number
-  of fully-processed files (a file is immutable once it appears; the
-  spool writer guarantees this by staging + rename).  The simple API
-  reads on the driver — fine for the daemon-replacement use case (a
-  socket's throughput).
+- ``simpleStreamReader`` (the daemon's live source): offset = the
+  sequence number of the next unread spool file (a file is immutable
+  once it appears; the spool writer guarantees this by staging +
+  rename, and resumes after the last file on disk), so removing a
+  consumed file shifts nothing.  The simple API reads on the driver — fine for the
+  daemon-replacement use case (a socket's throughput).
 - ``read_spool`` (every bulk read, e.g. Last-Event-ID replay): one
   JVM text scan keyed by ``(file, pos)``, with the stream reader's line
   rules.
@@ -37,6 +38,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 from eventstreamd_spark.streaming.socket_spool import (  # noqa: F401
     SPOOL_GLOB,
     spool_files,
+    spool_seq,
     write_spool_file,
 )
 
@@ -52,7 +54,12 @@ def _read_lines(path: str) -> Iterator[tuple[str]]:
 
 
 class JsonLinesStreamReader(SimpleDataSourceStreamReader):
-    """Offset = {"n": <number of fully consumed files>}.
+    """Offset = {"n": <12-digit sequence number of the next unread
+    spool file>}.  ``read`` takes the files with seq >= n and
+    ``readBetweenOffsets`` those with start <= seq < end.  The writer
+    starts at 0 and never skips a number, so while no file is removed
+    n equals the count of consumed files; once a consumed file is
+    removed, a count would skip unread ones, and the sequence does not.
 
     ``maxFilesPerBatch`` (option, default unlimited) caps how many new
     spool files one micro-batch admits — real backpressure, the
@@ -79,12 +86,11 @@ class JsonLinesStreamReader(SimpleDataSourceStreamReader):
         return {"n": 0}
 
     def read(self, start: dict):
-        files = spool_files(self.path)
         n0 = start.get("n", 0)
-        new = files[n0:]
+        new = [name for name in spool_files(self.path) if spool_seq(name) >= n0]
         if self.max_files > 0:
             new = new[: self.max_files]
-        end = {"n": n0 + len(new)}
+        end = {"n": spool_seq(new[-1]) + 1 if new else n0}
         # materialized up-front (the file set must be frozen at offset
         # time), returned as an iterator — the simple-reader runner
         # drains it with next() while caching rows for offset replay
@@ -96,9 +102,9 @@ class JsonLinesStreamReader(SimpleDataSourceStreamReader):
         return iter(rows), end
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        files = spool_files(self.path)
-        for name in files[start.get("n", 0) : end.get("n", 0)]:
-            yield from _read_lines(os.path.join(self.path, name))
+        for name in spool_files(self.path):
+            if start.get("n", 0) <= spool_seq(name) < end.get("n", 0):
+                yield from _read_lines(os.path.join(self.path, name))
 
 
 class JsonLinesDataSource(DataSource):

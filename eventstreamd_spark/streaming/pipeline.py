@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -755,16 +756,6 @@ def start_rolling_wau_monitor(
 # local-scale sweet spot.
 BP_BITS = 8
 
-# explicit read schema: a cold-start seed has ZERO data files (a
-# partitionBy write of an empty frame emits only _SUCCESS), and
-# schema inference over an empty directory throws.  band/bp/batch_id
-# are directory-derived partition columns.
-_INDEX_SCHEMA = (
-    "doc_id bigint, a_hi bigint, a_lo bigint, d_hi bigint, d_lo bigint, "
-    "bhash bigint, band string, bp int, batch_id int"
-)
-
-
 def _index_kinds(kinds):
     from eventstreamd_spark.operators.perceptual import _KINDS
 
@@ -773,7 +764,10 @@ def _index_kinds(kinds):
 
 def _index_schema(kinds=None) -> str:
     """The explicit read schema for a ``kinds`` signature family
-    (halves vary; band/bp/batch_id are directory-derived)."""
+    (halves vary; band/bp/batch_id are directory-derived).  Explicit
+    because a cold-start seed has ZERO data files (a partitionBy write
+    of an empty frame emits only _SUCCESS), and schema inference over
+    an empty directory throws."""
     from eventstreamd_spark.operators.perceptual import _halves_of
 
     halves = ", ".join(f"{h} bigint" for h in _halves_of(_index_kinds(kinds)))
@@ -800,6 +794,74 @@ def _stack_for_index(sig: DataFrame, kinds=None, wide: bool = False) -> DataFram
     )
 
 
+def _write_epoch(
+    sig: DataFrame, index_dir: str, batch_id: int, kinds=None, wide: bool = False
+) -> None:
+    """Write a signature relation as the index partition
+    ``batch_id=<batch_id>`` (band-stacked, partitionBy(band, bp)).
+    mode=overwrite, so rewriting an epoch is idempotent."""
+    from eventstreamd_spark.operators.perceptual import _halves_of
+
+    halves = _halves_of(_index_kinds(kinds))
+    _stack_for_index(sig.select("doc_id", *halves), kinds, wide).write.partitionBy(
+        "band", "bp"
+    ).mode("overwrite").parquet(f"{index_dir}/batch_id={batch_id}")
+
+
+# The admission index's manifest, published by ``atomic_write``:
+# {"seed": <batch_id of the seed generation> | null, "from": <lowest
+# live delta epoch>}.  Readers trust it, not the directory listing (the
+# metadata-log idea of Structured Streaming's file sink).  The name
+# must start with "_": Spark's file listing skips such files, and a
+# plain MANIFEST would be read as a data file.
+_MANIFEST = "_MANIFEST"
+
+
+def _read_manifest(index_dir: str) -> dict:
+    """The index's manifest.  A missing file, or one of another shape,
+    raises ``ValueError`` naming it: no reader falls back to listing."""
+    path = os.path.join(index_dir, _MANIFEST)
+    try:
+        with open(path) as f:
+            manifest = json.load(f)
+    except FileNotFoundError:
+        manifest = None
+    if not isinstance(manifest, dict) or set(manifest) != {"seed", "from"}:
+        raise ValueError(f"{path}: no admission-index manifest (seed and from)")
+    return manifest
+
+
+def _publish_manifest(index_dir: str, seed: int | None, lo: int) -> None:
+    atomic_write(
+        os.path.join(index_dir, _MANIFEST), json.dumps({"seed": seed, "from": lo})
+    )
+
+
+def _live(manifest: dict, batch_id, upto: int | None = None):
+    """The one rule for which index epochs are live: the seed
+    generation, plus every delta from ``manifest["from"]`` up to (not
+    including) ``upto``.  ``batch_id`` is an int, or the partition
+    column, where the rule prunes the read at planning time."""
+    live = batch_id >= manifest["from"]
+    if upto is not None:
+        live = live & (batch_id < upto)
+    seed = manifest["seed"]
+    return live if seed is None else (batch_id == seed) | live
+
+
+def _sweep(index_dir: str) -> tuple[dict, list[int]]:
+    """Delete every ``batch_id=`` directory the manifest excludes: what
+    a maintenance step left behind, whether it finished or was killed.
+    Returns the manifest and the live delta epochs."""
+    manifest = _read_manifest(index_dir)
+    names = [e for e in os.listdir(index_dir) if e.startswith("batch_id=")]
+    epochs = sorted(int(e.split("=", 1)[1]) for e in names)
+    for b in epochs:
+        if not _live(manifest, b):
+            shutil.rmtree(f"{index_dir}/batch_id={b}")
+    return manifest, [b for b in epochs if _live(manifest, b) and b != manifest["seed"]]
+
+
 # below this many probe keys, prune PAIR-EXACT (an OR of (band, bp)
 # conjunctions) instead of the rectangle superset — a small trigger's
 # predicate stays tiny and reads strictly fewer directories
@@ -809,8 +871,9 @@ _EXACT_PRUNE_MAX_KEYS = 256
 def _pruned_index_read(
     spark, index_dir: str, batch_id: int, keys: list, kinds=None
 ) -> DataFrame:
-    """The per-trigger index read: earlier batches only, directory-
-    pruned to the probe's (band, bp) buckets.  Small key sets prune
+    """The per-trigger index read: the manifest's live epochs below
+    ``batch_id`` only, directory-pruned to the probe's (band, bp)
+    buckets.  Small key sets prune
     PAIR-EXACT (OR of conjunctions); larger ones fall back to the
     band-isin x bp-isin rectangle (a superset — correctness comes from
     the exact (band, bhash) equi-join downstream).  All predicates sit
@@ -826,10 +889,11 @@ def _pruned_index_read(
         cond = F.col("band").isin(
             sorted({b for b, _ in keys})
         ) & F.col("bp").isin(sorted({p for _, p in keys}))
+    manifest = _read_manifest(index_dir)
     return (
         spark.read.schema(_index_schema(kinds))
         .parquet(index_dir)
-        .filter(F.col("batch_id") < F.lit(batch_id))
+        .filter(_live(manifest, F.col("batch_id"), batch_id))
         .filter(cond)
         .drop("bp", "batch_id")
     )
@@ -845,15 +909,10 @@ def seed_media_index(
     rows of the batch ``media_near_dup_clusters`` decision.  An EMPTY
     seed (cold start: admit everything, the corpus grows from the
     stream) writes no data files; the per-batch read supplies
-    ``_INDEX_SCHEMA`` explicitly so it never hits inference."""
-    from eventstreamd_spark.operators.perceptual import _halves_of
-
-    halves = _halves_of(_index_kinds(kinds))
-    _stack_for_index(
-        sig.select("doc_id", *halves), kinds, wide
-    ).write.partitionBy("band", "bp").mode("overwrite").parquet(
-        f"{index_dir}/batch_id=-1"
-    )
+    ``_index_schema`` explicitly so it never hits inference.  Then
+    the manifest is published: seed ``-1``, live deltas from epoch 0."""
+    _write_epoch(sig, index_dir, -1, kinds, wide)
+    _publish_manifest(index_dir, -1, 0)
 
 
 def media_admission_writer(
@@ -877,10 +936,11 @@ def media_admission_writer(
       1. ``perceptual_hashes`` on the batch blobs (one decode per blob,
          localCheckpoint'ed so the index join, the self-pair tier and
          the index append never re-run the kernel through lineage);
-      2. ``banded_matches_against`` the CURRENT index — seed plus the
-         deltas of strictly earlier batches (``batch_id < N``: under
-         foreachBatch replay the same epoch re-reads the same index
-         state, so the decision is deterministic); the read is
+      2. ``banded_matches_against`` the CURRENT index — the
+         manifest's seed plus its live deltas of strictly earlier
+         batches (``_live`` below N: under foreachBatch replay the
+         same epoch re-reads the same index state, so the decision is
+         deterministic); the read is
          partition-PRUNED to the micro-batch's (band, bp) buckets
          (band-partitioned layout, BP_BITS above) and the batch side
          is broadcast, so the per-trigger cost tracks the batch, not
@@ -905,8 +965,6 @@ def media_admission_writer(
         perceptual_hashes,
     )
 
-    from eventstreamd_spark.operators.perceptual import _halves_of
-
     hmax = HAMMING_MAX if hamming_max is None else hamming_max
     # any kernel producing a (doc_id, <halves>) signature relation
     # plugs in: images default to perceptual_hashes, WAV streams pass
@@ -916,7 +974,6 @@ def media_admission_writer(
     # index growth are modality-blind past the signature (each kernel
     # projects the columns it needs from the micro-batch itself)
     hashes = perceptual_hashes if sig_fn is None else sig_fn
-    halves = _halves_of(_index_kinds(kinds))
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -953,14 +1010,12 @@ def media_admission_writer(
         decisions.write.mode("overwrite").parquet(
             f"{out_dir}/batch_id={batch_id}"
         )
-        _stack_for_index(
-            sig.join(
-                decisions.filter(F.col("keep")).select("doc_id"), "doc_id"
-            ).select("doc_id", *halves),
+        _write_epoch(
+            sig.join(decisions.filter(F.col("keep")).select("doc_id"), "doc_id"),
+            index_dir,
+            batch_id,
             kinds,
             wide,
-        ).write.partitionBy("band", "bp").mode("overwrite").parquet(
-            f"{index_dir}/batch_id={batch_id}"
         )
 
     return write_batch
@@ -983,91 +1038,70 @@ def compact_media_index(
     wide: bool = False,
 ) -> int:
     """Maintenance pass for the band-partitioned admission index: fold
-    the COMMITTED ``batch_id`` deltas into a single consolidated
-    ``batch_id=-1`` seed partition (still partitionBy(band, bp)).
+    the seed and the COMMITTED live ``batch_id`` deltas into a new seed
+    generation (still partitionBy(band, bp)).
 
     Why it exists at 100 TB: each trigger appends its kept canonicals
     as a new batch_id directory, so a long-running stream accretes one
     small file per (batch, band, bp) leaf — the classic streaming
     small-files problem; every trigger's pruned read then lists and
     opens thousands of tiny footers instead of a few compact ones.
-    Folding into the seed preserves the reader contract exactly
-    (``batch_id=-1 < N`` for every future batch N, so `batch_id < N`
-    still selects the full kept corpus).
+
+    Crash safety comes from the manifest (``_MANIFEST``), the only
+    record of which epochs are live.  Seed generations sit at negative
+    batch ids: the pass writes the fold as ``batch_id=<seed - 1>``
+    (``-1`` when retention dropped the seed), publishes
+    ``{"seed": <seed - 1>, "from": <last folded epoch + 1>}``, and only
+    then sweeps the directories the new manifest excludes.  A kill at
+    any step leaves the old manifest or the new one, and both name
+    complete data; the next pass sweeps what was left.  The writer's
+    read stays exact: the seed is live for every future batch N, and
+    the held deltas keep their epochs.
 
     Replay determinism is why ``checkpoint`` matters: the admission
     writer may have WRITTEN its index delta for epoch N and died
     before the engine recorded ``commits/N`` — on restart the engine
-    replays epoch N, whose decisions must read ``batch_id < N``
+    replays epoch N, whose decisions must read the epochs below N
     exactly as the first attempt did.  Folding that uncommitted delta
-    into ``batch_id=-1`` would smuggle it past the ``< N`` filter and
-    the replayed docs would match their OWN signatures (flipping kept
-    -> near_dup_index).  With ``checkpoint`` given, only epochs <= the
-    last committed batch_id fold; later deltas are left as-is.
-    Without it the caller must guarantee the final epoch committed
-    (e.g. the stream finished an availableNow run) — the
-    stream-lifecycle trigger (``maintain_media_index``) always passes
-    the checkpoint.  Run with the stream stopped either way.
+    into the seed would smuggle it into the replay's read and the
+    replayed docs would match their OWN signatures (flipping kept ->
+    near_dup_index).  With ``checkpoint`` given, only epochs <= the
+    last committed batch_id fold; later deltas stay live as-is.
+    Without it every delta folds, and the caller must guarantee the
+    final epoch committed (e.g. the stream finished an availableNow
+    run) — the stream-lifecycle trigger (``maintain_media_index``)
+    always passes the checkpoint.  Run with the stream stopped either
+    way.
 
     Returns the number of signature rows folded into the seed."""
-    import glob as _glob
-    import shutil
-
-    deltas = sorted(
-        int(e.split("=", 1)[1])
-        for e in os.listdir(index_dir)
-        if e.startswith("batch_id=") and e != "batch_id=-1"
-    )
-    committed = last_committed_batch(checkpoint) if checkpoint else None
-    fold = [b for b in deltas if committed is None or b <= committed]
-    hold = [b for b in deltas if committed is not None and b > committed]
     from eventstreamd_spark.operators.perceptual import _halves_of
 
-    # the seed may be absent: retention (``evict_media_index``) drops
-    # batch_id=-1 once its cutoff passes -1, and the documented
-    # "evict, then fold" composition must keep working afterwards —
-    # fold only the partitions that exist
-    fold_paths = [
-        p
-        for p in [f"{index_dir}/batch_id=-1"]
-        if os.path.isdir(p)
-    ] + [f"{index_dir}/batch_id={b}" for b in fold]
-    if not fold_paths:  # nothing committed and no seed: nothing to do
-        return 0
+    manifest, deltas = _sweep(index_dir)
+    last = last_committed_batch(checkpoint) if checkpoint else max(deltas, default=-1)
+    if manifest["seed"] is None and not any(b <= last for b in deltas):
+        return 0  # nothing committed and no seed: nothing to do
     sig = (
         spark.read.schema(_index_schema(kinds))
-        .option("basePath", index_dir)
-        .parquet(*fold_paths)
+        .parquet(index_dir)
+        .filter(_live(manifest, F.col("batch_id"), last + 1))
         .select("doc_id", *_halves_of(_index_kinds(kinds)))
         .distinct()  # a doc's band rows fold back to one signature
-        .localCheckpoint()  # materialize BEFORE the source dirs move
+        .localCheckpoint()  # the write and the post-sweep count share it
     )
-    n = sig.count()
-    tmp = f"{index_dir}.compact-{os.getpid()}"
-    _stack_for_index(sig, kinds, wide).write.partitionBy("band", "bp").mode(
-        "overwrite"
-    ).parquet(f"{tmp}/batch_id=-1")
-    for b in hold:  # uncommitted epochs ride along untouched
-        os.rename(f"{index_dir}/batch_id={b}", f"{tmp}/batch_id={b}")
-    old = f"{index_dir}.pre-compact-{os.getpid()}"
-    os.rename(index_dir, old)
-    os.rename(tmp, index_dir)
-    shutil.rmtree(old)
-    leftover = {
-        int(p.rsplit("=", 1)[1])
-        for p in _glob.glob(f"{index_dir}/batch_id=[0-9]*")
-    }
-    assert leftover == set(hold), "fold left unexpected deltas"
-    return n
+    seed = -1 if manifest["seed"] is None else manifest["seed"] - 1
+    _write_epoch(sig, index_dir, seed, kinds, wide)
+    _publish_manifest(index_dir, seed, max(manifest["from"], last + 1))
+    _sweep(index_dir)
+    return sig.count()
 
 
 def evict_media_index(
     spark, index_dir: str, min_batch_id: int, kinds=None
 ) -> int:
     """Retention pass for the admission index: drop every delta whose
-    epoch is OLDER than ``min_batch_id`` (the seed ``batch_id=-1``
-    included once ``min_batch_id > -1``).  Returns the number of
-    signature rows retained.
+    epoch is OLDER than ``min_batch_id`` (the seed included once
+    ``min_batch_id > -1``).  Returns the number of signature rows
+    retained.
 
     This is the rolling-window near-dup policy a bounded-retention
     ingest wants at 100 TB: "reject twins of anything admitted in the
@@ -1077,28 +1111,35 @@ def evict_media_index(
     and becomes a new canonical (pytest pins exactly that), which is
     the intended semantics, not a leak.  Run with the stream stopped,
     like ``compact_media_index``; the two compose (evict, then fold
-    the survivors into the seed).
+    the survivors into a new seed).
+
+    The pass publishes the manifest first (``{"seed": <seed, or null
+    once the cutoff passes -1>, "from": max(from, min_batch_id)}``)
+    and then sweeps, so a kill never leaves an epoch half in the
+    index: the old manifest still names it whole, or the new one
+    excludes it.
 
     Replay note: unlike compaction, eviction never RENUMBERS an epoch,
-    so an uncommitted final epoch can't leak past the writer's
-    ``batch_id < N`` read filter — a replayed epoch N recomputes
-    against the post-eviction window and overwrites both its output
-    and its index delta, which is the rolling-window semantics the
-    caller asked for."""
-    import shutil
-
-    for entry in os.listdir(index_dir):
-        if not entry.startswith("batch_id="):
-            continue
-        if int(entry.split("=", 1)[1]) < min_batch_id:
-            shutil.rmtree(os.path.join(index_dir, entry))
-    remaining = (
+    so an uncommitted final epoch can't leak into the writer's read
+    of the epochs below N — a replayed epoch N recomputes against the
+    post-eviction window and overwrites both its output and its index
+    delta, which is the rolling-window semantics the caller asked
+    for."""
+    manifest = _read_manifest(index_dir)
+    _publish_manifest(
+        index_dir,
+        manifest["seed"] if min_batch_id <= -1 else None,
+        max(manifest["from"], min_batch_id),
+    )
+    manifest, _ = _sweep(index_dir)
+    return (
         spark.read.schema(_index_schema(kinds))
         .parquet(index_dir)
+        .filter(_live(manifest, F.col("batch_id")))
         .select("doc_id")
         .distinct()
+        .count()
     )
-    return remaining.count()
 
 
 def maintain_media_index(
@@ -1115,41 +1156,34 @@ def maintain_media_index(
     ``evict_media_index`` invocation (round-11, VERDICT ask #5).
 
     Call it while the stream is quiesced (between ``availableNow``
-    runs — ``media_admission_cycle`` wires exactly that).  Two
-    independent policies:
+    runs — ``media_admission_cycle`` wires exactly that).  It first
+    sweeps what the manifest excludes, so a pass killed at any step
+    is finished here.  Then two independent policies:
 
     - **retention** (``retention_epochs``): evict index epochs older
       than ``last_committed - retention_epochs + 1`` — the rolling
       near-dup window, now on a clock instead of a hand-picked cutoff.
       Runs BEFORE compaction so evicted epochs aren't folded into the
-      seed first.  When retention fires (a stale NUMBERED delta
-      exists), the seed partition (``batch_id=-1``) ages out with it —
-      ``evict_media_index``'s contract drops it once the cutoff
-      passes -1 — and the report records that as ``seed_evicted``.
-      The policy is triggered by stale numbered deltas only: a window
-      whose cutoff has passed -1 but whose numbered deltas are all
-      in-window leaves the seed standing until the next stale delta
-      (deliberate — eviction on cutoff alone would delete a
-      just-compacted seed holding in-window signatures).  A later
+      seed first.  When retention fires (a stale live delta exists),
+      the manifest's seed ages out with it — ``evict_media_index``'s
+      contract drops it once the cutoff passes -1 — and the report
+      records that as ``seed_evicted``.  The policy is triggered by
+      stale deltas only: a window whose cutoff has passed -1 but whose
+      deltas are all in-window leaves the seed standing until the next
+      stale delta (deliberate — eviction on cutoff alone would delete
+      a just-compacted seed holding in-window signatures).  A later
       compaction rebuilds the seed from the surviving deltas.
-    - **compaction** (``max_delta_epochs``): when the number of
-      accreted ``batch_id`` delta dirs reaches the threshold, fold the
-      committed ones into the seed.  The commits log gates the fold
-      (see ``compact_media_index``), so an uncommitted final epoch is
-      left for the engine to replay — restart-safe by construction.
+    - **compaction** (``max_delta_epochs``): when the number of live
+      delta epochs reaches the threshold, fold the committed ones into
+      a new seed generation.  The commits log gates the fold (see
+      ``compact_media_index``), so an uncommitted final epoch is left
+      for the engine to replay — restart-safe by construction.
 
     Returns a report dict: ``fired`` (bool), ``evicted_epochs``
-    (numbered deltas dropped), ``seed_evicted`` (bool — the
-    ``batch_id=-1`` seed aged out with the window), ``compacted``
-    (bool), ``delta_epochs_before/after``."""
-    def _deltas() -> list[int]:
-        return sorted(
-            int(e.split("=", 1)[1])
-            for e in os.listdir(index_dir)
-            if e.startswith("batch_id=") and e != "batch_id=-1"
-        )
-
-    before = _deltas()
+    (live deltas dropped), ``seed_evicted`` (bool — the seed aged out
+    with the window), ``compacted`` (bool),
+    ``delta_epochs_before/after``."""
+    manifest, before = _sweep(index_dir)
     committed = last_committed_batch(checkpoint)
     report = {
         "fired": False,
@@ -1162,28 +1196,21 @@ def maintain_media_index(
         cutoff = committed - retention_epochs + 1
         stale = [b for b in before if b < cutoff]
         if stale:
-            seed_stale = cutoff > -1 and os.path.isdir(
-                f"{index_dir}/batch_id=-1"
-            )
             evict_media_index(spark, index_dir, cutoff, kinds)
-            report["fired"] = True
-            report["evicted_epochs"] = len(stale)
-            report["seed_evicted"] = seed_stale
-    deltas_now = _deltas()
+            seed_evicted = cutoff > -1 and manifest["seed"] is not None
+            report.update(
+                fired=True, evicted_epochs=len(stale), seed_evicted=seed_evicted
+            )
+    manifest, deltas = _sweep(index_dir)
     # fire compaction only when there is something foldable: a seed to
     # rebuild or at least one COMMITTED delta — otherwise
-    # compact_media_index would no-op (nothing committed, no seed) and
-    # reporting compacted=True would claim a fold that never happened,
-    # re-firing on every call (round-12 review catch)
-    committed_now = last_committed_batch(checkpoint)
-    foldable = os.path.isdir(f"{index_dir}/batch_id=-1") or any(
-        b <= committed_now for b in deltas_now
-    )
-    if len(deltas_now) >= max_delta_epochs and foldable:
+    # compact_media_index would no-op and reporting compacted=True
+    # would claim a fold that never happened, re-firing on every call
+    foldable = manifest["seed"] is not None or any(b <= committed for b in deltas)
+    if len(deltas) >= max_delta_epochs and foldable:
         compact_media_index(spark, index_dir, checkpoint, kinds, wide)
-        report["fired"] = True
-        report["compacted"] = True
-    report["delta_epochs_after"] = len(_deltas())
+        report.update(fired=True, compacted=True)
+    report["delta_epochs_after"] = len(_sweep(index_dir)[1])
     return report
 
 

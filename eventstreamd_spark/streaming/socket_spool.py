@@ -35,13 +35,18 @@ SPOOL_GLOB = "[0-9]" * 12 + ".jsonl"
 def spool_files(spool_dir: str) -> list[str]:
     """The spool's published files in sequence order: ``<12-digit
     seq>.jsonl`` (``SPOOL_GLOB``).  The writer resumes after the last one
-    and the stream source's offset counts them, so any other file in the
-    directory is neither read nor shifts either."""
+    and the stream source's offset is the next unread seq, so any other
+    file in the directory is neither read nor moves either."""
     try:
         names = os.listdir(spool_dir)
     except FileNotFoundError:
         return []
     return sorted(n for n in names if fnmatch.fnmatchcase(n, SPOOL_GLOB))
+
+
+def spool_seq(name: str) -> int:
+    """The sequence number of a spool file name."""
+    return int(name[:12])
 
 
 def write_spool_file(spool_dir: str, messages: list[dict | str], seq: int) -> str:
@@ -62,7 +67,8 @@ class SpoolWriter:
 
     File names continue the sequence already on disk: a restarted
     writer never replaces a spooled file, and its files sort after every
-    file the stream has consumed (the source's offset is a file count).
+    file the stream has consumed (the source's offset is the sequence
+    number of the next unread file).
     """
 
     def __init__(self, spool_dir: str, flush_lines: int = 1000, flush_seconds: float = 0.5):
@@ -73,7 +79,7 @@ class SpoolWriter:
         self._lock = asyncio.Lock()
         os.makedirs(spool_dir, exist_ok=True)
         files = spool_files(spool_dir)
-        self._seq = int(files[-1][:12]) + 1 if files else 0
+        self._seq = spool_seq(files[-1]) + 1 if files else 0
 
     async def add(self, line: str) -> None:
         async with self._lock:

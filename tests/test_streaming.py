@@ -53,6 +53,31 @@ def test_read_spool_lines_match_stream_reader(spark, tmp_path) -> None:
     assert by_file[names[0]] == [(0, cr_line), (1, "not json"), (3, "tail\r")]
 
 
+def test_stream_reader_offset_is_the_spool_sequence(tmp_path) -> None:
+    """The stream reader's offset is the sequence number of the next
+    unread spool file, not a count of consumed files: after a consumed
+    file is deleted, a reader restarted from the committed offset still
+    delivers the next file (a count offset would skip it)."""
+    import os
+
+    spool = str(tmp_path / "spool")
+    jsonlines.write_spool_file(spool, [msg("a", 0, "e0")], 0)
+    jsonlines.write_spool_file(spool, [msg("a", 1, "e1")], 1)
+    rows, committed = jsonlines.JsonLinesStreamReader({"path": spool}).read({"n": 0})
+    assert [json.loads(v)["id"] for (v,) in rows] == ["e0", "e1"]
+    assert committed == {"n": 2}
+
+    os.remove(os.path.join(spool, jsonlines.spool_files(spool)[0]))
+    jsonlines.write_spool_file(spool, [msg("a", 2, "e2")], 2)
+    restarted = jsonlines.JsonLinesStreamReader({"path": spool})
+    rows, end = restarted.read(committed)
+    assert [json.loads(v)["id"] for (v,) in rows] == ["e2"]
+    assert end == {"n": 3}
+    replayed = restarted.readBetweenOffsets(committed, end)
+    assert [json.loads(v)["id"] for (v,) in replayed] == ["e2"]
+    assert list(restarted.read(end)[0]) == []
+
+
 def test_streaming_source_and_listener_pipeline(spark, tmp_path) -> None:
     """The daemon's stream: jsonlines source -> validate_envelope ->
     foreachBatch(ListenerRegistry.push_batch) -> per-connection frames."""
@@ -1465,6 +1490,16 @@ def _scene_media_subset(spark, sf_dir, n_docs: int):
 _EMPTY_SIG = "doc_id bigint, a_hi bigint, a_lo bigint, d_hi bigint, d_lo bigint"
 
 
+def _index_layout(idx: str) -> tuple[dict, set[str]]:
+    """An admission index's ``_MANIFEST`` and its ``batch_id=``
+    directories on disk."""
+    import os
+
+    with open(os.path.join(idx, "_MANIFEST")) as f:
+        manifest = json.load(f)
+    return manifest, {e for e in os.listdir(idx) if e.startswith("batch_id=")}
+
+
 def test_media_admission_index_read_is_partition_pruned(
     spark, sf_dir, tmp_path
 ) -> None:
@@ -1561,9 +1596,9 @@ def test_media_index_compaction_preserves_decisions(
     n = compact_media_index(spark, idx)
     assert n == len({d for d, _, _ in before})  # one signature per doc
     assert index_content() == before  # content identical, dirs folded
-    assert os.listdir(idx) == ["batch_id=-1"] or set(os.listdir(idx)) <= {
-        "batch_id=-1", "_SUCCESS"
-    }
+    m, dirs = _index_layout(idx)
+    assert set(os.listdir(idx)) <= {"_MANIFEST", "_SUCCESS", *dirs}
+    assert dirs == {f"batch_id={m['seed']}"} and m["from"] == 2
     # the NEXT batch still rejects a twin of a pre-compaction canonical
     w(media.filter("doc_id >= 24"), 2)
     rows = {
@@ -1842,8 +1877,8 @@ def test_compaction_commits_guard_leaves_uncommitted_epoch(
     }
     compact_media_index(spark, idx, checkpoint=ckpt)
     # epoch 1's delta survived as-is; epoch 0 folded into the seed
-    dirs = {e for e in os.listdir(idx) if e.startswith("batch_id=")}
-    assert dirs == {"batch_id=-1", "batch_id=1"}
+    m, dirs = _index_layout(idx)
+    assert dirs == {f"batch_id={m['seed']}", "batch_id=1"} and m["from"] == 1
     # the engine replays epoch 1: verdicts must be bit-identical
     w(media.filter("doc_id >= 8"), 1)
     replay = {
@@ -1918,8 +1953,8 @@ def test_maintain_media_index_lifecycle_trigger(
     control(16, 32)
     assert r2["fired"] and r2["compacted"]  # threshold 2 reached
     assert r2["delta_epochs_after"] == 0  # both epochs committed, folded
-    dirs = {e for e in os.listdir(idx) if e.startswith("batch_id=")}
-    assert dirs == {"batch_id=-1"}
+    m, dirs = _index_layout(idx)
+    assert dirs == {f"batch_id={m['seed']}"} and m["from"] == 2
     # post-maintenance cycle: verdicts bit-identical to the control
     r3 = cycle(32, 48)
     control(32, 48)
@@ -1965,8 +2000,8 @@ def test_maintain_media_index_retention_policy(spark, sf_dir, tmp_path) -> None:
     assert not report["compacted"]
     # the (empty) seed ages out with the window too — evict's contract
     # drops batch_id=-1 once the cutoff passes -1
-    dirs = {e for e in os.listdir(idx) if e.startswith("batch_id=")}
-    assert dirs == {"batch_id=1", "batch_id=2"}
+    m, dirs = _index_layout(idx)
+    assert dirs == {"batch_id=1", "batch_id=2"} and m == {"seed": None, "from": 1}
     # a twin of an evicted canonical re-admits (rolling window)
     kept0 = [
         r["doc_id"]
@@ -2023,14 +2058,15 @@ def test_retention_then_compaction_after_seed_eviction(
     )
     assert r1["fired"] and r1["evicted_epochs"] == 1 and r1["seed_evicted"]
     assert not r1["compacted"]
-    assert not os.path.isdir(f"{idx}/batch_id=-1")
+    m, dirs = _index_layout(idx)
+    assert m["seed"] is None and dirs == {"batch_id=1", "batch_id=2"}
     # epoch 3 arrives, tripping the compaction threshold (3 deltas)
     w(media.filter("doc_id >= 24 AND doc_id < 32"), 3)
     commit(3)
     r2 = maintain_media_index(spark, idx, ckpt, max_delta_epochs=3)
     assert r2["compacted"] and not r2["seed_evicted"]
-    dirs = {e for e in os.listdir(idx) if e.startswith("batch_id=")}
-    assert dirs == {"batch_id=-1"}  # folded without the old seed
+    m, dirs = _index_layout(idx)
+    assert dirs == {f"batch_id={m['seed']}"}  # folded without the old seed
     # the rebuilt seed still serves admission: an exact resend of an
     # epoch-1 kept canonical rejects against the index
     canon = min(
@@ -2042,6 +2078,163 @@ def test_retention_then_compaction_after_seed_eviction(
     w(media.filter(f"doc_id = {canon}"), 4)
     row = spark.read.parquet(out).filter("batch_id = 4").collect()[0]
     assert not row["keep"] and row["reason"] == "near_dup_index"
+
+
+def test_admission_index_without_manifest_fails_loudly(spark, tmp_path) -> None:
+    """An index directory with no ``_MANIFEST``, or one of another
+    shape, is not read by listing its directories: the read and the
+    maintenance pass raise ``ValueError`` naming the file."""
+    import os
+    import re
+
+    from eventstreamd_spark.streaming.pipeline import (
+        _pruned_index_read,
+        maintain_media_index,
+        seed_media_index,
+    )
+
+    idx = str(tmp_path / "no_manifest")
+    seed_media_index(spark.createDataFrame([], _EMPTY_SIG), idx)
+    path = os.path.join(idx, "_MANIFEST")
+    os.remove(path)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        _pruned_index_read(spark, idx, 0, [("a0", 0)])
+    with pytest.raises(ValueError, match=re.escape(path)):
+        maintain_media_index(spark, idx, str(tmp_path / "ckpt"))
+    assert os.listdir(idx) == ["batch_id=-1"]  # nothing swept
+    with open(path, "w") as f:
+        json.dump({"n": 0}, f)
+    with pytest.raises(ValueError, match=re.escape(path)):
+        _pruned_index_read(spark, idx, 0, [("a0", 0)])
+
+
+class _Killed(Exception):
+    """A process kill, injected at one step of index maintenance."""
+
+
+def test_admission_index_maintenance_survives_a_kill_at_every_step(
+    spark, sf_dir, tmp_path, monkeypatch
+) -> None:
+    """Kill ``maintain_media_index`` (retention, then compaction) at each
+    step of eviction (manifest publish, sweep) and of compaction
+    (generation write, manifest publish, sweep); a killed write or
+    sweep leaves a partial directory.  After each kill the index still
+    reads and holds the pre- or the post-maintenance corpus, the next
+    epoch's decisions equal the pre- or the post-maintenance ones, and
+    a rerun completes and leaves on disk exactly the manifest's live
+    set: the seed generation plus the deltas from ``from`` on."""
+    import os
+    import shutil
+    import types
+
+    from eventstreamd_spark.operators.perceptual import perceptual_hashes
+
+    media = _scene_media_subset(spark, sf_dir, 40).localCheckpoint()
+    base, ckpt = str(tmp_path / "base"), str(tmp_path / "ckpt")
+    pipeline.seed_media_index(perceptual_hashes(media.filter("doc_id < 8")), base)
+    w = pipeline.media_admission_writer(base, str(tmp_path / "base_out"))
+    os.makedirs(os.path.join(ckpt, "commits"))
+    for b, lo in enumerate((8, 16, 24)):
+        w(media.filter(f"doc_id >= {lo} AND doc_id < {lo + 8}"), b)
+        with open(os.path.join(ckpt, "commits", str(b)), "w") as f:
+            f.write("v1\n{}")
+    # epoch 3: twins of a seed doc (1), of epoch-0, -1 and -2 canonicals
+    # (9, 17, 25), and fresh docs — retention evicts the first two kinds
+    nxt = media.filter("doc_id IN (1, 9, 17, 25) OR doc_id >= 32").localCheckpoint()
+    keys = sorted(
+        (r["band"], r["bp"])
+        for r in spark.read.schema(pipeline._index_schema())
+        .parquet(base)
+        .select("band", "bp")
+        .distinct()
+        .collect()
+    )
+
+    def maintain(idx: str) -> dict:
+        # retention keeps epochs >= 1 (seed and epoch 0 go), then the
+        # two surviving deltas fold into a new seed generation
+        return pipeline.maintain_media_index(
+            spark, idx, ckpt, max_delta_epochs=2, retention_epochs=2
+        )
+
+    def corpus(idx: str) -> set[tuple]:
+        read = pipeline._pruned_index_read(spark, idx, 3, keys)
+        return {(r["doc_id"], r["band"], r["bhash"]) for r in read.collect()}
+
+    def decisions(idx: str, name: str) -> set[tuple]:
+        out = str(tmp_path / f"{name}_out")
+        pipeline.media_admission_writer(idx, out)(nxt, 3)
+        return {
+            (r["doc_id"], r["cluster_id"], r["keep"], r["reason"])
+            for r in spark.read.parquet(out).collect()
+        }
+
+    def copy(name: str) -> str:
+        idx = str(tmp_path / name)
+        shutil.copytree(base, idx)
+        return idx
+
+    pre_idx, post_idx = copy("pre"), copy("post")
+    report = maintain(post_idx)
+    assert report["evicted_epochs"] == 1 and report["seed_evicted"]
+    assert report["compacted"]
+    corpora = [corpus(pre_idx), corpus(post_idx)]
+    verdicts = [decisions(pre_idx, "pre"), decisions(post_idx, "post")]
+    assert corpora[0] != corpora[1] and verdicts[0] != verdicts[1]
+
+    real = {
+        "_publish_manifest": pipeline._publish_manifest,
+        "_write_epoch": pipeline._write_epoch,
+        "rmtree": shutil.rmtree,
+    }
+
+    def drop_one_leaf(path: str) -> None:
+        leaf = min(e for e in os.listdir(path) if e.startswith("band="))
+        shutil.rmtree(os.path.join(path, leaf))
+
+    def kill(step: str, nth: int) -> None:
+        """Raise at the ``nth`` call of ``step``.  A killed write leaves
+        its generation without one (band) leaf, a killed ``rmtree``
+        removes one leaf of its directory; a publish is atomic."""
+        calls = 0
+
+        def killed(*args, **kwargs):
+            nonlocal calls
+            calls += 1
+            if calls < nth:
+                return real[step](*args, **kwargs)
+            if step == "_write_epoch":
+                real[step](*args, **kwargs)
+                drop_one_leaf(f"{args[1]}/batch_id={args[2]}")
+            elif step == "rmtree":
+                drop_one_leaf(args[0])
+            raise _Killed(step)
+
+        if step == "rmtree":
+            monkeypatch.setattr(pipeline, "shutil", types.SimpleNamespace(rmtree=killed))
+        else:
+            monkeypatch.setattr(pipeline, step, killed)
+
+    steps = [
+        ("_publish_manifest", 1),  # eviction's publish
+        ("rmtree", 1),  # eviction's sweep, first directory (the seed)
+        ("_write_epoch", 1),  # compaction's generation write
+        ("_publish_manifest", 2),  # compaction's publish
+        ("rmtree", 3),  # compaction's sweep, first folded delta
+    ]
+    for i, (step, nth) in enumerate(steps):
+        idx = copy(f"kill{i}")
+        kill(step, nth)
+        with pytest.raises(_Killed):
+            maintain(idx)
+        monkeypatch.undo()
+        assert corpus(idx) in corpora, (step, nth)
+        assert decisions(idx, f"kill{i}") in verdicts, (step, nth)
+        maintain(idx)
+        m, dirs = _index_layout(idx)
+        live = {int(d.split("=", 1)[1]) for d in dirs}
+        assert m["seed"] in live, (step, nth)
+        assert all(b == m["seed"] or b >= m["from"] for b in live), (step, nth)
 
 
 def test_text_admission_stream_matches_batch(spark, sf_dir, tmp_path) -> None:
@@ -2199,9 +2392,8 @@ def test_text_admission_cycle_maintenance(spark, sf_dir, tmp_path) -> None:
     r2 = cycle(16, 32)
     control(16, 32)
     assert r2["compacted"] and r2["delta_epochs_after"] == 0
-    assert {e for e in os.listdir(idx) if e.startswith("batch_id=")} == {
-        "batch_id=-1"
-    }
+    m, dirs = _index_layout(idx)
+    assert dirs == {f"batch_id={m['seed']}"} and m["from"] == 2
     cycle(32, 48)
     control(32, 48)
     got = {
