@@ -181,13 +181,6 @@ def _canonical_codes(bits, vals):
     return out
 
 
-def _decode_map(bits, vals):
-    """-> {(length, code): symbol} for the bit-at-a-time decoder."""
-    return {
-        (ln, code): sym for sym, (code, ln) in _canonical_codes(bits, vals).items()
-    }
-
-
 # LUT cache for the fast decoder: (bits, vals) -> 65536-entry list where
 # entry = (code_length << 8) | symbol for every 16-bit window beginning
 # with that code, 0 for windows no code covers.  Keyed on the wire-format
@@ -382,11 +375,6 @@ class _FastBitReader:
         if len(chunk) < 3:
             v <<= (3 - len(chunk)) * 8
         return ((v >> (8 - (bp & 7))) & 0xFFFF) >> (16 - s)
-
-
-def _extend(v: int, s: int) -> int:
-    """T.81 F.2.2.1 EXTEND: map the s received bits to a signed value."""
-    return v - ((1 << s) - 1) if v < (1 << (s - 1)) else v
 
 
 def _amplitude(v: int) -> tuple[int, int]:

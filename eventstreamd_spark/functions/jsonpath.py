@@ -1,25 +1,23 @@
-"""Typed JSON-path access over a dynamic payload column.
+"""JSON paths for typed access over a dynamic payload column.
 
 The reference's payload is schemaless JSON probed at delivery time with a
 type assertion: ``json_get(message, "/foo/bar", expected_type)`` raises on
 a missing path or wrong JSON type and the filter treats that as no-match
 (/root/reference/evtstrd/filters.py:32-37, 22-27).
 
-Spark-first mapping: parse the payload once per expression tree with
-``try_parse_json`` (VariantType, Spark 4), read the node's actual type
-with ``schema_of_variant``, and gate every typed extraction on it.  The
-gate matters because ``try_variant_get`` *coerces* (string "50" -> bigint
-50, true -> 1), which would violate the reference's strict wrong-type =>
-no-match semantics.
-
-Everything here is JVM-side and codegen-friendly — no Python UDFs.
+Spark-first mapping: parse the payload once with ``try_parse_json``
+(VariantType, Spark 4), read the node's actual type with
+``schema_of_variant``, and gate every typed extraction on it
+(``operators.filters.typed_extract``).  The gate matters because
+``try_variant_get`` *coerces* (string "50" -> bigint 50, true -> 1),
+which would violate the reference's strict wrong-type => no-match
+semantics.  This module turns a dotted field into the variant path
+Spark reads and the JSON path DuckDB's twin reads.
 """
 
 from __future__ import annotations
 
 import re
-
-from pyspark.sql import Column, functions as F
 
 _SIMPLE_SEGMENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
@@ -49,29 +47,3 @@ def duckdb_json_path(field: str) -> str:
             parts.append('."' + seg + '"')
     return "$" + "".join(parts)
 
-
-def json_node(payload: Column, field: str) -> Column:
-    """The raw variant node at ``field`` (NULL if missing / invalid JSON)."""
-    return F.try_variant_get(F.try_parse_json(payload), json_path(field), "variant")
-
-
-def json_node_type(payload: Column, field: str) -> Column:
-    """DDL type string of the JSON node: 'STRING', 'BIGINT', 'BOOLEAN',
-    'DECIMAL(p,s)', 'OBJECT<...>', 'ARRAY<...>', or NULL when the path is
-    missing or the payload is not valid JSON."""
-    return F.schema_of_variant(json_node(payload, field))
-
-
-def json_get_string(payload: Column, field: str) -> Column:
-    """JSON string at path, NULL unless the node is a JSON string."""
-    v = F.try_parse_json(payload)
-    is_str = F.schema_of_variant(F.try_variant_get(v, json_path(field), "variant")) == "STRING"
-    return F.when(is_str, F.try_variant_get(v, json_path(field), "string"))
-
-
-def json_get_int(payload: Column, field: str) -> Column:
-    """JSON integer at path, NULL unless the node is a JSON integer."""
-    v = F.try_parse_json(payload)
-    typ = F.schema_of_variant(F.try_variant_get(v, json_path(field), "variant"))
-    is_int = typ.isin("TINYINT", "SMALLINT", "INT", "BIGINT")
-    return F.when(is_int, F.try_variant_get(v, json_path(field), "bigint"))

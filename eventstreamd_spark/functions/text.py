@@ -26,10 +26,6 @@ def tokens(text: Column) -> Column:
     )
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def sql_tokens(expr: str) -> str:
     return (
         f"list_filter(regexp_split_to_array(lower({expr}), '\\s+'), "

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from eventstreamd_spark.plans.barriers import filter_once
 from eventstreamd_spark.session import fan_out
 
 ENVELOPE_COLS = ["subsystem", "event_type", "data", "id"]
@@ -44,12 +45,12 @@ def validate_envelope(
     ``passthrough`` names input columns to carry into the output
     unchanged (e.g. a spool position for replay ordering).
     """
-    # Parse once into a real column; every gate and projection probes the
-    # parsed variant.  (Building the filter from a fresh try_parse_json
-    # expression would re-parse the line per predicate — JSON parsing is
-    # the dominant cost of this operator.)
-    # fan_out: JSON parsing is the dominant per-row cost; spread a
-    # narrow local input across cores (no-op for streams / wide scans)
+    # Parse once into a real column; the gate and every projection
+    # probe the parsed variant.  (Building them from a fresh
+    # try_parse_json expression would re-parse the line per predicate —
+    # JSON parsing is the dominant cost of this operator.)
+    # fan_out: spread a narrow local input across cores (no-op for
+    # streams / wide scans)
     parsed = fan_out(raw).withColumn("__v", F.try_parse_json(F.col(line_col)))
     v = F.col("__v")
     action_ok = (
@@ -62,34 +63,16 @@ def validate_envelope(
         & _node_type(v, "$.data").startswith("OBJECT")
         & (_node_type(v, "$.id") == "STRING")
     )
-    cols = [
-        F.coalesce(action_ok & typed_ok, F.lit(False)).alias("__ok"),
+    # filter_once (plans/barriers.py): a plain .filter would be pushed
+    # below the parse by alias substitution, and FilterExec does no
+    # subexpression elimination, so every line would re-parse once per
+    # probe (measured 4.2 s vs ~1.3 s at sf0.1).
+    return filter_once(parsed, action_ok & typed_ok).select(
         F.try_variant_get(v, "$.subsystem", "string").alias("subsystem"),
         F.try_variant_get(v, "$.event", "string").alias("event_type"),
         F.to_json(F.try_variant_get(v, "$.data", "variant")).alias("data"),
         F.try_variant_get(v, "$.id", "string").alias("id"),
-        F.rand().alias("__nd"),
-    ]
-    cols.extend(F.col(c) for c in passthrough)
-    # The gate is computed in the PROJECT — whole-stage codegen does
-    # common-subexpression elimination there, so the line parses ONCE
-    # across gate + all projections — and the filter tests only the
-    # materialized boolean.  Without protection the optimizer pushes
-    # the filter below the project, substituting the full gate
-    # expression, and FilterExec does NO subexpression elimination
-    # (short-circuit semantics): every line re-parses NINE times
-    # (measured 4.2s vs ~1.3s at sf0.1).  Pushdown-through-Project is
-    # blocked only by a NONDETERMINISTIC PROJECT FIELD the condition
-    # references, hence the `__nd` rand column and the always-false
-    # `__nd < -1` disjunct.  (Condition-side tricks don't survive:
-    # AND-ed nondeterministic terms are split off and the rest pushed;
-    # `rand() IS NULL` / `rand() < -1` are constant-folded.)  Nothing
-    # is lost at scale: no predicate can usefully push below a parse
-    # that must read every line anyway.
-    return (
-        parsed.select(*cols)
-        .filter(F.col("__ok") | (F.col("__nd") < F.lit(-1.0)))
-        .drop("__ok", "__nd")
+        *passthrough,
     )
 
 

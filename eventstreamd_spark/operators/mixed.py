@@ -134,12 +134,6 @@ def mixed_media_fingerprints(media: DataFrame) -> DataFrame:
     )
 
 
-def scene_mixed_signatures(docs: DataFrame) -> DataFrame:
-    """Full-corpus decode pass for the mixed family: dispatch-kernel
-    fingerprints over the mixed PNG/JPEG/WAV/MP4 corpus."""
-    return mixed_media_fingerprints(documents_as_mixed_media(docs))
-
-
 def mixed_media_near_dup(
     media: DataFrame,
     hamming_max: int = HAMMING_MAX,

@@ -199,12 +199,6 @@ def documents_as_scene_media(docs: DataFrame) -> DataFrame:
     )
 
 
-def scene_image_signatures(docs: DataFrame) -> DataFrame:
-    """Full-corpus decode pass for the image family: perceptual
-    (aHash, dHash) signatures over the scene-image corpus."""
-    return perceptual_hashes(documents_as_scene_media(docs))
-
-
 def _grid_hashes(blob: bytes) -> tuple[int, int, int, int]:
     """(a_hi, a_lo, d_hi, d_lo) from a decoded image (PNG or baseline
     JPEG, magic-byte dispatch) — pure integer pipeline; works for ANY

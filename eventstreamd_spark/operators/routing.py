@@ -20,7 +20,7 @@ reference's routing-table index).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import lru_cache, reduce
 
 from pyspark.sql import DataFrame, functions as F
@@ -30,7 +30,6 @@ from eventstreamd_spark.operators.filters import (
     extract_key,
     typed_extract,
     FilterSpec,
-    compile_filters,
     oracle_filters_sql,
     parse_filter,
 )
@@ -47,23 +46,6 @@ class Listener:
 
     def specs(self) -> list[FilterSpec]:
         return [parse_filter(f) for f in self.filters]
-
-
-def listener_predicate(
-    listener: Listener,
-    subsystem_col: str = "event_type",
-    payload_col: str = "props",
-    parsed_payload: F.Column | None = None,
-):
-    """Subsystem gate AND the compiled filter conjunction.  Pass
-    ``parsed_payload`` (a variant column) when evaluating many
-    listeners over one relation so the JSON parses once, not once per
-    (listener, filter)."""
-    if parsed_payload is not None:
-        preds = compile_filters(listener.specs(), parsed_payload, pre_parsed=True)
-    else:
-        preds = compile_filters(listener.specs(), F.col(payload_col))
-    return (F.col(subsystem_col) == F.lit(listener.subsystem)) & preds
 
 
 def listener_view(

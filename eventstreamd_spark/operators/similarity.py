@@ -366,22 +366,6 @@ def embedding_near_dup_pairs(
     return fan_out(slim).mapInPandas(score, "vec_a long, vec_b long")
 
 
-def embedding_near_dup_pairs_jvm(
-    embeddings: DataFrame, threshold: float = 0.95
-) -> DataFrame:
-    """Pure-JVM all-pairs reference implementation (no Python workers,
-    no broadcast): the semantics oracle for the blocked kernel above and
-    the fallback when Arrow/numpy paths are unavailable."""
-    a = embeddings.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea"))
-    b = embeddings.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb"))
-    return (
-        a.join(b, F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos", cosine(F.col("ea"), F.col("eb")))
-        .filter(F.col("cos") >= threshold)
-        .select("vec_a", "vec_b")
-    )
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle generators
 # ---------------------------------------------------------------------------

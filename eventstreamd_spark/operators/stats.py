@@ -14,19 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from eventstreamd_spark.operators.routing import Listener
-
-
-def listener_connections(spark: SparkSession, listeners: list[Listener]) -> DataFrame:
-    """The /stats "connections" projection (stats.py:35-44) as a table."""
-    rows = [
-        (li.name, li.subsystem, list(li.filters))
-        for li in listeners
-    ]
-    return spark.createDataFrame(
-        rows, "listener string, subsystem string, filters array<string>"
-    )
-
 
 def subsystem_stats(df: DataFrame, subsystem_col: str = "event_type") -> DataFrame:
     """Per-subsystem operational aggregate over the event stream."""

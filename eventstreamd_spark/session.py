@@ -39,6 +39,40 @@ _TIMESTAMP_COLS: dict[str, list[str]] = {
 }
 
 
+# Initial shuffle width as a multiple of spark.sql.shuffle.partitions
+# (SCALE.md §17): start wide, let AQE coalesce.
+INITIAL_SHUFFLE_MULT = 8
+
+# The largest default driver heap, whatever the host.
+MAX_DRIVER_MB = 48 * 1024
+
+
+def driver_memory(physical_bytes: int, cgroup_max: str | None) -> str:
+    """Default ``spark.driver.memory``: half of the memory this process
+    can use, the lower of ``physical_bytes`` and a cgroup v2
+    ``memory.max`` value (``"max"`` or ``None``: no limit), at most
+    ``MAX_DRIVER_MB``.  The JVM may grow toward its heap limit before a
+    full collection, so a heap above the host's memory ends in the OOM
+    killer, not in GC."""
+    usable = physical_bytes
+    if cgroup_max and cgroup_max.strip() != "max":
+        usable = min(usable, int(cgroup_max))
+    return f"{min(usable // 2 // 2**20, MAX_DRIVER_MB)}m"
+
+
+def _host_memory() -> tuple[int, str | None]:
+    """Physical memory in bytes and this process's cgroup v2
+    ``memory.max`` (``None`` without a v2 memory controller)."""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/proc/self/cgroup") as f:
+            path = next(ln[3:].strip() for ln in f if ln.startswith("0::"))
+        with open(f"/sys/fs/cgroup{path.rstrip('/')}/memory.max") as f:
+            return physical, f.read()
+    except (OSError, StopIteration):
+        return physical, None
+
+
 def get_spark(
     app_name: str = "eventstreamd-spark",
     cpus: int | None = None,
@@ -76,20 +110,17 @@ def get_spark(
         # exponent from 1.14 back to 1.05 ~ the claimed ~N.  Small
         # queries are unaffected: AQE coalesces them back to a handful
         # of partitions at runtime.
-        # SPARK_GRAFT_INITIAL_SHUFFLE_MULT exists for A/B adjudication
-        # of the wide-start tax on tiny shuffles (SCALE.md §17): 1
-        # reverts to the pinned-width behavior, 8 is the ship default.
         .config(
             "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(
-                int(os.environ.get("SPARK_GRAFT_INITIAL_SHUFFLE_MULT", "8"))
-                * shuffle
-            ),
+            str(INITIAL_SHUFFLE_MULT * shuffle),
         )
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(*_host_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # keep catalog state out of the repo: managed tables (bucketing)
@@ -146,10 +177,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # Session tz is UTC, so the instant is unchanged.
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -102,3 +102,31 @@ def test_payload_schema_profile_types_and_twin(spark) -> None:
     # user 14: augmented (14 % 7 == 0) -> "opt": null present once
     assert by_key["opt"][1] == 1 and by_key["opt"][2] == 1
     assert by_key["opt"][4] == "null"
+
+
+def _filter_conditions(df) -> list[str]:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [
+        ln.split("Filter ", 1)[1]
+        for ln in plan.splitlines()
+        if ln.lstrip(" :+-").startswith("Filter ")
+    ]
+
+
+def test_envelope_filter_is_one_cached_barrier(spark) -> None:
+    """validate_envelope filters through plans.barriers.filter_once: a
+    rebuilt envelope is the same plan (a seeded barrier, so the daemon's
+    replay, which rebuilds it per reconnect, hits the codegen cache),
+    and neither it nor the routing fan-out above it re-derives its
+    predicate from variant probes inside FilterExec."""
+    from eventstreamd_spark.operators.routing import Listener, deliveries
+
+    raw = _lines(spark, GOOD, "{oops")
+    env = validate_envelope(raw)
+    assert env.semanticHash() == validate_envelope(raw).semanticHash()
+    fan = deliveries(env, [Listener("l", "s1", ("k>=1",))], payload_col="data")
+    for df in (env, fan):
+        conds = _filter_conditions(df)
+        assert conds
+        for cond in conds:
+            assert not any(p in cond for p in ("parseJson", "parse_json", "variant_get")), cond
