@@ -29,6 +29,7 @@ Design for 100 TB of blobs:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import pandas as pd
@@ -64,6 +65,12 @@ FEATURE_SCHEMA = (
 # whenever any synth function changes semantics.
 
 _MEDIA_FIXTURE_VERSION = "v3-r11-balanced-h"
+# <repo>/.scratch/media_fixture/<version>/<sf tag>/<kind>.parquet
+MEDIA_FIXTURE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".scratch",
+    "media_fixture",
+)
 
 
 def _media_builders() -> dict:
@@ -94,7 +101,6 @@ def _source_fingerprint(sf_dir: str) -> str:
     same path invalidates the fixture instead of silently serving a
     stale corpus to every registered media query (round-11 ADVICE)."""
     import hashlib
-    import os
 
     src = os.path.join(sf_dir, "documents.parquet")
     h = hashlib.sha1()
@@ -114,7 +120,6 @@ def _fixture_tag(sf_dir: str) -> str:
     """(basename, path-hash, content-fingerprint) tag of the disk
     fixture paths."""
     import hashlib
-    import os
 
     return (
         os.path.basename(os.path.normpath(sf_dir))
@@ -141,16 +146,12 @@ def cached_media(spark, sf_dir: str, kind: str) -> DataFrame:
     from them (decode + fingerprint) are the work the registered
     queries measure, so they are never persisted across runs; the
     operators share them within a session through ``plans.memo``."""
-    import os
     import shutil
 
     from eventstreamd_spark.session import load_table
 
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    tag = _fixture_tag(sf_dir)
     cache = os.path.join(
-        repo, ".scratch", "media_fixture", _MEDIA_FIXTURE_VERSION, tag,
+        MEDIA_FIXTURE_ROOT, _MEDIA_FIXTURE_VERSION, _fixture_tag(sf_dir),
         f"{kind}.parquet",
     )
     success = os.path.join(cache, "_SUCCESS")

@@ -77,6 +77,8 @@ def get_spark(
     app_name: str = "eventstreamd-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
+    *,
+    fork_server: bool = True,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -91,6 +93,19 @@ def get_spark(
       high initial value.
     - session timezone pinned to UTC so timestamp semantics are portable
       (and match the DuckDB correctness oracle).
+    - streaming checkpoints written through Hadoop's ``FileSystem`` API.
+      The default ``FileContext`` manager resolves symlinks on every
+      rename, which on a host without Hadoop's native library spawns a
+      ``readlink`` child of the driver JVM for each offset and commit
+      log entry.
+
+    ``fork_server=False`` (the streaming daemon's session) sets
+    ``spark.python.use.daemon=false``: each Python process the JVM
+    starts is one process that exits after its call, instead of a
+    ``pyspark.daemon`` fork server per kind that lives as long as the
+    JVM.  Only a session that runs no Python UDF should turn it off:
+    without the fork server every Python task starts a fresh
+    interpreter.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or cpus
@@ -117,6 +132,12 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.use.daemon", str(fork_server).lower())
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM") or driver_memory(*_host_memory()),
@@ -191,11 +212,10 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     has enough partitions (the 100 TB case — thousands of file splits),
     this is a no-op, adding no shuffle at scale.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
-    try:
-        current = df.rdd.getNumPartitions()
-    except Exception:  # streaming plans can't expose an RDD; leave as-is
+    if df.isStreaming:  # a streaming plan has no RDD; leave it as-is
         return df
+    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    current = df.rdd.getNumPartitions()
     return df.repartition(target) if current < target else df
 
 

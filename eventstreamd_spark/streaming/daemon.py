@@ -25,13 +25,34 @@ reference's "whoever is subscribed now" routing (dispatcher.py:93-95) —
 unless it reconnects with ``Last-Event-ID``, in which case the missed
 gap is replayed from the durable spool first (pipeline.make_replay_fn;
 the reference emits ids but never reads the header).
+
+Start-up order: the Unix socket and the HTTP server open first, before
+any Spark work, so producers and subscribers are served within a
+fraction of a second of launch.  The session (JVM launch) and the
+pipeline start (source registration, plan, first offsets) then run in a
+worker thread.  Events sent meanwhile are spooled and reach every
+subscriber connected before batch 0 from batch 0 on; a
+``Last-Event-ID`` reconnect during start-up waits for the pipeline and
+is then replayed.
+
+Processes: the Python driver and its JVM, plus one-shot Python
+children of the JVM.  The daemon runs no Python UDF, so every Python
+process the JVM starts is either a data-source planner call
+(``lookup_data_sources``, ``create_data_source``,
+``plan_data_source_read``) or the stream source runner that serves the
+jsonlines reader.  The session is built with ``fork_server=False``
+(``spark.python.use.daemon=false``): each planner is one process that
+exits after its call, and no ``pyspark.daemon`` fork server stays
+resident.
 """
 
 from __future__ import annotations
 
 import asyncio
+import functools
 import logging
 import os
+from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
@@ -47,7 +68,7 @@ logger = logging.getLogger(__name__)
 
 
 async def run_daemon(
-    spark: SparkSession,
+    session_factory: Callable[[], SparkSession],
     socket_path: str,
     work_dir: str,
     host: str = "127.0.0.1",
@@ -66,6 +87,9 @@ async def run_daemon(
 
     ``work_dir`` holds the spool and the streaming checkpoint (the two
     pieces of durable state; on a cluster both live on shared storage).
+    The front-ends open first; ``session_factory()`` and the pipeline
+    start then run in a worker thread, so the event loop serves while
+    the JVM comes up.
     """
     from eventstreamd_spark.streaming.config import PING_INTERVAL
 
@@ -74,9 +98,28 @@ async def run_daemon(
     os.makedirs(spool_dir, exist_ok=True)
 
     loop = asyncio.get_running_loop()
-    registry = ListenerRegistry(
-        loop=loop, replay_fn=pipeline.make_replay_fn(spark, spool_dir)
-    )
+    # resolved with pipeline.make_replay_fn's replay once the pipeline runs
+    replay_ready: asyncio.Future = loop.create_future()
+
+    async def replay(
+        subsystem: str, filters: tuple[str, ...], last_id: str
+    ) -> list[str]:
+        # shielded: a cancelled waiter must not cancel the shared future
+        replay_fn = await asyncio.shield(replay_ready)
+        return await asyncio.to_thread(replay_fn, subsystem, filters, last_id)
+
+    registry = ListenerRegistry(loop=loop, replay_fn=replay)
+
+    def start_spark():
+        spark = session_factory()
+        query = pipeline.start_envelope_pipeline(
+            spark,
+            spool_dir,
+            registry.push_batch,
+            checkpoint,
+            trigger_seconds=trigger_seconds or 1,
+        )
+        return pipeline.make_replay_fn(spark, spool_dir), query
 
     socket_server = await run_socket_server(
         socket_path,
@@ -94,18 +137,17 @@ async def run_daemon(
         cert_file=cert_file,
         key_file=key_file,
     )
-    query = pipeline.start_envelope_pipeline(
-        spark,
-        spool_dir,
-        registry.push_batch,
-        checkpoint,
-        trigger_seconds=trigger_seconds or 1,
-    )
-    logger.info("daemon up: socket=%s http=%s:%s", socket_path, host, port)
+    logger.info("daemon serving: socket=%s http=%s:%s", socket_path, host, port)
+    query = None
     try:
+        replay_fn, query = await asyncio.to_thread(start_spark)
+        replay_ready.set_result(replay_fn)
+        logger.info("pipeline up: %s", query.id)
         await (stop_event or asyncio.Event()).wait()
     finally:
-        query.stop()
+        replay_ready.cancel()  # no-op once set; else ends waiting replays
+        if query is not None:
+            query.stop()
         socket_server.close()
         http_server.close()
         await socket_server.wait_closed()
@@ -140,10 +182,11 @@ def main() -> None:  # pragma: no cover - thin CLI shim
     logging.getLogger("asyncio").disabled = not cfg.debug
     from eventstreamd_spark.streaming.plugins import load_auth_plugin
 
-    spark = get_spark("eventstreamd-spark-daemon")
     asyncio.run(
         run_daemon(
-            spark,
+            functools.partial(
+                get_spark, "eventstreamd-spark-daemon", fork_server=False
+            ),
             args.socket or cfg.socket_file,
             args.work_dir or cfg.work_dir,
             args.host,

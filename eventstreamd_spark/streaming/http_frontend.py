@@ -91,7 +91,8 @@ class ListenerRegistry:
     def __init__(
         self,
         loop: asyncio.AbstractEventLoop | None = None,
-        replay_fn: Callable[[str, tuple[str, ...], str], list[str]] | None = None,
+        replay_fn: Callable[[str, tuple[str, ...], str], Awaitable[list[str]]]
+        | None = None,
     ) -> None:
         self.connections: dict[int, Connection] = {}
         self.total_connections = 0
@@ -100,7 +101,8 @@ class ListenerRegistry:
         # push_batch runs on Spark's streaming thread; asyncio.Queue is
         # not thread-safe, so deliveries hop through the event loop.
         self.loop = loop
-        # Last-Event-ID reconnect replay (pipeline.make_replay_fn);
+        # Last-Event-ID reconnect replay, a coroutine function
+        # (daemon.run_daemon wraps pipeline.make_replay_fn);
         # None => header ignored, matching the reference's behavior
         self.replay_fn = replay_fn
 
@@ -317,22 +319,22 @@ async def handle_http(
         )
         writer.write(head.encode())
         await writer.drain()
-        # Last-Event-ID replay: close the reconnect gap from the durable
-        # spool BEFORE live frames (which start at the next micro-batch).
-        # At-least-once across the splice: an event can appear in both
-        # replay and the first live batch; dedup-by-id is the client's
-        # (or dedup_by_id's) job, per SSE convention.  The Spark batch
-        # job runs in a worker thread so the event loop keeps serving.
-        last_id = headers.get("last-event-id")
-        if last_id and registry.replay_fn is not None:
-            loop = asyncio.get_running_loop()
-            frames = await loop.run_in_executor(
-                None, registry.replay_fn, conn.subsystem, filters, last_id
-            )
-            for frame in frames:
-                writer.write(_chunk(frame))
-            await writer.drain()
         try:
+            # Last-Event-ID replay: close the reconnect gap from the
+            # durable spool BEFORE live frames (which start at the next
+            # micro-batch).  At-least-once across the splice: an event
+            # can appear in both replay and the first live batch;
+            # dedup-by-id is the client's (or dedup_by_id's) job, per
+            # SSE convention.  ``replay_fn`` is a coroutine, so its
+            # Spark job (and, during daemon start-up, its wait for the
+            # pipeline) leaves the event loop serving.
+            last_id = headers.get("last-event-id")
+            if last_id and registry.replay_fn is not None:
+                for frame in await registry.replay_fn(
+                    conn.subsystem, filters, last_id
+                ):
+                    writer.write(_chunk(frame))
+                await writer.drain()
             while True:
                 # O9: session expiry — wake at whichever comes first, the
                 # ping deadline or the auth-supplied logout time (exact,

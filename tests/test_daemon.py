@@ -7,6 +7,8 @@ from __future__ import annotations
 import asyncio
 import datetime
 import json
+import re
+import time
 
 from eventstreamd_spark.streaming.daemon import run_daemon
 from eventstreamd_spark.streaming.http_frontend import AuthError
@@ -61,7 +63,7 @@ def test_daemon_end_to_end(spark, tmp_path) -> None:
         stop = asyncio.Event()
         daemon = asyncio.create_task(
             run_daemon(
-                spark,
+                lambda: spark,
                 sock,
                 str(tmp_path / "work"),
                 port=PORT,
@@ -150,7 +152,7 @@ def test_expiry_logout(spark, tmp_path) -> None:
         stop = asyncio.Event()
         daemon = asyncio.create_task(
             run_daemon(
-                spark,
+                lambda: spark,
                 sock,
                 str(tmp_path / "work"),
                 port=PORT + 1,
@@ -265,7 +267,7 @@ def test_last_event_id_replay(spark, tmp_path) -> None:
         stop = asyncio.Event()
         daemon = asyncio.create_task(
             run_daemon(
-                spark,
+                lambda: spark,
                 sock,
                 str(tmp_path / "work"),
                 port=PORT + 2,
@@ -463,7 +465,7 @@ def test_auth_plugin_contract(spark, tmp_path) -> None:
         stop = asyncio.Event()
         daemon = asyncio.create_task(
             run_daemon(
-                spark, sock, str(tmp_path / "work"),
+                lambda: spark, sock, str(tmp_path / "work"),
                 port=PORT + 3, trigger_seconds=1, auth=auth, stop_event=stop,
             )
         )
@@ -688,3 +690,229 @@ def test_stray_jsonl_file_is_not_spooled(spark, tmp_path) -> None:
     assert _run_stream(spark, spool, ckpt) == ["a1", "a2"]
     _spool_lines(spool, ["b1"])
     assert _run_stream(spark, spool, ckpt) == ["b1"]
+
+
+def _sse_ids(buf: str) -> list[str]:
+    return re.findall(r"^id: (\S+)\r$", buf, flags=re.M)
+
+
+async def _subscribe(port: int, extra: str = "") -> tuple:
+    r, w = await asyncio.open_connection("127.0.0.1", port)
+    w.write(f"GET /events?subsystem=orders HTTP/1.1\r\n{extra}\r\n".encode())
+    await w.drain()
+    head = await _read_headers(r)
+    assert "200 OK" in head and "text/event-stream" in head
+    return r, w
+
+
+def test_front_ends_serve_before_spark(spark, tmp_path) -> None:
+    """The socket, subscriptions, /stats and a Last-Event-ID reconnect
+    are all served while the session factory is still blocked; once it
+    returns, batch 0 delivers every event sent during start-up, and the
+    reconnect gets its gap from the spool."""
+    import os
+    import threading
+
+    sock = str(tmp_path / "evtd.sock")
+    spool = tmp_path / "work" / "spool"
+    release = threading.Event()
+    entered = threading.Event()
+
+    def factory():
+        entered.set()
+        assert release.wait(120), "factory never released"
+        return spark
+
+    async def scenario() -> None:
+        stop = asyncio.Event()
+        daemon = asyncio.create_task(
+            run_daemon(
+                factory, sock, str(tmp_path / "work"),
+                port=PORT + 4, trigger_seconds=1, stop_event=stop,
+            )
+        )
+        try:
+            for _ in range(100):
+                if daemon.done():
+                    daemon.result()
+                try:
+                    r, w = await asyncio.open_unix_connection(sock)
+                    break
+                except (FileNotFoundError, ConnectionRefusedError):
+                    await asyncio.sleep(0.1)
+            else:
+                raise AssertionError("socket server never came up")
+            lr, lw = await _subscribe(PORT + 4)
+
+            sent = [f"s{i}" for i in range(4)]
+            w.write("".join(_msg("orders", i, e) + "\n" for i, e in enumerate(sent)).encode())
+            await w.drain()
+            for _ in range(100):  # the spool holds all four
+                text = "".join(p.read_text() for p in spool.glob("*.jsonl"))
+                if all(f'"{e}"' in text for e in sent):
+                    break
+                await asyncio.sleep(0.1)
+            else:
+                raise AssertionError("events never reached the spool")
+
+            sr, sw = await asyncio.open_connection("127.0.0.1", PORT + 4)
+            sw.write(b"GET /stats HTTP/1.1\r\n\r\n")
+            await sw.drain()
+            body = await _read_until(sr, "}", timeout=10)
+            stats = json.loads(body.split("\r\n\r\n", 1)[1])
+            assert [c["subsystem"] for c in stats["connections"]] == ["orders"]
+            sw.close()
+
+            rr, rw = await _subscribe(PORT + 4, "Last-Event-ID: s1\r\n")
+            assert entered.is_set() and not release.is_set()
+            assert not daemon.done()
+            assert not os.path.exists(tmp_path / "work" / "checkpoint")
+
+            release.set()
+            got = _sse_ids(await _read_until(lr, "id: s3"))
+            assert got == sent
+            # the gap (replayed first), then batch 0's live frames
+            gap = _sse_ids(await _read_until(rr, "id: s3"))
+            assert gap[:2] == ["s2", "s3"]
+            lw.close()
+            rw.close()
+            w.close()
+        finally:
+            release.set()
+            stop.set()
+            await asyncio.wait_for(daemon, 60)
+
+    asyncio.run(scenario())
+
+
+def _cmdline(pid: int) -> list[str]:
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            return f.read().decode("latin-1").split("\0")
+    except OSError:
+        return []
+
+
+def _start_time(pid: int) -> int | None:
+    """The start time of ``pid`` (clock ticks after boot), or None once
+    it has exited (a zombie has exited too)."""
+    try:
+        with open(f"/proc/{pid}/stat", "rb") as f:
+            raw = f.read().decode("latin-1")
+    except OSError:
+        return None
+    fields = raw[raw.rindex(")") + 2 :].split()
+    return None if fields[0] == "Z" else int(fields[19])
+
+
+def test_daemon_process_tree(tmp_path) -> None:
+    """The daemon as its own process: no ``pyspark.daemon`` fork server
+    ever runs in its tree, no ``readlink`` child is spawned once frames
+    flow (checkpoint writes go through the FileSystem manager), and
+    SIGTERM leaves no process of the tree behind."""
+    import os
+    import shutil
+    import signal
+    import socket as socketlib
+    import subprocess
+    import sys
+    import threading
+
+    from perfbench.procs import tree
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shim = tmp_path / "bin"
+    shim.mkdir()
+    log = tmp_path / "readlink.log"
+    log.touch()
+    (shim / "readlink").write_text(
+        f'#!/bin/sh\necho "$*" >> {log}\nexec {shutil.which("readlink")} "$@"\n'
+    )
+    (shim / "readlink").chmod(0o755)
+    with socketlib.socket() as s:
+        s.bind(("127.0.0.1", 0))
+        port = s.getsockname()[1]
+    sock = str(tmp_path / "d.sock")
+    ini = tmp_path / "daemon.ini"
+    ini.write_text(
+        f"[General]\nSocketFile = {sock}\nHTTPPort = {port}\n"
+        f"[Spark]\nWorkDir = {tmp_path / 'work'}\nTriggerSeconds = 1\n"
+    )
+    env = dict(os.environ, PATH=f"{shim}:{os.environ['PATH']}")
+    with open(tmp_path / "daemon.err", "wb") as err:
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "eventstreamd_spark.streaming.daemon", "-c", str(ini)],
+            cwd=repo, env=env, stdin=subprocess.DEVNULL, stdout=err, stderr=err,
+            start_new_session=True,
+        )
+    # (pid, start time) -> command line of every process seen in the tree
+    seen: dict[tuple[int, int], list[str]] = {}
+    done = threading.Event()
+
+    def sample() -> None:
+        while not done.is_set():
+            for pid in tree([proc.pid]):
+                key = (pid, _start_time(pid))
+                if key not in seen and key[1] is not None and (cmd := _cmdline(pid)):
+                    seen[key] = cmd
+            done.wait(0.05)
+
+    sampler = threading.Thread(target=sample)
+    sampler.start()
+
+    async def scenario() -> tuple[int, int]:
+        for _ in range(600):
+            assert proc.poll() is None, (tmp_path / "daemon.err").read_text()[-3000:]
+            try:
+                r, w = await asyncio.open_unix_connection(sock)
+                break
+            except (FileNotFoundError, ConnectionRefusedError):
+                await asyncio.sleep(0.1)
+        else:
+            raise AssertionError("socket server never came up")
+        lr, lw = await _subscribe(port)
+        buf = ""
+        for i in range(400):  # produce until the first frame arrives
+            w.write((_msg("orders", i, f"w{i}") + "\n").encode())
+            await w.drain()
+            try:
+                buf += (await asyncio.wait_for(lr.read(4096), 0.5)).decode()
+            except asyncio.TimeoutError:
+                pass
+            if "id: w" in buf:
+                break
+        else:
+            raise AssertionError("no frame arrived")
+        at_first_frame = len(log.read_text().splitlines())
+        for i in range(3):  # each frame waited for: three more micro-batches
+            w.write((_msg("orders", i, f"m{i}") + "\n").encode())
+            await w.drain()
+            await _read_until(lr, f"id: m{i}", timeout=60)
+        lw.close()
+        w.close()
+        return at_first_frame, len(log.read_text().splitlines())
+
+    try:
+        before, after = asyncio.run(scenario())
+    finally:
+        done.set()
+        sampler.join()
+        proc.send_signal(signal.SIGTERM)
+        try:
+            proc.wait(60)
+        except subprocess.TimeoutExpired:
+            os.killpg(proc.pid, signal.SIGKILL)
+            raise
+        for _ in range(600):
+            left = [key for key in seen if _start_time(key[0]) == key[1]]
+            if not left:
+                break
+            time.sleep(0.1)
+        for pid, _ in left:
+            os.kill(pid, signal.SIGKILL)
+        left = [seen[key] for key in left]
+    assert not [c for c in seen.values() if "pyspark.daemon" in c], sorted(
+        " ".join(c) for c in seen.values()
+    )
+    assert after == before, log.read_text()
+    assert not left, left

@@ -1,8 +1,15 @@
-"""Session defaults that follow the host."""
+"""Session defaults that follow the host, and `fan_out`'s streaming guard."""
 
 from __future__ import annotations
 
-from eventstreamd_spark.session import MAX_DRIVER_MB, _host_memory, driver_memory
+import pytest
+
+from eventstreamd_spark.session import (
+    MAX_DRIVER_MB,
+    _host_memory,
+    driver_memory,
+    fan_out,
+)
 
 GIB = 2**30
 
@@ -20,3 +27,19 @@ def test_default_driver_heap_fits_this_host() -> None:
     physical, cgroup_max = _host_memory()
     heap_mb = int(driver_memory(physical, cgroup_max).removesuffix("m"))
     assert 0 < heap_mb * 2**20 <= physical // 2
+
+
+def test_fan_out_leaves_a_streaming_frame_alone(spark) -> None:
+    stream = spark.readStream.format("rate").load()
+    assert fan_out(stream) is stream
+
+
+def test_fan_out_raises_what_a_batch_frame_raises(spark, monkeypatch) -> None:
+    df = spark.range(4).coalesce(1)
+
+    def broken(self):
+        raise RuntimeError("rdd unavailable")
+
+    monkeypatch.setattr(type(df), "rdd", property(broken))
+    with pytest.raises(RuntimeError, match="rdd unavailable"):
+        fan_out(df)

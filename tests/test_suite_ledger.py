@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import fnmatch
 import json
 import os
 import subprocess
@@ -53,6 +54,16 @@ def test_ledger_jobs_all_belong_to_ledger_groups(ledger) -> None:
     # the session fires no job outside a (pass, query, step) group, so
     # the rows account for every job in the event log
     assert ledger["ungrouped_jobs"] == 0
+
+
+def test_ledger_names_the_fixtures_it_built(ledger) -> None:
+    # the blob fixtures that appeared during the run: whether a first
+    # pass includes a one-time fixture build
+    built = ledger["fixtures_built"]
+    assert isinstance(built, list) and built == sorted(built)
+    for path in built:
+        assert fnmatch.fnmatchcase(path, ".scratch/media_fixture/*/*/*.parquet")
+        assert os.path.isdir(os.path.join(REPO, path))
 
 
 def test_ledger_steady_pass_hits_the_memo(ledger) -> None:

@@ -19,19 +19,23 @@ Prints ONE JSON object:
      "queries": {name: {"first": ROW, "steady": ROW}},
      "passes": {"first": TOTAL, "steady": TOTAL},
      "failures": {"first": {name: error}, "steady": {...}},
-     "ungrouped_jobs": <jobs outside every ledger group>}
+     "ungrouped_jobs": <jobs outside every ledger group>,
+     "fixtures_built": [<.scratch/media_fixture/.../KIND.parquet>, ...]}
 
 ROW is build_s, action_s (wall seconds), build_jobs, action_jobs,
 stages, single_task_stages and task_s (executor run time).  A stage is
 counted for the first job that lists it, so a shuffle reused by a later
 query is not counted twice.  TOTAL holds the sums of its pass's rows,
 plus wall_s, jobs, build_share (build_s / wall_s), single_task_share
-and utilization (task_s / (wall_s * cores)).
+and utilization (task_s / (wall_s * cores)).  ``fixtures_built`` lists
+the blob fixtures (``operators.multimodal``) that did not exist before
+the run: a first pass that built one includes its one-time build.
 """
 
 from __future__ import annotations
 
 import dataclasses
+import glob
 import json
 import os
 import shutil
@@ -48,6 +52,14 @@ PASSES = ("first", "steady")
 STEPS = ("build", "action")
 ROW = ("build_s", "action_s", "build_jobs", "action_jobs", "stages",
        "single_task_stages", "task_s")
+
+
+def media_fixtures() -> set[str]:
+    """The blob fixture directories on disk, relative to the repo."""
+    from eventstreamd_spark.operators.multimodal import MEDIA_FIXTURE_ROOT
+
+    pattern = os.path.join(MEDIA_FIXTURE_ROOT, "*", "*", "*.parquet")
+    return {os.path.relpath(p, REPO) for p in glob.glob(pattern)}
 
 
 def group(pass_name: str, name: str, step: str) -> str:
@@ -162,6 +174,7 @@ def main() -> None:
     sys.stdout.flush()
     os.dup2(2, 1)
     log_dir = tempfile.mkdtemp(prefix="suite-ledger-")
+    fixtures = media_fixtures()
     try:
         walls, failures, cores = run(sf_dir, names, log_dir)
         queries, passes, ungrouped = reduce_log(log_dir, walls, cores)
@@ -174,6 +187,7 @@ def main() -> None:
         "passes": passes,
         "failures": failures,
         "ungrouped_jobs": ungrouped,
+        "fixtures_built": sorted(media_fixtures() - fixtures),
     }
     os.write(real_stdout, (json.dumps(out) + "\n").encode())
     os.close(real_stdout)
