@@ -9,6 +9,7 @@ pandas-exchange paths).
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -73,12 +74,27 @@ def _host_memory() -> tuple[int, str | None]:
         return physical, None
 
 
+# The environment variables the JVM launcher reads options from, and a
+# collector selection among them (-XX:+UseSerialGC, -XX:+UseG1GC, ...).
+_JAVA_ENV_OPTIONS = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
+_COLLECTOR = re.compile(r"-XX:\+Use\w+GC\b")
+
+
+def _daemon_collector(env: dict[str, str]) -> list[str]:
+    """The streaming daemon's collector option: the serial collector,
+    or nothing when ``env`` already selects a collector (the JVM refuses
+    to start with two: "Multiple garbage collectors selected")."""
+    if any(_COLLECTOR.search(env.get(k, "")) for k in _JAVA_ENV_OPTIONS):
+        return []
+    return ["-XX:+UseSerialGC"]
+
+
 def get_spark(
     app_name: str = "eventstreamd-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     *,
-    fork_server: bool = True,
+    streaming_daemon: bool = False,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
@@ -99,16 +115,32 @@ def get_spark(
       ``readlink`` child of the driver JVM for each offset and commit
       log entry.
 
-    ``fork_server=False`` (the streaming daemon's session) sets
-    ``spark.python.use.daemon=false``: each Python process the JVM
-    starts is one process that exits after its call, instead of a
-    ``pyspark.daemon`` fork server per kind that lives as long as the
-    JVM.  Only a session that runs no Python UDF should turn it off:
-    without the fork server every Python task starts a fresh
-    interpreter.
+    ``streaming_daemon=True`` builds the streaming daemon's session,
+    which runs no Python UDF and holds little live data:
+
+    - ``spark.python.use.daemon=false``: each Python process the JVM
+      starts is one process that exits after its call, instead of a
+      ``pyspark.daemon`` fork server per kind that lives as long as the
+      JVM.  Without the fork server every Python task starts a fresh
+      interpreter, which only a session without Python UDFs can afford.
+    - ``-XX:+UseSerialGC`` in ``spark.driver.extraJavaOptions``: a
+      micro-batch's rows are garbage by the next trigger, and the live
+      set stays near 80 MB.  G1 grew a 462 MB heap for it and the JVM
+      peaked at 965 MB; on Serial the heap stays at its initial size
+      (RAM/64) and the JVM peaked at 566 MB (SCALE.md §24).  When
+      ``JAVA_TOOL_OPTIONS``, ``JDK_JAVA_OPTIONS`` or ``_JAVA_OPTIONS``
+      already selects a collector, none is added (``_daemon_collector``).
+
+    The batch session keeps G1: its tasks run on every core, and each
+    of Serial's pauses stops them all while one thread collects.  On
+    the dedup suite Serial saved 460-840 MB but slowed the steady pass
+    in three of four seeds (SCALE.md §24).
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or cpus
+    java_options = ["-Dderby.system.home=/tmp/eventstreamd_spark_derby"]
+    if streaming_daemon:
+        java_options += _daemon_collector(os.environ)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -132,7 +164,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.python.use.daemon", str(fork_server).lower())
+        .config("spark.python.use.daemon", str(not streaming_daemon).lower())
         .config(
             "spark.sql.streaming.checkpointFileManagerClass",
             "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -153,10 +185,7 @@ def get_spark(
                 "SPARK_GRAFT_WAREHOUSE", "/tmp/eventstreamd_spark_warehouse"
             ),
         )
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Dderby.system.home=/tmp/eventstreamd_spark_derby",
-        )
+        .config("spark.driver.extraJavaOptions", " ".join(java_options))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

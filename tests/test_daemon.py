@@ -806,10 +806,11 @@ def _start_time(pid: int) -> int | None:
 
 
 def test_daemon_process_tree(tmp_path) -> None:
-    """The daemon as its own process: no ``pyspark.daemon`` fork server
-    ever runs in its tree, no ``readlink`` child is spawned once frames
-    flow (checkpoint writes go through the FileSystem manager), and
-    SIGTERM leaves no process of the tree behind."""
+    """The daemon as its own process: its JVM runs the serial collector,
+    no ``pyspark.daemon`` fork server ever runs in its tree, no
+    ``readlink`` child is spawned once frames flow (checkpoint writes go
+    through the FileSystem manager), and SIGTERM leaves no process of
+    the tree behind."""
     import os
     import shutil
     import signal
@@ -818,6 +819,7 @@ def test_daemon_process_tree(tmp_path) -> None:
     import sys
     import threading
 
+    from eventstreamd_spark.session import _JAVA_ENV_OPTIONS
     from perfbench.procs import tree
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -838,7 +840,8 @@ def test_daemon_process_tree(tmp_path) -> None:
         f"[General]\nSocketFile = {sock}\nHTTPPort = {port}\n"
         f"[Spark]\nWorkDir = {tmp_path / 'work'}\nTriggerSeconds = 1\n"
     )
-    env = dict(os.environ, PATH=f"{shim}:{os.environ['PATH']}")
+    env = {k: v for k, v in os.environ.items() if k not in _JAVA_ENV_OPTIONS}
+    env["PATH"] = f"{shim}:{os.environ['PATH']}"
     with open(tmp_path / "daemon.err", "wb") as err:
         proc = subprocess.Popen(
             [sys.executable, "-m", "eventstreamd_spark.streaming.daemon", "-c", str(ini)],
@@ -847,14 +850,19 @@ def test_daemon_process_tree(tmp_path) -> None:
         )
     # (pid, start time) -> command line of every process seen in the tree
     seen: dict[tuple[int, int], list[str]] = {}
+    # the same for every JVM, once it runs java (spark-class execs it)
+    jvms: dict[tuple[int, int], list[str]] = {}
     done = threading.Event()
 
     def sample() -> None:
         while not done.is_set():
             for pid in tree([proc.pid]):
                 key = (pid, _start_time(pid))
-                if key not in seen and key[1] is not None and (cmd := _cmdline(pid)):
-                    seen[key] = cmd
+                if key[1] is None or not (cmd := _cmdline(pid)):
+                    continue
+                seen.setdefault(key, cmd)
+                if os.path.basename(cmd[0]) == "java":
+                    jvms[key] = cmd
             done.wait(0.05)
 
     sampler = threading.Thread(target=sample)
@@ -914,5 +922,9 @@ def test_daemon_process_tree(tmp_path) -> None:
     assert not [c for c in seen.values() if "pyspark.daemon" in c], sorted(
         " ".join(c) for c in seen.values()
     )
+    drivers = [  # the driver JVM, not spark-submit's launcher
+        c for c in jvms.values() if "org.apache.spark.launcher.Main" not in c
+    ]
+    assert drivers and all("-XX:+UseSerialGC" in c for c in drivers), drivers
     assert after == before, log.read_text()
     assert not left, left

@@ -1,17 +1,49 @@
-"""Session defaults that follow the host, and `fan_out`'s streaming guard."""
+"""Session defaults that follow the host, the streaming daemon's
+collector, and `fan_out`'s streaming guard."""
 
 from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
 
 import pytest
 
 from eventstreamd_spark.session import (
+    _JAVA_ENV_OPTIONS,
     MAX_DRIVER_MB,
+    _daemon_collector,
     _host_memory,
     driver_memory,
     fan_out,
 )
 
 GIB = 2**30
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Prints the names of the collectors a fresh session's JVM runs.
+_COLLECTORS = """
+import json, sys
+from eventstreamd_spark.session import get_spark
+spark = get_spark("collector-probe", cpus=1, streaming_daemon=sys.argv[1] == "1")
+beans = spark._jvm.java.lang.management.ManagementFactory.getGarbageCollectorMXBeans()
+print(json.dumps([bean.getName() for bean in beans]))
+spark.stop()
+"""
+
+
+def collectors(streaming_daemon: bool, **env: str) -> list[str]:
+    """The sorted collector names of a session built in a fresh process
+    (and so a fresh JVM) whose JVM option variables are exactly ``env``."""
+    base = {k: v for k, v in os.environ.items() if k not in _JAVA_ENV_OPTIONS}
+    out = subprocess.run(
+        [sys.executable, "-c", _COLLECTORS, str(int(streaming_daemon))],
+        cwd=REPO, env=dict(base, **env), capture_output=True, text=True,
+        timeout=180,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    return sorted(json.loads(out.stdout.splitlines()[-1]))
 
 
 def test_driver_heap_is_half_the_usable_memory() -> None:
@@ -27,6 +59,28 @@ def test_default_driver_heap_fits_this_host() -> None:
     physical, cgroup_max = _host_memory()
     heap_mb = int(driver_memory(physical, cgroup_max).removesuffix("m"))
     assert 0 < heap_mb * 2**20 <= physical // 2
+
+
+def test_streaming_daemon_runs_the_serial_collector() -> None:
+    assert collectors(True) == ["Copy", "MarkSweepCompact"]
+
+
+def test_batch_session_keeps_g1() -> None:
+    names = collectors(False)
+    assert {"G1 Young Generation", "G1 Old Generation"} <= set(names), names
+
+
+def test_collector_from_the_environment_wins() -> None:
+    names = collectors(True, JAVA_TOOL_OPTIONS="-XX:+UseParallelGC")
+    assert names == ["PS MarkSweep", "PS Scavenge"]
+
+
+def test_daemon_collector_guard() -> None:
+    assert _daemon_collector({}) == ["-XX:+UseSerialGC"]
+    assert _daemon_collector({"JAVA_TOOL_OPTIONS": "-Xss4m"}) == ["-XX:+UseSerialGC"]
+    for var in ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS"):
+        for flag in ("-XX:+UseG1GC", "-XX:+UseZGC", "-XX:+UseSerialGC"):
+            assert _daemon_collector({var: f"-Xss4m {flag}"}) == []
 
 
 def test_fan_out_leaves_a_streaming_frame_alone(spark) -> None:
