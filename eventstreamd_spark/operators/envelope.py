@@ -21,7 +21,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from eventstreamd_spark.plans.barriers import filter_once
-from eventstreamd_spark.session import fan_out
 
 ENVELOPE_COLS = ["subsystem", "event_type", "data", "id"]
 
@@ -48,10 +47,9 @@ def validate_envelope(
     # Parse once into a real column; the gate and every projection
     # probe the parsed variant.  (Building them from a fresh
     # try_parse_json expression would re-parse the line per predicate —
-    # JSON parsing is the dominant cost of this operator.)
-    # fan_out: spread a narrow local input across cores (no-op for
-    # streams / wide scans)
-    parsed = fan_out(raw).withColumn("__v", F.try_parse_json(F.col(line_col)))
+    # JSON parsing is the dominant cost of this operator.)  No shuffle:
+    # a caller with a narrow input spreads it first (``fan_out``).
+    parsed = raw.withColumn("__v", F.try_parse_json(F.col(line_col)))
     v = F.col("__v")
     action_ok = (
         (_node_type(v, "$.action") == "STRING")

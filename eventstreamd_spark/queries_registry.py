@@ -51,7 +51,7 @@ from eventstreamd_spark.operators.filters import (
     parse_filter,
 )
 from eventstreamd_spark.plans.memo import shared
-from eventstreamd_spark.session import load_table
+from eventstreamd_spark.session import fan_out, load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -151,7 +151,8 @@ def envelope_validate(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the expected surviving set."""
     events = load_table(spark, sf_dir, "events")
     raw = envelope_op.events_to_raw_lines(events, corrupt_every=7)
-    ok = envelope_op.validate_envelope(raw)
+    # spread the one-file scan across cores before the JSON parse
+    ok = envelope_op.validate_envelope(fan_out(raw))
     return ok.select(
         "subsystem", F.lit("add").alias("event_kind"), "id"
     )

@@ -74,17 +74,46 @@ def _host_memory() -> tuple[int, str | None]:
         return physical, None
 
 
-# The environment variables the JVM launcher reads options from, and a
-# collector selection among them (-XX:+UseSerialGC, -XX:+UseG1GC, ...).
+# The environment variables the JVM launcher reads options from, the
+# deployment's driver JVM options, and a collector selection among them
+# (-XX:+UseSerialGC, -XX:+UseG1GC, ...).
 _JAVA_ENV_OPTIONS = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS")
+_CONF_JAVA_OPTIONS = ("spark.driver.defaultJavaOptions", "spark.driver.extraJavaOptions")
 _COLLECTOR = re.compile(r"-XX:\+Use\w+GC\b")
 
 
-def _daemon_collector(env: dict[str, str]) -> list[str]:
+def _spark_defaults(env: dict[str, str]) -> dict[str, str]:
+    """The deployment's ``spark-defaults.conf`` (in ``SPARK_CONF_DIR``,
+    else ``SPARK_HOME/conf``, where ``spark-submit`` looks), ``{}``
+    without one.  One property a line: ``key value``, ``key=value`` or
+    ``key: value``; ``#`` and ``!`` start a comment line."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    conf_dir = env.get("SPARK_CONF_DIR") or os.path.join(
+        env.get("SPARK_HOME") or _find_spark_home(), "conf"
+    )
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf"), encoding="utf-8") as f:
+            lines = f.read().splitlines()
+    except FileNotFoundError:
+        return {}
+    props: dict[str, str] = {}
+    for line in map(str.strip, lines):
+        if line and line[0] not in "#!":
+            key, value = re.match(r"([^\s=:]*)\s*[=:]?\s*(.*)", line).groups()
+            props[key] = value
+    return props
+
+
+def _daemon_collector(env: dict[str, str], defaults: dict[str, str] | None = None) -> list[str]:
     """The streaming daemon's collector option: the serial collector,
-    or nothing when ``env`` already selects a collector (the JVM refuses
-    to start with two: "Multiple garbage collectors selected")."""
-    if any(_COLLECTOR.search(env.get(k, "")) for k in _JAVA_ENV_OPTIONS):
+    or nothing when ``env`` or the deployment's driver JVM options in
+    ``defaults`` (``_spark_defaults``) already select a collector (the
+    JVM refuses to start with two: "Multiple garbage collectors
+    selected")."""
+    named = [env.get(k, "") for k in _JAVA_ENV_OPTIONS]
+    named += [(defaults or {}).get(k, "") for k in _CONF_JAVA_OPTIONS]
+    if any(_COLLECTOR.search(options) for options in named):
         return []
     return ["-XX:+UseSerialGC"]
 
@@ -129,7 +158,14 @@ def get_spark(
       peaked at 965 MB; on Serial the heap stays at its initial size
       (RAM/64) and the JVM peaked at 566 MB (SCALE.md §24).  When
       ``JAVA_TOOL_OPTIONS``, ``JDK_JAVA_OPTIONS`` or ``_JAVA_OPTIONS``
-      already selects a collector, none is added (``_daemon_collector``).
+      or the deployment's ``spark.driver.defaultJavaOptions`` or
+      ``spark.driver.extraJavaOptions`` already selects a collector,
+      none is added (``_daemon_collector``).
+
+    The session's driver JVM options are added to the deployment's
+    ``spark.driver.extraJavaOptions`` from ``spark-defaults.conf``
+    (``_spark_defaults``), not put in its place: a builder setting
+    reaches ``spark-submit`` as ``--conf``, which overrides the file.
 
     The batch session keeps G1: its tasks run on every core, and each
     of Serial's pauses stops them all while one thread collects.  On
@@ -138,9 +174,13 @@ def get_spark(
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle = shuffle_partitions or cpus
-    java_options = ["-Dderby.system.home=/tmp/eventstreamd_spark_derby"]
+    defaults = _spark_defaults(os.environ)
+    java_options = [
+        defaults.get("spark.driver.extraJavaOptions", ""),
+        "-Dderby.system.home=/tmp/eventstreamd_spark_derby",
+    ]
     if streaming_daemon:
-        java_options += _daemon_collector(os.environ)
+        java_options += _daemon_collector(os.environ, defaults)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -185,7 +225,7 @@ def get_spark(
                 "SPARK_GRAFT_WAREHOUSE", "/tmp/eventstreamd_spark_warehouse"
             ),
         )
-        .config("spark.driver.extraJavaOptions", " ".join(java_options))
+        .config("spark.driver.extraJavaOptions", " ".join(filter(None, java_options)))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -14,26 +14,33 @@ Streaming's exactly-once story depends on replayable offsets.  Files
 give us offsets (the file's sequence number) for free, which is
 *stronger* delivery than the reference's at-most-once.
 
+Both readers yield the same rows, ``SCHEMA``'s ``(file, pos, value)``:
+``(file, pos)`` is the spool's order key (``file`` the spool file's
+name, zero-padded so it sorts in write order; ``pos`` the line's index
+in it, counted before empty lines are dropped).  The key rides every
+event from source to socket, so live delivery and Last-Event-ID replay
+speak of one position in one log.
+
 One reader per access pattern:
 - ``simpleStreamReader`` (the daemon's live source): offset = the
   sequence number of the next unread spool file (a file is immutable
   once it appears; the spool writer guarantees this by staging +
-  rename, and resumes after the last file on disk), so removing a
+  rename, and never goes back in the sequence), so removing a
   consumed file shifts nothing.  The simple API reads on the driver — fine for the
   daemon-replacement use case (a socket's throughput).
 - ``read_spool`` (every bulk read, e.g. Last-Event-ID replay): one
-  JVM text scan keyed by ``(file, pos)``, with the stream reader's line
-  rules.
+  JVM text scan, with the stream reader's line rules.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from eventstreamd_spark.streaming.socket_spool import (  # noqa: F401
     SPOOL_GLOB,
@@ -42,24 +49,34 @@ from eventstreamd_spark.streaming.socket_spool import (  # noqa: F401
     write_spool_file,
 )
 
-SCHEMA = StructType([StructField("value", StringType(), True)])
+SCHEMA = StructType(
+    [
+        StructField("file", StringType(), False),
+        StructField("pos", IntegerType(), False),
+        StructField("value", StringType(), False),
+    ]
+)
+# a row's place in the spool, ``(file, pos)``; tuples order it
+SpoolKey = tuple[str, int]
 
 
-def _read_lines(path: str) -> Iterator[tuple[str]]:
+def _read_lines(path: str) -> Iterator[tuple[str, int, str]]:
+    name = os.path.basename(path)
     with open(path, "rb") as f:
-        for raw in f:
+        for pos, raw in enumerate(f):
             line = raw.decode("utf-8", errors="replace").rstrip("\n")
             if line:
-                yield (line,)
+                yield (name, pos, line)
 
 
 class JsonLinesStreamReader(SimpleDataSourceStreamReader):
     """Offset = {"n": <12-digit sequence number of the next unread
     spool file>}.  ``read`` takes the files with seq >= n and
     ``readBetweenOffsets`` those with start <= seq < end.  The writer
-    starts at 0 and never skips a number, so while no file is removed
-    n equals the count of consumed files; once a consumed file is
-    removed, a count would skip unread ones, and the sequence does not.
+    starts at 0 and never goes back (``checkpoint_seq``), so while no
+    file is removed n equals the count of consumed files; once a
+    consumed file is removed, a count would skip unread ones, and the
+    sequence does not.
 
     ``maxFilesPerBatch`` (option, default unlimited) caps how many new
     spool files one micro-batch admits — real backpressure, the
@@ -126,13 +143,11 @@ def register(spark) -> None:
 
 
 def read_spool(spark, spool_dir: str) -> DataFrame:
-    """The whole spool as ``(file, pos, value)``: one native text scan
-    (JVM, no Python in the row loop) of the files ``spool_files`` lists,
-    picked by the same ``SPOOL_GLOB``.  The spool directory must exist.
+    """The whole spool as ``SCHEMA`` rows: one native text scan (JVM, no
+    Python in the row loop) of the files ``spool_files`` lists, picked
+    by the same ``SPOOL_GLOB``.  The spool directory must exist.
 
-    ``(file, pos)`` orders the spool: ``file`` is the spool file's name
-    (zero-padded sequence, so it sorts in write order) and ``pos`` the
-    line's index within it.  Lines follow ``_read_lines``' rules exactly:
+    Rows and keys equal the stream reader's: ``_read_lines``' rules exactly:
     split on ``"\\n"`` only, empty lines dropped.  ``wholetext`` is
     passed to ``text()`` itself: its ``wholetext=False`` default
     overrides an ``.option("wholetext", ...)``, and the per-line Hadoop
@@ -147,3 +162,19 @@ def read_spool(spark, spool_dir: str) -> DataFrame:
         F.posexplode(F.split("value", "\n")).alias("pos", "value"),
     )
     return lines.filter(F.col("value") != "")
+
+
+def checkpoint_seq(checkpoint_dir: str) -> int:
+    """The spool sequence number the stream's newest offset-log entry
+    reaches (``offsets/<N>``: a version line, the batch metadata, then
+    this source's ``{"n": k}``); 0 before the first batch.  A spool
+    writer that starts below it would publish files the source skips."""
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    try:
+        batches = [int(n) for n in os.listdir(offsets) if n.isdigit()]
+    except FileNotFoundError:
+        return 0
+    if not batches:
+        return 0
+    with open(os.path.join(offsets, str(max(batches)))) as f:
+        return json.loads(f.read().splitlines()[2])["n"]

@@ -18,13 +18,19 @@ EP1 (ingest) = socket_spool.run_socket_server; EP2 (subscribe) and
 EP3 (/stats) = http_frontend.run_http_server; the Spark query replaces
 the dispatcher's per-event Python loop with vectorized micro-batches.
 
-Delivery semantics: checkpointed source offsets give at-least-once into
-the registry (an upgrade over the reference's at-most-once); a listener
-that connects mid-stream starts at the next micro-batch, mirroring the
+Delivery semantics (the reference is at-most-once): a listener that
+connects mid-stream starts at the next micro-batch, mirroring the
 reference's "whoever is subscribed now" routing (dispatcher.py:93-95) —
 unless it reconnects with ``Last-Event-ID``, in which case the missed
 gap is replayed from the durable spool first (pipeline.make_replay_fn;
-the reference emits ids but never reads the header).
+the reference emits ids but never reads the header).  Every frame
+carries its spool ``(file, pos)`` key, and the reconnected queue skips
+each frame at or below the replay's cursor, so no event is sent twice
+across a reconnect.  Checkpointed source offsets give at-least-once
+into the registry across a daemon restart: the micro-batch that was
+running re-runs.  The spool sequence never goes back, not even once
+every spool file is removed: the ingest writer starts at the stream's
+offset (``jsonlines.checkpoint_seq``) or after the last file on disk.
 
 Start-up order: the Unix socket and the HTTP server open first, before
 any Spark work, so producers and subscribers are served within a
@@ -61,6 +67,7 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 
+from eventstreamd_spark.sources import jsonlines
 from eventstreamd_spark.streaming import pipeline
 from eventstreamd_spark.streaming.http_frontend import (
     AuthHook,
@@ -108,7 +115,7 @@ async def run_daemon(
 
     async def replay(
         subsystem: str, filters: tuple[str, ...], last_id: str
-    ) -> list[str]:
+    ) -> tuple[jsonlines.SpoolKey | None, list[str]]:
         # shielded: a cancelled waiter must not cancel the shared future
         replay_fn = await asyncio.shield(replay_ready)
         return await asyncio.to_thread(replay_fn, subsystem, filters, last_id)
@@ -132,6 +139,7 @@ async def run_daemon(
         socket_mode=socket_mode,
         socket_owner=socket_owner,
         socket_group=socket_group,
+        first_seq=jsonlines.checkpoint_seq(checkpoint),
     )
     http_server = await run_http_server(
         host,

@@ -17,8 +17,12 @@ of streaming/pipeline.py.  Each micro-batch is ONE Spark job: the live
 connections are grouped by (subsystem, filters) and
 ``pipeline.listener_frames`` (``routing.deliveries`` + ``sse_frame``)
 matches and renders the batch for every group at once; the driver then
-hands each connection its group's frames.  A connection whose bounded
-queue is full drops frames and counts them (``Connection.dropped``).
+hands each connection its group's frames, each with its spool
+``(file, pos)`` key.  A connection whose bounded queue is full drops
+frames and counts them (``Connection.dropped``).  A Last-Event-ID
+reconnect is replayed from the spool up to a cursor in that key order,
+and its queue skips every frame at or below the cursor: the splice
+between replay and live frames sends no event twice.
 Connection lifecycle (disconnect detect, write-error teardown, O10)
 lives here, outside Spark's dataflow, which is exactly where the
 reference keeps it too (listener.py:86-95).
@@ -39,6 +43,7 @@ from urllib.parse import parse_qs, urlsplit
 
 from eventstreamd_spark.operators.filters import parse_filter
 from eventstreamd_spark.operators.routing import Listener
+from eventstreamd_spark.sources.jsonlines import SpoolKey
 from eventstreamd_spark.streaming.config import PING_INTERVAL
 from eventstreamd_spark.streaming.pipeline import listener_frames
 
@@ -82,6 +87,9 @@ class Connection:
     referer: str | None = None
     # frames lost to a full queue (slow consumer); logged on the first
     dropped: int = 0
+    # Last-Event-ID replay sent every matching event up to this key;
+    # queued frames at or below it are skipped
+    cursor: SpoolKey | None = None
 
 
 class ListenerRegistry:
@@ -91,7 +99,10 @@ class ListenerRegistry:
     def __init__(
         self,
         loop: asyncio.AbstractEventLoop | None = None,
-        replay_fn: Callable[[str, tuple[str, ...], str], Awaitable[list[str]]]
+        replay_fn: Callable[
+            [str, tuple[str, ...], str],
+            Awaitable[tuple[SpoolKey | None, list[str]]],
+        ]
         | None = None,
     ) -> None:
         self.connections: dict[int, Connection] = {}
@@ -101,8 +112,8 @@ class ListenerRegistry:
         # push_batch runs on Spark's streaming thread; asyncio.Queue is
         # not thread-safe, so deliveries hop through the event loop.
         self.loop = loop
-        # Last-Event-ID reconnect replay, a coroutine function
-        # (daemon.run_daemon wraps pipeline.make_replay_fn);
+        # Last-Event-ID reconnect replay, a coroutine function returning
+        # (cursor, frames) (daemon.run_daemon wraps pipeline.make_replay_fn);
         # None => header ignored, matching the reference's behavior
         self.replay_fn = replay_fn
 
@@ -125,8 +136,8 @@ class ListenerRegistry:
         by its index, and ONE collect of ``listener_frames`` matches
         and renders the batch for every group — the same ``deliveries``
         fan-out Last-Event-ID replay runs.  Python only hands finished
-        frames to queues.  New subscribers start receiving at the next
-        micro-batch, no query restart.
+        frames, as ``((file, pos), frame)``, to queues.  New subscribers
+        start receiving at the next micro-batch, no query restart.
         """
         groups: dict[tuple[str, tuple[str, ...]], list[Connection]] = {}
         for conn in list(self.connections.values()):
@@ -134,24 +145,24 @@ class ListenerRegistry:
         if not groups:
             return
         listeners = [Listener(str(i), *key) for i, key in enumerate(groups)]
-        frames: list[list[str]] = [[] for _ in listeners]
+        frames: list[list[tuple[SpoolKey, str]]] = [[] for _ in listeners]
         for row in listener_frames(batch_df, listeners).collect():
-            frames[int(row["listener"])].append(row["frame"])
+            frames[int(row["listener"])].append(((row["file"], row["pos"]), row["frame"]))
         for members, group_frames in zip(groups.values(), frames):
             if group_frames:
                 for conn in members:
                     self._deliver(conn, group_frames)
 
-    def _deliver(self, conn: Connection, frames: list[str]) -> None:
+    def _deliver(self, conn: Connection, frames: list[tuple[SpoolKey, str]]) -> None:
         """Queue ``frames`` on one connection, in order, in one hop
         through the event loop.  Bounded backpressure (vs the
         reference's unbounded buffer, http.py:114-118): once the queue
         is full the rest of the batch is dropped and counted."""
 
         def put() -> None:
-            for i, frame in enumerate(frames):
+            for i, item in enumerate(frames):
                 try:
-                    conn.queue.put_nowait(frame)
+                    conn.queue.put_nowait(item)
                 except asyncio.QueueFull:
                     if not conn.dropped:
                         logger.warning(
@@ -321,18 +332,19 @@ async def handle_http(
         await writer.drain()
         try:
             # Last-Event-ID replay: close the reconnect gap from the
-            # durable spool BEFORE live frames (which start at the next
-            # micro-batch).  At-least-once across the splice: an event
-            # can appear in both replay and the first live batch;
-            # dedup-by-id is the client's (or dedup_by_id's) job, per
-            # SSE convention.  ``replay_fn`` is a coroutine, so its
-            # Spark job (and, during daemon start-up, its wait for the
-            # pipeline) leaves the event loop serving.
+            # durable spool BEFORE live frames.  The connection is
+            # registered first, so every event the replay's scan misses
+            # reaches its queue; the queue skips each frame at or below
+            # the replay's cursor, so an event in both is sent once.
+            # ``replay_fn`` is a coroutine, so its Spark job (and, during
+            # daemon start-up, its wait for the pipeline) leaves the
+            # event loop serving.
             last_id = headers.get("last-event-id")
             if last_id and registry.replay_fn is not None:
-                for frame in await registry.replay_fn(
+                conn.cursor, frames = await registry.replay_fn(
                     conn.subsystem, filters, last_id
-                ):
+                )
+                for frame in frames:
                     writer.write(_chunk(frame))
                 await writer.drain()
             while True:
@@ -354,7 +366,7 @@ async def handle_http(
                         break
                     timeout = min(timeout, left)
                 try:
-                    frame = await asyncio.wait_for(
+                    key, frame = await asyncio.wait_for(
                         conn.queue.get(), timeout=timeout
                     )
                 except asyncio.TimeoutError:
@@ -363,6 +375,9 @@ async def handle_http(
                     ).total_seconds() <= 0:
                         continue  # expiry branch above emits the logout
                     frame = "event: ping" + CRLF + "data: " + CRLF + CRLF  # O8
+                else:
+                    if conn.cursor is not None and key <= conn.cursor:
+                        continue  # the replay sent it
                 writer.write(_chunk(frame))
                 await writer.drain()  # real backpressure (reference never drains)
         except (ConnectionResetError, BrokenPipeError):

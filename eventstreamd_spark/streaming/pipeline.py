@@ -12,13 +12,20 @@ combinators, so the streaming skin is just ``readStream`` + a sink.
 That is the §7 design stance: batch-first core, streaming-identical
 expressions.
 
-Delivery-semantics upgrade (documented difference from the reference):
-the reference is at-most-once (no listener => drop, mid-write
-disconnect => drop, /root/reference/evtstrd/dispatcher.py:93-95,
-listener.py:66-68).  Spark checkpointing gives at-least-once into the
-sink; adding ``dropDuplicatesWithinWatermark`` on the envelope ``id``
-(the reconnect id the reference emits but never uses —
-events.py:30-31) upgrades the end-to-end story to effectively-once.
+Delivery semantics (documented difference from the reference): the
+reference is at-most-once (no listener => drop, mid-write disconnect =>
+drop, the reference's dispatcher.py:93-95, listener.py:66-68).
+Here every row carries the spool's ``(file, pos)`` order key from
+source to socket (``jsonlines.SCHEMA``), and a connection resumes
+strictly after a cursor in that order: a Last-Event-ID reconnect is
+replayed from the spool up to a cursor, and its live queue skips every
+frame at or below it, so no event is sent twice across a reconnect
+(the id the reference emits but never reads — events.py:30-31).
+Into the sink, Spark's checkpoint gives at-least-once, and a
+micro-batch reaches it twice only across a daemon restart (the
+uncommitted one runs again); ``dedup_by_id``
+(``dropDuplicatesWithinWatermark`` on the envelope ``id``) makes a sink
+effectively-once.
 """
 
 from __future__ import annotations
@@ -53,21 +60,18 @@ def read_event_stream(
     return reader.load()
 
 
-def listener_frames(
-    env: DataFrame,
-    listeners: list[Listener],
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
-    """Validated envelopes -> one SSE frame per (event, matched listener).
+def listener_frames(env: DataFrame, listeners: list[Listener]) -> DataFrame:
+    """Validated envelopes with their spool key -> one SSE frame per
+    (event, matched listener).
 
-    Output: (listener, *passthrough, frame).  The one subscription
+    Output: (listener, file, pos, frame).  The one subscription
     matcher of the daemon: the live sink (``ListenerRegistry.push_batch``)
     and Last-Event-ID replay both route through ``deliveries`` here.
     All narrow — one stage per micro-batch, no shuffle.
     """
     fanned = deliveries(env, listeners, subsystem_col="subsystem", payload_col="data")
     frame = sse_frame(F.col("event_type"), F.col("data"), F.col("id"))
-    return fanned.select("listener", *passthrough, frame.alias("frame"))
+    return fanned.select("listener", "file", "pos", frame.alias("frame"))
 
 
 def make_replay_fn(spark: SparkSession, spool_dir: str):
@@ -78,38 +82,41 @@ def make_replay_fn(spark: SparkSession, spool_dir: str):
     is a durable ordered log, so "everything after id X" is a batch
     query over it.
 
-    Returns ``replay(subsystem, filters, last_id) -> list[frame]``:
-    events strictly after the LAST validated occurrence of ``last_id``,
-    in spool order, matching the subscription — routed through the
-    live sink's ``listener_frames`` with one listener, so replayed and
-    live delivery semantics are identical by construction.  Spool order
-    is ``jsonlines.read_spool``'s ``(file, pos)`` key; the marker is its
-    max over the validated rows holding ``last_id``.  The gap is
-    collected and sorted on the driver (it lands there anyway), so no
-    global sort runs.  Unknown id => full-spool replay, the SSE contract
-    for an expired id.
+    Returns ``replay(subsystem, filters, last_id) -> (cursor, frames)``:
+    ``frames`` are the events strictly after the LAST validated
+    occurrence of ``last_id`` (the marker), in spool order, matching the
+    subscription — routed through the live sink's ``listener_frames``
+    with one listener, so replayed and live delivery semantics are
+    identical by construction.  Unknown id => full-spool replay, the SSE
+    contract for an expired id.
+
+    One Spark job: the listener's matches ``unionByName`` the validated
+    rows holding ``last_id`` (no frame), collected together; the driver
+    cuts at the last marker and sorts the gap by ``(file, pos)`` (it
+    lands there anyway, so no global sort runs).  ``cursor`` is the
+    larger of the marker's key and the last replayed key (None when
+    there is neither): every event the subscription matches up to it
+    has been sent or precedes ``last_id``, so the connection's live
+    frames resume strictly after it.
     """
-    key = F.struct("file", "pos")
 
     def replay(
         subsystem: str, filters: tuple[str, ...], last_id: str
-    ) -> list[str]:
+    ) -> tuple[jsonlines.SpoolKey | None, list[str]]:
         env = validate_envelope(
             jsonlines.read_spool(spark, spool_dir), passthrough=("file", "pos")
         )
-        marker = env.filter(F.col("id") == last_id).agg(F.max(key)).first()[0]
-        if marker is not None:
-            env = env.filter(
-                key
-                > F.struct(
-                    F.lit(marker.file).alias("file"), F.lit(marker.pos).alias("pos")
-                )
-            )
-        matched = listener_frames(
-            env, [Listener("0", subsystem, filters)], passthrough=("file", "pos")
+        matched = listener_frames(env, [Listener("0", subsystem, filters)])
+        markers = env.filter(F.col("id") == last_id).select("file", "pos")
+        rows = matched.unionByName(markers, allowMissingColumns=True).collect()
+        keyed = [((r["file"], r["pos"]), r["frame"]) for r in rows]
+        marker = max((key for key, frame in keyed if frame is None), default=None)
+        gap = sorted(
+            (key, frame)
+            for key, frame in keyed
+            if frame is not None and (marker is None or key > marker)
         )
-        rows = sorted(matched.collect(), key=lambda r: (r["file"], r["pos"]))
-        return [r["frame"] for r in rows]
+        return (gap[-1][0] if gap else marker), [frame for _, frame in gap]
 
     return replay
 
@@ -129,11 +136,14 @@ def start_envelope_pipeline(
     checkpoint_dir: str,
     trigger_seconds: int | None = None,
 ) -> StreamingQuery:
-    """Daemon mode: stream validated envelopes into a sink callback that
-    handles *dynamic* subscriptions (ListenerRegistry.push_batch routes
-    each micro-batch through ``listener_frames`` over the subscriptions
-    live at that moment)."""
-    env = validate_envelope(read_event_stream(spark, spool_dir))
+    """Daemon mode: stream validated envelopes, each with its spool
+    ``(file, pos)`` key, into a sink callback that handles *dynamic*
+    subscriptions (ListenerRegistry.push_batch routes each micro-batch
+    through ``listener_frames`` over the subscriptions live at that
+    moment)."""
+    env = validate_envelope(
+        read_event_stream(spark, spool_dir), passthrough=("file", "pos")
+    )
     writer = (
         env.writeStream.outputMode("append")
         .foreachBatch(sink)

@@ -65,13 +65,21 @@ class SpoolWriter:
     or size threshold (amortizes file-per-line overhead; the flush
     interval bounds added latency).
 
-    File names continue the sequence already on disk: a restarted
-    writer never replaces a spooled file, and its files sort after every
-    file the stream has consumed (the source's offset is the sequence
-    number of the next unread file).
+    The sequence never goes back: the writer starts at ``first_seq`` (the
+    stream's offset, ``jsonlines.checkpoint_seq``) or after the last file
+    on disk, whichever is larger.  So a restarted writer never replaces
+    a spooled file, and its files sort after every file the stream has
+    consumed, even once all of those are removed (the source's offset is
+    the sequence number of the next unread file).
     """
 
-    def __init__(self, spool_dir: str, flush_lines: int = 1000, flush_seconds: float = 0.5):
+    def __init__(
+        self,
+        spool_dir: str,
+        first_seq: int = 0,
+        flush_lines: int = 1000,
+        flush_seconds: float = 0.5,
+    ):
         self.spool_dir = spool_dir
         self.flush_lines = flush_lines
         self.flush_seconds = flush_seconds
@@ -79,7 +87,7 @@ class SpoolWriter:
         self._lock = asyncio.Lock()
         os.makedirs(spool_dir, exist_ok=True)
         files = spool_files(spool_dir)
-        self._seq = spool_seq(files[-1]) + 1 if files else 0
+        self._seq = max(first_seq, spool_seq(files[-1]) + 1 if files else 0)
 
     async def add(self, line: str) -> None:
         async with self._lock:
@@ -152,15 +160,18 @@ async def run_socket_server(
     socket_mode: int = 0o600,
     socket_owner: str | None = None,
     socket_group: str | None = None,
+    first_seq: int = 0,
 ) -> asyncio.AbstractServer:
     """Start the Unix-socket ingest server; caller owns the loop.
+    ``first_seq`` is the lowest spool sequence number it may publish
+    (``SpoolWriter``).
 
     Mode/owner/group mirror the reference's socket permission handling
     (socket_server.py:59-70, config SocketMode/SocketOwner/SocketGroup);
     owner/group are names resolved via pwd/grp, skipped when unset.
     """
     await _remove_stale_socket(socket_path)
-    spool = SpoolWriter(spool_dir)
+    spool = SpoolWriter(spool_dir, first_seq)
     asyncio.create_task(spool.flush_loop())
 
     async def handler(r, w):

@@ -10,6 +10,9 @@ import json
 import re
 import time
 
+import pytest
+from pyspark.sql import functions as F
+
 from eventstreamd_spark.streaming.daemon import run_daemon
 from eventstreamd_spark.streaming.http_frontend import AuthError
 
@@ -392,7 +395,7 @@ def test_replay_fn_matches_python_model(spark, tmp_path) -> None:
 
     spool = tmp_path / "spool"
     spool.mkdir()
-    assert make_replay_fn(spark, str(spool))("orders", (), "a1") == []
+    assert make_replay_fn(spark, str(spool))("orders", (), "a1") == (None, [])
     for seq, lines in enumerate(REPLAY_SPOOL):
         write_spool_file(str(spool), lines, seq)
     replay = make_replay_fn(spark, str(spool))
@@ -408,7 +411,8 @@ def test_replay_fn_matches_python_model(spark, tmp_path) -> None:
         filters = () if min_k is None else (f"k>={min_k}",)
         expected = _model_replay(REPLAY_SPOOL, subsystem, min_k, last_id)
         assert expected, (subsystem, last_id)
-        assert replay(subsystem, filters, last_id) == expected, (subsystem, last_id)
+        _, frames = replay(subsystem, filters, last_id)
+        assert frames == expected, (subsystem, last_id)
 
 
 def test_replay_fn_scans_the_spool_as_text(spark, tmp_path, monkeypatch) -> None:
@@ -430,7 +434,7 @@ def test_replay_fn_scans_the_spool_as_text(spark, tmp_path, monkeypatch) -> None
     spool = str(tmp_path / "spool")
     for seq, lines in enumerate(REPLAY_SPOOL):
         write_spool_file(spool, lines, seq)
-    assert pipeline.make_replay_fn(spark, spool)("orders", (), "r")
+    assert pipeline.make_replay_fn(spark, spool)("orders", (), "r")[1]
     (plan,) = plans
     leaves = plan.collectLeaves()
     leaves = [leaves.apply(i) for i in range(leaves.size())]
@@ -438,6 +442,109 @@ def test_replay_fn_scans_the_spool_as_text(spark, tmp_path, monkeypatch) -> None
         "FileSourceScanExec"
     ]
     assert leaves[0].simpleString(100).startswith("FileScan text")
+
+
+@pytest.mark.parametrize("n_files", [2, 40])
+def test_replay_is_one_spark_job(spark, tmp_path, n_files) -> None:
+    """A replay, its marker included, is ONE Spark job, with fewer spool
+    files than cores and with more; its cursor is the last replayed
+    key, or the marker's when nothing after it matches."""
+    from eventstreamd_spark.sources.jsonlines import write_spool_file
+    from eventstreamd_spark.streaming.pipeline import make_replay_fn
+
+    spool = str(tmp_path / "spool")
+    files = [
+        [_msg("orders", (7 * f + 31 * j) % 100, f"f{f}-{j}") for j in range(5)]
+        for f in range(n_files)
+    ]
+    for seq, lines in enumerate(files):
+        write_spool_file(spool, lines, seq)
+    replay = make_replay_fn(spark, spool)
+    sc = spark.sparkContext
+    group = f"replay-one-job-{n_files}"
+    sc.setJobGroup(group, "replay")
+    try:
+        cursor, frames = replay("orders", ("k>=50",), "f0-2")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+    assert frames == _model_replay(files, "orders", 50, "f0-2")
+    matched = [
+        (f"{f:012d}.jsonl", j)
+        for f, lines in enumerate(files)
+        for j, line in enumerate(lines)
+        if (f, j) > (0, 2) and json.loads(line)["data"]["k"] >= 50
+    ]
+    assert cursor == matched[-1]
+    last = f"{n_files - 1:012d}.jsonl", 4
+    assert replay("orders", ("k>=50",), f"f{n_files - 1}-4") == (last, [])
+
+
+def test_reconnect_splice_sends_each_event_once(spark) -> None:
+    """A micro-batch that lands while a Last-Event-ID replay runs
+    overlaps its gap; the client still gets every event once, in order.
+
+    The spool: e1 e2 e3 | e4 | e5 | e6 (one file each after the first).
+    The client reconnects after e2; the replay (a stub that blocks)
+    scanned the first two files: frames e3 e4, cursor e4's key.  While
+    it blocks, the live stream's batch over files 1-2 (e4 e5) reaches
+    the registered connection's queue, then a batch with e6."""
+    from eventstreamd_spark.functions.sse import sse_frame
+    from eventstreamd_spark.streaming.http_frontend import (
+        ListenerRegistry,
+        run_http_server,
+    )
+
+    def file(n: int) -> str:
+        return f"{n:012d}.jsonl"
+
+    spool = [
+        ("e1", file(0), 0), ("e2", file(0), 1), ("e3", file(0), 2),
+        ("e4", file(1), 0), ("e5", file(2), 0), ("e6", file(3), 0),
+    ]
+    rows = [
+        ("orders", "add", json.dumps({"k": k}), eid, f, pos)
+        for k, (eid, f, pos) in enumerate(spool)
+    ]
+    envelopes = spark.createDataFrame(
+        rows + [("other", "add", "{}", "x1", file(2), 1)],
+        "subsystem string, event_type string, data string, id string,"
+        " file string, pos int",
+    )
+    frame = sse_frame(F.col("event_type"), F.col("data"), F.col("id"))
+    rendered = {
+        r["id"]: r["frame"]
+        for r in envelopes.select("id", frame.alias("frame")).collect()
+    }
+
+    async def scenario() -> list[str]:
+        entered, release = asyncio.Event(), asyncio.Event()
+
+        async def replay(subsystem, filters, last_id):
+            assert (subsystem, filters, last_id) == ("orders", (), "e2")
+            entered.set()
+            await release.wait()
+            return (file(1), 0), [rendered["e3"], rendered["e4"]]
+
+        registry = ListenerRegistry(replay_fn=replay)
+        server = await run_http_server("127.0.0.1", PORT + 5, registry)
+        try:
+            r, w = await _subscribe(PORT + 5, "Last-Event-ID: e2\r\n")
+            await asyncio.wait_for(entered.wait(), 30)
+            registry.push_batch(envelopes.filter(F.col("file").isin(file(1), file(2))), 0)
+            (conn,) = registry.connections.values()
+            assert conn.queue.qsize() == 2  # e4 (also replayed) and e5
+            release.set()
+            registry.push_batch(envelopes.filter(F.col("file") == file(3)), 1)
+            got = _sse_ids(await _read_until(r, "id: e6", timeout=30))
+            w.close()
+            return got
+        finally:
+            server.close()
+            await server.wait_closed()
+
+    assert asyncio.run(scenario()) == ["e3", "e4", "e5", "e6"]
 
 
 def test_auth_plugin_contract(spark, tmp_path) -> None:
@@ -521,8 +628,9 @@ SUBSCRIPTIONS = [
 
 
 def _envelopes(spark, n: int):
-    """A static micro-batch of validated envelopes, spread over
-    partitions (an RDD, not a local relation the planner could fold)."""
+    """A static micro-batch of validated envelopes with their spool keys
+    (ten lines a file), spread over partitions (an RDD, not a local
+    relation the planner could fold)."""
     subsystems = ["orders", "users", "billing"]
     rows = [
         (
@@ -539,12 +647,15 @@ def _envelopes(spark, n: int):
                 }
             ),
             str(i),
+            f"{i // 10:012d}.jsonl",
+            i % 10,
         )
         for i in range(n)
     ]
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 3),
-        "subsystem string, event_type string, data string, id string",
+        "subsystem string, event_type string, data string, id string,"
+        " file string, pos int",
     )
 
 
@@ -559,9 +670,8 @@ def test_push_batch_is_one_job_per_micro_batch(spark) -> None:
     """push_batch routes a micro-batch for every live subscription in ONE
     Spark job (one collect of listener_frames), and hands each
     connection exactly the frames its own per-subscription filter
-    gives, in batch order — including two connections sharing a group."""
-    from pyspark.sql import functions as F
-
+    gives, in batch order and keyed by spool position — including two
+    connections sharing a group."""
     from eventstreamd_spark.functions.sse import sse_frame
     from eventstreamd_spark.operators.filters import filter_events, parse_filter
     from eventstreamd_spark.streaming.http_frontend import (
@@ -587,13 +697,13 @@ def test_push_batch_is_one_job_per_micro_batch(spark) -> None:
     frame = sse_frame(F.col("event_type"), F.col("data"), F.col("id"))
     for conn in conns:
         expected = [
-            r["frame"]
+            ((r["file"], r["pos"]), r["frame"])
             for r in filter_events(
                 batch.filter(F.col("subsystem") == conn.subsystem),
                 [parse_filter(f) for f in conn.filters],
                 payload_col="data",
             )
-            .select(frame.alias("frame"))
+            .select("file", "pos", frame.alias("frame"))
             .collect()
         ]
         assert expected, conn  # every subscription matches something
@@ -610,8 +720,10 @@ def test_slow_consumer_drops_are_counted(spark, caplog) -> None:
     )
 
     batch = spark.createDataFrame(
-        [("orders", "add", json.dumps({"k": k}), f"e{k}") for k in range(5)],
-        "subsystem string, event_type string, data string, id string",
+        [("orders", "add", json.dumps({"k": k}), f"e{k}", "000000000000.jsonl", k)
+         for k in range(5)],
+        "subsystem string, event_type string, data string, id string,"
+        " file string, pos int",
     )
     registry = ListenerRegistry()
     slow = Connection("orders", (), asyncio.Queue(maxsize=2))
@@ -622,7 +734,7 @@ def test_slow_consumer_drops_are_counted(spark, caplog) -> None:
         registry.push_batch(batch, 1)  # still full: all 5 dropped
     assert slow.dropped == 3 + 5
     assert sum("queue full" in r.getMessage() for r in caplog.records) == 1
-    kept = [f.split("id: ")[1].split("\r\n")[0] for f in _drain(slow.queue)]
+    kept = [f.split("id: ")[1].split("\r\n")[0] for _, f in _drain(slow.queue)]
     assert kept == ["e0", "e1"]  # the first frames, in batch order
 
 
@@ -672,6 +784,59 @@ def test_spool_restart_keeps_files_and_stream_resumes(spark, tmp_path) -> None:
     assert sorted(os.listdir(spool)) == ["000000000000.jsonl", "000000000001.jsonl"]
     assert open(os.path.join(spool, "000000000000.jsonl")).read() == before
     assert _run_stream(spark, spool, ckpt) == ["b1"]
+
+
+def test_spool_sequence_survives_removing_every_file(spark, tmp_path) -> None:
+    """Once every consumed spool file is removed, a restarted daemon's
+    writer continues after the stream's offset, not at 0: an event sent
+    after the restart lands in ``000000000002.jsonl`` and reaches a
+    subscriber."""
+    import os
+
+    from eventstreamd_spark.sources.jsonlines import write_spool_file
+
+    work = tmp_path / "work"
+    spool = str(work / "spool")
+    write_spool_file(spool, [_msg("orders", 1, "a1")], 0)
+    write_spool_file(spool, [_msg("orders", 2, "a2")], 1)
+    assert _run_stream(spark, spool, str(work / "checkpoint")) == ["a1", "a2"]
+    for name in os.listdir(spool):
+        os.remove(os.path.join(spool, name))
+
+    sock = str(tmp_path / "evtd.sock")
+
+    async def scenario() -> None:
+        stop = asyncio.Event()
+        daemon = asyncio.create_task(
+            run_daemon(
+                lambda: spark, sock, str(work),
+                port=PORT + 6, trigger_seconds=1, stop_event=stop,
+            )
+        )
+        try:
+            for _ in range(100):
+                if daemon.done():
+                    daemon.result()
+                try:
+                    r, w = await asyncio.open_unix_connection(sock)
+                    break
+                except (FileNotFoundError, ConnectionRefusedError):
+                    await asyncio.sleep(0.1)
+            else:
+                raise AssertionError("socket server never came up")
+            lr, lw = await _subscribe(PORT + 6)
+            w.write((_msg("orders", 3, "b1") + "\n").encode())
+            await w.drain()
+            assert _sse_ids(await _read_until(lr, "id: b1", timeout=60)) == ["b1"]
+            lw.close()
+            w.close()
+        finally:
+            stop.set()
+            await asyncio.wait_for(daemon, 60)
+
+    asyncio.run(scenario())
+    assert os.listdir(spool) == ["000000000002.jsonl"]
+    assert '"b1"' in open(os.path.join(spool, "000000000002.jsonl")).read()
 
 
 def test_stray_jsonl_file_is_not_spooled(spark, tmp_path) -> None:

@@ -24,9 +24,9 @@ def msg(subsystem: str, k: int, id: str) -> dict:
 
 
 def test_read_spool_lines_match_stream_reader(spark, tmp_path) -> None:
-    """``read_spool`` yields, file by file, the lines the stream reader
-    yields — split on "\\n" only (an interior "\\r" stays), empty lines
-    dropped — keyed by (spool file name, line index); a stray
+    """``read_spool`` yields exactly the stream reader's rows, in one
+    schema: ``(file, pos, value)``, split on "\\n" only (an interior
+    "\\r" stays), ``pos`` counted before empty lines are dropped; a stray
     ``x.jsonl`` is not read and an empty spool has no rows."""
     import os
 
@@ -39,18 +39,19 @@ def test_read_spool_lines_match_stream_reader(spark, tmp_path) -> None:
     jsonlines.write_spool_file(spool, [cr_line, "not json", "", "tail\r"], 0)
     jsonlines.write_spool_file(spool, [msg("b", 2, "y")], 1)
 
-    rows = jsonlines.read_spool(spark, spool).collect()
+    spooled = jsonlines.read_spool(spark, spool)
+    assert spooled.schema == jsonlines.SCHEMA
+    rows = sorted(tuple(r) for r in spooled.collect())
     reader = jsonlines.JsonLinesStreamReader({"path": spool})
-    names = jsonlines.spool_files(spool)
-    assert sorted({r["file"] for r in rows}) == names  # no x.jsonl
-    by_file = {
-        name: sorted((r["pos"], r["value"]) for r in rows if r["file"] == name)
-        for name in names
-    }
-    for n, name in enumerate(names):
-        streamed = [v for (v,) in reader.readBetweenOffsets({"n": n}, {"n": n + 1})]
-        assert [v for _, v in by_file[name]] == streamed
-    assert by_file[names[0]] == [(0, cr_line), (1, "not json"), (3, "tail\r")]
+    streamed, end = reader.read({"n": 0})
+    assert end == {"n": 2}
+    assert rows == list(streamed) == list(reader.readBetweenOffsets({"n": 0}, end))
+    assert rows == [
+        ("000000000000.jsonl", 0, cr_line),
+        ("000000000000.jsonl", 1, "not json"),
+        ("000000000000.jsonl", 3, "tail\r"),
+        ("000000000001.jsonl", 0, json.dumps(msg("b", 2, "y"))),
+    ]
 
 
 def test_stream_reader_offset_is_the_spool_sequence(tmp_path) -> None:
@@ -64,17 +65,17 @@ def test_stream_reader_offset_is_the_spool_sequence(tmp_path) -> None:
     jsonlines.write_spool_file(spool, [msg("a", 0, "e0")], 0)
     jsonlines.write_spool_file(spool, [msg("a", 1, "e1")], 1)
     rows, committed = jsonlines.JsonLinesStreamReader({"path": spool}).read({"n": 0})
-    assert [json.loads(v)["id"] for (v,) in rows] == ["e0", "e1"]
+    assert [json.loads(v)["id"] for (_, _, v) in rows] == ["e0", "e1"]
     assert committed == {"n": 2}
 
     os.remove(os.path.join(spool, jsonlines.spool_files(spool)[0]))
     jsonlines.write_spool_file(spool, [msg("a", 2, "e2")], 2)
     restarted = jsonlines.JsonLinesStreamReader({"path": spool})
     rows, end = restarted.read(committed)
-    assert [json.loads(v)["id"] for (v,) in rows] == ["e2"]
+    assert [json.loads(v)["id"] for (_, _, v) in rows] == ["e2"]
     assert end == {"n": 3}
     replayed = restarted.readBetweenOffsets(committed, end)
-    assert [json.loads(v)["id"] for (v,) in replayed] == ["e2"]
+    assert [json.loads(v)["id"] for (_, _, v) in replayed] == ["e2"]
     assert list(restarted.read(end)[0]) == []
 
 
@@ -111,7 +112,7 @@ def test_streaming_source_and_listener_pipeline(spark, tmp_path) -> None:
         q.stop()
 
     def frames(conn: Connection) -> list[str]:
-        return [conn.queue.get_nowait() for _ in range(conn.queue.qsize())]
+        return [conn.queue.get_nowait()[1] for _ in range(conn.queue.qsize())]
 
     def ids(fs: list[str]) -> list[str]:
         return [re.search(r"id: (\S+)\r\n", f).group(1) for f in fs]

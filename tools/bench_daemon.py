@@ -107,16 +107,19 @@ def python_loop_baseline(lines: list[str], listeners) -> int:
 def spark_path(spark, spool_dir: str, listeners) -> tuple[int, float]:
     """Full pipeline from the spool: ``jsonlines.read_spool`` (the bulk
     text scan Last-Event-ID replay also runs; the live daemon tails the
-    spool through the streaming DataSource instead) -> validate -> fan
-    out -> render frames, through the same ``listener_frames`` plan the
-    daemon's sink runs per micro-batch.  Timed from cold source so both
-    engines pay their own parse."""
+    spool through the streaming DataSource, which yields the same
+    ``(file, pos, value)`` rows) -> validate, carrying the ``(file,
+    pos)`` key -> fan out -> render frames, through the same
+    ``listener_frames`` plan the daemon's sink runs per micro-batch.
+    Timed from cold source so both engines pay their own parse."""
     from eventstreamd_spark.operators.envelope import validate_envelope
     from eventstreamd_spark.sources import jsonlines
     from eventstreamd_spark.streaming.pipeline import listener_frames
 
     raw = jsonlines.read_spool(spark, spool_dir)
-    frames = listener_frames(validate_envelope(raw), listeners)
+    frames = listener_frames(
+        validate_envelope(raw, passthrough=("file", "pos")), listeners
+    )
     best = float("inf")
     n = 0
     for _ in range(3):  # best-of-3: exclude codegen/JIT warm-up
