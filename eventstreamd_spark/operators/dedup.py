@@ -56,6 +56,11 @@ from eventstreamd_spark.functions.text import (
     sql_word_shingles,
     tokens,
 )
+from eventstreamd_spark.operators.perceptual import (
+    _sig_clusters,
+    admission_decisions_from_sig,
+    banded_pairs,
+)
 from eventstreamd_spark.plans.memo import shared
 from eventstreamd_spark.session import fan_out
 
@@ -75,8 +80,11 @@ _MH_B = [(91 + 29 * i) % _MH_P for i in range(MINHASH_K)]
 # random-collision term per band, the same quadratic wall the media
 # tier measured at sf10 and removed in round 10 (SCALE.md §21:
 # "bucket width must track log2(n)").  16-bit buckets hold to
-# ~10^7 docs; beyond that the pair-band wide sibling
-# (``simhash_pairs_wide``) buckets on 32-bit band PAIRS.
+# ~10^7 docs; beyond that the wide tier buckets on 32-bit band PAIRS.
+# Both run through perceptual.banded_pairs with the signature family
+# descriptor below: one 64-bit word (s_hi, s_lo), bands s0..s3 — the
+# labels the band-partitioned admission index layout uses.
+TEXT_SIG_KINDS = (("s", "s_hi", "s_lo"),)
 SIMHASH_BITS = 64
 SIMHASH_BANDS = 4
 SIMHASH_BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS  # 16
@@ -1032,9 +1040,11 @@ def _simhash64_py(text: str | None) -> tuple[int, int]:
 
 
 def simhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig_hi, sig_lo) via an Arrow-batched kernel — narrow,
+    """(doc_id, s_hi, s_lo) via an Arrow-batched kernel — narrow,
     no shuffle; signatures stay embarrassingly parallel with zero
-    exchange at 100 TB.
+    exchange at 100 TB.  The columns are the ``TEXT_SIG_KINDS`` word,
+    so the relation feeds ``perceptual.banded_pairs`` and the
+    admission kernels as it is.
 
     Features are DISTINCT 3-word shingles, not unigrams (Manku,
     Jain & Das Sarma, "Detecting Near-Duplicates for Web Crawling",
@@ -1070,123 +1080,17 @@ def simhash_signatures(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].astype("int64"),
-                    "sig_hi": pd.Series(
+                    "s_hi": pd.Series(
                         [s[0] for s in sigs], dtype="int64"
                     ),
-                    "sig_lo": pd.Series(
+                    "s_lo": pd.Series(
                         [s[1] for s in sigs], dtype="int64"
                     ),
                 }
             )
 
     return fan_out(docs.select("doc_id", "text")).mapInPandas(
-        kernel, schema="doc_id bigint, sig_hi bigint, sig_lo bigint"
-    )
-
-
-def _simhash_band_chunks() -> list:
-    """The 4 x 16-bit band expressions over (sig_hi, sig_lo): bands
-    0-1 slice sig_lo (bits 0-15, 16-31), bands 2-3 slice sig_hi."""
-    mask = (1 << SIMHASH_BAND_BITS) - 1
-    chunks = []
-    for b in range(SIMHASH_BANDS):
-        src = F.col("sig_lo") if b < 2 else F.col("sig_hi")
-        shift = (b % 2) * SIMHASH_BAND_BITS
-        chunks.append(F.shiftright(src, shift).bitwiseAND(F.lit(mask)))
-    return chunks
-
-
-def _simhash_stacked_pairs(stacked: DataFrame, hamming_max: int) -> DataFrame:
-    """Shared bucket self-join + Hamming verify + distinct over a
-    (doc_id, sig_hi, sig_lo, band, bhash) stacked relation — the tail
-    the 4-band and the 6-pair-band tiers share.  Verify BEFORE
-    distinct (SCALE.md §19, found by the sf10 probe on the media
-    tier): random band collisions are the volume, and an early
-    distinct shuffles every one of them carrying both signatures; the
-    Hamming verify is four JVM bit ops — evaluating it per COLLISION
-    and deduplicating only survivors shuffles O(true pairs) rows."""
-    l, r = stacked.alias("l"), stacked.alias("r")
-    joined = l.join(
-        r,
-        (F.col("l.band") == F.col("r.band"))
-        & (F.col("l.bhash") == F.col("r.bhash"))
-        & (F.col("l.doc_id") < F.col("r.doc_id")),
-    )
-    hamming = F.bit_count(
-        F.col("l.sig_hi").bitwiseXOR(F.col("r.sig_hi"))
-    ) + F.bit_count(F.col("l.sig_lo").bitwiseXOR(F.col("r.sig_lo")))
-    return (
-        joined.select(
-            F.col("l.doc_id").alias("doc_a"),
-            F.col("r.doc_id").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= hamming_max)
-        .distinct()
-    )
-
-
-def simhash_band_stack(sig: DataFrame) -> DataFrame:
-    """Explode a (doc_id, sig_hi, sig_lo) relation into its 4
-    (band, bhash) rows — 16-bit buckets, the tier for <= ~10^7 docs."""
-    chunks = _simhash_band_chunks()
-    return sig.select(
-        "doc_id",
-        "sig_hi",
-        "sig_lo",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), c.alias("bhash"))
-                    for b, c in enumerate(chunks)
-                ]
-            )
-        ).alias("bb"),
-    ).select(
-        "doc_id",
-        "sig_hi",
-        "sig_lo",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bhash").alias("bhash"),
-    )
-
-
-def simhash_pair_band_stack(sig: DataFrame) -> DataFrame:
-    """Explode a signature relation into its 6 PAIR-band rows: one row
-    per unordered pair of the 4 bands, bucketed on the CONCATENATED
-    32-bit key (pair-band idiom from perceptual.pair_band_stack /
-    SCALE.md §21).  16-bit buckets collide at ~n^2/2^16 per band —
-    quadratic in every decade past ~10^7 docs — while 32-bit pair
-    buckets push that term out by 65,536x at the cost of 6 rows/doc
-    instead of 4.  Recall: combined Hamming <= 2 leaves at least TWO
-    clean bands (3 dirty bands would need 3 errors), so some clean
-    pair collides — guaranteed, one notch tighter than the single-band
-    tier's <= 3."""
-    chunks = _simhash_band_chunks()
-    pairs = []
-    k = 0
-    for i in range(SIMHASH_BANDS):
-        for j in range(i + 1, SIMHASH_BANDS):
-            pairs.append(
-                F.struct(
-                    F.lit(k).alias("band"),
-                    (F.shiftleft(chunks[i], SIMHASH_BAND_BITS) + chunks[j]).alias(
-                        "bhash"
-                    ),
-                )
-            )
-            k += 1
-    return sig.select(
-        "doc_id",
-        "sig_hi",
-        "sig_lo",
-        F.explode(F.array(*pairs)).alias("bb"),
-    ).select(
-        "doc_id",
-        "sig_hi",
-        "sig_lo",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bhash").alias("bhash"),
+        kernel, schema="doc_id bigint, s_hi bigint, s_lo bigint"
     )
 
 
@@ -1202,8 +1106,9 @@ def simhash_pairs(
     mapInPandas subplan once per reference (SCALE.md §19), and the
     kernel is the tier's dominant cost; every SimHash tier and the
     admission faces read the one tokenize+hash pass."""
-    sig = shared(simhash_signatures, docs)
-    return _simhash_stacked_pairs(simhash_band_stack(sig), hamming_max)
+    return banded_pairs(
+        shared(simhash_signatures, docs), hamming_max, kinds=TEXT_SIG_KINDS
+    )
 
 
 SIMHASH_MAX_BUCKET = 64
@@ -1224,15 +1129,14 @@ def simhash_pairs_prod(
     candidates); byte-identical flood members belong to the upstream
     exact-digest dedup anyway.  The gate table is <= 4 x 2^16 keys, so
     the guard join broadcasts."""
-    from eventstreamd_spark.operators.perceptual import _drop_hot_buckets
-
     # materialized BEFORE stacking: the guard references the stacked
     # relation twice (gate sizes + join side) and the self-join twice
     # more — un-materialized, the signature kernel would run 4x
-    sig = shared(simhash_signatures, docs)
-    stacked = simhash_band_stack(sig)
-    return _simhash_stacked_pairs(
-        _drop_hot_buckets(stacked, max_bucket), hamming_max
+    return banded_pairs(
+        shared(simhash_signatures, docs),
+        hamming_max,
+        max_bucket=max_bucket,
+        kinds=TEXT_SIG_KINDS,
     )
 
 
@@ -1246,15 +1150,17 @@ def simhash_pairs_wide(
     candidates for 500k docs at that width; SCALE.md §21).  Same
     verify, same output schema; the default verify bound is the one
     this tier GUARANTEES — Hamming <= 2 (pigeonhole over pairs, see
-    ``simhash_pair_band_stack``) — so the default never silently
+    ``perceptual.band_stack``) — so the default never silently
     under-recalls.  A caller passing a looser bound opts into
     best-effort recall above 2 (candidates at distance 3 surface only
     when the dirty bits happen to cluster), and callers wanting the
     guaranteed <= 3 at moderate n keep ``simhash_pairs`` — the
     standard LSH r-vs-recall dial, stated in the open."""
-    sig = shared(simhash_signatures, docs)
-    return _simhash_stacked_pairs(
-        simhash_pair_band_stack(sig), hamming_max
+    return banded_pairs(
+        shared(simhash_signatures, docs),
+        hamming_max,
+        kinds=TEXT_SIG_KINDS,
+        wide=True,
     )
 
 
@@ -1370,7 +1276,7 @@ sig AS MATERIALIZED (
 
 def _sql_simhash_chunk(b: int) -> str:
     """Band b's 16-bit slice over (sig_hi, sig_lo) — same layout as
-    _simhash_band_chunks: bands 0-1 from sig_lo, 2-3 from sig_hi."""
+    perceptual.band_stack: bands 0-1 from sig_lo, 2-3 from sig_hi."""
     mask = (1 << SIMHASH_BAND_BITS) - 1
     src = "sig_lo" if b < 2 else "sig_hi"
     return f"(({src} >> {(b % 2) * SIMHASH_BAND_BITS}) & {mask})"
@@ -2404,25 +2310,6 @@ FROM base b JOIN modal m ON m.entity_id = b.entity_id
 # for text, batch- and stream-faced, sharing one decision kernel.
 # ---------------------------------------------------------------------------
 
-# the signature family descriptor the banding/stacking helpers take
-# (perceptual band_stack kinds): one 64-bit word, string band labels
-# s0..s3 so the band-partitioned index layout matches the media one
-TEXT_SIG_KINDS = (("s", "s_hi", "s_lo"),)
-
-
-
-def simhash_admission_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, s_hi, s_lo): the shingle-SimHash signature in the
-    admission pipeline's pluggable shape — pass as ``sig_fn`` with
-    ``kinds=TEXT_SIG_KINDS`` to streaming/pipeline.py's admission
-    writer (or use the ``start_text_admission`` convenience)."""
-    return simhash_signatures(docs).select(
-        "doc_id",
-        F.col("sig_hi").alias("s_hi"),
-        F.col("sig_lo").alias("s_lo"),
-    )
-
-
 def text_admission_decisions(
     docs: DataFrame,
     in_corpus: Column,
@@ -2447,21 +2334,14 @@ def text_admission_decisions(
     drops to the pair-band pigeonhole bound (combined Hamming <= 2)
     and distance-3 twins surface best-effort; the media wide
     admission face states the same dial (guarantee 6, verify
-    ``hamming_max``).  Both engines band identically, so the
-    registered wide face stays hash-exact regardless."""
-    from eventstreamd_spark.operators.perceptual import (
-        _sig_clusters,
-        admission_decisions_from_sig,
-    )
-
+    ``hamming_max``).  The DuckDB twin bands the same 6 pair keys,
+    so the registered wide face stays hash-exact regardless."""
     # both splits filter the session's ONE signature relation over
     # ``docs`` (shared with the SimHash pair tiers): signatures are
     # per-doc and deterministic, so filtering equals running the
     # kernel per split, and the banded self-joins read a materialized
     # leaf instead of re-running the kernel per reference
-    sig = shared(simhash_signatures, docs).select(
-        "doc_id", F.col("sig_hi").alias("s_hi"), F.col("sig_lo").alias("s_lo")
-    )
+    sig = shared(simhash_signatures, docs)
     corpus_sig = sig.filter(in_corpus)
     index_sig = corpus_sig.join(
         _sig_clusters(

@@ -3,7 +3,10 @@ VERDICT ask #5): exact digests (``multimodal.media_dedup``) miss
 re-encoded or RESIZED duplicate images; the standard cheap fix is a
 perceptual hash — aHash (average hash) and dHash (gradient hash) over
 a downsampled grayscale grid — followed by Hamming-banded candidate
-generation, the same banding idiom as ``dedup.simhash_pairs``.
+generation.  ``band_stack`` / ``banded_pairs`` here are the one
+Hamming-band engine for every 64-bit signature family: the image,
+audio, video and mixed tiers, and the text SimHash tiers
+(``dedup.simhash_pairs*`` with ``dedup.TEXT_SIG_KINDS``).
 
 Everything is integer arithmetic (no DCT, no libm):
 
@@ -316,7 +319,6 @@ def image_codec_manifest(media: DataFrame) -> DataFrame:
     )
 
 
-_HALVES = ("a_hi", "a_lo", "d_hi", "d_lo")
 _KINDS = (("a", "a_hi", "a_lo"), ("d", "d_hi", "d_lo"))
 
 
@@ -324,48 +326,26 @@ def _halves_of(kinds) -> tuple:
     return tuple(c for _, hi, lo in kinds for c in (hi, lo))
 
 
-def band_stack(sig: DataFrame, kinds=_KINDS) -> DataFrame:
-    """Explode a (doc_id, <halves>) signature relation into its
-    4-per-word (band, bhash) rows — the shared banding layout of the
-    candidate tier (4 bands x 16 bits per 64-bit hash), with the
-    signature halves riding along for the verify step.  ``kinds``
-    widens the layout past the default (a, d) word pair (the video
-    grid tier adds a third word — 12 bands over 192 bits)."""
-    mask = (1 << BAND_BITS) - 1
-    halves = _halves_of(kinds)
-    bands = []
-    for kind, hi, lo in kinds:
-        for b in range(N_BANDS):
-            src = F.col(lo) if b < 2 else F.col(hi)
-            shift = (b % 2) * BAND_BITS
-            bands.append(
-                F.struct(
-                    F.lit(f"{kind}{b}").alias("band"),
-                    F.shiftright(src, shift).bitwiseAND(F.lit(mask)).alias("bhash"),
-                )
-            )
-    return sig.select(
-        "doc_id", *halves, F.explode(F.array(*bands)).alias("bb")
-    ).select(
-        "doc_id",
-        *halves,
-        F.col("bb.band").alias("band"),
-        F.col("bb.bhash").alias("bhash"),
-    )
+def band_stack(sig: DataFrame, kinds=_KINDS, wide: bool = False) -> DataFrame:
+    """Explode a (doc_id, <halves>) signature relation into its banded
+    (band, bhash) rows, the signature halves riding along for the
+    verify step — the one banding layout of every Hamming candidate
+    tier.  Each 64-bit word of ``kinds`` splits into 4 x 16-bit chunks
+    ``{kind}0..{kind}3`` (0-1 from the lo half, 2-3 from the hi half);
+    ``kinds`` picks the signature family: the media (a, d) word pair
+    by default, one SimHash word (``dedup.TEXT_SIG_KINDS``), or the
+    video grid tier's three words.
 
-
-def pair_band_stack(sig: DataFrame, kinds=_KINDS) -> DataFrame:
-    """Explode a signature relation into its 28 PAIR-band rows: one
-    row per unordered pair of the 8 bands, bucketed on the CONCATENATED
-    32-bit key.  The wide tier's candidate math (measured, SCALE.md
-    §20): 16-bit buckets collide at ~n^2/2^16 — 44M random candidates
-    at sf10 already, and quadratic in every further decade — while
-    32-bit pair buckets collide at ~n^2/2^32, pushing the quadratic
-    term out by a factor of 65,536 at the cost of 28 rows/doc instead
-    of 8.  Recall: combined Hamming <= 6 leaves at least TWO clean
-    bands (7 dirty bands would need 7 errors), so some clean pair
-    collides — guaranteed, one notch tighter than the single-band
-    tier's <= 7."""
+    ``wide`` emits one row per unordered chunk PAIR instead, labelled
+    ``{ni}|{nj}`` and bucketed on the concatenated 32-bit key
+    ``(ci << 16) + cj``.  The wide tier's candidate math (measured,
+    SCALE.md §20): 16-bit buckets collide at ~n^2/2^16 — 44M random
+    candidates at sf10 on the media tier, quadratic in every further
+    decade — while 32-bit pair buckets collide at ~n^2/2^32, at the
+    cost of C(c, 2) rows/doc instead of c for c chunks.  Recall: a
+    pair within combined Hamming c - 2 leaves at least two clean
+    chunks, so some clean pair collides — guaranteed, one notch
+    tighter than the single-band tier's c - 1."""
     mask = (1 << BAND_BITS) - 1
     halves = _halves_of(kinds)
     chunks = []
@@ -377,19 +357,18 @@ def pair_band_stack(sig: DataFrame, kinds=_KINDS) -> DataFrame:
                 (f"{kind}{b}",
                  F.shiftright(src, shift).bitwiseAND(F.lit(mask)))
             )
-    pairs = []
-    for i in range(len(chunks)):
-        for j in range(i + 1, len(chunks)):
-            ni, ci = chunks[i]
-            nj, cj = chunks[j]
-            pairs.append(
-                F.struct(
-                    F.lit(f"{ni}|{nj}").alias("band"),
-                    (F.shiftleft(ci, BAND_BITS) + cj).alias("bhash"),
-                )
-            )
+    if wide:
+        chunks = [
+            (f"{ni}|{nj}", F.shiftleft(ci, BAND_BITS) + cj)
+            for i, (ni, ci) in enumerate(chunks)
+            for nj, cj in chunks[i + 1:]
+        ]
+    bands = [
+        F.struct(F.lit(name).alias("band"), key.alias("bhash"))
+        for name, key in chunks
+    ]
     return sig.select(
-        "doc_id", *halves, F.explode(F.array(*pairs)).alias("bb")
+        "doc_id", *halves, F.explode(F.array(*bands)).alias("bb")
     ).select(
         "doc_id",
         *halves,
@@ -419,12 +398,43 @@ def _drop_hot_buckets(stacked: DataFrame, max_bucket: int) -> DataFrame:
     return stacked.join(F.broadcast(sizes), ["band", "bhash"])
 
 
-def _stacked_self_pairs(
-    stacked: DataFrame, hamming_max: int, halves=_HALVES
+def banded_pairs(
+    sig: DataFrame,
+    hamming_max: int,
+    max_bucket: int | None = None,
+    kinds=_KINDS,
+    wide: bool = False,
 ) -> DataFrame:
-    """Shared bucket self-join + Hamming verify + distinct over ANY
-    (doc_id, halves..., band, bhash) stacked relation — the tail both
-    the 8-band and the 28-pair-band tiers share."""
+    """Shared Hamming-banded candidate + verify tier over ANY
+    signature relation of the ``kinds`` family — ``band_stack``'s
+    buckets, equi-join on (band, bhash), combined-Hamming verify.
+    Used by every near-dup pair tier: the SimHash text tiers
+    (``dedup.simhash_pairs*``), the image tier (``media_near_dup``),
+    audio, video and mixed; recall guarantee as documented on
+    ``media_near_dup``.  ``max_bucket`` opts into the hot-bucket
+    guard (``_drop_hot_buckets``) for degenerate corpora.
+
+    ``wide`` buckets on 32-bit chunk PAIRS (``band_stack``): the tier
+    for corpora where 16-bit buckets' ~n^2/2^16 random collisions
+    become the bill (measured at sf10: 44M candidates for 500k media
+    docs).  Same verify, same output schema; guaranteed recall drops
+    one notch (media: combined Hamming <= 6 instead of <= 7; SimHash:
+    <= 2 instead of <= 3).  The wide tiers run without the guard: its
+    gate table over a 2^32 key space per band is not broadcastable,
+    so a flood-exposed ingest guards at the 16-bit tier or upstream
+    exact-dedup.
+
+    Verify BEFORE distinct (the order the SQL tail always had): random
+    16-bit band collisions grow as ~N^2/2^16 once bucket occupancy
+    passes 1, and an early ``distinct`` shuffles every one of them
+    carrying both signatures (10 columns wide).  The Hamming verify is
+    a handful of JVM bit ops — evaluating it per COLLISION and
+    deduplicating only the survivors shuffles O(true pairs) rows of 3
+    ints instead.  Found by the sf10 probe: the mixed tier measured
+    a10 = 1.16 with the old order (SCALE.md §19)."""
+    stacked = band_stack(sig, kinds, wide)
+    if max_bucket is not None:
+        stacked = _drop_hot_buckets(stacked, max_bucket)
     l, r = stacked.alias("l"), stacked.alias("r")
     joined = l.join(
         r,
@@ -434,7 +444,7 @@ def _stacked_self_pairs(
     )
     hamming = sum(
         F.bit_count(F.col(f"l.{c}").bitwiseXOR(F.col(f"r.{c}")))
-        for c in halves
+        for c in _halves_of(kinds)
     )
     return (
         joined.select(
@@ -447,56 +457,12 @@ def _stacked_self_pairs(
     )
 
 
-def banded_pairs_wide(sig: DataFrame, hamming_max: int) -> DataFrame:
-    """Near-dup pair tier over 32-bit PAIR-band buckets — the
-    candidate tier for corpora where 16-bit buckets' ~n^2/2^16 random
-    collisions become the bill (measured at sf10: 44M candidates for
-    500k docs; a 10^10-doc corpus would drown).  Same verify, same
-    output schema; guaranteed recall for combined Hamming <= 6
-    (pigeonhole over pairs — see ``pair_band_stack``), so callers
-    wanting the <= 7 guarantee at moderate n keep ``banded_pairs``.
-    No hot-bucket gate: the gate table over a 28 x 2^32 key space is
-    not broadcastable; a flood-exposed ingest should guard at the
-    16-bit tier (``media_near_dup_prod``) or upstream exact-dedup."""
-    return _stacked_self_pairs(pair_band_stack(sig), hamming_max)
-
-
-def banded_pairs(
-    sig: DataFrame,
-    hamming_max: int,
-    max_bucket: int | None = None,
-    kinds=_KINDS,
-) -> DataFrame:
-    """Shared Hamming-banded candidate + verify tier over ANY
-    (doc_id, a_hi, a_lo, d_hi, d_lo) signature relation — 4 bands x
-    16 bits per 64-bit hash, equi-join on (kind, band, bhash),
-    combined-128-bit-Hamming verify.  Used by the image tier
-    (``media_near_dup``) and the audio tier
-    (``audio.audio_near_dup``); recall guarantee as documented on
-    ``media_near_dup``.  ``max_bucket`` opts into the hot-bucket
-    guard (``_drop_hot_buckets``) for degenerate corpora.
-
-    Verify BEFORE distinct (the order the SQL tail always had): random
-    16-bit band collisions grow as ~N^2/2^16 once bucket occupancy
-    passes 1, and an early ``distinct`` shuffles every one of them
-    carrying both signatures (10 columns wide).  The Hamming verify is
-    a handful of JVM bit ops — evaluating it per COLLISION and
-    deduplicating only the survivors shuffles O(true pairs) rows of 3
-    ints instead.  Found by the sf10 probe: the mixed tier measured
-    a10 = 1.16 with the old order (SCALE.md §19)."""
-    stacked = band_stack(sig, kinds)
-    if max_bucket is not None:
-        stacked = _drop_hot_buckets(stacked, max_bucket)
-    return _stacked_self_pairs(stacked, hamming_max, _halves_of(kinds))
-
-
 def banded_matches_against(
     probe_sig: DataFrame,
     index_sig: DataFrame,
     hamming_max: int = HAMMING_MAX,
     max_bucket: int | None = None,
     broadcast_probe: bool = False,
-    index_is_stacked: bool = False,
     kinds=_KINDS,
     wide: bool = False,
     dedup: bool = True,
@@ -512,8 +478,9 @@ def banded_matches_against(
     corpus's kept signatures — is scanned once per trigger with NO
     shuffle, and the scan is partition-PRUNED to the batch's buckets
     when the index arrives pre-stacked from the band-partitioned
-    layout (``index_is_stacked``; streaming/pipeline.py writes
-    partitionBy(band, bp)).  The BATCH face leaves ``broadcast_probe``
+    layout (streaming/pipeline.py writes partitionBy(band, bp)); an
+    ``index_sig`` that already carries ``band``/``bhash`` columns is
+    taken as stacked in the ``wide`` layout asked for.  The BATCH face leaves ``broadcast_probe``
     off: its probe can be half the corpus, and a forced broadcast of 8
     rows/doc would blow the driver at scale (round-9 ADVICE) — AQE
     picks the strategy from actual sizes instead.  Candidate volume is
@@ -530,12 +497,12 @@ def banded_matches_against(
     equals min over the distinct rows, and the dedup exchange was one
     AQE stage per face of pure overhead."""
     halves = _halves_of(kinds)
-    stack = pair_band_stack if wide else band_stack
-    probe = stack(probe_sig, kinds).alias("p")
+    probe = band_stack(probe_sig, kinds, wide).alias("p")
     if broadcast_probe:
         probe = F.broadcast(probe)
     index_stacked = (
-        index_sig if index_is_stacked else stack(index_sig, kinds)
+        index_sig if "bhash" in index_sig.columns
+        else band_stack(index_sig, kinds, wide)
     )
     if max_bucket is not None:
         index_stacked = _drop_hot_buckets(index_stacked, max_bucket)
@@ -631,7 +598,7 @@ def media_near_dup_wide(
 ) -> DataFrame:
     """The WIDE-BUCKET sibling of ``media_near_dup`` for corpora
     where 16-bit buckets' random collisions are the bill
-    (``banded_pairs_wide``: 32-bit pair buckets, n^2/2^32 candidate
+    (``banded_pairs(..., wide=True)``: 32-bit pair buckets, n^2/2^32 candidate
     growth, guaranteed recall at combined Hamming <= 6 instead of
     <= 7).  Verify threshold unchanged, so pairs between Hamming 7
     and ``hamming_max`` surface only probabilistically — the standard
@@ -639,7 +606,9 @@ def media_near_dup_wide(
     guaranteed-recall evaluation and moderate n, 32-bit tier when n
     makes the candidate term dominate.  Signatures as on
     ``media_near_dup``."""
-    return banded_pairs_wide(shared(perceptual_hashes, media), hamming_max)
+    return banded_pairs(
+        shared(perceptual_hashes, media), hamming_max, wide=True
+    )
 
 
 def media_near_dup_clusters(
@@ -674,12 +643,6 @@ def _sig_clusters(
     than the docs appearing in any pair)."""
     from eventstreamd_spark.operators.dedup import connected_components
 
-    pairs_fn = (
-        (lambda s_, h_: _stacked_self_pairs(
-            pair_band_stack(s_, kinds), h_, _halves_of(kinds)))
-        if wide
-        else (lambda s_, h_: banded_pairs(s_, h_, kinds=kinds))
-    )
     # no edge checkpoint (round 13): connected_components' single-scan
     # window-form star passes read the symmetrized edges exactly ONCE
     # in the initial round (the old join-form stars read them up to
@@ -687,7 +650,7 @@ def _sig_clusters(
     # driver-synchronized job per face; the banded pair join now runs
     # once through lineage, inside the convergence probe's job)
     edges = (
-        pairs_fn(sig, hamming_max)
+        banded_pairs(sig, hamming_max, kinds=kinds, wide=wide)
         .select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     )
     comp = connected_components(edges, max_iters)
@@ -711,7 +674,6 @@ def admission_decisions_from_sig(
     max_iters: int = 16,
     max_bucket: int | None = None,
     broadcast_probe: bool = False,
-    index_is_stacked: bool = False,
     kinds=_KINDS,
     wide: bool = False,
 ) -> DataFrame:
@@ -729,11 +691,13 @@ def admission_decisions_from_sig(
     (doc_id, cluster_id, keep, reason) with reason in {'kept',
     'near_dup_batch', 'near_dup_index'}.
 
-    The three keyword passthroughs tune the index join for the two
-    faces: the STREAMING writer sets ``broadcast_probe`` (micro-batch
-    probe) and ``index_is_stacked`` (it reads the band-partitioned
-    layout pre-stacked and partition-pruned); the BATCH face leaves
-    both off so AQE sizes the join.  ``max_bucket`` applies the
+    The keyword passthroughs tune the index join for the two faces:
+    the STREAMING writer sets ``broadcast_probe`` (micro-batch probe)
+    and passes the band-partitioned layout pre-stacked and
+    partition-pruned as ``index_sig`` (``banded_matches_against``
+    takes a relation carrying ``band``/``bhash`` as stacked); the
+    BATCH face passes plain signatures and leaves ``broadcast_probe``
+    off so AQE sizes the join.  ``max_bucket`` applies the
     hot-bucket guard to the index side on either face."""
     # the rejected set is read three times downstream (the survivor
     # anti-join feeding the in-batch cluster tier's edge pass, the
@@ -756,7 +720,6 @@ def admission_decisions_from_sig(
             hamming_max,
             max_bucket=max_bucket,
             broadcast_probe=broadcast_probe,
-            index_is_stacked=index_is_stacked,
             kinds=kinds,
             wide=wide,
             # the per-doc MIN below absorbs multi-band duplicate
@@ -816,7 +779,7 @@ def media_admission_decisions(
     only the new batch is decoded.  ``wide`` opts both the corpus
     dedup and the admission join into the 32-bit pair-band layout
     (the 10^9-doc tier; recall bound drops to the pair-band
-    pigeonhole guarantee, the dial ``banded_pairs_wide`` states).
+    pigeonhole guarantee, the dial ``banded_pairs`` states).
     Both splits filter the session's ONE decode pass over ``media``
     (signatures are per-doc and deterministic, so filtering equals
     decoding the split), shared with every image near-dup tier."""
@@ -1021,7 +984,7 @@ def _sql_band_rows(src: str, words: tuple = ("a", "d")) -> str:
 
 def _sql_pair_band_rows(src: str) -> str:
     """The 28 (pair-band, 32-bit bhash) rows per doc over any
-    signature CTE — the SQL twin of ``pair_band_stack``."""
+    signature CTE — the SQL twin of ``band_stack(..., wide=True)``."""
     mask = (1 << BAND_BITS) - 1
     chunks = []
     for kind in ("a", "d"):
@@ -1049,7 +1012,7 @@ def _sql_pair_band_rows(src: str) -> str:
 
 def sql_banded_pairs_wide_tail(hamming_max: int = HAMMING_MAX) -> str:
     """pair-bands/cand CTEs + final pair SELECT over a preceding
-    ``sig`` CTE — the SQL twin of ``banded_pairs_wide``."""
+    ``sig`` CTE — the SQL twin of ``banded_pairs(..., wide=True)``."""
     ham = _sql_hamming()
     return f"""
 bands AS ({_sql_pair_band_rows("sig")}),

@@ -44,7 +44,7 @@ Streaming rule: nothing reachable from a ``foreachBatch`` writer may
 call ``shared``.  Every micro-batch is a new plan, so the daemon's memo
 would grow without bound.  Memoize at batch-operator call sites; the
 kernels the stream calls directly (``perceptual_hashes``,
-``simhash_admission_signatures``, ``admission_decisions_from_sig``)
+``simhash_signatures``, ``admission_decisions_from_sig``)
 stay memo-free.
 
 Staleness contract: the key covers input PATHS, not file contents, so

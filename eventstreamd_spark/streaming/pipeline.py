@@ -792,14 +792,10 @@ def _stack_for_index(sig: DataFrame, kinds=None, wide: bool = False) -> DataFram
     would dominate every per-trigger probe (SCALE.md §21); the bp
     prefix always takes the TOP BP_BITS of the bucket key so the
     directory fan-out stays 2^BP_BITS per band either way."""
-    from eventstreamd_spark.operators.perceptual import (
-        band_stack,
-        pair_band_stack,
-    )
+    from eventstreamd_spark.operators.perceptual import band_stack
 
-    stack = pair_band_stack if wide else band_stack
     width = 32 if wide else 16
-    return stack(sig, _index_kinds(kinds)).withColumn(
+    return band_stack(sig, _index_kinds(kinds), wide).withColumn(
         "bp", F.shiftright(F.col("bhash"), width - BP_BITS).cast("int")
     )
 
@@ -979,7 +975,7 @@ def media_admission_writer(
     # any kernel producing a (doc_id, <halves>) signature relation
     # plugs in: images default to perceptual_hashes, WAV streams pass
     # audio.audio_fingerprints, video passes video_fingerprints, and
-    # the TEXT face passes dedup.simhash_admission_signatures with
+    # the TEXT face passes dedup.simhash_signatures with
     # kinds=TEXT_SIG_KINDS — candidate banding, verify, clustering and
     # index growth are modality-blind past the signature (each kernel
     # projects the columns it needs from the micro-batch itself)
@@ -1004,16 +1000,17 @@ def media_admission_writer(
         # the decision itself is the SHARED batch operator core
         # (operators/perceptual.py::admission_decisions_from_sig), so
         # stream and batch verdicts agree by construction; checkpoint
-        # it because both writes below consume it.  broadcast_probe:
-        # the probe IS a micro-batch here (the setting the batch face
-        # leaves off); max_bucket guards the unbounded index side
+        # it because both writes below consume it.  The pruned read
+        # carries band/bhash, so the kernel takes it as stacked.
+        # broadcast_probe: the probe IS a micro-batch here (the
+        # setting the batch face leaves off); max_bucket guards the
+        # unbounded index side
         decisions = admission_decisions_from_sig(
             sig,
             index_stacked,
             hmax,
             max_bucket=max_bucket,
             broadcast_probe=True,
-            index_is_stacked=True,
             kinds=_index_kinds(kinds),
             wide=wide,
         ).localCheckpoint()
@@ -1309,7 +1306,7 @@ def seed_text_index(
     sig: DataFrame, index_dir: str, wide: bool = False
 ) -> None:
     """Seed the TEXT admission index: a (doc_id, s_hi, s_lo) SimHash
-    relation (``dedup.simhash_admission_signatures`` filtered to kept
+    relation (``dedup.simhash_signatures`` filtered to kept
     canonicals) in the band-partitioned layout (``wide``: the 32-bit
     pair-band layout)."""
     from eventstreamd_spark.operators.dedup import TEXT_SIG_KINDS
@@ -1339,7 +1336,7 @@ def start_text_admission(
     from eventstreamd_spark.operators.dedup import (
         HAMMING_MAX as TEXT_HMAX,
         TEXT_SIG_KINDS,
-        simhash_admission_signatures,
+        simhash_signatures,
     )
 
     return start_media_admission(
@@ -1348,7 +1345,7 @@ def start_text_admission(
         out_dir,
         checkpoint,
         TEXT_HMAX if hamming_max is None else hamming_max,
-        simhash_admission_signatures,
+        simhash_signatures,
         max_bucket,
         TEXT_SIG_KINDS,
         wide,
@@ -1371,7 +1368,7 @@ def text_admission_cycle(
     from eventstreamd_spark.operators.dedup import (
         HAMMING_MAX as TEXT_HMAX,
         TEXT_SIG_KINDS,
-        simhash_admission_signatures,
+        simhash_signatures,
     )
 
     return media_admission_cycle(
@@ -1380,7 +1377,7 @@ def text_admission_cycle(
         out_dir,
         checkpoint,
         TEXT_HMAX if hamming_max is None else hamming_max,
-        simhash_admission_signatures,
+        simhash_signatures,
         max_bucket,
         max_delta_epochs,
         retention_epochs,

@@ -230,6 +230,31 @@ def test_stats_referer_field() -> None:
     assert "referer" not in conns[1]  # absent, not null, when unset
 
 
+def test_daemon_does_not_load_the_batch_operators() -> None:
+    # the daemon's Python driver imports pipeline.py, whose batch
+    # kernels import the operator modules function-locally; a fresh
+    # interpreter that imports the daemon must load none of them
+    import os
+    import subprocess
+    import sys
+
+    heavy = (
+        "eventstreamd_spark.operators.perceptual",
+        "eventstreamd_spark.operators.dedup",
+        "eventstreamd_spark.queries_registry",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, eventstreamd_spark.streaming.daemon; "
+         "print(*sys.modules)"],
+        capture_output=True, text=True, check=True, timeout=120,
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    )
+    loaded = set(out.stdout.split())
+    assert "eventstreamd_spark.streaming.pipeline" in loaded
+    assert loaded.isdisjoint(heavy), sorted(loaded & set(heavy))
+
+
 def test_config_parsing(tmp_path) -> None:
     """INI config: same keys/fallbacks as the reference (config.py:31-54)."""
     from eventstreamd_spark.streaming.config import Config, read_config

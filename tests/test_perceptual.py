@@ -4,6 +4,8 @@ fixture — the re-encoded/resized twins exact digests miss."""
 
 from __future__ import annotations
 
+import pytest
+
 from eventstreamd_spark.operators import perceptual as perc
 from eventstreamd_spark.session import load_table
 
@@ -266,7 +268,7 @@ def test_wide_pair_band_tier_matches_narrow_and_shrinks_candidates(
     sig = perc.perceptual_hashes(media).localCheckpoint()
     wide = {
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in perc.banded_pairs_wide(sig, perc.HAMMING_MAX).collect()
+        for r in perc.banded_pairs(sig, perc.HAMMING_MAX, wide=True).collect()
     }
     narrow = {
         (r["doc_a"], r["doc_b"], r["hamming"])
@@ -284,12 +286,12 @@ def test_wide_pair_band_tier_matches_narrow_and_shrinks_candidates(
     }
     assert wide == want
 
-    def random_candidates(stack_fn):
+    def random_candidates(wide: bool):
         """Bucket collisions between DIFFERENT cohorts — the random
         (non-twin) term the wide tier exists to shrink.  Twin
         collisions necessarily grow 28/8 with the pair explosion, so
         raw totals are the wrong measure at twin-dominated scales."""
-        st = stack_fn(sig).select("doc_id", "band", "bhash")
+        st = perc.band_stack(sig, wide=wide).select("doc_id", "band", "bhash")
         l, r = st.alias("l"), st.alias("r")
         return (
             l.join(
@@ -304,8 +306,8 @@ def test_wide_pair_band_tier_matches_narrow_and_shrinks_candidates(
             ).count()
         )
 
-    n_wide = random_candidates(perc.pair_band_stack)
-    n_narrow = random_candidates(perc.band_stack)
+    n_wide = random_candidates(True)
+    n_narrow = random_candidates(False)
     # 2^16x larger key space: the random term must collapse (at sf10
     # the measured narrow-tier random load is 44M candidates)
     assert n_wide <= n_narrow, (n_wide, n_narrow)
@@ -344,6 +346,57 @@ def test_hot_bucket_guard_bounds_degenerate_floods(spark) -> None:
     small_flood = sig.filter("doc_id < 100 OR doc_id >= 100000")
     unguarded = perc.banded_matches_against(probe, small_flood, 10).count()
     assert unguarded == 102  # 2 twin matches + 100 flood matches
+
+
+@pytest.mark.parametrize("wide", [False, True], ids=["narrow", "wide"])
+@pytest.mark.parametrize("family", ["media", "text"])
+def test_matches_against_takes_a_prestacked_index(spark, family, wide) -> None:
+    """``banded_matches_against`` reads an index that already carries
+    band/bhash (the streaming writer's pruned read of
+    ``pipeline._stack_for_index``'s layout) as stacked, and stacks a
+    plain signature index itself: both give the same rows, and only
+    the plain form explodes the index side."""
+    import random
+
+    from eventstreamd_spark.operators.dedup import TEXT_SIG_KINDS
+    from eventstreamd_spark.streaming.pipeline import _stack_for_index
+
+    kinds = perc._KINDS if family == "media" else TEXT_SIG_KINDS
+    halves = perc._halves_of(kinds)
+    rng = random.Random(11)
+    index_rows = [
+        (d, *(rng.randrange(1 << 32) for _ in halves)) for d in range(40)
+    ]
+    # probe: every 4th index doc with one or two bits flipped (inside
+    # both layouts' recall guarantee), plus fresh random signatures
+    probe_rows = []
+    for d, *words in index_rows[::4]:
+        words[d % len(words)] ^= 1 << (d % 32)
+        if d % 8:
+            words[0] ^= 1 << 31
+        probe_rows.append((1000 + d, *words))
+    probe_rows += [
+        (2000 + d, *(rng.randrange(1 << 32) for _ in halves)) for d in range(10)
+    ]
+    schema = ", ".join(["doc_id bigint"] + [f"{h} bigint" for h in halves])
+    index = spark.createDataFrame(index_rows, schema)
+    probe = spark.createDataFrame(probe_rows, schema)
+    stacked = _stack_for_index(index, kinds, wide).localCheckpoint()
+
+    def run(index_sig):
+        df = perc.banded_matches_against(
+            probe, index_sig, 2, kinds=kinds, wide=wide
+        )
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return {tuple(r) for r in df.collect()}, plan.count("Generate ")
+
+    plain_rows, plain_generates = run(index)
+    stacked_rows, stacked_generates = run(stacked)
+    assert plain_rows == stacked_rows
+    assert {(r[0], r[1]) for r in plain_rows} == {
+        (1000 + d, d) for d in range(0, 40, 4)
+    }
+    assert (plain_generates, stacked_generates) == (2, 1)
 
 
 def test_media_admission_wide_matches_narrow(spark, sf_dir) -> None:

@@ -14,6 +14,7 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
+import pytest
 
 from eventstreamd_spark.operators import dedup as dd
 
@@ -79,7 +80,7 @@ def test_signature_matches_pure_python_reference(spark) -> None:
         (5, ""),
     ]
     got = {
-        r["doc_id"]: (r["sig_hi"], r["sig_lo"])
+        r["doc_id"]: (r["s_hi"], r["s_lo"])
         for r in dd.simhash_signatures(_docs_df(spark, rows)).collect()
     }
     for doc_id, text in rows:
@@ -165,40 +166,68 @@ def test_identical_docs_hamming_zero_both_tiers(spark) -> None:
         assert (got[0]["doc_a"], got[0]["doc_b"], got[0]["hamming"]) == (0, 1, 0)
 
 
-def test_band_chunks_cover_signature_exactly(spark) -> None:
-    """The 4 band slices reassemble the signature: no bit is sampled
-    twice or dropped (layout audit — bands 0-1 from lo, 2-3 from hi)."""
-    rows = [(1, BASE), (2, "another text entirely unrelated words here")]
-    sig = dd.simhash_signatures(_docs_df(spark, rows))
-    stacked = dd.simhash_band_stack(sig)
-    rows_by_doc: dict[int, dict[int, int]] = {}
-    for r in stacked.collect():
-        rows_by_doc.setdefault(r["doc_id"], {})[r["band"]] = r["bhash"]
-    for doc_id, bands in rows_by_doc.items():
-        assert sorted(bands) == [0, 1, 2, 3]
-    for r in sig.collect():
-        b = rows_by_doc[r["doc_id"]]
-        assert b[0] | (b[1] << 16) == r["sig_lo"]
-        assert b[2] | (b[3] << 16) == r["sig_hi"]
-        for v in b.values():
-            assert 0 <= v < 1 << 16
+def _family_sig(spark, family: str):
+    """(sig, kinds) for one signature family: the SimHash kernel's
+    output for TEXT_SIG_KINDS, seeded random 32-bit halves for the
+    media word pair and the video grid's three words."""
+    import random
+
+    from eventstreamd_spark.operators import perceptual as perc
+    from eventstreamd_spark.operators import video
+
+    if family == "text":
+        rows = [(1, BASE), (2, "another text entirely unrelated words here")]
+        return dd.simhash_signatures(_docs_df(spark, rows)), dd.TEXT_SIG_KINDS
+    kinds = perc._KINDS if family == "media" else video.GRID_KINDS
+    halves = perc._halves_of(kinds)
+    rng = random.Random(7)
+    rows = [
+        (d, *(rng.randrange(1 << 32) for _ in halves)) for d in range(3)
+    ]
+    schema = ", ".join(["doc_id bigint"] + [f"{h} bigint" for h in halves])
+    return spark.createDataFrame(rows, schema), kinds
 
 
-def test_pair_band_stack_six_pairs_concat_key(spark) -> None:
-    rows = [(1, BASE)]
-    sig = dd.simhash_signatures(_docs_df(spark, rows))
-    got = dd.simhash_pair_band_stack(sig).collect()
-    assert len(got) == 6
-    chunks = {}
-    for r in dd.simhash_band_stack(sig).collect():
-        chunks[r["band"]] = r["bhash"]
-    keys = {r["band"]: r["bhash"] for r in got}
-    k = 0
-    for i in range(4):
-        for j in range(i + 1, 4):
-            assert keys[k] == (chunks[i] << 16) + chunks[j]
-            assert 0 <= keys[k] < 1 << 32
-            k += 1
+@pytest.mark.parametrize(
+    "family,n_bands,n_pairs",
+    [("text", 4, 6), ("media", 8, 28), ("video_grid", 12, 66)],
+    ids=["text", "media", "video_grid"],
+)
+def test_band_stack_layout(spark, family, n_bands, n_pairs) -> None:
+    """One banding engine for every family: the narrow stack's 16-bit
+    chunks {kind}0..{kind}3 reassemble every word (0-1 from lo, 2-3
+    from hi — no bit sampled twice or dropped), and the wide stack
+    emits every unordered chunk pair, labelled "{ni}|{nj}" and keyed
+    (ci << 16) + cj."""
+    from eventstreamd_spark.operators.perceptual import band_stack
+
+    sig, kinds = _family_sig(spark, family)
+    names = [f"{kind}{b}" for kind, _, _ in kinds for b in range(4)]
+    assert len(names) == n_bands
+    narrow: dict[int, dict[str, int]] = {}
+    for r in band_stack(sig, kinds).collect():
+        narrow.setdefault(r["doc_id"], {})[r["band"]] = r["bhash"]
+    wide: dict[int, dict[str, int]] = {}
+    for r in band_stack(sig, kinds, wide=True).collect():
+        wide.setdefault(r["doc_id"], {})[r["band"]] = r["bhash"]
+    sigs = sig.collect()
+    assert set(narrow) == set(wide) == {r["doc_id"] for r in sigs}
+    for r in sigs:
+        chunks = narrow[r["doc_id"]]
+        assert sorted(chunks) == sorted(names)
+        for kind, hi, lo in kinds:
+            assert chunks[f"{kind}0"] | (chunks[f"{kind}1"] << 16) == r[lo]
+            assert chunks[f"{kind}2"] | (chunks[f"{kind}3"] << 16) == r[hi]
+        assert all(0 <= v < 1 << 16 for v in chunks.values())
+        keys = wide[r["doc_id"]]
+        want = {
+            f"{ni}|{nj}": (chunks[ni] << 16) + chunks[nj]
+            for i, ni in enumerate(names)
+            for nj in names[i + 1:]
+        }
+        assert len(want) == n_pairs
+        assert keys == want
+        assert all(0 <= v < 1 << 32 for v in keys.values())
 
 
 def test_prod_guard_inert_on_real_corpus_collapses_flood(spark) -> None:

@@ -2273,7 +2273,7 @@ def test_text_admission_stream_matches_batch(spark, sf_dir, tmp_path) -> None:
     # sources land in batch 1, the +100000 plants in batch 2)
     from eventstreamd_spark.operators.perceptual import _sig_clusters
 
-    corpus_sig = dd.simhash_admission_signatures(corpus).localCheckpoint()
+    corpus_sig = dd.simhash_signatures(corpus).localCheckpoint()
     kept = (
         _sig_clusters(
             corpus.select("doc_id"), corpus_sig, dd.HAMMING_MAX, 16,
@@ -2482,7 +2482,7 @@ def test_text_admission_stream_matches_batch_wide(
         ).collect()
     }
 
-    corpus_sig = dd.simhash_admission_signatures(corpus).localCheckpoint()
+    corpus_sig = dd.simhash_signatures(corpus).localCheckpoint()
     kept = (
         _sig_clusters(
             corpus.select("doc_id"), corpus_sig, dd.HAMMING_MAX, 16,

@@ -66,6 +66,21 @@ def test_ledger_names_the_fixtures_it_built(ledger) -> None:
         assert os.path.isdir(os.path.join(REPO, path))
 
 
+def test_ledger_builds_every_fixture_before_the_first_pass(ledger, sf_dir) -> None:
+    # the fixture step runs under its own group: every blob fixture of
+    # the sf_dir exists afterwards, its jobs count apart from both
+    # passes, and reading fixtures already on disk fires no job
+    from eventstreamd_spark.operators import multimodal as mm
+
+    root = os.path.join(
+        mm.MEDIA_FIXTURE_ROOT, mm._MEDIA_FIXTURE_VERSION, mm._fixture_tag(sf_dir)
+    )
+    for kind in mm._media_builders():
+        assert os.path.exists(os.path.join(root, f"{kind}.parquet", "_SUCCESS"))
+    assert isinstance(ledger["fixture_jobs"], int)
+    assert (ledger["fixture_jobs"] > 0) == bool(ledger["fixtures_built"])
+
+
 def test_ledger_steady_pass_hits_the_memo(ledger) -> None:
     # the first pass checkpoints the MinHash pair tier through
     # plans.memo.shared; the steady pass reads it back without those jobs

@@ -39,6 +39,7 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from eventstreamd_spark.session import get_spark, load_table  # noqa: E402
 from eventstreamd_spark.operators import dedup as dd  # noqa: E402
+from eventstreamd_spark.operators import perceptual as pc  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -47,18 +48,15 @@ OUT = os.path.join(REPO, "tools", "BIT_BALANCE.json")
 
 def _text_sig(spark):
     docs = dd.with_planted_near_dups(load_table(spark, SF, "documents"))
-    sig = dd.simhash_signatures(docs)
-    return sig, ("sig_lo", "sig_hi"), dd.simhash_band_stack, dd.simhash_pair_band_stack
+    return dd.simhash_signatures(docs), dd.TEXT_SIG_KINDS
 
 
 def _media_sig(spark, kind: str):
     """The 4-word (a, d) media signatures — image/audio/video/mixed —
-    via the real decode kernels over the cached fixture.  Bit order:
-    a_lo, a_hi, d_lo, d_hi (matches band_stack's a0..a3/d0..d3)."""
+    via the real decode kernels over the cached fixture."""
     from eventstreamd_spark.operators import audio as au
     from eventstreamd_spark.operators import mixed as mx
     from eventstreamd_spark.operators import multimodal as mm
-    from eventstreamd_spark.operators import perceptual as pc
     from eventstreamd_spark.operators import video as vd
 
     kernel, fixture = {
@@ -67,9 +65,7 @@ def _media_sig(spark, kind: str):
         "video": (vd.video_fingerprints, "scene_video"),
         "mixed": (mx.mixed_media_fingerprints, "scene_mixed"),
     }[kind]
-    media = mm.cached_media(spark, SF, fixture)
-    sig = kernel(media)
-    return sig, ("a_lo", "a_hi", "d_lo", "d_hi"), pc.band_stack, pc.pair_band_stack
+    return kernel(mm.cached_media(spark, SF, fixture)), pc._KINDS
 
 
 def main() -> None:
@@ -77,15 +73,13 @@ def main() -> None:
 
     tier = sys.argv[sys.argv.index("--tier") + 1] if "--tier" in sys.argv else "text"
     spark = get_spark("bit-balance")
-    if tier == "text":
-        sig, half_cols, stack_fn, pair_stack_fn = _text_sig(spark)
-    else:
-        sig, half_cols, stack_fn, pair_stack_fn = _media_sig(spark, tier)
+    sig, kinds = _text_sig(spark) if tier == "text" else _media_sig(spark, tier)
     sig = sig.localCheckpoint()
     n = sig.count()
 
     # per-bit set frequencies, one aggregate pass; global bit k =
-    # 32 * half_index + j (half_cols arrive in (w_lo, w_hi, ...) order)
+    # 32 * half_index + j over the halves in (w_lo, w_hi, ...) order
+    half_cols = [c for _, hi, lo in kinds for c in (lo, hi)]
     aggs = [
         F.sum((F.col(c).bitwiseAND(F.lit(1 << j)) > 0).cast("long")).alias(
             f"b{32 * i + j}"
@@ -97,24 +91,19 @@ def main() -> None:
     nbits = 32 * len(half_cols)
     p = [row[f"b{k}"] / n for k in range(nbits)]
 
-    # band definitions matching each stack's actual band naming:
-    # per 64-bit word, 4 x 16-bit bands (k<2 from lo, k>=2 from hi)
-    n_words = len(half_cols) // 2
+    # band definitions matching band_stack's labels: per 64-bit word,
+    # 4 x 16-bit bands {kind}0..{kind}3 (0-1 from lo, 2-3 from hi),
+    # and the wide layout's {ni}|{nj} chunk pairs
     defs = []
-    for w in range(n_words):
-        kind = half_cols[2 * w].split("_")[0]
+    for w, (kind, _hi, _lo) in enumerate(kinds):
         for k in range(4):
-            src = 2 * w + (0 if k < 2 else 1)
-            base = 32 * src + (k % 2) * 16
-            name = k if n_words == 1 else f"{kind}{k}"
-            defs.append((name, list(range(base, base + 16))))
-    pair_defs = []
-    k = 0
-    for i in range(len(defs)):
-        for j in range(i + 1, len(defs)):
-            name = k if n_words == 1 else f"{defs[i][0]}|{defs[j][0]}"
-            pair_defs.append((name, defs[i][1] + defs[j][1]))
-            k += 1
+            base = 32 * (2 * w + k // 2) + (k % 2) * 16
+            defs.append((f"{kind}{k}", list(range(base, base + 16))))
+    pair_defs = [
+        (f"{ni}|{nj}", bi + bj)
+        for i, (ni, bi) in enumerate(defs)
+        for nj, bj in defs[i + 1:]
+    ]
 
     def inflation(bits: list[int]) -> float:
         prob = 1.0
@@ -139,7 +128,7 @@ def main() -> None:
         return {
             "nominal_random_pairs_per_band": nominal,
             "bands": {
-                str(r["band"]): {
+                r["band"]: {
                     "candidate_pairs": int(r["pairs"]),
                     "max_bucket": int(r["max_bucket"]),
                     "x_nominal": (r["pairs"] / nominal) if nominal else None,
@@ -160,13 +149,13 @@ def main() -> None:
             reverse=True,
         )[:8],
         "single_band_inflation": {
-            str(name): inflation(bits) for name, bits in defs
+            name: inflation(bits) for name, bits in defs
         },
         "pair_band_inflation": {
-            str(name): inflation(bits) for name, bits in pair_defs
+            name: inflation(bits) for name, bits in pair_defs
         },
-        "empirical_16bit": empirical(stack_fn(sig), 16),
-        "empirical_32bit_pairs": empirical(pair_stack_fn(sig), 32),
+        "empirical_16bit": empirical(pc.band_stack(sig, kinds), 16),
+        "empirical_32bit_pairs": empirical(pc.band_stack(sig, kinds, wide=True), 32),
     }
 
     out = OUT if tier == "text" else OUT.replace(".json", f"_{tier}.json")
@@ -178,19 +167,19 @@ def main() -> None:
     print("|---|---|---|---|---|")
     emp = report["empirical_16bit"]["bands"]
     for name, _bits in defs:
-        e = emp[str(name)]
+        e = emp[name]
         print(
             f"| {name} (16-bit) "
-            f"| {report['single_band_inflation'][str(name)]:.2f}x "
+            f"| {report['single_band_inflation'][name]:.2f}x "
             f"| {e['candidate_pairs']:,} | {e['x_nominal']:.1f}x "
             f"| {e['max_bucket']} |"
         )
     empw = report["empirical_32bit_pairs"]["bands"]
     for name, _bits in pair_defs:
-        e = empw[str(name)]
+        e = empw[name]
         print(
             f"| {name} (32-bit pair) "
-            f"| {report['pair_band_inflation'][str(name)]:.2f}x "
+            f"| {report['pair_band_inflation'][name]:.2f}x "
             f"| {e['candidate_pairs']:,} | {e['x_nominal']:.1f}x "
             f"| {e['max_bucket']} |"
         )

@@ -7,9 +7,12 @@ Usage:
 Runs the registry's queries (all of them in registry order, leaving out
 ``registry_digest`` as ``bench.py`` does, or only the named ones) in one
 fresh ``get_spark`` session on ``local[$SPARK_GRAFT_CPUS]``: a first
-pass, then one steady pass.  Each registry call (plan construction,
-with whatever eager jobs it fires) and its ``noop`` write runs under a
-job group of its own.  Spark's event log, written uncompressed and not
+pass, then one steady pass.  Before the first pass every blob fixture
+(``operators.multimodal``) is made to exist, under the job group
+``ledger/fixtures``, so the first pass counts the same jobs whether or
+not the checkout built the fixtures before.  Each registry call (plan
+construction, with whatever eager jobs it fires) and its ``noop`` write
+runs under a job group of its own.  Spark's event log, written uncompressed and not
 rolling to a temporary directory, is reduced with ``perfbench.ledger``
 after the session stops.
 
@@ -20,6 +23,7 @@ Prints ONE JSON object:
      "passes": {"first": TOTAL, "steady": TOTAL},
      "failures": {"first": {name: error}, "steady": {...}},
      "ungrouped_jobs": <jobs outside every ledger group>,
+     "fixture_jobs": <jobs of the fixture step>,
      "fixtures_built": [<.scratch/media_fixture/.../KIND.parquet>, ...]}
 
 ROW is build_s, action_s (wall seconds), build_jobs, action_jobs,
@@ -28,8 +32,9 @@ counted for the first job that lists it, so a shuffle reused by a later
 query is not counted twice.  TOTAL holds the sums of its pass's rows,
 plus wall_s, jobs, build_share (build_s / wall_s), single_task_share
 and utilization (task_s / (wall_s * cores)).  ``fixtures_built`` lists
-the blob fixtures (``operators.multimodal``) that did not exist before
-the run: a first pass that built one includes its one-time build.
+the blob fixtures that did not exist before the run; the fixture step
+built them, and ``fixture_jobs`` counts its jobs (0 when every fixture
+was on disk), which neither pass includes.
 """
 
 from __future__ import annotations
@@ -49,6 +54,7 @@ sys.path.insert(0, REPO)
 from perfbench.ledger import operator_rows, read  # noqa: E402
 
 PASSES = ("first", "steady")
+FIXTURES = "ledger/fixtures"
 STEPS = ("build", "action")
 ROW = ("build_s", "action_s", "build_jobs", "action_jobs", "stages",
        "single_task_stages", "task_s")
@@ -70,6 +76,7 @@ def run(sf_dir: str, names: list[str], log_dir: str) -> tuple[dict, dict, int]:
     """Both passes in one session; per (pass, query) the wall seconds of
     each step, per pass the failures, and the session's core count."""
     from eventstreamd_spark import queries_registry as reg
+    from eventstreamd_spark.operators import multimodal
     from eventstreamd_spark.session import get_spark
 
     conf_dir = os.path.join(log_dir, "conf")
@@ -87,6 +94,9 @@ def run(sf_dir: str, names: list[str], log_dir: str) -> tuple[dict, dict, int]:
     spark = get_spark("suite-ledger")
     sc = spark.sparkContext
     sc.setLogLevel("ERROR")
+    sc.setJobGroup(FIXTURES, "blob fixtures")
+    for kind in multimodal._media_builders():
+        multimodal.cached_media(spark, sf_dir, kind)
     walls: dict[tuple[str, str], dict[str, float]] = {}
     failures: dict[str, dict[str, str]] = {p: {} for p in PASSES}
     for pass_name in PASSES:
@@ -109,16 +119,22 @@ def run(sf_dir: str, names: list[str], log_dir: str) -> tuple[dict, dict, int]:
     return walls, failures, cores
 
 
-def reduce_log(log_dir: str, walls: dict, cores: int) -> tuple[dict, dict, int]:
-    """The rows and pass totals of ``walls`` from the event log, and the
-    number of logged jobs outside every ledger group."""
+def reduce_log(
+    log_dir: str, walls: dict, cores: int
+) -> tuple[dict, dict, int, int]:
+    """The rows and pass totals of ``walls`` from the event log, the
+    number of logged jobs outside every ledger group, and the number of
+    fixture-step jobs."""
     log = read(os.path.join(log_dir, "eventlog"))
     steps = {group(p, n, s): (p, n, s) for p, n in walls for s in STEPS}
     jobs: dict[tuple[str, str], list] = {}
     counts: dict[tuple[str, str, str], int] = {}
     claimed: set[int] = set()
-    ungrouped = 0
+    ungrouped = fixture_jobs = 0
     for job in sorted(log.jobs.values(), key=lambda j: j.id):
+        if job.group == FIXTURES:
+            fixture_jobs += 1
+            continue
         step = steps.get(job.group)
         if step is None:
             ungrouped += not job.group.startswith("ledger/")
@@ -155,7 +171,7 @@ def reduce_log(log_dir: str, walls: dict, cores: int) -> tuple[dict, dict, int]:
             round(t["task_s"] / (t["wall_s"] * cores), 4) if t["wall_s"] else 0.0
         )
         passes[p] = t
-    return queries, passes, ungrouped
+    return queries, passes, ungrouped, fixture_jobs
 
 
 def main() -> None:
@@ -177,7 +193,9 @@ def main() -> None:
     fixtures = media_fixtures()
     try:
         walls, failures, cores = run(sf_dir, names, log_dir)
-        queries, passes, ungrouped = reduce_log(log_dir, walls, cores)
+        queries, passes, ungrouped, fixture_jobs = reduce_log(
+            log_dir, walls, cores
+        )
     finally:
         shutil.rmtree(log_dir, ignore_errors=True)
     out = {
@@ -187,6 +205,7 @@ def main() -> None:
         "passes": passes,
         "failures": failures,
         "ungrouped_jobs": ungrouped,
+        "fixture_jobs": fixture_jobs,
         "fixtures_built": sorted(media_fixtures() - fixtures),
     }
     os.write(real_stdout, (json.dumps(out) + "\n").encode())
