@@ -14,7 +14,6 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
-import pytest
 
 from eventstreamd_spark.operators import dedup as dd
 
@@ -188,46 +187,64 @@ def _family_sig(spark, family: str):
     return spark.createDataFrame(rows, schema), kinds
 
 
-@pytest.mark.parametrize(
-    "family,n_bands,n_pairs",
-    [("text", 4, 6), ("media", 8, 28), ("video_grid", 12, 66)],
-    ids=["text", "media", "video_grid"],
-)
-def test_band_stack_layout(spark, family, n_bands, n_pairs) -> None:
-    """One banding engine for every family: the narrow stack's 16-bit
-    chunks {kind}0..{kind}3 reassemble every word (0-1 from lo, 2-3
-    from hi — no bit sampled twice or dropped), and the wide stack
-    emits every unordered chunk pair, labelled "{ni}|{nj}" and keyed
-    (ci << 16) + cj."""
+# (family, narrow bands, wide pair keys) for every signature family
+FAMILIES = [("text", 4, 6), ("media", 8, 28), ("video_grid", 12, 66)]
+
+
+def _narrow_chunks(sig, kinds) -> dict[int, dict[str, int]]:
     from eventstreamd_spark.operators.perceptual import band_stack
 
-    sig, kinds = _family_sig(spark, family)
-    names = [f"{kind}{b}" for kind, _, _ in kinds for b in range(4)]
-    assert len(names) == n_bands
-    narrow: dict[int, dict[str, int]] = {}
+    chunks: dict[int, dict[str, int]] = {}
     for r in band_stack(sig, kinds).collect():
-        narrow.setdefault(r["doc_id"], {})[r["band"]] = r["bhash"]
-    wide: dict[int, dict[str, int]] = {}
-    for r in band_stack(sig, kinds, wide=True).collect():
-        wide.setdefault(r["doc_id"], {})[r["band"]] = r["bhash"]
-    sigs = sig.collect()
-    assert set(narrow) == set(wide) == {r["doc_id"] for r in sigs}
-    for r in sigs:
-        chunks = narrow[r["doc_id"]]
-        assert sorted(chunks) == sorted(names)
-        for kind, hi, lo in kinds:
-            assert chunks[f"{kind}0"] | (chunks[f"{kind}1"] << 16) == r[lo]
-            assert chunks[f"{kind}2"] | (chunks[f"{kind}3"] << 16) == r[hi]
-        assert all(0 <= v < 1 << 16 for v in chunks.values())
-        keys = wide[r["doc_id"]]
-        want = {
-            f"{ni}|{nj}": (chunks[ni] << 16) + chunks[nj]
-            for i, ni in enumerate(names)
-            for nj in names[i + 1:]
-        }
-        assert len(want) == n_pairs
-        assert keys == want
-        assert all(0 <= v < 1 << 32 for v in keys.values())
+        chunks.setdefault(r["doc_id"], {})[r["band"]] = r["bhash"]
+    return chunks
+
+
+def test_band_chunks_cover_signature_exactly(spark) -> None:
+    """The narrow stack's 16-bit chunks {kind}0..{kind}3 reassemble
+    every word of every signature family: no bit is sampled twice or
+    dropped (layout audit: chunks 0-1 from lo, 2-3 from hi)."""
+    for family, n_bands, _ in FAMILIES:
+        sig, kinds = _family_sig(spark, family)
+        names = [f"{kind}{b}" for kind, _, _ in kinds for b in range(4)]
+        assert len(names) == n_bands, family
+        narrow = _narrow_chunks(sig, kinds)
+        sigs = sig.collect()
+        assert set(narrow) == {r["doc_id"] for r in sigs}, family
+        for r in sigs:
+            chunks = narrow[r["doc_id"]]
+            assert sorted(chunks) == sorted(names), family
+            for kind, hi, lo in kinds:
+                assert chunks[f"{kind}0"] | (chunks[f"{kind}1"] << 16) == r[lo]
+                assert chunks[f"{kind}2"] | (chunks[f"{kind}3"] << 16) == r[hi]
+            assert all(0 <= v < 1 << 16 for v in chunks.values()), family
+
+
+def test_pair_band_stack_six_pairs_concat_key(spark) -> None:
+    """The wide stack emits every unordered chunk pair of every
+    signature family (6 for SimHash's one word, 28 and 66 for the
+    media pair and the video grid), labelled "{ni}|{nj}" and keyed
+    (ci << 16) + cj from the narrow chunks."""
+    from eventstreamd_spark.operators.perceptual import band_stack
+
+    for family, n_bands, n_pairs in FAMILIES:
+        sig, kinds = _family_sig(spark, family)
+        names = [f"{kind}{b}" for kind, _, _ in kinds for b in range(4)]
+        assert len(names) == n_bands, family
+        narrow = _narrow_chunks(sig, kinds)
+        wide: dict[int, dict[str, int]] = {}
+        for r in band_stack(sig, kinds, wide=True).collect():
+            wide.setdefault(r["doc_id"], {})[r["band"]] = r["bhash"]
+        assert set(wide) == set(narrow), family
+        for doc_id, chunks in narrow.items():
+            want = {
+                f"{ni}|{nj}": (chunks[ni] << 16) + chunks[nj]
+                for i, ni in enumerate(names)
+                for nj in names[i + 1:]
+            }
+            assert len(want) == n_pairs, family
+            assert wide[doc_id] == want, family
+            assert all(0 <= v < 1 << 32 for v in want.values()), family
 
 
 def test_prod_guard_inert_on_real_corpus_collapses_flood(spark) -> None:
